@@ -1677,7 +1677,7 @@ FROM base CROSS JOIN seeds GROUP BY doc_id, seed
 def _dedup_minhash_oph(spark, sf_dir):
     # one-permutation hashing: ONE base hash per token bucketed into bins
     # (vs num_hashes affine transforms per token) — measured 5.3x cheaper
-    # signature CPU at 112 hashes (tools/minhash_ab.py); empty bins filled
+    # signature CPU at 112 hashes (docs/ROUND5.md); empty bins filled
     # by deterministic rotation densification (nearest non-empty cyclic
     # right), stated relationally in the oracle via IGNORE NULLS windows.
     from dr_source_spark.training.dedup import oph_signatures

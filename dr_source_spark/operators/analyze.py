@@ -1,5 +1,5 @@
 """The analyze stage: every detector tier fused into ONE Arrow-batched pass
-over the corpus (`mapInPandas`), so each file's content crosses the
+over the corpus (`mapInArrow`), so each file's content crosses the
 JVM→Python boundary exactly once and is parsed at most once per language.
 
 Scale design (SURVEY.md §4 R6/R9/R10):
@@ -7,7 +7,8 @@ Scale design (SURVEY.md §4 R6/R9/R10):
 * The KB is compiled once on the driver and shipped as a Spark broadcast;
   regex/pattern compilation is memoized per executor process.
 * Input is repartitioned by hash(repo, path) so one mega-repo never pins a
-  single task (callers can also bucket by repo-size, see plans.skew).
+  single task (callers can also bucket by repo-size, see
+  operators/skew.repartition_by_size_buckets).
 * Output rows carry only narrow columns — the wide ``content`` column dies
   inside this stage (column pruning: we select exactly what we need first).
 * Finding dedup on the reference identity key (path, line, type, message)
@@ -18,9 +19,8 @@ Scale design (SURVEY.md §4 R6/R9/R10):
 
 from __future__ import annotations
 
-from typing import Any, Dict, Iterator, List, Optional
+from typing import Any, Dict, List, Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -137,23 +137,21 @@ def _upstream_repartition_width(df: DataFrame) -> int:
 
 
 def ensure_min_parallelism(
-    df: DataFrame, key_cols=("repo", "path"), factor: int = 1, target: Optional[int] = None
+    df: DataFrame, key_cols=("repo", "path"), target: Optional[int] = None
 ) -> DataFrame:
-    """Widen a CPU-bound stage's input to ≥ ``factor``× cores — never narrow it.
+    """Widen a CPU-bound stage's input to ≥ cores (or ``target``) partitions
+    — never narrow it.
 
-    ``target`` overrides the ``factor × cores`` width for stages whose
-    per-byte cost is low enough that a full-cores fan-out loses more to
-    python-worker round trips than it gains (see build_symbol_index's
-    bytes-aware target). The never-narrow rule still applies.
+    ``target`` overrides the cores width for stages whose per-byte cost is
+    low enough that a full-cores fan-out loses more to python-worker round
+    trips than it gains (see build_symbol_index's bytes-aware target). The
+    never-narrow rule still applies.
 
-    factor=1 (exactly cores) is the MEASURED optimum for the Arrow-batched
-    detector stage: every extra task pays a python-worker round-trip +
-    Arrow stream setup, and the round-3 A/B on the sf0.1 corpus (32 cores,
-    best-of-3) was monotonic in partition count — 32 tasks 1.04s, 64 →
-    1.35s, 96 → 1.61s, 128 → 1.78s, 192 → 2.25s. Straggler slack from
-    over-partitioning only pays when single files run for seconds; callers
-    with a known heavy-tailed corpus can pass factor>1 or pre-spread with
-    skew.repartition_by_size_buckets.
+    Exactly cores is the MEASURED optimum for the Arrow-batched detector
+    stage: every extra task pays a python-worker round-trip + Arrow stream
+    setup, and the round-3 A/B on the sf0.1 corpus (32 cores, best-of-3)
+    was monotonic in partition count — 32 tasks 1.04s, 64 → 1.35s, 96 →
+    1.61s, 128 → 1.78s, 192 → 2.25s.
 
     Three-band decision from plan-size statistics (no job, no path list):
 
@@ -171,7 +169,7 @@ def ensure_min_parallelism(
       splits) is never collapsed."""
     cores = df.sparkSession.sparkContext.defaultParallelism
     if target is None:
-        target = factor * cores
+        target = cores
     # a full-width repartition already in the plan makes a second shuffle
     # pure waste; only trusted at target >= cores so the bytes-aware
     # narrow targets (build_symbol_index at small corpora) keep their
@@ -387,17 +385,14 @@ def run_detectors(
     tiers: tuple = ("regex", "ast", "pattern"),
     per_file_timeout_s: float = 0.0,
     repartition: Optional[int] = None,
-    use_arrow: bool = True,
     fn_index_from_column: bool = False,
     emit_tier_errors: bool = False,
-    straggler_factor: int = 1,
-    regex_jvm: bool = False,
 ) -> DataFrame:
     """files_df must carry (repo, path, commit, ext, content).
 
-    use_arrow: mapInArrow path (default) — skips the pandas object-array
-    round-trip on both sides of the UDF (the detectors consume plain Python
-    strings either way); mapInPandas kept as the fallback.
+    One mapInArrow pass runs every tier per file; Arrow batches skip the
+    pandas object-array round-trip on both sides of the UDF (the detectors
+    consume plain Python strings).
 
     fn_index_from_column: read each row's ``called_defs`` map (attached by
     operators/index_join.attach_called_defs) instead of a global broadcast —
@@ -405,48 +400,11 @@ def run_detectors(
 
     emit_tier_errors: append one sentinel row (plugin = TIER_ERROR_PLUGIN)
     per swallowed tier failure/timeout so parse failures become an
-    observable metric at corpus scale (pipeline.extract splits them off).
-
-    straggler_factor: partition-width multiplier for heavy-tailed corpora
-    (skew.straggler_factor_from measures and decides — factor=1 stays the
-    uniform-corpus optimum, see ensure_min_parallelism).
-
-    regex_jvm: run the regex tier as a JVM-only relational plan
-    (operators/regex_relational.py) unioned with the Python AST/pattern
-    tiers — finding-identical to the fused path (the tiers' dedup key
-    namespaces are disjoint, see _analyze_one; gated by
-    tests/test_regex_relational.py::test_split_mode_equals_fused).
-    MEASURED AND KEPT OFF BY DEFAULT: on the sf0.1 corpus at local[32]
-    the split plan is ~2.6× slower than the fused path (0.9 s vs 2.4 s,
-    best-of-3) — it scans the input twice and evaluates every rule as an
-    RLIKE branch per line, while the fused tier's combined-alternation
-    screen skips most lines in one probe. It exists for regex-heavy
-    deployments where Python workers are the proven bottleneck (b1-style
-    regex-only scans already have regex_findings_relational). Incompatible
-    with per_file_timeout_s (the reference's timeout spans tiers within
-    one file, which a split plan cannot honor)."""
+    observable metric at corpus scale (pipeline.extract splits them off)."""
     from ..deploy import ensure_shipped
 
     spark = files_df.sparkSession
     ensure_shipped(spark)
-    if regex_jvm and "regex" in tiers:
-        if per_file_timeout_s:
-            raise ValueError("regex_jvm is incompatible with per_file_timeout_s")
-        from .regex_relational import regex_findings_full_relational
-
-        py_part = run_detectors(
-            files_df, ckb,
-            fn_index_broadcast=fn_index_broadcast,
-            tiers=tuple(t for t in tiers if t != "regex"),
-            repartition=repartition, use_arrow=use_arrow,
-            fn_index_from_column=fn_index_from_column,
-            emit_tier_errors=emit_tier_errors,
-            straggler_factor=straggler_factor,
-        )
-        rel_part = regex_findings_full_relational(
-            files_df.select("repo", "path", "commit", "ext", "content"), ckb
-        )
-        return py_part.unionByName(rel_part)
     ckb_bc = broadcast_ckb(spark, ckb)
 
     cols = ["repo", "path", "commit", "ext", "content"]
@@ -458,14 +416,12 @@ def run_detectors(
     else:
         # A small/compacted corpus can arrive as fewer splits than cores —
         # the CPU-bound detector stage must never be narrower than the
-        # cluster (and wants straggler slack, see ensure_min_parallelism).
-        narrow = ensure_min_parallelism(narrow, factor=max(1, straggler_factor))
+        # cluster (see ensure_min_parallelism).
+        narrow = ensure_min_parallelism(narrow)
 
     def _norm_map(cell) -> Optional[Dict[str, Any]]:
         if cell is None:
             return None
-        if isinstance(cell, dict):
-            return {k: dict(v) if not isinstance(v, dict) else v for k, v in cell.items()}
         # arrow MapArray.to_pylist yields [(key, value), ...]
         return {k: dict(v) if not isinstance(v, dict) else v for k, v in cell}
 
@@ -493,47 +449,30 @@ def run_detectors(
             )
         return rows
 
-    if use_arrow:
-        import pyarrow as pa
+    import pyarrow as pa
 
-        arrow_schema = pa.schema(
-            [
-                pa.field("repo", pa.string()), pa.field("path", pa.string()),
-                pa.field("commit", pa.string()), pa.field("vuln_type", pa.string()),
-                pa.field("message", pa.string()), pa.field("severity", pa.string()),
-                pa.field("line", pa.int32()), pa.field("plugin", pa.string()),
-                pa.field("trace", pa.list_(pa.string())), pa.field("rule_id", pa.string()),
-                pa.field("cwe", pa.string()), pa.field("variable", pa.string()),
-                pa.field("sink", pa.string()), pa.field("source", pa.string()),
-                pa.field("base_type", pa.string()),
-            ]
-        )
+    arrow_schema = pa.schema(
+        [
+            pa.field("repo", pa.string()), pa.field("path", pa.string()),
+            pa.field("commit", pa.string()), pa.field("vuln_type", pa.string()),
+            pa.field("message", pa.string()), pa.field("severity", pa.string()),
+            pa.field("line", pa.int32()), pa.field("plugin", pa.string()),
+            pa.field("trace", pa.list_(pa.string())), pa.field("rule_id", pa.string()),
+            pa.field("cwe", pa.string()), pa.field("variable", pa.string()),
+            pa.field("sink", pa.string()), pa.field("source", pa.string()),
+            pa.field("base_type", pa.string()),
+        ]
+    )
 
-        n_in_cols = 6 if fn_index_from_column else 5
+    n_in_cols = 6 if fn_index_from_column else 5
 
-        def process_arrow(batches):
-            ckb_local = ckb_bc.value
-            fn_index = fn_index_broadcast.value if fn_index_broadcast is not None else None
-            for batch in batches:
-                cols = [batch.column(i).to_pylist() for i in range(n_in_cols)]
-                rows = _rows_for_batch(cols, ckb_local, fn_index)
-                arrays = [pa.array([r[f.name] for r in rows], type=f.type) for f in arrow_schema]
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-        return narrow.mapInArrow(process_arrow, FINDINGS_FULL)
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def process_arrow(batches):
         ckb_local = ckb_bc.value
         fn_index = fn_index_broadcast.value if fn_index_broadcast is not None else None
-        for pdf in batches:
-            in_cols = [pdf["repo"], pdf["path"], pdf["commit"], pdf["ext"], pdf["content"]]
-            if fn_index_from_column:
-                in_cols.append(pdf["called_defs"])
-            rows = _rows_for_batch(tuple(in_cols), ckb_local, fn_index)
-            yield (
-                pd.DataFrame(rows, columns=_COLS)
-                if rows
-                else pd.DataFrame({c: pd.Series([], dtype="object") for c in _COLS})
-            )
+        for batch in batches:
+            cols = [batch.column(i).to_pylist() for i in range(n_in_cols)]
+            rows = _rows_for_batch(cols, ckb_local, fn_index)
+            arrays = [pa.array([r[f.name] for r in rows], type=f.type) for f in arrow_schema]
+            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
-    return narrow.mapInPandas(process, FINDINGS_FULL)
+    return narrow.mapInArrow(process_arrow, FINDINGS_FULL)

@@ -259,58 +259,13 @@ def _driver_pagerank(
 
 def _driver_union_find(rows) -> list:
     """(node, component-min) pairs, root excluded — the same contract as
-    the converged star edge list.
+    the converged star edge list. Python min = code-point order = Spark's
+    binary string ordering, so labels match the distributed path.
 
-    MEASURED AND KEPT ON THE DICT PATH: a vectorized numpy
-    min-label-propagation variant (kept below for reference/tests) is ~3x
-    SLOWER at the driver path's edge sizes (656 k random edges: 1.9 s vs
-    0.54 s, round 6) — ``np.ufunc.at`` is not a numpy fast path and each
-    sweep pays it twice, while the dict union-find touches each edge
-    once with near-constant amortized finds."""
-    return _driver_union_find_dict(rows)
-
-
-def _driver_union_find_np(rows) -> list:
-    """Connected components via pointer-jumping min-label propagation
-    (Shiloach–Vishkin style), all C-speed numpy: per sweep every edge
-    pulls both endpoint labels down to their min (``np.minimum.at``),
-    then labels pointer-jump (``lab = lab[lab]``) until a fixpoint.
-    Converges in O(log n) sweeps; each sweep is O(edges). ~5x the dict
-    union-find at the 10^5-10^6-edge sizes the driver path handles
-    (round 6). ``np.unique`` returns the nodes SORTED, so the minimum
-    label INDEX is the minimum node VALUE — the exact contract."""
-    import numpy as np
-
-    if not rows:
-        return []
-    a_vals = [a for a, _ in rows]
-    b_vals = [b for _, b in rows]
-    arr = np.array(a_vals + b_vals)
-    if arr.dtype == np.dtype("O") or arr.dtype.kind not in "iuUS":
-        # only int and str node ids sort identically to Spark's ordering
-        # at C speed; anything else takes the dict fallback
-        raise TypeError(f"non-vectorizable node dtype {arr.dtype}")
-    nodes, codes = np.unique(arr, return_inverse=True)
-    m = len(rows)
-    ca, cb = codes[:m], codes[m:]
-    lab = np.arange(len(nodes), dtype=np.int64)
-    while True:
-        prev = lab.copy()
-        np.minimum.at(lab, ca, lab[cb])
-        np.minimum.at(lab, cb, lab[ca])
-        lab = lab[lab]
-        if np.array_equal(lab, prev):
-            break
-    root_vals = nodes[lab]
-    return [
-        (nodes[i], root_vals[i]) for i in np.nonzero(lab != np.arange(len(nodes)))[0]
-    ]
-
-
-def _driver_union_find_dict(rows) -> list:
-    """Pure-Python union-find reference (and fallback for node types numpy
-    cannot sort). Python min = code-point order = Spark's binary string
-    ordering, so labels match the distributed path."""
+    A vectorized numpy min-label-propagation variant was dropped: it
+    measured ~3x SLOWER at the driver path's edge sizes (656 k random
+    edges: 1.9 s vs 0.54 s, round 6) — ``np.ufunc.at`` is not a numpy
+    fast path, while union-find touches each edge once."""
     parent = {}
 
     def find(x):

@@ -89,65 +89,3 @@ def regex_findings_relational(spark: SparkSession, files_df: DataFrame, kb: Know
         F.col("m.rule_id").alias("rule_id"),
         F.col("m.cwe").alias("cwe"),
     )
-
-
-def regex_findings_full_relational(files_df: DataFrame, ckb) -> DataFrame:
-    """The regex tier as a JVM-only plan emitting the FULL findings schema
-    (operators/analyze.FINDINGS_FULL) — drop-in replacement for the UDF
-    regex tier in run_detectors' split mode (regex_jvm=True). Rules come
-    from the CompiledKB (same normalized severities the UDF tier uses);
-    the post-processing the fused path applies per finding (cwe from
-    base_type, base_type = vuln_type before ' (') is reproduced as
-    literals since every rule's vuln_type is known at plan time."""
-    lang_map = F.create_map(*[F.lit(x) for kv in REGEX_LANG_MAP.items() for x in kv])
-    lines = files_df.select(
-        "repo",
-        "path",
-        "commit",
-        F.element_at(lang_map, F.col("ext")).alias("regex_lang"),
-        F.posexplode(F.split(F.col("content"), "\n")).alias("pos", "line_text"),
-    ).withColumn("line", (F.col("pos") + 1).cast("int")).drop("pos")
-
-    branches = []
-    rules = [("*", r) for r in ckb.general_regex]
-    for lang, lst in ckb.lang_regex.items():
-        rules.extend((lang, r) for r in lst)
-    for lang, r in rules:
-        hit = F.col("line_text").rlike(r.pattern)
-        if lang != "*":
-            hit = (F.col("regex_lang") == F.lit(lang)) & hit
-        base_type = r.vuln_type.split(" (")[0]
-        branches.append(
-            F.when(
-                hit,
-                F.struct(
-                    F.lit(r.vuln_type).alias("vuln_type"),
-                    F.lit(f"({r.rule_id}) {r.message}").alias("message"),
-                    F.lit(r.severity).alias("severity"),
-                    F.lit(r.rule_id).alias("rule_id"),
-                    F.lit(ckb.cwe_by_type.get(r.vuln_type)).cast("string").alias("cwe"),
-                    F.lit(base_type).alias("base_type"),
-                ),
-            )
-        )
-    matched = F.filter(F.array(*branches), lambda m: m.isNotNull())
-    exploded = lines.select(
-        "repo", "path", "commit", "line", F.explode(matched).alias("m")
-    )
-    return exploded.select(
-        "repo",
-        "path",
-        "commit",
-        F.col("m.vuln_type").alias("vuln_type"),
-        F.col("m.message").alias("message"),
-        F.col("m.severity").alias("severity"),
-        F.col("line").cast("int").alias("line"),
-        F.lit("General Regex Analyzer").alias("plugin"),
-        F.array().cast("array<string>").alias("trace"),
-        F.col("m.rule_id").alias("rule_id"),
-        F.col("m.cwe").alias("cwe"),
-        F.lit(None).cast("string").alias("variable"),
-        F.lit(None).cast("string").alias("sink"),
-        F.lit(None).cast("string").alias("source"),
-        F.col("m.base_type").alias("base_type"),
-    )

@@ -16,86 +16,8 @@ AQE's skew-join splitting (enabled in session.py) covers the join side.
 
 from __future__ import annotations
 
-import itertools
-import logging
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_OBS_SEQ = itertools.count()
-_LOG = logging.getLogger(__name__)
-_PROBE_WARNED = False
-
-# POLICY (VERDICT r3 #8): the detector stage's factor=1 partitioning (exactly
-# cores) is the measured optimum for UNIFORM corpora — every extra task pays
-# a python-worker round-trip. But a heavy-tailed corpus needs straggler
-# slack: when one partition draws several long files, its task pins a core
-# while the rest idle; more, smaller tasks let the scheduler rebalance. The
-# escape hatch engages AUTOMATICALLY when the measured max/median content
-# length crosses STRAGGLER_SKEW_THRESHOLD — the caller doesn't need to know
-# their corpus shape. max/MEDIAN, not max/mean: a corpus where the heavy
-# tail carries most bytes drags the mean toward the tail and hides the
-# skew, while the median stays at the typical file. Measurement is free:
-# the stats ride as observe() metrics on the pipeline's existing index pass
-# (attach_length_observation), never a dedicated job; when no prior action
-# ran, the policy stays at factor=1 (uniform-corpus behavior) rather than
-# paying a scan.
-STRAGGLER_SKEW_THRESHOLD = 64.0
-STRAGGLER_FACTOR = 4
-
-
-def attach_length_observation(files: DataFrame, content_col: str = "content"):
-    """Piggyback content-length skew stats onto the frame's FIRST action
-    (in pipeline.extract: the symbol-index job) — zero extra Spark jobs.
-    Returns (files_with_observation, observation)."""
-    obs = Observation(f"content_length_skew_{next(_OBS_SEQ)}")
-    return (
-        files.observe(
-            obs,
-            F.max(F.length(content_col)).alias("max_len"),
-            F.percentile_approx(F.length(content_col), 0.5).alias("p50_len"),
-        ),
-        obs,
-    )
-
-
-def straggler_factor_from(
-    obs,
-    threshold: float = STRAGGLER_SKEW_THRESHOLD,
-    factor: int = STRAGGLER_FACTOR,
-) -> int:
-    """Partition-width factor for the detector stage, from an
-    attach_length_observation handle. NON-BLOCKING: if the observed frame
-    has not materialized yet (e.g. inter-file indexing disabled, so no
-    prior action), returns 1 instead of deadlocking on obs.get.
-
-    The non-blocking peek probes a PRIVATE PySpark internal
-    (``obs._jo.getRowOrEmpty``). If a PySpark upgrade removes it, the
-    policy degrades to factor=1 — but LOUDLY (one warning per process,
-    ADVICE r4), never as a silent no-op a production deployment can't see;
-    unexpected exception types still propagate."""
-    global _PROBE_WARNED
-    try:
-        from py4j.protocol import Py4JError
-    except ImportError:  # pragma: no cover - py4j ships with pyspark
-        Py4JError = ()
-    try:
-        if not obs._jo.getRowOrEmpty().isDefined():
-            return 1
-        m = obs.get
-    except (AttributeError, Py4JError):
-        if not _PROBE_WARNED:
-            _PROBE_WARNED = True
-            _LOG.warning(
-                "straggler_factor_from: non-blocking Observation probe "
-                "unavailable on this PySpark build (obs._jo.getRowOrEmpty "
-                "missing) — auto-skew policy DISABLED, factor pinned to 1"
-            )
-        return 1
-    mx, p50 = m.get("max_len"), m.get("p50_len")
-    if not mx or not p50 or p50 <= 0:
-        return 1
-    return factor if (float(mx) / float(p50)) >= threshold else 1
 
 
 def repo_size_buckets(files: DataFrame, medium: int = 1000, large: int = 100_000) -> DataFrame:

@@ -3,7 +3,7 @@ lifecycle, SURVEY.md §3, re-expressed as two Spark jobs):
 
   read corpus → ingest (sha256/lang/ignore) →
   [job 1] symbol index (cross-file defs) → broadcast →
-  [job 2] fused detector pass (regex+ast+pattern tiers, one mapInPandas) →
+  [job 2] fused detector pass (regex+ast+pattern tiers, one mapInArrow) →
   findings → triples/nodes/edges → write parquet/Iceberg + lineage metrics.
 """
 
@@ -34,9 +34,6 @@ class ExtractionResult:
     # (scanner.py:183-188) — surfaced as a DataFrame (repo, path, commit,
     # message) so parse-failure loss is observable at corpus scale
     tier_errors: Optional[DataFrame] = None
-    # straggler-slack factor the detector stage ran with (1 = uniform
-    # corpus; >1 = length-skew policy engaged, operators/skew.py)
-    straggler_factor: int = 1
     _cached: Optional[DataFrame] = None
 
     def cleanup(self) -> None:
@@ -85,11 +82,6 @@ def extract(
     # file for nothing (round 6; content_dedup derives its own key when
     # the column is absent)
     files = files.select("repo", "path", "commit", "ext", "lang", "content")
-    # content-length skew stats ride the index pass's action (zero extra
-    # jobs); straggler_factor_from reads them non-blockingly below
-    from .operators.skew import attach_length_observation, straggler_factor_from
-
-    files, length_obs = attach_length_observation(files)
     files = files.persist()  # read once, feed both jobs
 
     fn_index_bc = None
@@ -124,11 +116,7 @@ def extract(
         repartition=repartition,
         fn_index_from_column=fn_index_from_column,
         emit_tier_errors=True,
-        # heavy-tailed corpus → automatic straggler slack (factor>1);
-        # uniform corpus or no index pass yet → measured optimum factor=1
-        straggler_factor=straggler_factor_from(length_obs),
     )
-    straggler_factor = detector_kwargs["straggler_factor"]
     if content_dedup:
         from .operators.content_dedup import run_detectors_content_deduped
 
@@ -144,17 +132,8 @@ def extract(
         .select("repo", "path", "commit", "message")
     )
     findings = findings.filter(F.col("plugin") != TIER_ERROR_PLUGIN)
-    # run-level metrics ride on the DataFrame (collected by whatever action
-    # materializes it; complements the per-split lineage table)
-    findings = findings.observe(
-        f"metrics_{run_id}",
-        F.count(F.lit(1)).alias("n_findings"),
-        # observe() forbids DISTINCT aggregates → HLL sketch
-        F.approx_count_distinct(F.col("path")).alias("n_files_with_findings"),
-    )
     triples = findings_to_triples(findings, run_id=run_id)
     nodes, edges = triples_to_nodes_edges(triples)
     return ExtractionResult(
-        findings, triples, nodes, edges, run_id, tier_errors=tier_errors,
-        straggler_factor=straggler_factor, _cached=files,
+        findings, triples, nodes, edges, run_id, tier_errors=tier_errors, _cached=files,
     )

@@ -289,8 +289,8 @@ def _oph_dense(documents: DataFrame, num_bins: int, shingle_n: int = 0) -> DataF
     num_bins``, ``sig[bin] = min(h)`` over the doc's tokens landing in that
     bin — instead of ``num_hashes`` affine transforms per token in the
     classic universal family (`_minhash_wide`). Measured **5.3× faster**
-    at 112 hashes / sf0.1 under ≤0.5 % host steal (tools/minhash_ab.py;
-    the split-aggregate alternative was a regression — see docs/FUTURE.md).
+    at 112 hashes / sf0.1 under ≤0.5 % host steal (recorded in
+    docs/ROUND5.md; the split-aggregate alternative was a regression).
 
     Empty bins (docs with fewer hashed tokens than bins) are filled by
     rotation densification (Shrivastava & Li's one-permutation hashing
@@ -1085,16 +1085,17 @@ def ppjoin_pairs(documents: DataFrame, tau_bp: int = 6000) -> DataFrame:
         F.sort_array(F.collect_list("tok")).alias("toks"),
         F.count(F.lit(1)).cast("long").alias("sz"),
     )
-    wcls = Window.partitionBy("toks")
-    members = docs_arr.withColumn("cls", F.min("doc_id").over(wcls)).select(
-        "doc_id", "cls", "sz"
-    )
-    reps = (
-        docs_arr.withColumn("cls", F.min("doc_id").over(wcls))
-        .filter(F.col("doc_id") == F.col("cls"))
-        .select("cls", "toks", "sz")
+    # ONE class window (one shuffle of the token arrays) feeds both the
+    # member map and the representatives; only a representative's token
+    # array is read downstream, so the others are dropped before the
+    # checkpoint
+    classed = (
+        docs_arr.withColumn("cls", F.min("doc_id").over(Window.partitionBy("toks")))
+        .withColumn("toks", F.when(F.col("doc_id") == F.col("cls"), F.col("toks")))
         .localCheckpoint(eager=True)
     )
+    members = classed.select("doc_id", "cls", "sz")
+    reps = classed.filter(F.col("doc_id") == F.col("cls")).select("cls", "toks", "sz")
     ct = reps.select("cls", F.explode("toks").alias("tok"), "sz")
     vocab = ct.groupBy("tok").agg(F.count(F.lit(1)).alias("_df"))
     ranked_vocab = vocab.withColumn(

@@ -26,7 +26,3 @@ def fixture_corpus(spark):
 
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def pytest_configure(config):
-    config.addinivalue_line("markers", "slow: long-running A/B timing tests")

@@ -78,14 +78,13 @@ def test_detector_stage_prunes_content_early(spark, fixture_corpus):
     findings = run_detectors(ingest_source_files(fixture_corpus), ckb)
     assert "content" not in findings.columns
     # everything ABOVE the detector UDF in the plan is content-free: the
-    # wide column dies inside the mapInPandas stage
+    # wide column dies inside the mapInArrow stage
     from dr_source_spark.operators.triples import findings_to_triples
 
     plan = _plan(findings_to_triples(findings))
-    udf_node = "MapInArrow" if "MapInArrow" in plan else "MapInPandas"
-    above_udf = plan.split(udf_node)[0]
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
+    above_udf = plan.split("MapInArrow")[0]
     assert "content#" not in above_udf
-    assert udf_node in plan
 
 
 def test_triples_projection_is_single_pass(spark, fixture_corpus):
@@ -97,16 +96,17 @@ def test_triples_projection_is_single_pass(spark, fixture_corpus):
     res = extract(spark, fixture_corpus, run_id="plan")
     for df in (res.triples, res.nodes, res.edges):
         plan = _plan(df)
-        udf_node = "MapInArrow" if "MapInArrow" in plan else "MapInPandas"
-        # exactly one detector stage in the whole physical plan (the index
-        # job's MapInPandas is a separate query, not part of this plan)
-        assert plan.count(udf_node) == 1, f"detector stage ran {plan.count(udf_node)}x"
+        # exactly one detector stage in the whole physical plan, and it is
+        # the Arrow one (the index job's MapInPandas is a separate query,
+        # not part of this plan)
+        assert plan.count("MapInArrow") == 1, f"detector stage ran {plan.count('MapInArrow')}x"
+        assert "MapInPandas" not in plan
         assert "Union" not in plan
 
 
 def test_detector_parallelism_widens_but_never_narrows(spark):
-    """A 1-split corpus must widen to the cluster width (factor=1 is the
-    measured optimum — per-task Arrow/python-worker overhead beats
+    """A 1-split corpus must widen to the cluster width (exactly cores is
+    the measured optimum — per-task Arrow/python-worker overhead beats
     straggler slack on this stage), and an input that already arrives wider
     (e.g. many natural parquet splits) must NEVER be collapsed (the round-2
     regression: an inputFiles()-count trigger repartitioned natural splits
@@ -796,6 +796,7 @@ def test_batch24_plans_schema_graph_and_best_run(spark):
 
 def test_batch49_50_plans_topk_and_no_cartesian(spark):
     import __spark_entry__ as E
+    from tools.bnlj_classify import bnlj_builds, classify_build
 
     # top-k cuts must plan as TakeOrderedAndProject (per-partition
     # top-k + k-merge), never a global Sort over the full pair table.
@@ -803,14 +804,16 @@ def test_batch49_50_plans_topk_and_no_cartesian(spark):
     # aggregate as a broadcast scalar, which plans as a nested-loop
     # attach (the sanctioned scalar-total shape, O(n)); any OTHER
     # nested-loop join — i.e. a pair-level one — stays forbidden, so
-    # every BNLJ line must carry the boundary column in its condition.
+    # every BNLJ build side must classify as a scalar aggregate.
     for name in ("kg_neighbor_jaccard_topk",):
-        plan = _plan(E.queries()[name](spark, SF))
+        df = E.queries()[name](spark, SF)
+        plan = _plan(df)
         assert "TakeOrderedAndProject" in plan, name
         assert "CartesianProduct" not in plan, name
-        for line in plan.splitlines():
-            if "BroadcastNestedLoopJoin" in line:
-                assert "_bk" in line, (name, line)
+        builds = [b for _node, b in bnlj_builds(df._jdf.queryExecution().executedPlan())]
+        assert builds, name
+        for build in builds:
+            assert classify_build(build) == "scalar", (name, build.toString())
     # both extremes sides of the norm screen take the TakeOrdered path
     plan = _plan(E.queries()["emb_norm_extremes"](spark, SF))
     assert plan.count("TakeOrderedAndProject") == 2

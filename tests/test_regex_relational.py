@@ -2,7 +2,6 @@
 on the shipped KB, and its plan must be UDF-free."""
 
 import pytest
-from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
@@ -39,47 +38,3 @@ def test_relational_plan_is_jvm_only_with_foldable_patterns(both):
     # patterns appear as literals, not as a pattern column
     assert "RLIKE line_text" not in plan
     assert plan.count("RLIKE") >= 10
-
-
-def test_split_mode_equals_fused(spark, fixture_corpus):
-    """run_detectors(regex_jvm=True) must emit the IDENTICAL finding
-    MULTISET as the fused single-UDF path — the tiers' dedup-key namespaces
-    are disjoint, so splitting the regex tier out cannot change the dedup.
-    Counter (not set — ADVICE r4): a multiplicity divergence (fused
-    per-file dedup vs an un-deduped relational regex part) must fail."""
-    from collections import Counter
-
-    from dr_source_spark.kb import compiled_kb_cached
-    from dr_source_spark.operators.analyze import run_detectors
-    from dr_source_spark.sources.corpus import ingest_source_files
-    from dr_source_spark.sources.synth import synth_code_corpus
-
-    ckb = compiled_kb_cached(project_dir="/nonexistent")
-
-    def rows(df):
-        return Counter(
-            (r.repo, r.path, r.line, r.vuln_type, r.message, r.severity,
-             r.rule_id, r.cwe, r.variable, r.sink, r.source, r.base_type,
-             r.plugin, tuple(r.trace or []))
-            for r in df.collect()
-        )
-
-    fix = ingest_source_files(fixture_corpus)
-    assert rows(run_detectors(fix, ckb, regex_jvm=True)) == rows(run_detectors(fix, ckb))
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    syn = ingest_source_files(synth_code_corpus(docs, templates=6))
-    assert rows(run_detectors(syn, ckb, regex_jvm=True)) == rows(run_detectors(syn, ckb))
-
-
-def test_split_mode_rejects_timeout(spark, fixture_corpus):
-    import pytest as _pt
-
-    from dr_source_spark.kb import compiled_kb_cached
-    from dr_source_spark.operators.analyze import run_detectors
-    from dr_source_spark.sources.corpus import ingest_source_files
-
-    files = ingest_source_files(fixture_corpus)
-    with _pt.raises(ValueError):
-        run_detectors(files, compiled_kb_cached(project_dir="/nonexistent"),
-                      regex_jvm=True, per_file_timeout_s=1.0)

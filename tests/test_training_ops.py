@@ -422,29 +422,6 @@ def test_verified_pairs_restructured_path_row_identical(docs):
     assert got_c == want_c
 
 
-def test_union_find_numpy_variant_matches_dict_reference():
-    """The numpy min-label-propagation CC (kept for reference; the dict
-    loop measured faster and stays the driver path) must produce the
-    identical (node, component-min) set on ints and strings."""
-    import random
-
-    from dr_source_spark.operators.graph import (
-        _driver_union_find_dict,
-        _driver_union_find_np,
-    )
-
-    random.seed(5)
-    edges = [(random.randrange(300), random.randrange(300)) for _ in range(900)]
-    d = sorted(_driver_union_find_dict(edges))
-    n = sorted((int(a), int(b)) for a, b in _driver_union_find_np(edges))
-    assert d == n
-    sedges = [(f"v{a}", f"v{b}") for a, b in edges]
-    ds = sorted(_driver_union_find_dict(sedges))
-    ns = sorted((str(a), str(b)) for a, b in _driver_union_find_np(sedges))
-    assert ds == ns
-    assert _driver_union_find_np([]) == []
-
-
 def test_duplicate_clusters_chain_converges_logarithmically(spark):
     """A 64-node path graph (diameter 63 — label propagation's worst case)
     must fully merge within the star algorithm's O(log n) round budget."""
@@ -1376,7 +1353,7 @@ def test_bigram_diversity_orders_spam_below_prose(spark):
 
 # ---------------------------------------------------------------------------
 # One-permutation hashing (OPH) — the 5.3x-cheaper signature family
-# (tools/minhash_ab.py measurement; see _oph_dense for the plan shape)
+# (measurement recorded in docs/ROUND5.md; see _oph_dense for the plan shape)
 
 
 def test_oph_signatures_match_python_model(spark):

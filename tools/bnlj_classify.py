@@ -80,6 +80,17 @@ def classify_build(build) -> str:
     return "REVIEW: " + " <- ".join(names[:6])
 
 
+def bnlj_builds(plan):
+    """(join node, build-side child) for every BroadcastNestedLoopJoin in a
+    physical plan."""
+    for node in _walk(plan):
+        if node.nodeName() != "BroadcastNestedLoopJoin":
+            continue
+        kids = _children(node)
+        build_right = "BuildRight" in node.buildSide().toString()
+        yield node, kids[1] if build_right else kids[0]
+
+
 def main() -> None:
     from dr_source_spark.session import get_spark
 
@@ -93,13 +104,8 @@ def main() -> None:
         df = qs[name](spark, SF)
         plan = df._jdf.queryExecution().executedPlan()
         found = False
-        for node in _walk(plan):
-            if node.nodeName() != "BroadcastNestedLoopJoin":
-                continue
+        for node, build in bnlj_builds(plan):
             found = True
-            kids = _children(node)
-            build_right = "BuildRight" in node.buildSide().toString()
-            build = kids[1] if build_right else kids[0]
             verdict = classify_build(build)
             joint = node.joinType().toString()
             print(f"{name:36s} {joint:10s} {verdict}")

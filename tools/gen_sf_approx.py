@@ -11,6 +11,8 @@ lang mix en .41 / zh-es-fr .15 / de .14), TPC-H-ish uniform dims/facts,
 observed layout (1 row group per 1 Mi rows).
 
 Usage: python tools/gen_sf_approx.py OUT_DIR SCALE   # SCALE=1.0 -> sf1-ish
+The fixed region/nation dims are copied from the SF directory named by
+SPARK_GRAFT_SF_DIR (default: the committed sf0.1).
 """
 
 from __future__ import annotations
@@ -45,8 +47,9 @@ def gen(out: str, scale: float) -> None:
     n_emb = int(20000 * scale)
 
     # region / nation: fixed dims — copy the committed ones
+    src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     for t in ("region", "nation"):
-        pq.write_table(pq.read_table(f"/root/testdata/sf0.1/{t}.parquet"), f"{out}/{t}.parquet")
+        pq.write_table(pq.read_table(f"{src}/{t}.parquet"), f"{out}/{t}.parquet")
 
     # documents
     vocab = np.array(VOCAB)
