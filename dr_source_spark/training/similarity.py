@@ -804,7 +804,7 @@ def nn_margin_stats(
     )
     den = F.col("a_n") * F.col("b_n")
     scored = (
-        b.join(F.broadcast(a), F.col("b_id") != F.col("a_id"))
+        b.join(a, F.col("b_id") != F.col("a_id"))
         .withColumn(
             "sim",
             F.round(F.when(den > 0, _dot(F.col("a_vec"), F.col("b_vec")) / den), 6),

@@ -59,7 +59,7 @@ wrapped = st.tuples(program, st.booleans()).map(
 )
 
 
-def _reference_batch(programs):
+def _reference_batch(reference, programs):
     """Run the reference Python AST + regex tiers on many programs at once
     (one subprocess for the whole batch)."""
     ensure_stubs()
@@ -69,7 +69,7 @@ def _reference_batch(programs):
             f.write(src)
     code = f"""
 import sys, os, json
-sys.path.insert(0, "/tmp/refstubs"); sys.path.insert(0, "/root/reference")
+sys.path.insert(0, "/tmp/refstubs"); sys.path.insert(0, {reference!r})
 from dr_source.plugins.regex.plugin import RegexAnalyzer
 from dr_source.plugins.python.plugin import PythonAstAnalyzer
 from dr_source.plugins.pattern.plugin import PatternAnalyzer
@@ -110,9 +110,9 @@ def test_collect_programs(src):
     _COLLECTED.append(src)
 
 
-def test_differential_against_reference():
+def test_differential_against_reference(reference):
     programs = _COLLECTED or ["cmd = request.args.get('x')\nos.system(cmd)"]
-    ref = _reference_batch(programs)
+    ref = _reference_batch(reference, programs)
     mismatches = []
     for i, src in enumerate(programs):
         want = {
@@ -124,7 +124,7 @@ def test_differential_against_reference():
     assert not mismatches, f"{len(mismatches)} divergent programs; first: {mismatches[0]}"
 
 
-def test_regex_pattern_tiers_cross_language_differential():
+def test_regex_pattern_tiers_cross_language_differential(reference):
     """Cross-language differential gate for the runnable non-AST tiers:
     KB-derived exemplar fuzz over 9 extensions vs the live reference's
     regex+pattern analyzers (tools/regex_diff_fuzz.py; 5,100 files green

@@ -19,7 +19,7 @@ from dr_source_spark.detectors.pattern_match import textual_match  # noqa: E402
 from tools.matcher_diff_fuzz import generate_pairs, run_reference_fallback  # noqa: E402
 
 
-def test_textual_fallback_matches_reference_live():
+def test_textual_fallback_matches_reference_live(reference):
     pairs = generate_pairs(600, seed=0)
     ref = run_reference_fallback(pairs)
     divergences = [

@@ -51,9 +51,9 @@ def test_textual_fallback_unification():
     assert not textual_match("$X == $X", "x == y")
 
 
-def test_pattern_tier_on_php_and_ruby_fixture_lines():
+def test_pattern_tier_on_php_and_ruby_fixture_lines(reference_corpus):
     ckb = compile_kb(load_kb(project_dir="/nonexistent"))
-    php = open("/root/reference/tests/test_code/php/vulnerable.php", encoding="utf-8").read()
+    php = open(f"{reference_corpus}/php/vulnerable.php", encoding="utf-8").read()
     out = analyze_pattern(php, ".php", ckb)
     # the self-comparison expression `$a == $a` sits on line 23 (the reference
     # pytest only asserts >=1 finding; its comment line numbers are stale)
@@ -61,6 +61,6 @@ def test_pattern_tier_on_php_and_ruby_fixture_lines():
     assert out[0]["severity"] == "LOW"
     assert out[0]["message"] == "Vulnerability found via pattern matching."
 
-    rb = open("/root/reference/tests/test_code/ruby/vulnerable.rb", encoding="utf-8").read()
+    rb = open(f"{reference_corpus}/ruby/vulnerable.rb", encoding="utf-8").read()
     out = analyze_pattern(rb, ".rb", ckb)
     assert {(f["vuln_type"], f["line"]) for f in out} == {("SELF_COMPARISON (Pattern)", 16)}

@@ -18,6 +18,13 @@ def result(spark, fixture_corpus):
     return extract(spark, fixture_corpus, run_id="test-run")
 
 
+@pytest.fixture(scope="module")
+def realcode_findings(spark, realcode_corpus):
+    from dr_source_spark.pipeline import extract
+
+    return extract(spark, realcode_corpus, run_id="test-run").findings
+
+
 def test_sha256_ingest_invariant(spark, fixture_corpus):
     from dr_source_spark.sources.corpus import ingest_source_files
 
@@ -70,20 +77,20 @@ def test_nodes_edges(result):
     assert result.nodes.select("node_id").distinct().count() == len(nodes)
 
 
-def test_dedup_salted_matches_plain(spark, result):
+def test_dedup_salted_matches_plain(spark, realcode_findings):
     from dr_source_spark.operators.relational import dedup_findings, dedup_findings_salted
 
-    plain = dedup_findings(result.findings).count()
-    salted = dedup_findings_salted(result.findings).count()
+    plain = dedup_findings(realcode_findings).count()
+    salted = dedup_findings_salted(realcode_findings).count()
     assert plain == salted
 
 
-def test_scan_diff_sets(spark, result):
+def test_scan_diff_sets(spark, realcode_findings):
     from dr_source_spark.operators.relational import scan_diff
 
     key = ["path", "line", "vuln_type", "message"]
-    curr = result.findings
-    prev = result.findings.filter(F.col("severity") == "MEDIUM")  # regex tier only
+    curr = realcode_findings
+    prev = realcode_findings.filter(F.col("severity") == "MEDIUM")  # regex tier only
     d = scan_diff(curr, prev, key)
     assert d["resolved"].count() == 0
     assert d["persistent"].count() == prev.select(key).distinct().count()
@@ -184,7 +191,7 @@ def test_csv_default_read_is_splittable(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
-def test_python_inter_file_opt_in_through_pipeline(spark):
+def test_python_inter_file_opt_in_through_pipeline(spark, reference_corpus):
     """extract(index_python=True) resolves cross-file Python taint over the
     reference's own inter_file fixtures (its pytest expects the cross-file
     trace, tests/test_inter_file_analysis.py:12-22); default off =
@@ -193,9 +200,7 @@ def test_python_inter_file_opt_in_through_pipeline(spark):
     from dr_source_spark.pipeline import extract
     from dr_source_spark.sources.corpus import corpus_from_dir
 
-    corpus = corpus_from_dir(
-        spark, "/root/reference/tests/test_code/inter_file/python", repo="r", commit="c"
-    )
+    corpus = corpus_from_dir(spark, f"{reference_corpus}/inter_file/python", repo="r", commit="c")
 
     res = extract(spark, corpus, run_id="py-if", index_python=True)
     hits = [

@@ -11,7 +11,7 @@ SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module", autouse=True)
-def _cache_free(spark, fixture_corpus):
+def _cache_free(spark, realcode_corpus):
     """Plan gates must see REAL scans. Any earlier module that cached a
     DataFrame over the same parquet (e.g. test_training_ops' docs fixture)
     makes Spark's CacheManager substitute an InMemoryRelation whose stored
@@ -21,7 +21,7 @@ def _cache_free(spark, fixture_corpus):
     cache afterwards so later modules keep their speed."""
     spark.catalog.clearCache()
     yield
-    fixture_corpus.cache()
+    realcode_corpus.cache()
 
 
 def _plan(df) -> str:
@@ -68,14 +68,14 @@ def test_topk_uses_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_detector_stage_prunes_content_early(spark, fixture_corpus):
+def test_detector_stage_prunes_content_early(spark, realcode_corpus):
     """The wide content column must not survive past the detector UDF."""
     from dr_source_spark.kb import compile_kb, load_kb
     from dr_source_spark.operators.analyze import run_detectors
     from dr_source_spark.sources.corpus import ingest_source_files
 
     ckb = compile_kb(load_kb(project_dir="/nonexistent"))
-    findings = run_detectors(ingest_source_files(fixture_corpus), ckb)
+    findings = run_detectors(ingest_source_files(realcode_corpus), ckb)
     assert "content" not in findings.columns
     # everything ABOVE the detector UDF in the plan is content-free: the
     # wide column dies inside the mapInArrow stage
@@ -87,13 +87,13 @@ def test_detector_stage_prunes_content_early(spark, fixture_corpus):
     assert "content#" not in above_udf
 
 
-def test_triples_projection_is_single_pass(spark, fixture_corpus):
+def test_triples_projection_is_single_pass(spark, realcode_corpus):
     """findings→triples must scan the detector output ONCE (conditional
     explode), never as a union of per-predicate branches — each union branch
     re-runs the whole detector stage when findings are uncached."""
     from dr_source_spark.pipeline import extract
 
-    res = extract(spark, fixture_corpus, run_id="plan")
+    res = extract(spark, realcode_corpus, run_id="plan")
     for df in (res.triples, res.nodes, res.edges):
         plan = _plan(df)
         # exactly one detector stage in the whole physical plan, and it is
@@ -796,7 +796,7 @@ def test_batch24_plans_schema_graph_and_best_run(spark):
 
 def test_batch49_50_plans_topk_and_no_cartesian(spark):
     import __spark_entry__ as E
-    from tools.bnlj_classify import bnlj_builds, classify_build
+    from tools.sweep import bnlj_builds, classify_build
 
     # top-k cuts must plan as TakeOrderedAndProject (per-partition
     # top-k + k-merge), never a global Sort over the full pair table.

@@ -8,14 +8,13 @@ def _norm(rows):
 
 
 class TestCorpusDirDataSource:
-    def test_parity_with_driver_walker(self, spark):
+    def test_parity_with_driver_walker(self, spark, reference_corpus):
         from dr_source_spark.sources.corpus import corpus_from_dir
         from dr_source_spark.sources.pyds import corpus_from_dir_distributed
 
-        root = "/root/reference/tests/test_code"
-        want = _norm(corpus_from_dir(spark, root, repo="r", commit="c").collect())
+        want = _norm(corpus_from_dir(spark, reference_corpus, repo="r", commit="c").collect())
         got_df = corpus_from_dir_distributed(
-            spark, root, repo="r", commit="c", num_shards=4
+            spark, reference_corpus, repo="r", commit="c", num_shards=4
         )
         got = _norm(got_df.collect())
         assert got == want
@@ -41,13 +40,13 @@ class TestCorpusDirDataSource:
             "a.py", "notes.md", os.path.join("node_modules", "b.js")
         }
 
-    def test_feeds_ingest_invariant(self, spark):
+    def test_feeds_ingest_invariant(self, spark, reference_corpus):
         # the downstream sha256 ingest invariant holds over the source
         from dr_source_spark.sources.corpus import ingest_source_files
         from dr_source_spark.sources.pyds import corpus_from_dir_distributed
 
         df = ingest_source_files(
-            corpus_from_dir_distributed(spark, "/root/reference/tests/test_code")
+            corpus_from_dir_distributed(spark, reference_corpus)
         )
         row = df.filter(df.path.endswith(".java")).select("content_sha256").first()
         assert row is not None and len(row[0]) == 64

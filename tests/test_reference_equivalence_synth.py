@@ -30,10 +30,10 @@ def corpus_dir(spark):
     return out
 
 
-def _reference_findings(corpus_dir):
+def _reference_findings(reference, corpus_dir):
     code = f"""
 import sys, os, json
-sys.path.insert(0, {STUBS!r}); sys.path.insert(0, "/root/reference")
+sys.path.insert(0, {STUBS!r}); sys.path.insert(0, {reference!r})
 from dr_source.plugins.regex.plugin import RegexAnalyzer
 from dr_source.plugins.python.plugin import PythonAstAnalyzer
 regex = RegexAnalyzer(); pyast = PythonAstAnalyzer()
@@ -55,12 +55,12 @@ print(json.dumps(out))
     return {tuple(x[:5]) + (tuple(x[5]),) for x in json.loads(res.stdout.strip().splitlines()[-1])}
 
 
-def test_engine_matches_reference_on_unseen_corpus(spark, corpus_dir):
+def test_engine_matches_reference_on_unseen_corpus(spark, reference, corpus_dir):
     from dr_source_spark.kb import compile_kb, load_kb
     from dr_source_spark.operators.analyze import run_detectors
     from dr_source_spark.sources.corpus import corpus_from_dir, ingest_source_files
 
-    ref = _reference_findings(corpus_dir)
+    ref = _reference_findings(reference, corpus_dir)
     assert ref, "reference produced no findings — corpus setup broken"
 
     files = ingest_source_files(corpus_from_dir(spark, corpus_dir))

@@ -5,14 +5,14 @@ import pytest
 
 
 @pytest.fixture(scope="module")
-def both(spark, fixture_corpus):
+def both(spark, realcode_corpus):
     from dr_source_spark.kb import compile_kb, load_kb
     from dr_source_spark.operators.analyze import run_detectors
     from dr_source_spark.operators.regex_relational import regex_findings_relational
     from dr_source_spark.sources.corpus import ingest_source_files
 
     kb = load_kb(project_dir="/nonexistent")
-    files = ingest_source_files(fixture_corpus)
+    files = ingest_source_files(realcode_corpus)
     udf_tier = run_detectors(files, compile_kb(kb), tiers=("regex",))
     rel_tier = regex_findings_relational(spark, files, kb)
     return udf_tier, rel_tier

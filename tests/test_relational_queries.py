@@ -1,16 +1,15 @@
 """Gates for the round-5 relational operator-class queries (TPC-H Q4 /
 Q13 / Q16 / Q17 / Q19 / Q22 shapes + the CEP sequence query): full DuckDB
-oracle parity at sf0.001 (the same cell-exact compare tools/oracle_check.py
-runs at sf0.01), plus physical-plan assertions for the scale properties
+oracle parity at sf0.001 (tools/sweep.py's oracle mode: cell values and
+column types), plus physical-plan assertions for the scale properties
 each class exists to provide (semi/anti joins instead of join+distinct,
 hash join under a disjunctive predicate, one exchange for the CEP window)."""
 
-import duckdb
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
+from tools.sweep import sweep
 
 SF = "/root/testdata/sf0.001"
 
@@ -49,35 +48,10 @@ NEW_QUERIES = [
 ]
 
 
-@pytest.fixture(scope="module")
-def oracle_con():
-    con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events", "documents"]:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    return con
-
-
-def _norm(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
-
-
 @pytest.mark.parametrize("name", NEW_QUERIES)
-def test_oracle_parity_sf0001(spark, oracle_con, name):
-    sdf = _norm(E.queries()[name](spark, SF).toPandas())
-    odf = _norm(oracle_con.execute(E.oracle_sql()[name]).fetchdf())
-    assert list(sdf.columns) == list(odf.columns)
-    assert len(sdf) == len(odf) and len(sdf) > 0, (len(sdf), len(odf))
-    for c in sdf.columns:
-        a, b = sdf[c], odf[c]
-        if a.dtype.kind == "f" or b.dtype.kind == "f":
-            ok = (a.isna() & b.isna()) | (abs(a.astype(float) - b.astype(float)) < 1e-12)
-        else:
-            ok = a.astype(str) == b.astype(str)
-        assert ok.all(), f"{name}.{c}: {a[~ok].head(3)} vs {b[~ok].head(3)}"
+def test_oracle_parity_sf0001(spark, name):
+    (rec,) = sweep(spark, "oracle", SF, only=[name])
+    assert rec["status"] == "ok" and rec["rows"], rec
 
 
 def _plan(df) -> str:

@@ -4,14 +4,14 @@ import pytest
 
 
 @pytest.fixture(scope="module")
-def deps_corpus(spark):
+def deps_corpus(spark, reference_corpus):
     from dr_source_spark.sources.corpus import corpus_from_dir
 
     # deps fixtures are .txt/.xml — unreachable via directory-scan ignore
     # rules (reference scanner.py:49 quirk) → load with rules off, as the
     # reference does for single-file targets
     return corpus_from_dir(
-        spark, "/root/reference/tests/test_code/deps", repo="deps", commit="v1", apply_ignore_rules=False
+        spark, f"{reference_corpus}/deps", repo="deps", commit="v1", apply_ignore_rules=False
     )
 
 

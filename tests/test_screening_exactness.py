@@ -23,7 +23,6 @@ def _production_screen(lang, specs, content):
         return specs
     return _screen_specs(specs, content)
 
-ROOT = "/root/reference/tests/test_code"
 CKB = compile_kb(load_kb(project_dir="/nonexistent"))
 
 _TIERS = {
@@ -39,23 +38,20 @@ def _key(f):
     return (f["line"], f["vuln_type"], f["message"], f["severity"], tuple(f["trace"]))
 
 
-def _all_fixture_files():
-    for dirpath, _dirs, files in os.walk(ROOT):
+def test_screened_equals_full(reference_corpus):
+    n = 0
+    for dirpath, _dirs, files in os.walk(reference_corpus):
         for fn in sorted(files):
             ext = os.path.splitext(fn)[1]
-            if ext in _TIERS:
-                yield os.path.join(dirpath, fn), ext
-
-
-@pytest.mark.parametrize("fp,ext", list(_all_fixture_files()), ids=lambda x: os.path.basename(str(x)))
-def test_screened_equals_full(fp, ext):
-    if not isinstance(fp, str) or not fp.endswith(ext):
-        pytest.skip("param pairing artifact")
-    lang, analyze = _TIERS[ext]
-    content = open(fp, encoding="utf-8", errors="ignore").read()
-    full = {_key(f) for f in analyze(content, CKB.taint[lang])}
-    screened = {_key(f) for f in analyze(content, _production_screen(lang, CKB.taint[lang], content))}
-    assert full == screened
+            if ext not in _TIERS:
+                continue
+            lang, analyze = _TIERS[ext]
+            content = open(os.path.join(dirpath, fn), encoding="utf-8", errors="ignore").read()
+            full = {_key(f) for f in analyze(content, CKB.taint[lang])}
+            screened = {_key(f) for f in analyze(content, _production_screen(lang, CKB.taint[lang], content))}
+            assert full == screened, fn
+            n += 1
+    assert n
 
 
 def test_conditional_group_rules_stay_outside_screen():
@@ -76,10 +72,12 @@ def test_conditional_group_rules_stay_outside_screen():
     assert screen is not None and screen.search("foobar")
 
 
-def test_regex_line_screen_is_exact():
+@pytest.mark.parametrize("corpus", ["realcode_dir", "reference_corpus"])
+def test_regex_line_screen_is_exact(corpus, request):
     """The combined-alternation line screen must not change regex-tier
-    output: compare against a screen-free brute force over fixture files,
-    synth templates, and adversarial lines built from the rules themselves."""
+    output: compare against a screen-free brute force over a corpus
+    (tests/realcode, or the reference fixture files), synth templates, and
+    adversarial lines built from the rules themselves."""
     import os
     import re
 
@@ -102,7 +100,7 @@ def test_regex_line_screen_is_exact():
         return out
 
     corpora = []
-    for dirpath, _d, files in os.walk("/root/reference/tests/test_code"):
+    for dirpath, _d, files in os.walk(request.getfixturevalue(corpus)):
         for fn in files:
             with open(os.path.join(dirpath, fn), encoding="utf-8", errors="ignore") as f:
                 corpora.append((f.read(), os.path.splitext(fn)[1]))

@@ -163,15 +163,15 @@ def test_symbol_index_last_wins(spark):
     assert helpers[0]["path"] == "z/util.js" and helpers[0]["params"] == ["y"]
 
 
-def test_python_interfile_extension(spark):
+def test_python_interfile_extension(spark, reference_corpus):
     """The stock reference never wires a project index into the Python tier
     (SURVEY.md §2B B7); our engine supports it as an opt-in extension."""
     from dr_source_spark.detectors.python_taint import analyze_python
     from dr_source_spark.kb import compile_kb, load_kb
 
     ckb = compile_kb(load_kb(project_dir="/nonexistent"))
-    utils = open("/root/reference/tests/test_code/inter_file/python/inter_file_utils.py").read()
-    app = open("/root/reference/tests/test_code/inter_file/python/inter_file_app.py").read()
+    utils = open(f"{reference_corpus}/inter_file/python/inter_file_utils.py").read()
+    app = open(f"{reference_corpus}/inter_file/python/inter_file_app.py").read()
 
     import ast as pyast
 

@@ -122,10 +122,9 @@ def _assert_same(src: str, label: str) -> None:
     assert tokenize(src) == tokenize_reference(src), f"token stream diverged: {label}"
 
 
-def test_reference_fixture_corpus_identical():
-    root = "/root/reference/tests/test_code"
+def test_reference_fixture_corpus_identical(reference_corpus):
     n = 0
-    for dirpath, _dirs, files in os.walk(root):
+    for dirpath, _dirs, files in os.walk(reference_corpus):
         for fn in files:
             fp = os.path.join(dirpath, fn)
             with open(fp, encoding="utf-8", errors="ignore") as f:
@@ -205,13 +204,13 @@ def _parse_trees(src: str, lang: str):
     return out
 
 
-def test_expr_parser_climbing_equals_descent():
+def test_expr_parser_climbing_equals_descent(realcode_dir):
     import random
 
     from test_parser_grammar_fuzz import gen_program
 
     cases = []
-    for dirpath, _d, files in os.walk("/root/reference/tests/test_code"):
+    for dirpath, _d, files in os.walk(realcode_dir):
         for fn in files:
             if fn.endswith((".java", ".js")):
                 with open(os.path.join(dirpath, fn), encoding="utf-8", errors="ignore") as f:

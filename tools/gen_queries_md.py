@@ -60,7 +60,6 @@ def main() -> None:
 
     registry = E.queries()
     qs = list(registry)
-    assert set(qs) == set(E.oracle_sql()), "query/oracle key mismatch"
     # the registry values ARE the functions — no source parsing needed
     fn_of = {k: v.__name__ for k, v in registry.items()}
 
@@ -98,7 +97,7 @@ def main() -> None:
         "# Query catalog — every driver-facing oracle-checked query", "",
         f"{len(qs)} queries in `__spark_entry__.queries()`; every one has a",
         "value-hash DuckDB oracle in `oracle_sql()` (cell-exact at sf0.01,",
-        "`tools/oracle_check.py`). Grouped by family; descriptions are the",
+        "`tools/sweep.py --mode oracle`). Grouped by family; descriptions are the",
         "implementation notes from the query functions. Regenerate with",
         "`python tools/gen_queries_md.py`.", "",
     ]
