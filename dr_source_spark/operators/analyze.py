@@ -19,6 +19,7 @@ Scale design (SURVEY.md §4 R6/R9/R10):
 
 from __future__ import annotations
 
+from itertools import repeat
 from typing import Any, Dict, List, Optional
 
 from pyspark.sql import DataFrame
@@ -385,7 +386,6 @@ def run_detectors(
     tiers: tuple = ("regex", "ast", "pattern"),
     per_file_timeout_s: float = 0.0,
     repartition: Optional[int] = None,
-    fn_index_from_column: bool = False,
     emit_tier_errors: bool = False,
 ) -> DataFrame:
     """files_df must carry (repo, path, commit, ext, content).
@@ -394,9 +394,10 @@ def run_detectors(
     pandas object-array round-trip on both sides of the UDF (the detectors
     consume plain Python strings).
 
-    fn_index_from_column: read each row's ``called_defs`` map (attached by
-    operators/index_join.attach_called_defs) instead of a global broadcast —
-    the inter-file path that needs no driver collect at any corpus scale.
+    Inter-file defs come from the input: when files_df has a
+    ``called_defs`` column (join mode, index_build.resolve_symbol_index)
+    each file reads its own map; otherwise every file reads
+    ``fn_index_broadcast``.
 
     emit_tier_errors: append one sentinel row (plugin = TIER_ERROR_PLUGIN)
     per swallowed tier failure/timeout so parse failures become an
@@ -407,8 +408,9 @@ def run_detectors(
     ensure_shipped(spark)
     ckb_bc = broadcast_ckb(spark, ckb)
 
+    from_column = "called_defs" in files_df.columns
     cols = ["repo", "path", "commit", "ext", "content"]
-    if fn_index_from_column:
+    if from_column:
         cols.append("called_defs")
     narrow = files_df.select(*cols)
     if repartition:
@@ -425,30 +427,6 @@ def run_detectors(
         # arrow MapArray.to_pylist yields [(key, value), ...]
         return {k: dict(v) if not isinstance(v, dict) else v for k, v in cell}
 
-    def _rows_for_batch(cols, ckb_local, fn_index) -> List[Dict[str, Any]]:
-        rows: List[Dict[str, Any]] = []
-        if fn_index_from_column:
-            for repo, path, commit, ext, content, defs in zip(*cols):
-                if content is None:
-                    continue
-                rows.extend(
-                    _analyze_one(
-                        repo, path, commit, ext or "", content, ckb_local,
-                        _norm_map(defs), tiers, per_file_timeout_s, emit_tier_errors,
-                    )
-                )
-            return rows
-        for repo, path, commit, ext, content in zip(*cols):
-            if content is None:
-                continue
-            rows.extend(
-                _analyze_one(
-                    repo, path, commit, ext or "", content, ckb_local, fn_index,
-                    tiers, per_file_timeout_s, emit_tier_errors,
-                )
-            )
-        return rows
-
     import pyarrow as pa
 
     arrow_schema = pa.schema(
@@ -464,14 +442,22 @@ def run_detectors(
         ]
     )
 
-    n_in_cols = 6 if fn_index_from_column else 5
-
     def process_arrow(batches):
         ckb_local = ckb_bc.value
         fn_index = fn_index_broadcast.value if fn_index_broadcast is not None else None
         for batch in batches:
-            cols = [batch.column(i).to_pylist() for i in range(n_in_cols)]
-            rows = _rows_for_batch(cols, ckb_local, fn_index)
+            cols = [batch.column(i).to_pylist() for i in range(5)]
+            defs = map(_norm_map, batch.column(5).to_pylist()) if from_column else repeat(fn_index)
+            rows: List[Dict[str, Any]] = []
+            for repo, path, commit, ext, content, fn_defs in zip(*cols, defs):
+                if content is None:
+                    continue
+                rows.extend(
+                    _analyze_one(
+                        repo, path, commit, ext or "", content, ckb_local, fn_defs,
+                        tiers, per_file_timeout_s, emit_tier_errors,
+                    )
+                )
             arrays = [pa.array([r[f.name] for r in rows], type=f.type) for f in arrow_schema]
             yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 

@@ -15,8 +15,9 @@ in exchange for running the CPU-heavy detector stage once per distinct
 content. Break-even is a duplication factor barely above 1; real corpora
 sit far above it.
 
-Not compatible with fn_index_from_column (per-row called_defs) — use the
-broadcast index mode.
+Not compatible with join-mode input (a per-row ``called_defs`` column,
+index_build.resolve_symbol_index): the defs would belong to one file, not
+to its content. Use a broadcast index.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ def run_detectors_content_deduped(files_df: DataFrame, ckb, **run_detector_kwarg
     """Same output as run_detectors(files_df, ckb, ...) — verified by
     tests/test_content_dedup.py — but each distinct (ext, content) is
     analyzed exactly once."""
-    if run_detector_kwargs.get("fn_index_from_column"):
+    if "called_defs" in files_df.columns:
         raise ValueError("content dedup requires the broadcast index mode")
     sha = (
         F.col("content_sha256")

@@ -3,16 +3,17 @@
 The reference builds a single in-memory dict during a sequential pre-pass
 (core/scanner.py:131-155, core/project_index.py:14-29, last-registered
 definition wins). Here it is a DataFrame job: a `mapInPandas` def-extractor
-over the corpus, a window to apply the last-wins rule, and a driver-side
+over the corpus, a max_by aggregate for the last-wins rule, and a driver-side
 collect + broadcast of the (small) surviving snippet table.
 
-Scale notes: at 10^12 files a full index does not fit in a broadcast. The
-shipped strategy is (a) restrict the index to names that actually appear as
-call targets (`restrict_to_names`), computed by a cheap relational pre-pass,
-and (b) fall back to a broadcast-join of def snippets onto caller partitions
-when even that exceeds the broadcast budget. Depth-3 call simulation
-(reference max_depth, taint_visitor.py:20) keeps traversal local — no
-iterative cross-executor graph joins are needed for parity.
+`resolve_symbol_index` makes the whole inter-file decision, in one place:
+broadcast the index directly while it has at most `BROADCAST_DEFS` defs;
+else restrict it to names that appear as call targets (a cheap relational
+pre-pass) and broadcast that while it has at most `RESTRICTED_DEFS`; else
+attach each file's reachable defs as a ``called_defs`` column via
+distributed joins (operators/index_join.py), which needs no driver collect
+at any corpus scale. Depth-3 call simulation (reference max_depth,
+taint_visitor.py:20) keeps traversal local.
 
 Only Java and JavaScript plugins register an index in the reference
 (java/plugin.py:44-71, javascript/plugin.py:37-61; the Python plugin defines
@@ -23,18 +24,25 @@ no ``index`` hook — SURVEY.md §2B B7), so parity indexing covers those two;
 from __future__ import annotations
 
 import ast
-from typing import Any, Dict, Iterator, List, Optional, Set
+from typing import Any, Dict, Iterator, List, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import PROJECT_INDEX
+from .index_join import attach_called_defs
 
 _INDEX_COLS = [f.name for f in PROJECT_INDEX.fields]
 
 # content bytes per def-extract parse task — see build_symbol_index
 _INDEX_TASK_BYTES = 128 * 1024
+
+# resolve_symbol_index budgets, in defs: broadcast the whole index up to
+# BROADCAST_DEFS; past it, broadcast the called-names restriction up to
+# RESTRICTED_DEFS; past that, join mode
+BROADCAST_DEFS = 50_000
+RESTRICTED_DEFS = 500_000
 
 
 def _python_defs(content: str) -> List[Dict[str, Any]]:
@@ -147,10 +155,6 @@ def build_symbol_index(files_df: DataFrame, include_python: bool = False) -> Dat
     )
 
 
-def restrict_to_names(index_df: DataFrame, names: Set[str]) -> DataFrame:
-    return index_df.filter(F.col("name").isin(list(names)))
-
-
 def restrict_index_to_called_names(index_df: DataFrame, files_df: DataFrame) -> DataFrame:
     """Scale path for the broadcast budget: keep only defs whose name
     actually appears as a call target somewhere in the corpus.
@@ -172,16 +176,15 @@ def restrict_index_to_called_names(index_df: DataFrame, files_df: DataFrame) -> 
     return index_df.join(called, "name", "left_semi")
 
 
-def try_broadcast_index(spark: SparkSession, index_df: DataFrame, max_entries: int = 500_000):
+def try_broadcast_index(spark: SparkSession, index_df: DataFrame, max_entries: int):
     """Collect up to max_entries+1 surviving defs in ONE job (no separate
     count() pre-check) and broadcast as a plain dict {name → {path, lang,
     def_source, params}} for O(1) lookups inside the detector UDFs.
 
     Returns None when the index exceeds the budget — never a silently
     truncated broadcast (an arbitrary subset of defs would make inter-file
-    findings disappear with no signal). Callers restrict the index
-    (restrict_index_to_called_names) or switch to join mode
-    (operators/index_join.attach_called_defs)."""
+    findings disappear with no signal); resolve_symbol_index then takes
+    the next rung."""
     pdf = index_df.limit(max_entries + 1).toPandas()  # Arrow path: ~3x collect() at 10^4 defs
     if len(pdf) > max_entries:
         return None
@@ -201,13 +204,23 @@ def try_broadcast_index(spark: SparkSession, index_df: DataFrame, max_entries: i
     return spark.sparkContext.broadcast(table)
 
 
-def broadcast_index(spark: SparkSession, index_df: DataFrame, max_entries: int = 500_000):
-    """try_broadcast_index that raises instead of returning None — for
-    callers with no fallback path."""
-    bc = try_broadcast_index(spark, index_df, max_entries)
-    if bc is None:
-        raise ValueError(
-            f"symbol index exceeds the broadcast budget ({max_entries} entries): "
-            "restrict_index_to_called_names first, or use interfile_mode='join'"
-        )
-    return bc
+def resolve_symbol_index(
+    spark: SparkSession, files: DataFrame, include_python: bool = False
+) -> Tuple[DataFrame, Any, str]:
+    """→ (files, fn_index_broadcast, mode): the inter-file index for
+    run_detectors, through the first rung that fits.
+
+    "broadcast": ≤ BROADCAST_DEFS defs, one collect (the common case costs
+    one job, no count() pre-pass). "restricted": defs whose name appears as
+    a call target (re-scans content — worth it only past the budget),
+    ≤ RESTRICTED_DEFS. "join": neither fits; ``files`` comes back with a
+    per-row ``called_defs`` column and the broadcast is None. The index is
+    never silently truncated."""
+    index_df = build_symbol_index(files, include_python=include_python).persist()
+    bc = try_broadcast_index(spark, index_df, BROADCAST_DEFS)
+    if bc is not None:
+        return files, bc, "broadcast"
+    bc = try_broadcast_index(spark, restrict_index_to_called_names(index_df, files), RESTRICTED_DEFS)
+    if bc is not None:
+        return files, bc, "restricted"
+    return attach_called_defs(files, index_df), None, "join"

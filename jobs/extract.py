@@ -7,6 +7,10 @@
 
 Resumable: re-running with the same --run-id and --output skips completed
 splits via the lineage table.
+
+Inter-file resolution (unless --no-interfile) goes through the same
+index_build.resolve_symbol_index ladder as pipeline.extract: a broadcast
+index while it fits the budgets, else per-file defs attached via joins.
 """
 
 from __future__ import annotations
@@ -32,12 +36,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from dr_source_spark.kb import compile_kb, load_kb
-    from dr_source_spark.operators.index_build import (
-        broadcast_index,
-        build_symbol_index,
-        restrict_index_to_called_names,
-        try_broadcast_index,
-    )
+    from dr_source_spark.operators.index_build import resolve_symbol_index
     from dr_source_spark.operators.lineage import extract_with_lineage, read_findings
     from dr_source_spark.operators.triples import findings_to_triples, triples_to_nodes_edges
     from dr_source_spark.sources.corpus import ingest_source_files, read_source_files
@@ -46,18 +45,9 @@ def main() -> None:
     ckb = compile_kb(load_kb(explicit_path=args.kb))
     files = ingest_source_files(read_source_files(spark, args.input))
 
-    fn_index_bc = None
+    fn_index_bc = index_mode = None
     if not args.no_interfile:
-        # same ladder as pipeline.extract: direct broadcast for small
-        # indexes; restrict to called names past the budget; raise (never
-        # silently truncate) if even that overflows — rerun with
-        # --no-interfile or use pipeline join mode for such corpora.
-        index_df = build_symbol_index(files).persist()
-        fn_index_bc = try_broadcast_index(spark, index_df, max_entries=50_000)
-        if fn_index_bc is None:
-            fn_index_bc = broadcast_index(
-                spark, restrict_index_to_called_names(index_df, files)
-            )
+        files, fn_index_bc, index_mode = resolve_symbol_index(spark, files)
 
     run = extract_with_lineage(
         spark, files, ckb, args.output, args.run_id,
@@ -69,7 +59,10 @@ def main() -> None:
     triples.write.mode("overwrite").parquet(f"{args.output}/triples/run_id={args.run_id}")
     nodes.write.mode("overwrite").parquet(f"{args.output}/nodes/run_id={args.run_id}")
     edges.write.mode("overwrite").parquet(f"{args.output}/edges/run_id={args.run_id}")
-    print(f"run={run.run_id} splits_done={run.splits_done} files={run.files} findings={run.findings}")
+    print(
+        f"run={run.run_id} splits_done={run.splits_done} files={run.files} "
+        f"findings={run.findings} index_mode={index_mode}"
+    )
     spark.stop()
 
 
