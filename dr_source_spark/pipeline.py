@@ -6,6 +6,10 @@ lifecycle, SURVEY.md §3, re-expressed as two Spark jobs):
           via joins past the broadcast budgets →
   [job 2] fused detector pass (regex+ast+pattern tiers, one mapInArrow) →
   findings → triples/nodes/edges → write parquet/Iceberg + lineage metrics.
+
+The detector output is persisted once per extract() call: findings,
+tier_errors, triples, nodes and edges all read that one cache, so each
+file is analyzed once whichever outputs the caller consumes.
 """
 
 from __future__ import annotations
@@ -18,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .kb import compiled_kb_cached
-from .operators.analyze import run_detectors
+from .operators.analyze import TIER_ERROR_PLUGIN, run_detectors
 from .operators.index_build import resolve_symbol_index
 from .operators.triples import findings_to_triples, triples_to_nodes_edges
 from .sources.corpus import ingest_source_files
@@ -26,6 +30,10 @@ from .sources.corpus import ingest_source_files
 
 @dataclass
 class ExtractionResult:
+    """Lazy outputs of one extract() call. Every output derives from one
+    cached detector frame (``_detected``), filled by the first action and
+    read by the later ones; ``cleanup()`` releases it."""
+
     findings: DataFrame
     triples: DataFrame
     nodes: DataFrame
@@ -39,12 +47,15 @@ class ExtractionResult:
     # "broadcast" | "restricted" | "join"; None when inter-file is off
     index_mode: Optional[str] = None
     _cached: Optional[DataFrame] = None
+    _detected: Optional[DataFrame] = None
 
     def cleanup(self) -> None:
-        """Release the cached input after the outputs are materialized
-        (long-lived sessions running many extractions)."""
-        if self._cached is not None:
-            self._cached.unpersist()
+        """Release both caches, the ingested input and the detector output,
+        after the outputs are materialized (long-lived sessions running many
+        extractions). Outputs read afterwards re-run the detector."""
+        for df in (self._cached, self._detected):
+            if df is not None:
+                df.unpersist()
 
 
 def extract(
@@ -100,19 +111,19 @@ def extract(
     if content_dedup:
         from .operators.content_dedup import run_detectors_content_deduped
 
-        findings = run_detectors_content_deduped(files, ckb, **detector_kwargs)
+        detected = run_detectors_content_deduped(files, ckb, **detector_kwargs)
     else:
-        findings = run_detectors(files, ckb, **detector_kwargs)
-    from .operators.analyze import TIER_ERROR_PLUGIN
+        detected = run_detectors(files, ckb, **detector_kwargs)
+    detected = detected.persist()  # every output below reads this one cache
 
     tier_errors = (
-        findings.filter(F.col("plugin") == TIER_ERROR_PLUGIN)
+        detected.filter(F.col("plugin") == TIER_ERROR_PLUGIN)
         .select("repo", "path", "commit", "message")
     )
-    findings = findings.filter(F.col("plugin") != TIER_ERROR_PLUGIN)
+    findings = detected.filter(F.col("plugin") != TIER_ERROR_PLUGIN)
     triples = findings_to_triples(findings, run_id=run_id)
     nodes, edges = triples_to_nodes_edges(triples)
     return ExtractionResult(
         findings, triples, nodes, edges, run_id,
-        tier_errors=tier_errors, index_mode=index_mode, _cached=cached,
+        tier_errors=tier_errors, index_mode=index_mode, _cached=cached, _detected=detected,
     )

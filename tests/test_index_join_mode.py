@@ -58,7 +58,9 @@ def test_extract_ladder_rungs_agree(spark, realcode_corpus, monkeypatch):
     monkeypatch.setattr(index_build, "BROADCAST_DEFS", 0)
     monkeypatch.setattr(index_build, "RESTRICTED_DEFS", 0)
     assert run("join") == ("join", default)
-    assert extract(spark, files, enable_interfile=False).index_mode is None
+    res = extract(spark, files, enable_interfile=False)
+    assert res.index_mode is None
+    res.cleanup()
 
 
 def test_attach_called_defs_transitive(spark):

@@ -4,6 +4,8 @@ aggregates partial+final inside whole-stage codegen, top-k as
 TakeOrderedAndProject. Guards against regressions that only show up as
 silent slowdowns at scale."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -87,7 +89,7 @@ def test_detector_stage_prunes_content_early(spark, realcode_corpus):
     assert "content#" not in above_udf
 
 
-def test_triples_projection_is_single_pass(spark, realcode_corpus):
+def test_triples_projection_is_single_pass(spark, realcode_corpus, tmp_path):
     """findings→triples must scan the detector output ONCE (conditional
     explode), never as a union of per-predicate branches — each union branch
     re-runs the whole detector stage when findings are uncached."""
@@ -102,6 +104,21 @@ def test_triples_projection_is_single_pass(spark, realcode_corpus):
         assert plan.count("MapInArrow") == 1, f"detector stage ran {plan.count('MapInArrow')}x"
         assert "MapInPandas" not in plan
         assert "Union" not in plan
+
+    # once the triples write has filled the detector cache, nodes and edges
+    # read it through InMemoryTableScan. The filled cache's AQE plan prints
+    # its final and its initial plan, so its one MapInArrow node shows twice
+    # in the text: count distinct detector nodes by their result id
+    res.triples.write.parquet(str(tmp_path / "triples"))
+    for df in (res.nodes, res.edges):
+        plan = _plan(df)
+        above_udf = plan.split("MapInArrow")[0]
+        assert "InMemoryTableScan" in above_udf and "InMemoryRelation" in above_udf
+        detectors = set(re.findall(r"MapInArrow process_arrow\(.*?\)#(\d+)", plan))
+        assert len(detectors) == 1, f"{len(detectors)} detector stages"
+        assert "MapInPandas" not in plan
+        assert "Union" not in plan
+    res.cleanup()
 
 
 def test_detector_parallelism_widens_but_never_narrows(spark):
