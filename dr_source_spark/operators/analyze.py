@@ -6,9 +6,11 @@ Scale design (SURVEY.md §4 R6/R9/R10):
 
 * The KB is compiled once on the driver and shipped as a Spark broadcast;
   regex/pattern compilation is memoized per executor process.
-* Input is repartitioned by hash(repo, path) so one mega-repo never pins a
-  single task (callers can also bucket by repo-size, see
-  operators/skew.repartition_by_size_buckets).
+* The stage is sized to its input (ensure_min_parallelism): one task per
+  DETECTOR_TASK_BYTES of input, up to cores, and no shuffle when the input
+  already arrives that wide. Widening hashes on (repo, path), so one
+  mega-repo never pins a single task (callers can also bucket by
+  repo-size, see operators/skew.repartition_by_size_buckets).
 * Output rows carry only narrow columns — the wide ``content`` column dies
   inside this stage (column pruning: we select exactly what we need first).
 * Finding dedup on the reference identity key (path, line, type, message)
@@ -64,16 +66,11 @@ _JAVA_FRAMEWORK_TOKENS = (
 )
 
 
-def _size_as_bytes(value: str) -> int:
-    """Parse a Spark size conf string ('134217728', '128m', '1g', '512kb')."""
-    v = value.strip().lower()
-    mult = 1
-    for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                      ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-        if v.endswith(suffix):
-            v, mult = v[: -len(suffix)], m
-            break
-    return int(v) * mult
+# Bytes of detector input per task (plan-size bytes: on-disk bytes for a
+# parquet scan): the measured crossover below which one more Python task
+# costs more than the detection it takes off the others. The floor and the
+# sweep behind it are in ensure_min_parallelism's docstring.
+DETECTOR_TASK_BYTES = 16 * 1024
 
 
 def _plan_size_bytes(df: DataFrame) -> Optional[int]:
@@ -91,25 +88,6 @@ def _plan_size_bytes(df: DataFrame) -> Optional[int]:
         return size
     except Exception:
         return None
-
-
-def _conf_bytes(df: DataFrame, key: str, default: str) -> int:
-    try:
-        return _size_as_bytes(df.sparkSession.conf.get(key, default))
-    except Exception:
-        return _size_as_bytes(default)
-
-
-def _estimated_splits(df: DataFrame) -> int:
-    """Lower bound on the scan's natural split count: plan-size bytes over
-    ``spark.sql.files.maxPartitionBytes`` (Spark's own packing never makes
-    splits LARGER than maxPartitionBytes, so the true count is >= this).
-    0 = unknown."""
-    size = _plan_size_bytes(df)
-    if size is None:
-        return 0
-    max_bytes = _conf_bytes(df, "spark.sql.files.maxPartitionBytes", "134217728b")
-    return max(1, (size + max_bytes - 1) // max_bytes)
 
 
 # analyzed-plan nodes that preserve their child's partitioning — the
@@ -137,55 +115,77 @@ def _upstream_repartition_width(df: DataFrame) -> int:
     return 0
 
 
+def _planned_partitions(df: DataFrame) -> int:
+    """The input's partition count when reading it runs no job that the
+    real query would not reuse, else 0. A plan holding an exchange counts
+    as 0: adaptive execution sizes a shuffle's output by running it, so
+    reading the count would run the upstream stages here and again in the
+    real query. A cached relation is a leaf: reading its count fills the
+    cache at most once, and the real query reads that cache."""
+    try:
+        qe = df._jdf.queryExecution()
+        nodes = [qe.executedPlan()]
+        while nodes:
+            node = nodes.pop()
+            name = node.getClass().getSimpleName()
+            if "Exchange" in name:
+                return 0
+            if name == "AdaptiveSparkPlanExec":
+                nodes.append(node.executedPlan())
+                continue
+            children = node.children()
+            nodes.extend(children.apply(i) for i in range(children.size()))
+        return qe.toRdd().getNumPartitions()
+    except Exception:
+        return 0
+
+
 def ensure_min_parallelism(
-    df: DataFrame, key_cols=("repo", "path"), target: Optional[int] = None
+    df: DataFrame, key_cols=("repo", "path"), task_bytes: Optional[int] = None
 ) -> DataFrame:
-    """Widen a CPU-bound stage's input to ≥ cores (or ``target``) partitions
-    — never narrow it.
+    """Give a CPU-bound stage as many tasks as its input is worth, up to
+    cores — never fewer than the input is known to have.
 
-    ``target`` overrides the cores width for stages whose per-byte cost is
-    low enough that a full-cores fan-out loses more to python-worker round
-    trips than it gains (see build_symbol_index's bytes-aware target). The
-    never-narrow rule still applies.
+    One rule. The target width is ``min(cores, ceil(plan bytes /
+    task_bytes))``, or cores when ``task_bytes`` is None or the plan size is
+    unknown. The input is returned untouched when it already meets the
+    target: through a repartition upstream (e.g. synth_code_corpus), or
+    through its own partition count (a scan's splits, a cache's
+    partitions). Otherwise it is ``repartition(target, *key_cols)``, hashed
+    so one mega-repo never pins a single task. A wider input keeps its
+    width: at 100 TB the width is real data volume. Decided from plan
+    metadata: the plan-size statistic, the analyzed plan, and a partition
+    count read only when that runs no job the real query would not reuse
+    (an input whose plan holds a shuffle has no known count, so it is
+    repartitioned).
 
-    Exactly cores is the MEASURED optimum for the Arrow-batched detector
-    stage: every extra task pays a python-worker round-trip + Arrow stream
-    setup, and the round-3 A/B on the sf0.1 corpus (32 cores, best-of-3)
-    was monotonic in partition count — 32 tasks 1.04s, 64 → 1.35s, 96 →
-    1.61s, 128 → 1.78s, 192 → 2.25s.
+    ``task_bytes`` is what one task must carry for its compute to outweigh
+    a task's fixed cost: _INDEX_TASK_BYTES for the def-extract parse
+    (index_build), DETECTOR_TASK_BYTES (16 KB) for the detector. Measured
+    for the detector on a 4-core box, Spark 4.1.2:
 
-    Three-band decision from plan-size statistics (no job, no path list):
+    * the floor: an identity mapInArrow over 2000 synth files (one 91.5 KB
+      parquet split) took 0.43 s as 1 task and 0.64 s hashed to 4, against
+      0.09 s for the JVM-only scan. The detector over the same split took
+      1.04 s as 1 task: ~7 us of detection per plan byte.
+    * the sweep: run_detectors over 1-split synth-corpus inputs, left as
+      one task or hashed to 2, 3 or 4, median of 7-11 interleaved runs,
+      three sweeps. At 3.9-13.5 KB one task won by 0.04-0.10 s. At 16.6 KB
+      the sweeps split (-0.10 to +0.05 s). From 24 KB on a wider stage won
+      (24 KB: 0.62 -> 0.52-0.58 s; 44 KB: 0.84 -> 0.61 s; 59 KB:
+      0.92-1.02 -> 0.61-0.70 s). Most of the cost of widening is the one
+      shuffle: 2, 3 and 4 tasks lay within ~0.05 s of each other.
 
-    * big (bytes-based split lower bound >= target): leave alone — at
-      100 TB width comes from real data volume; collapsing it would
-      serialize the scan.
-    * tiny (bytes < target x openCostInBytes): repartition to target
-      unconditionally. Even a fragmented many-tiny-files input is better
-      off as exactly `target` partitions here (< openCost bytes each), and
-      skipping the plan->RDD conversion saves ~0.2-0.4 s of driver-side
-      planning PER QUERY on literal-heavy plans (measured round 3).
-    * middle band / unknown stats: pay one RDD plan conversion to read the
-      ACTUAL planned split count, and only ever repartition UP — an input
-      that already arrives wider than the target (e.g. 128 natural parquet
-      splits) is never collapsed."""
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    if target is None:
-        target = cores
-    # a full-width repartition already in the plan makes a second shuffle
-    # pure waste; only trusted at target >= cores so the bytes-aware
-    # narrow targets (build_symbol_index at small corpora) keep their
-    # measured optimum of coalescing BELOW an already-wide input
-    if target >= cores and _upstream_repartition_width(df) >= target:
+    So a 10-file commit (~4 KB) runs as the 1 task it arrives in, with no
+    shuffle, and an input that already arrives as cores splits skips the
+    content shuffle."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    size = _plan_size_bytes(df) if task_bytes else None
+    if size is not None:
+        target = min(target, max(1, -(-size // task_bytes)))
+    if target <= 1 or _upstream_repartition_width(df) >= target or _planned_partitions(df) >= target:
         return df
-    if _estimated_splits(df) >= target:
-        return df
-    size = _plan_size_bytes(df)
-    open_cost = _conf_bytes(df, "spark.sql.files.openCostInBytes", "4194304b")
-    if size is not None and size < target * open_cost:
-        return df.repartition(target, *key_cols)
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, *key_cols)
-    return df
+    return df.repartition(target, *key_cols)
 
 
 def _screen_specs(specs, content: str) -> list:
@@ -385,7 +385,6 @@ def run_detectors(
     fn_index_broadcast=None,
     tiers: tuple = ("regex", "ast", "pattern"),
     per_file_timeout_s: float = 0.0,
-    repartition: Optional[int] = None,
     emit_tier_errors: bool = False,
 ) -> DataFrame:
     """files_df must carry (repo, path, commit, ext, content).
@@ -412,14 +411,10 @@ def run_detectors(
     cols = ["repo", "path", "commit", "ext", "content"]
     if from_column:
         cols.append("called_defs")
-    narrow = files_df.select(*cols)
-    if repartition:
-        narrow = narrow.repartition(repartition, "repo", "path")
-    else:
-        # A small/compacted corpus can arrive as fewer splits than cores —
-        # the CPU-bound detector stage must never be narrower than the
-        # cluster (see ensure_min_parallelism).
-        narrow = ensure_min_parallelism(narrow)
+    # as many tasks as the input's bytes are worth, up to cores: a commit
+    # runs as the one partition it arrives in, an input already split
+    # cores-wide is not shuffled (see ensure_min_parallelism)
+    narrow = ensure_min_parallelism(files_df.select(*cols), task_bytes=DETECTOR_TASK_BYTES)
 
     def _norm_map(cell) -> Optional[Dict[str, Any]]:
         if cell is None:

@@ -80,21 +80,15 @@ def build_symbol_index(files_df: DataFrame, include_python: bool = False) -> Dat
     ensure_shipped(files_df.sparkSession)
     langs = ["java", "javascript"] + (["python"] if include_python else [])
     narrow = files_df.filter(F.col("lang").isin(langs)).select("repo", "path", "lang", "content")
-    from .analyze import _plan_size_bytes, ensure_min_parallelism
+    from .analyze import ensure_min_parallelism
 
     # Bytes-aware task target (round-5 A/B at sf0.1, 500 KB java/js
     # subset, best-of-3): 4 tasks 0.57 s, 16 0.61 s, 32 0.89 s — the
     # def-extract parse is ~1.5 MB/s/core, so a task under ~128 KB of
-    # content costs more in python-worker round trips than its compute.
-    # ceil(plan-bytes / 128 KB) tasks, capped at cores (Catalyst's
-    # post-filter sizeInBytes tracks the java/js subset closely: 623 KB
-    # estimated vs 514 KB actual); unknown stats fall back to cores. The
-    # never-narrow rule in ensure_min_parallelism still protects wide
-    # natural inputs — at 100 TB the width is real data volume.
-    cores = files_df.sparkSession.sparkContext.defaultParallelism
-    size = _plan_size_bytes(narrow)
-    target = min(cores, max(1, (size + _INDEX_TASK_BYTES - 1) // _INDEX_TASK_BYTES)) if size else None
-    narrow = ensure_min_parallelism(narrow, target=target)
+    # content costs more in python-worker round trips than its compute
+    # (Catalyst's post-filter sizeInBytes tracks the java/js subset
+    # closely: 623 KB estimated vs 514 KB actual).
+    narrow = ensure_min_parallelism(narrow, task_bytes=_INDEX_TASK_BYTES)
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -65,7 +65,6 @@ def extract(
     enable_interfile: bool = True,
     per_file_timeout_s: float = 0.0,
     run_id: Optional[str] = None,
-    repartition: Optional[int] = None,
     content_dedup: bool = False,
     index_python: bool = False,
 ) -> ExtractionResult:
@@ -105,7 +104,6 @@ def extract(
     detector_kwargs = dict(
         fn_index_broadcast=fn_index_bc,
         per_file_timeout_s=per_file_timeout_s,
-        repartition=repartition,
         emit_tier_errors=True,
     )
     if content_dedup:

@@ -10,6 +10,8 @@ from dr_source_spark.operators.lineage import completed_splits, extract_with_lin
 from dr_source_spark.sources.corpus import ingest_source_files
 from dr_source_spark.sources.synth import synth_code_corpus
 
+from .conftest import SF_DIR
+
 
 @pytest.fixture(scope="module")
 def ckb():
@@ -121,6 +123,46 @@ def test_streaming_stateful_dedup_across_batches(spark, ckb, tmp_path_factory):
     corpus.write.mode("append").parquet(src)
     incremental_extract(spark, src, out, ckpt, ckb, dedup_across_batches=True)
     assert spark.read.parquet(f"{out}/findings").count() == n1
+
+
+def _parquet_files(path: str) -> set:
+    return {f for f in os.listdir(path) if f.endswith(".parquet")} if os.path.isdir(path) else set()
+
+
+def _rows(df) -> list:
+    return sorted(r[0] for r in df.select(F.to_json(F.struct("*"))).collect())
+
+
+def test_streaming_commits_match_batch_detector(spark, ckb, tmp_path_factory):
+    """A base snapshot and two 10-file commits drained one at a time: each
+    commit runs as the one task it arrives in (one new findings file), and
+    the appended findings equal run_detectors over the same files as an
+    exact multiset."""
+    from dr_source_spark.operators.analyze import run_detectors
+    from dr_source_spark.streaming.incremental import incremental_extract
+
+    src = str(tmp_path_factory.mktemp("commits_src"))
+    out = str(tmp_path_factory.mktemp("commits_out"))
+    ckpt = str(tmp_path_factory.mktemp("commits_ckpt"))
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+
+    def land_and_drain(lo: int, hi: int, commit: str) -> set:
+        """Land documents [lo, hi) as one parquet file, drain the stream,
+        and return the findings files that drain wrote."""
+        before = _parquet_files(f"{out}/findings")
+        batch = synth_code_corpus(docs.filter(f"doc_id >= {lo} and doc_id < {hi}"), commit=commit)
+        batch.coalesce(1).write.mode("append").parquet(src)
+        incremental_extract(spark, src, out, ckpt, ckb)
+        return _parquet_files(f"{out}/findings") - before
+
+    land_and_drain(0, 60, "base")
+    for lo, commit in ((60, "c1"), (70, "c2")):
+        assert len(land_and_drain(lo, lo + 10, commit)) == 1
+
+    got = _rows(spark.read.parquet(f"{out}/findings"))
+    want = _rows(run_detectors(ingest_source_files(spark.read.parquet(src)), ckb))
+    assert len(got) > 0
+    assert got == want
 
 
 def test_sessionize_gap_boundary(spark, tmp_path_factory):

@@ -122,10 +122,9 @@ def test_triples_projection_is_single_pass(spark, realcode_corpus, tmp_path):
 
 
 def test_detector_parallelism_widens_but_never_narrows(spark):
-    """A 1-split corpus must widen to the cluster width (exactly cores is
-    the measured optimum — per-task Arrow/python-worker overhead beats
-    straggler slack on this stage), and an input that already arrives wider
-    (e.g. many natural parquet splits) must NEVER be collapsed (the round-2
+    """With no bytes-per-task, a 1-split input of unknown size must widen to
+    the cluster width, and an input that already arrives wider (e.g. many
+    natural parquet splits) must NEVER be collapsed (the round-2
     regression: an inputFiles()-count trigger repartitioned natural splits
     down unconditionally)."""
     from dr_source_spark.operators.analyze import ensure_min_parallelism
@@ -141,6 +140,100 @@ def test_detector_parallelism_widens_but_never_narrows(spark):
 
     wide_in = df.repartition(target * 12, "repo", "path")
     assert ensure_min_parallelism(wide_in).rdd.getNumPartitions() == target * 12
+
+
+def test_parallelism_decision_runs_no_upstream_shuffle(spark):
+    """Sizing an input whose plan holds a shuffle (content_dedup's
+    representatives, join mode's called_defs) submits no Spark job:
+    adaptive execution would run the shuffle to count its output
+    partitions, and the real query would run it again."""
+    from dr_source_spark.operators.analyze import ensure_min_parallelism
+
+    sc = spark.sparkContext
+    rows = [("r", f"p{i}.py", "c", ".py", f"x = {i % 50}") for i in range(200)]
+    deduped = spark.createDataFrame(
+        rows, "repo string, path string, commit string, ext string, content string"
+    ).dropDuplicates(["content"])
+    sc.setJobGroup("width-decision", "ensure_min_parallelism")
+    try:
+        widened = ensure_min_parallelism(deduped)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("width-decision")) == []
+    if sc.defaultParallelism > 1:
+        assert "Exchange hashpartitioning(repo" in _plan(widened)
+
+
+# the columns run_detectors reads, whose plan size sizes the stage
+_DETECTOR_COLS = ("repo", "path", "commit", "ext", "content")
+
+
+def _detector_input(spark, rows_df, tmp_path, files: int):
+    """rows_df written as ``files`` parquet files and read back through the
+    ingest stage: a scan with real size statistics, one split per file."""
+    from dr_source_spark.sources.corpus import ingest_source_files
+
+    path = str(tmp_path / "src")
+    rows_df.repartition(files).write.parquet(path)
+    return ingest_source_files(spark.read.parquet(path))
+
+
+def _below_detector(plan: str) -> str:
+    assert plan.count("MapInArrow") == 1
+    return plan.split("MapInArrow")[1]
+
+
+def test_detector_keeps_small_single_split_input_as_one_task(spark, tmp_path):
+    """A commit-sized input (one split, less than one task's bytes) runs as
+    the one task it arrives in: no shuffle below the detector."""
+    from dr_source_spark.kb import compile_kb, load_kb
+    from dr_source_spark.operators.analyze import DETECTOR_TASK_BYTES, _plan_size_bytes, run_detectors
+
+    rows = [("r", f"p{i}.py", "c", "python", f"x{i} = {i}\n") for i in range(10)]
+    schema = "repo string, path string, commit string, lang string, content string"
+    files = _detector_input(spark, spark.createDataFrame(rows, schema), tmp_path, 1)
+    assert files.rdd.getNumPartitions() == 1
+    assert 0 < _plan_size_bytes(files.select(*_DETECTOR_COLS)) < DETECTOR_TASK_BYTES
+
+    findings = run_detectors(files, compile_kb(load_kb(project_dir="/nonexistent")))
+    assert "Exchange" not in _below_detector(_plan(findings))
+    assert findings.rdd.getNumPartitions() == 1
+
+
+def test_detector_reads_cores_wide_persisted_ingest_without_shuffle(spark, realcode_corpus, tmp_path):
+    """An ingest that is already split cores-wide and persisted (extract()'s
+    detector input) reaches the detector without a content shuffle."""
+    from dr_source_spark.kb import compile_kb, load_kb
+    from dr_source_spark.operators.analyze import run_detectors
+
+    cores = spark.sparkContext.defaultParallelism
+    files = _detector_input(spark, realcode_corpus, tmp_path, cores)
+    files = files.select("repo", "path", "commit", "ext", "lang", "content").persist()
+    try:
+        assert files.rdd.getNumPartitions() == cores
+        findings = run_detectors(files, compile_kb(load_kb(project_dir="/nonexistent")))
+        below = _below_detector(_plan(findings))
+        assert "InMemoryTableScan" in below and "Exchange" not in below
+        assert findings.rdd.getNumPartitions() == cores
+    finally:
+        files.unpersist()
+
+
+def test_detector_widens_large_single_split_input_to_cores(spark, realcode_corpus, tmp_path):
+    """One split carrying more than cores x DETECTOR_TASK_BYTES is hashed
+    out to exactly cores tasks."""
+    from dr_source_spark.kb import compile_kb, load_kb
+    from dr_source_spark.operators.analyze import DETECTOR_TASK_BYTES, _plan_size_bytes, run_detectors
+
+    cores = spark.sparkContext.defaultParallelism
+    files = _detector_input(spark, realcode_corpus, tmp_path, 1)
+    assert files.rdd.getNumPartitions() == 1
+    assert _plan_size_bytes(files.select(*_DETECTOR_COLS)) > cores * DETECTOR_TASK_BYTES
+
+    findings = run_detectors(files, compile_kb(load_kb(project_dir="/nonexistent")))
+    assert "Exchange hashpartitioning(repo" in _below_detector(_plan(findings))
+    assert findings.rdd.getNumPartitions() == cores
 
 
 def test_run_detectors_preserves_wide_input_partitioning(spark):
