@@ -1,8 +1,13 @@
 """Graph analytics over the constructed knowledge graph (edges tables of
 any (src, dst) shape) — the operators a KG consumer runs AFTER
-materialization: importance ranking and component labeling.
+materialization: ranking (fixed-point global and personalized PageRank,
+HITS, walk counts), components and reachability (alternating-star
+components, BFS, weighted SSSP, k-core, k-truss), motif census
+(triangles, 4-cycles, clustering, rich club), neighborhood sketches
+(HyperBall), similarity (neighbor Jaccard, resource allocation) and
+community structure (label propagation, modularity, conductance).
 
-Both are iterative Spark jobs designed for 10^12-edge scale:
+The operators are Spark jobs designed for 10^12-edge scale:
 * every intermediate is an edge- or node-list (no adjacency matrices),
 * per-iteration lineage truncation (``localCheckpoint`` — swap for a
   reliable ``checkpoint`` dir on a real cluster),
@@ -24,127 +29,31 @@ PAGERANK_SCALE = 10**12
 # on a new plan silently never completes) — monotonic suffix per call site
 _OBS_SEQ = itertools.count()
 
+# The small-input escape hatch of PageRank (global and personalized),
+# connected components and BFS, one rule for all four: when the edge
+# count — an ``observe`` metric on the operator's own edge checkpoint, so
+# no extra job decides — is at most this (read at call time; patch it to
+# 0 to force the distributed route), the edges come over Arrow and the
+# identical algorithm runs on the driver instead of one fixed-cost Spark
+# job per round (20 component rounds measured 8.2 s at sf0.1's 83 k
+# edges, round 5). The distributed path is the DESIGN (a 100 TB near-dup
+# graph has billions of edges). Both routes are pytest-gated identical.
+DRIVER_CC_MAX_EDGES = 2_000_000
 
-def pagerank_fixed_point(
-    edges: DataFrame,
-    iterations: int = 10,
-    scale: int = PAGERANK_SCALE,
-    damping_pct: int = 85,
-    driver_max_edges: int | None = None,
-) -> DataFrame:
-    """PageRank in 64-bit FIXED-POINT arithmetic: ranks are integers in
-    ``scale`` units and every division is an integer floor (`div`), so the
-    result is bit-exact across engines and runs — float PageRank is
-    non-associative across partition orders and can't be value-hashed.
 
-    Per iteration: each node sends rank*damping_pct//(100*out_deg) along
-    each out-edge (floor per edge); dangling mass is redistributed evenly
-    (floored share); every node gets the (1-d) base. The floored remainders
-    dissipate a tiny amount of mass per iteration — documented, determinism
-    is worth more than the ~1e-10 relative loss at the default scale.
+def _ckpt_observed(df: DataFrame, name: str, *metrics):
+    """``localCheckpoint`` ``df`` and return it with ``metrics`` (named
+    aggregates), read from an ``observe`` on the checkpoint's own job —
+    no separate scalar job (round-3 postmortem: one per round dominated
+    wall time at small scale)."""
+    obs = Observation(f"{name}_{next(_OBS_SEQ)}")
+    return df.observe(obs, *metrics).localCheckpoint(eager=True), obs.get
 
-    Scale: the per-iteration shape is one narrow equi-join (edges × ranks)
-    plus a groupBy(dst) sum — both map-side combinable; the dangling mass
-    is O(1) driver data, read from an ``observe`` metric piggybacked on the
-    iteration's own checkpoint materialization, so each iteration is ONE
-    Spark job (a separate scalar-aggregate job per round doubled the
-    per-iteration fixed cost at small scale — round-3 postmortem).
 
-    Graphs at or under ``driver_max_edges`` (default: the shared
-    DRIVER_CC_MAX_EDGES threshold) short-circuit to a driver loop with
-    the identical integer arithmetic — BIT-EXACT output (integer sums
-    are order-free; pytest parity gate) while replacing ``iterations``
-    fixed-cost Spark jobs with driver CPU: kg_pagerank at sf0.1 measured
-    3.1–4.5 s distributed vs 1.47 s best-of-3 with the short-circuit
-    (round 5). Pass ``driver_max_edges=0`` to force the distributed
-    path, which remains the design for billions-edge graphs."""
-    # e and deg feed EVERY iteration's join — checkpoint once or each
-    # iteration re-runs the distinct/groupBy shuffles from the raw edges.
-    # The edge count rides the checkpoint's own materialization as an
-    # observe metric, so the driver-vs-distributed route is decided after
-    # ONE job (the former flow built deg/nodes checkpoints — 4 more fixed
-    # -cost jobs — before the driver path threw them away; round-6
-    # measurement: 4.0 s for kg_pagerank over 180 k cached edge rows, of
-    # which the rank loop itself was under 0.5 s).
-    cutoff = DRIVER_CC_MAX_EDGES if driver_max_edges is None else driver_max_edges
-    obs = Observation(f"pagerank_edges_{next(_OBS_SEQ)}")
-    e = (
-        edges.select("src", "dst")
-        .distinct()
-        .observe(obs, F.count(F.lit(1)).alias("m"))
-        .localCheckpoint(eager=True)
-    )
-    m = int(obs.get["m"])
-    if 0 < m <= cutoff:
-        out_schema = (
-            e.select(F.col("src").alias("node")).withColumn("rank", F.lit(0).cast("long")).schema
-        )
-        edge_rows = _collect_pairs(e)
-        e.unpersist()
-        ranks = _driver_pagerank_rows(edge_rows, iterations, scale, damping_pct)
-        import pandas as pd
-
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(ranks, columns=["node", "rank"]), out_schema
-        )
-    deg = e.groupBy("src").agg(F.count("*").alias("d")).localCheckpoint(eager=True)
-    # nodes carry a static `dang` flag (no out-edges) so the per-iteration
-    # dangling-mass sum is a plain conditional aggregate over ranks itself
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(deg.select(F.col("src").alias("node"), F.lit(False).alias("dang")), "node", "left")
-        .select("node", F.coalesce(F.col("dang"), F.lit(True)).alias("dang"))
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        return nodes.select("node").withColumn("rank", F.lit(0).cast("long"))
-    if scale < n * 1000:
-        # fixed-point starvation: with < ~3 decimal digits of headroom per
-        # node the floored shares collapse to 0 and ranks stop moving
-        raise ValueError(
-            f"pagerank scale {scale} too small for {n} nodes — use scale >= n * 1000"
-        )
-    base = (scale * (100 - damping_pct)) // (100 * n)
-
-    def _ckpt(df: DataFrame):
-        obs = Observation(f"pagerank_dangling_{next(_OBS_SEQ)}")
-        df = df.observe(
-            obs,
-            F.coalesce(
-                F.sum(F.when(F.col("dang"), F.col("rank")).otherwise(F.lit(0))), F.lit(0)
-            ).alias("dangling"),
-        )
-        return df.localCheckpoint(eager=True), obs
-
-    ranks, obs = _ckpt(nodes.withColumn("rank", F.lit(scale // n).cast("long")))
-    for _ in range(iterations):
-        share = (int(obs.get["dangling"]) * damping_pct) // (100 * n)
-        contrib = (
-            e.join(ranks, e["src"] == ranks["node"])
-            .join(deg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(f"(rank * {damping_pct}) div (100 * d)").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        new_ranks, obs = _ckpt(
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                "dang",
-                (F.lit(base + share) + F.coalesce(F.col("contrib"), F.lit(0)))
-                .cast("long")
-                .alias("rank"),
-            )
-        )
-        ranks.unpersist()
-        ranks = new_ranks
-    return ranks.select("node", "rank")
+def _ckpt_counted(df: DataFrame, name: str):
+    """`_ckpt_observed` with the row count."""
+    df, got = _ckpt_observed(df, name, F.count(F.lit(1)).alias("n"))
+    return df, int(got["n"])
 
 
 def _collect_pairs(df: DataFrame) -> list:
@@ -158,59 +67,208 @@ def _collect_pairs(df: DataFrame) -> list:
     return list(zip(pdf[a].tolist(), pdf[b].tolist()))
 
 
-# Below this many distinct edges the component computation runs as a
-# driver-side union-find instead of ~O(log n) alternating-star rounds:
-# 20 tiny Spark jobs of pure fixed cost (measured 8.2 s at sf0.1's 83 k
-# edges, 0 % steal, round 5) vs milliseconds of driver CPU on ≤ ~32 MB
-# of narrow pairs. The same adaptive principle as Spark's own
-# broadcast-join threshold: the distributed path is the DESIGN (a 100 TB
-# near-dup graph has billions of edges and always takes it); the driver
-# path is the small-input escape hatch. Both paths produce the identical
-# (node, min-of-component) edge list and both are pytest-gated.
-DRIVER_CC_MAX_EDGES = 2_000_000
+def _driver_frame(spark, rows: list, schema) -> DataFrame:
+    """A driver route's result rows as a DataFrame, over Arrow (a pandas
+    frame, not a tuple list: near the 2M-edge threshold the pickle path
+    would cost ~20 s of driver serialization and hand the advantage
+    back)."""
+    import pandas as pd
+
+    if not rows:
+        return spark.createDataFrame([], schema)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.fieldNames()), schema)
 
 
-def _driver_pagerank_rows(
-    edge_rows, iterations: int, scale: int, damping_pct: int
-) -> list:
-    """Driver-path entry: derive nodes/degrees from the collected (distinct)
-    edge rows, validate the fixed-point headroom exactly like the
-    distributed path, and run the rank loop — vectorized in int64 numpy
-    when every intermediate provably fits (rank*damping_pct <= ~2*scale*100
-    must stay under 2^63, so any scale <= 10^15 qualifies; the default is
-    10^12), else the pure-Python integer loop. Both loops floor-divide
-    nonnegative integers, so numpy's int64 ``//`` is bit-identical to
-    Python's — gated by tests/test_training_ops parity tests."""
-    node_list = sorted({s for s, _ in edge_rows} | {d for _, d in edge_rows})
-    n = len(node_list)
-    if scale < n * 1000:
+def pagerank_fixed_point(
+    edges: DataFrame,
+    iterations: int = 10,
+    scale: int = PAGERANK_SCALE,
+    damping_pct: int = 85,
+) -> DataFrame:
+    """PageRank in 64-bit FIXED-POINT arithmetic: ranks are integers in
+    ``scale`` units and every division is an integer floor (`div`), so the
+    result (node, rank long) is bit-exact across engines and runs — float
+    PageRank is non-associative across partition orders and can't be
+    value-hashed. An empty graph gives an empty result.
+
+    Global PageRank is personalized PageRank with every node a seed
+    (Haveliwala, "Topic-Sensitive PageRank", WWW'02), bit for bit here:
+    both operators run `_fixed_point_rank`. With S the seed set, initial
+    mass ``scale // |S|`` sits on the seeds; per iteration each node sends
+    rank*damping_pct//(100*out_deg) along each out-edge, dangling mass
+    redistributes as a floored even share over S, and every seed adds the
+    floored (1-d) base. The floors dissipate a ~1e-10 relative mass per
+    iteration at the default scale — determinism is worth more. Raises
+    ``ValueError`` when ``scale < 1000 * |S|`` (the shares collapse to 0)
+    and, on both routes, when ``scale * damping_pct >= 2**63`` (rank ≤
+    scale, so ``rank * damping_pct`` then fits a long).
+
+    Scale: the distinct edge list is checkpointed once, its count an
+    ``observe`` metric. Each iteration is one narrow equi-join (edges ×
+    ranks) plus a map-side-combinable groupBy(dst) sum; the dangling mass
+    is read from an ``observe`` metric on the iteration's own checkpoint,
+    so each iteration is ONE Spark job (a separate scalar job per round
+    doubled the per-iteration fixed cost at small scale — round-3
+    postmortem). The seed flag is a boolean on the node table: broadcast
+    -joined for personalized PageRank, a literal ``True`` here.
+
+    Graphs at or under ``DRIVER_CC_MAX_EDGES`` edges run the same integer
+    arithmetic in an int64 numpy loop on the driver — BIT-EXACT (integer
+    sums are order-free; pytest parity gate) — instead of ``iterations``
+    fixed-cost Spark jobs: kg_pagerank at sf0.1 measured 3.1–4.5 s
+    distributed vs 1.47 s best-of-3 on the driver (round 5). Building the
+    degree and node checkpoints before deciding the route cost 4 more
+    jobs: 4.0 s for kg_pagerank over 180 k cached edge rows, of which the
+    rank loop was under 0.5 s (round 6)."""
+    return _fixed_point_rank(edges, None, iterations, scale, damping_pct)
+
+
+def personalized_pagerank(
+    edges: DataFrame,
+    seeds: DataFrame,
+    iterations: int = 8,
+    scale: int = PAGERANK_SCALE,
+    damping_pct: int = 85,
+) -> DataFrame:
+    """Personalized PageRank (random walk with restart) — the seeded
+    relevance query a KG consumer runs constantly ("rank every entity by
+    exposure to THESE nodes"): ``pagerank_fixed_point`` with the seed set
+    S = the ``node`` column of ``seeds``, so initial mass, restart base
+    and dangling mass all go to the seeds only (all three exactly
+    mirrored in the DuckDB oracle). Seeds outside the edge node set are
+    ignored (they can neither send nor receive mass); an empty effective
+    seed set raises ``ValueError``."""
+    return _fixed_point_rank(edges, seeds, iterations, scale, damping_pct)
+
+
+def _restart_base(ns: int, scale: int, damping_pct: int) -> int:
+    """The floored (1-d) restart share per seed, after both routes' checks."""
+    if ns == 0:
+        raise ValueError("personalized_pagerank: no seed intersects the edge node set")
+    if scale < ns * 1000:
         # fixed-point starvation: with < ~3 decimal digits of headroom per
-        # node the floored shares collapse to 0 and ranks stop moving
+        # seed the floored shares collapse to 0 and ranks stop moving
         raise ValueError(
-            f"pagerank scale {scale} too small for {n} nodes — use scale >= n * 1000"
+            f"pagerank scale {scale} too small for {ns} seed nodes — use scale >= n * 1000"
         )
-    base = (scale * (100 - damping_pct)) // (100 * n)
-    if scale * 100 * 2 < 2**63:
-        return _driver_pagerank_np(
-            edge_rows, node_list, iterations, scale, damping_pct, n, base
-        )
-    return _driver_pagerank(edge_rows, iterations, scale, damping_pct, n, base)
+    return (scale * (100 - damping_pct)) // (100 * ns)
 
 
-def _driver_pagerank_np(
-    edge_rows, node_list, iterations: int, scale: int, damping_pct: int, n: int, base: int
-) -> list:
-    """The fixed-point loop over int64 numpy arrays: the per-edge floored
+def _ppr_node_table(e: DataFrame, deg: DataFrame, seeds: DataFrame | None) -> DataFrame:
+    """(node, dang, seed) for `_fixed_point_rank` — separate so the plan
+    gate can inspect the PRE-checkpoint plan (after localCheckpoint the
+    executed plan is a Scan ExistingRDD and every join assertion is
+    vacuous). The seed flag joins as an explicit broadcast: the seed set
+    is small by construction. ``seeds=None`` (global PageRank) makes
+    every node a seed with a literal flag and no join."""
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .join(deg.select(F.col("src").alias("node"), F.lit(False).alias("dang")), "node", "left")
+    )
+    if seeds is None:
+        seed = F.lit(True)
+    else:
+        seed_nodes = seeds.select(F.col("node")).distinct().withColumn("seed", F.lit(True))
+        nodes = nodes.join(F.broadcast(seed_nodes), "node", "left")
+        seed = F.coalesce(F.col("seed"), F.lit(False))
+    return nodes.select(
+        "node", F.coalesce(F.col("dang"), F.lit(True)).alias("dang"), seed.alias("seed")
+    )
+
+
+def _fixed_point_rank(
+    edges: DataFrame, seeds: DataFrame | None, iterations: int, scale: int, damping_pct: int
+) -> DataFrame:
+    """The one fixed-point rank loop; ``seeds=None`` makes every node a
+    seed (global PageRank). See ``pagerank_fixed_point``."""
+    # max(…, 1): with no damping the rank itself must still fit a long
+    if scale * max(damping_pct, 1) >= 2**63:
+        raise ValueError(
+            f"pagerank scale {scale} * damping_pct {damping_pct} must stay under 2**63"
+        )
+    e, m = _ckpt_counted(edges.select("src", "dst").distinct(), "pagerank_edges")
+    empty = e.select(F.col("src").alias("node"), F.lit(0).cast("long").alias("rank"))
+    if m == 0 and seeds is None:
+        return empty
+    if 0 < m <= DRIVER_CC_MAX_EDGES:
+        edge_rows = _collect_pairs(e)
+        e.unpersist()
+        seed_set = None if seeds is None else {
+            r[0] for r in seeds.select("node").distinct().collect()
+        }
+        ranks = _driver_rank(edge_rows, seed_set, iterations, scale, damping_pct)
+        return _driver_frame(edges.sparkSession, ranks, empty.schema)
+    deg = e.groupBy("src").agg(F.count("*").alias("d")).localCheckpoint(eager=True)
+    # nodes carry a static `dang` flag (no out-edges) so the per-iteration
+    # dangling-mass sum is a plain conditional aggregate over ranks itself
+    nodes, got = _ckpt_observed(
+        _ppr_node_table(e, deg, seeds), "pagerank_seeds", F.count_if("seed").alias("ns")
+    )
+    ns = int(got["ns"])
+    base = _restart_base(ns, scale, damping_pct)
+    dangling = F.sum(F.when(F.col("dang"), F.col("rank")).otherwise(0)).alias("dangling")
+    ranks, got = _ckpt_observed(
+        nodes.withColumn("rank", F.when(F.col("seed"), scale // ns).otherwise(0).cast("long")),
+        "pagerank_dangling",
+        dangling,
+    )
+    for _ in range(iterations):
+        share = (int(got["dangling"]) * damping_pct) // (100 * ns)
+        contrib = (
+            e.join(ranks, e["src"] == ranks["node"])
+            .join(deg, "src")
+            .select(
+                F.col("dst").alias("node"),
+                F.expr(f"(rank * {damping_pct}) div (100 * d)").alias("c"),
+            )
+            .groupBy("node")
+            .agg(F.sum("c").alias("contrib"))
+        )
+        new_ranks, got = _ckpt_observed(
+            nodes.join(contrib, "node", "left").select(
+                "node",
+                "dang",
+                "seed",
+                (
+                    F.when(F.col("seed"), F.lit(base + share)).otherwise(0)
+                    + F.coalesce(F.col("contrib"), F.lit(0))
+                )
+                .cast("long")
+                .alias("rank"),
+            ),
+            "pagerank_dangling",
+            dangling,
+        )
+        ranks.unpersist()
+        ranks = new_ranks
+    return ranks.select("node", "rank")
+
+
+def _driver_rank(edge_rows, seed_set, iterations: int, scale: int, damping_pct: int) -> list:
+    """The driver route: `_fixed_point_rank`'s loop over int64 numpy
+    arrays (``seed_set=None``: every node is a seed). The per-edge floored
     contribution is computed vectorized and summed per destination with
     ``np.add.reduceat`` over a dst-sorted edge order (precomputed once —
     the edge structure is iteration-invariant). ~20x the pure-Python
-    loop's throughput at 10^5-10^6 edges (round-6 measurement) with
-    identical integer arithmetic."""
+    loop's throughput at 10^5-10^6 edges (round-6 measurement). Both
+    loops floor-divide nonnegative integers that fit int64 (the scale
+    gate), so numpy's ``//`` is bit-identical to Python's — tested
+    against `_rank_reference`."""
     import numpy as np
 
+    node_list = sorted({s for s, _ in edge_rows} | {d for _, d in edge_rows})
+    n = len(node_list)
     idx = {v: i for i, v in enumerate(node_list)}
     src = np.fromiter((idx[s] for s, _ in edge_rows), dtype=np.int64, count=len(edge_rows))
     dst = np.fromiter((idx[d] for _, d in edge_rows), dtype=np.int64, count=len(edge_rows))
+    if seed_set is None:
+        seed = np.ones(n, dtype=bool)
+    else:
+        seed = np.fromiter((v in seed_set for v in node_list), dtype=bool, count=n)
+    ns = int(seed.sum())
+    base = _restart_base(ns, scale, damping_pct)
     deg = np.bincount(src, minlength=n)
     dangling_mask = deg == 0
     order = np.argsort(dst, kind="stable")
@@ -218,42 +276,35 @@ def _driver_pagerank_np(
     deg_ord = deg[src_ord]
     dst_unique, starts = np.unique(dst_ord, return_index=True)
     dp = np.int64(damping_pct)
-    rank = np.full(n, scale // n, dtype=np.int64)
+    rank = np.where(seed, np.int64(scale // ns), np.int64(0))
     for _ in range(iterations):
-        dangling = int(rank[dangling_mask].sum())
-        share = (dangling * damping_pct) // (100 * n)
+        share = (int(rank[dangling_mask].sum()) * damping_pct) // (100 * ns)
         vals = (rank[src_ord] * dp) // (100 * deg_ord)
         contrib = np.zeros(n, dtype=np.int64)
-        if len(starts):
-            contrib[dst_unique] = np.add.reduceat(vals, starts)
-        rank = (base + share) + contrib
-    return [(v, int(rank[idx[v]])) for v in node_list]
+        contrib[dst_unique] = np.add.reduceat(vals, starts)
+        rank = np.where(seed, np.int64(base + share), np.int64(0)) + contrib
+    return list(zip(node_list, rank.tolist()))
 
 
-def _driver_pagerank(
-    edge_rows, iterations: int, scale: int, damping_pct: int, n: int, base: int
-) -> list:
-    """The distributed fixed-point loop, line for line, in pure-Python
-    integers: per iteration every node sends rank*damping_pct //
-    (100*out_deg) along each out-edge, dangling mass redistributes as a
-    floored even share, every node adds the (1-d) base. Integer sums are
-    associative, so partition order cannot make the two paths diverge —
-    identical `iterations`, identical floors, identical output. Kept as
-    the reference implementation (and the arbitrary-precision fallback
-    for scales past the int64 headroom of the numpy loop)."""
+def _rank_reference(edge_rows, seed_set, iterations: int, scale: int, damping_pct: int) -> list:
+    """`_fixed_point_rank`'s loop, line for line, in pure-Python integers
+    (``seed_set=None``: every node is a seed) — kept only as the reference
+    `_driver_rank` is tested against."""
     from collections import Counter, defaultdict
 
     deg = Counter(s for s, _ in edge_rows)
     node_list = sorted({s for s, _ in edge_rows} | {d for _, d in edge_rows})
-    assert len(node_list) == n
-    rank = {v: scale // n for v in node_list}
+    seeds = set(node_list) if seed_set is None else seed_set & set(node_list)
+    ns = len(seeds)
+    base = (scale * (100 - damping_pct)) // (100 * ns)
+    rank = {v: (scale // ns if v in seeds else 0) for v in node_list}
     for _ in range(iterations):
         dangling = sum(rank[v] for v in node_list if v not in deg)
-        share = (dangling * damping_pct) // (100 * n)
+        share = (dangling * damping_pct) // (100 * ns)
         contrib = defaultdict(int)
         for s, d in edge_rows:
             contrib[d] += (rank[s] * damping_pct) // (100 * deg[s])
-        rank = {v: base + share + contrib[v] for v in node_list}
+        rank = {v: (base + share if v in seeds else 0) + contrib[v] for v in node_list}
     return [(v, rank[v]) for v in node_list]
 
 
@@ -293,10 +344,7 @@ def _driver_union_find(rows) -> list:
     return [(x, comp_min[find(x)]) for x in parent if x != comp_min[find(x)]]
 
 
-def alternating_star_components(
-    edges: DataFrame, max_rounds: int = 50, batch: int = 1,
-    driver_max_edges: int = DRIVER_CC_MAX_EDGES,
-) -> DataFrame:
+def alternating_star_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
     """Connected components by alternating large-star/small-star (Kiveris
     et al., "Connected Components in MapReduce and Beyond", SoCC'14) —
     O(log n) rounds, each round two narrow-key groupBy shuffles, no
@@ -309,21 +357,15 @@ def alternating_star_components(
     from an ``observe`` metric on the round's own checkpoint
     materialization — ONE Spark job per round, no separate fingerprint
     aggregate (round-3 postmortem: the extra scalar job per round dominated
-    wall time at small scale). ``batch`` large/small pairs run between
-    consecutive checkpoint+fingerprint materializations. Correctness is
-    batch-independent (the star edge list is a fixed point of both star
-    operations, so overshooting convergence re-derives the identical edge
-    list), but ``batch=2`` was MEASURED 3x SLOWER on the sf0.1 near-dup
-    graph (82,791 edges: 3.4-6.0 s at batch=1 vs 10.0-10.4 s at batch=2,
-    quiet box, round 5) — each star composes two self-unions, so two
-    un-checkpointed pairs roughly quadruple the logical plan Catalyst must
-    optimize per job, which swamps the saved observe/checkpoint fixed
-    cost. Default stays 1; the knob remains for large clusters where the
-    driver round-trip (not plan optimization) dominates. Lineage is
-    truncated per batch; on a real cluster configure a reliable checkpoint
-    dir.
+    wall time at small scale). Each round is one large/small star pair
+    between checkpoints: two un-checkpointed pairs per round MEASURED 3x
+    SLOWER on the sf0.1 near-dup graph (82,791 edges: 3.4-6.0 s vs
+    10.0-10.4 s, quiet box, round 5) — each star composes two
+    self-unions, so two pairs roughly quadruple the logical plan Catalyst
+    must optimize per job, which swamps the saved observe/checkpoint
+    fixed cost. On a real cluster configure a reliable checkpoint dir.
 
-    Inputs at or under ``driver_max_edges`` distinct edges short-circuit
+    Inputs at or under ``DRIVER_CC_MAX_EDGES`` edges short-circuit
     to the driver union-find above (identical output, pytest-gated
     parity); with it, the full dedup_clusters pipeline at sf0.1 measures
     5.5 s best (8.2 s with 20 distributed rounds on the 83 k-edge
@@ -351,17 +393,14 @@ def alternating_star_components(
         return out.filter(F.col("src") != F.col("dst")).distinct()
 
     def _ckpt_with_fp(df: DataFrame):
-        obs = Observation(f"cc_fingerprint_{next(_OBS_SEQ)}")
-        df = df.observe(
-            obs,
+        df, got = _ckpt_observed(
+            df,
+            "cc_fingerprint",
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
         )
-        df = df.localCheckpoint(eager=True)
-        m = obs.get
-        return df, (m["n"], m["h"])
+        return df, (got["n"], got["h"])
 
-    batch = max(1, batch)
     # no up-front .distinct(): the driver union-find dedups implicitly,
     # every star round ends in .distinct() anyway, and the fingerprint
     # only drives convergence detection (a raw-vs-round-1 false match
@@ -369,33 +408,16 @@ def alternating_star_components(
     # dropped, astronomically unlikely otherwise). Saves one full shuffle
     # of the edge list per call (round 6).
     cur, prev_fp = _ckpt_with_fp(edges.select("src", "dst"))
-    # adaptive small-graph path: the edge count is already in hand from
-    # the fingerprint observe — no extra job decides the route
-    if 0 < prev_fp[0] <= driver_max_edges:
-        import pandas as pd
-
-        schema = cur.schema
+    if 0 < prev_fp[0] <= DRIVER_CC_MAX_EDGES:
         pairs = _driver_union_find(_collect_pairs(cur))
         cur.unpersist()
-        if not pairs:
-            return edges.sparkSession.createDataFrame([], schema)
-        # Arrow-path createDataFrame (a pandas frame, not a tuple list):
-        # near the 2M-edge threshold the pickle path would cost ~20 s of
-        # driver serialization and hand the advantage back
-        pdf = pd.DataFrame(pairs, columns=[f.name for f in schema.fields])
-        return edges.sparkSession.createDataFrame(pdf, schema)
-    rounds_left = max_rounds
-    while rounds_left > 0:
+        return _driver_frame(edges.sparkSession, pairs, cur.schema)
+    for _ in range(max_rounds):
         if prev_fp[0] == 0:
             break
-        pairs = min(batch, rounds_left)
-        stepped = cur
-        for _ in range(pairs):
-            stepped = star(star(stepped, large=True), large=False)
-        nxt, fp = _ckpt_with_fp(stepped)
+        nxt, fp = _ckpt_with_fp(star(star(cur, large=True), large=False))
         cur.unpersist()
         cur = nxt
-        rounds_left -= pairs
         if fp == prev_fp:
             break
         prev_fp = fp
@@ -830,8 +852,7 @@ def neighbor_jaccard(
 
 
 def bfs_distances(
-    edges: DataFrame, seeds: DataFrame, max_hops: int = 6, undirected: bool = True,
-    driver_max_edges: int | None = None,
+    edges: DataFrame, seeds: DataFrame, max_hops: int = 6, undirected: bool = True
 ) -> DataFrame:
     """Minimum hop distance from ANY seed node: (node, hops), seeds at 0,
     nodes unreachable within ``max_hops`` absent.
@@ -844,21 +865,16 @@ def bfs_distances(
     round's own checkpoint — one job per hop, same pattern as
     pagerank/components above.
 
-    Graphs at or under ``driver_max_edges`` (default DRIVER_CC_MAX_EDGES)
-    short-circuit to a driver BFS — min-hop labels are order-free, so the
-    output is IDENTICAL (pytest parity gate); ``driver_max_edges=0``
-    forces the distributed loop, the design for billions-edge graphs."""
+    Graphs at or under ``DRIVER_CC_MAX_EDGES`` edges short-circuit to a
+    driver BFS — min-hop labels are order-free, so the output is
+    IDENTICAL (pytest parity gate); the distributed loop is the design
+    for billions-edge graphs."""
     e = edges.select("src", "dst")
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))) if undirected else e
-    sym = sym.distinct().localCheckpoint(eager=True)
-
-    cutoff = DRIVER_CC_MAX_EDGES if driver_max_edges is None else driver_max_edges
-    m = sym.count()
-    if 0 < m <= cutoff:
-        import pandas as pd
-
+    sym, m = _ckpt_counted(sym.distinct(), "bfs_edges")
+    if 0 < m <= DRIVER_CC_MAX_EDGES:
         adj = {}
-        for s, d in sym.collect():
+        for s, d in _collect_pairs(sym):
             adj.setdefault(s, []).append(d)
         dist = {r[0]: 0 for r in seeds.select("node").distinct().collect()}
         frontier = list(dist)
@@ -871,22 +887,13 @@ def bfs_distances(
             for v in nxt:
                 dist[v] = hop
             frontier = nxt
-        schema = (
-            seeds.select("node").withColumn("hops", F.lit(0).cast("long")).schema
-        )
         sym.unpersist()
-        if not dist:
-            return edges.sparkSession.createDataFrame([], schema)
-        pdf = pd.DataFrame(sorted(dist.items()), columns=["node", "hops"])
-        return edges.sparkSession.createDataFrame(pdf, schema)
+        schema = seeds.select("node").withColumn("hops", F.lit(0).cast("long")).schema
+        return _driver_frame(edges.sparkSession, sorted(dist.items()), schema)
 
-    def _ckpt_counted(df: DataFrame):
-        obs = Observation(f"bfs_frontier_{next(_OBS_SEQ)}")
-        df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        df = df.localCheckpoint(eager=True)
-        return df, int(obs.get["n"])
-
-    dist, _ = _ckpt_counted(seeds.select("node").distinct().withColumn("hops", F.lit(0)))
+    dist, _ = _ckpt_counted(
+        seeds.select("node").distinct().withColumn("hops", F.lit(0)), "bfs_frontier"
+    )
     frontier = dist
     for hop in range(1, max_hops + 1):
         cand = (
@@ -895,12 +902,12 @@ def bfs_distances(
             .distinct()
         )
         new, n_new = _ckpt_counted(
-            cand.join(dist, "node", "left_anti").withColumn("hops", F.lit(hop))
+            cand.join(dist, "node", "left_anti").withColumn("hops", F.lit(hop)), "bfs_frontier"
         )
         if n_new == 0:
             break
         prev = dist
-        dist, _ = _ckpt_counted(prev.union(new))
+        dist, _ = _ckpt_counted(prev.union(new), "bfs_frontier")
         prev.unpersist()
         frontier = new
     return dist.select("node", F.col("hops").cast("long").alias("hops"))
@@ -929,13 +936,7 @@ def kcore_nodes(edges: DataFrame, k: int = 2, max_rounds: int = 16) -> DataFrame
         .distinct()
     )
 
-    def _ckpt_counted(df: DataFrame):
-        obs = Observation(f"kcore_edges_{next(_OBS_SEQ)}")
-        df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        df = df.localCheckpoint(eager=True)
-        return df, int(obs.get["n"])
-
-    cur, n_edges = _ckpt_counted(und)
+    cur, n_edges = _ckpt_counted(und, "kcore_edges")
     for _ in range(max_rounds):
         if n_edges == 0:
             break
@@ -949,7 +950,8 @@ def kcore_nodes(edges: DataFrame, k: int = 2, max_rounds: int = 16) -> DataFrame
         nxt, n_new = _ckpt_counted(
             cur.join(alive.withColumnRenamed("node", "a"), "a", "left_semi")
             .join(alive.withColumnRenamed("node", "b"), "b", "left_semi")
-            .select("a", "b")
+            .select("a", "b"),
+            "kcore_edges",
         )
         cur.unpersist()
         cur = nxt
@@ -1215,154 +1217,6 @@ def hyperball_neighborhoods(
             "used_regs", "zero_regs", "sum_rho", "harmonic_scaled",
         )
     )
-
-
-def _driver_ppr(
-    edge_rows, seed_set, iterations: int, scale: int, damping_pct: int
-) -> list:
-    """`personalized_pagerank`'s distributed loop in pure-Python integers
-    — same floors, same iteration count, order-free integer sums, so the
-    two paths are BIT-EXACT (pytest parity gate)."""
-    from collections import Counter, defaultdict
-
-    deg = Counter(s for s, _ in edge_rows)
-    node_list = sorted({s for s, _ in edge_rows} | {d for _, d in edge_rows})
-    ns = len(seed_set)
-    base = (scale * (100 - damping_pct)) // (100 * ns)
-    rank = {v: (scale // ns if v in seed_set else 0) for v in node_list}
-    for _ in range(iterations):
-        dangling = sum(rank[v] for v in node_list if v not in deg)
-        share = (dangling * damping_pct) // (100 * ns)
-        contrib = defaultdict(int)
-        for s, d in edge_rows:
-            contrib[d] += (rank[s] * damping_pct) // (100 * deg[s])
-        rank = {
-            v: (base + share if v in seed_set else 0) + contrib[v]
-            for v in node_list
-        }
-    return [(v, rank[v]) for v in node_list]
-
-
-def _ppr_node_table(e: DataFrame, deg: DataFrame, seeds: DataFrame) -> DataFrame:
-    """(node, dang, seed) for `personalized_pagerank` — separate so the
-    plan gate can inspect the PRE-checkpoint plan (after localCheckpoint
-    the executed plan is a Scan ExistingRDD and every join assertion is
-    vacuous). The seed flag joins as an explicit broadcast: the seed set
-    is small by construction."""
-    seed_nodes = seeds.select(F.col("node")).distinct()
-    return (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(deg.select(F.col("src").alias("node"), F.lit(False).alias("dang")), "node", "left")
-        .join(F.broadcast(seed_nodes.withColumn("seed", F.lit(True))), "node", "left")
-        .select(
-            "node",
-            F.coalesce(F.col("dang"), F.lit(True)).alias("dang"),
-            F.coalesce(F.col("seed"), F.lit(False)).alias("seed"),
-        )
-    )
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iterations: int = 8,
-    scale: int = PAGERANK_SCALE,
-    damping_pct: int = 85,
-    driver_max_edges: int | None = None,
-) -> DataFrame:
-    """Personalized PageRank (random walk with restart) in the same
-    64-bit fixed-point arithmetic as ``pagerank_fixed_point`` — the
-    seeded-relevance query a KG consumer runs constantly ("rank every
-    entity by exposure to THESE nodes"). Differences from global
-    PageRank, all three exactly mirrored in the DuckDB oracle:
-
-    * initial mass ``scale // n_seeds`` sits on the seeds, 0 elsewhere;
-    * the (1-d) restart base returns to the SEEDS (floored even share),
-      not to every node;
-    * dangling mass redistributes to the seeds.
-
-    Seeds outside the edge node set are ignored (they can neither send
-    nor receive mass). Raises on an empty effective seed set.
-
-    Scale shape: identical to the global loop — one narrow equi-join +
-    map-side-combinable sum per iteration, dangling mass folded into the
-    iteration's own checkpoint via ``observe`` (one job per round); the
-    seed flag is a broadcast-joined boolean on the node table. Small
-    graphs take the driver escape hatch (bit-exact, see
-    ``DRIVER_CC_MAX_EDGES``); ``driver_max_edges=0`` forces distributed."""
-    e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    deg = e.groupBy("src").agg(F.count("*").alias("d")).localCheckpoint(eager=True)
-    nodes = _ppr_node_table(e, deg, seeds).localCheckpoint(eager=True)
-    ns = nodes.filter(F.col("seed")).count()
-    if ns == 0:
-        raise ValueError("personalized_pagerank: no seed intersects the edge node set")
-    if scale < ns * 1000:
-        raise ValueError(f"ppr scale {scale} too small for {ns} seeds")
-    base = (scale * (100 - damping_pct)) // (100 * ns)
-
-    m = e.count()
-    cutoff = DRIVER_CC_MAX_EDGES if driver_max_edges is None else driver_max_edges
-    if 0 < m <= cutoff:
-        import pandas as pd
-
-        edge_rows = _collect_pairs(e)
-        seed_set = {r[0] for r in nodes.filter(F.col("seed")).select("node").collect()}
-        ranks_pdf = pd.DataFrame(
-            _driver_ppr(edge_rows, seed_set, iterations, scale, damping_pct),
-            columns=["node", "rank"],
-        )
-        out_schema = nodes.select("node").withColumn("rank", F.lit(0).cast("long")).schema
-        for df in (e, deg, nodes):
-            df.unpersist()
-        return edges.sparkSession.createDataFrame(ranks_pdf, out_schema)
-
-    def _ckpt(df: DataFrame):
-        obs = Observation(f"ppr_dangling_{next(_OBS_SEQ)}")
-        df = df.observe(
-            obs,
-            F.coalesce(
-                F.sum(F.when(F.col("dang"), F.col("rank")).otherwise(F.lit(0))), F.lit(0)
-            ).alias("dangling"),
-        )
-        return df.localCheckpoint(eager=True), obs
-
-    ranks, obs = _ckpt(
-        nodes.withColumn(
-            "rank",
-            F.when(F.col("seed"), F.lit(scale // ns)).otherwise(F.lit(0)).cast("long"),
-        )
-    )
-    for _ in range(iterations):
-        share = (int(obs.get["dangling"]) * damping_pct) // (100 * ns)
-        contrib = (
-            e.join(ranks, e["src"] == ranks["node"])
-            .join(deg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(f"(rank * {damping_pct}) div (100 * d)").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        new_ranks, obs = _ckpt(
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                "dang",
-                "seed",
-                (
-                    F.when(F.col("seed"), F.lit(base + share)).otherwise(F.lit(0))
-                    + F.coalesce(F.col("contrib"), F.lit(0))
-                )
-                .cast("long")
-                .alias("rank"),
-            )
-        )
-        ranks.unpersist()
-        ranks = new_ranks
-    return ranks.select("node", "rank")
 
 
 def degree_mixing_stats(edges: DataFrame) -> DataFrame:
@@ -1744,13 +1598,13 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     )
 
 
-def four_cycle_census(edges: DataFrame, min_codegree: int = 2) -> DataFrame:
+def four_cycle_census(edges: DataFrame) -> DataFrame:
     """Exact global 4-cycle (rectangle) count: #C4 = Σ_{u<v}
     C(codeg(u,v), 2) / 2 — every 4-cycle is counted once at each of its
     two diagonals, so the sum halves exactly. Co-neighbor pairs come
     from the wedge join at the shared neighbor (the neighbor_jaccard
-    candidate shape); pairs with codegree < 2 contribute C(c,2) = 0 and
-    are pruned before the aggregate. Returns one row:
+    candidate shape); pairs with codegree 1 contribute C(1,2) = 0 to the
+    plain sum. Returns one row:
     (n_copair_rows, n_wedges, n_four_cycles).
 
     Scale note: the wedge join at a hub of degree d materializes
@@ -1782,12 +1636,7 @@ def four_cycle_census(edges: DataFrame, min_codegree: int = 2) -> DataFrame:
     agg = copairs.agg(
         F.count(F.lit(1)).cast("long").alias("n_copair_rows"),
         F.sum("c").cast("long").alias("n_wedges"),
-        F.sum(
-            F.when(
-                F.col("c") >= min_codegree,
-                F.expr(f"(cast(c as {_D38}) * (c - 1)) div 2"),
-            ).otherwise(F.lit(0).cast(_D38))
-        ).alias("_diag"),
+        F.sum(F.expr(f"(cast(c as {_D38}) * (c - 1)) div 2").cast(_D38)).alias("_diag"),
     )
     # Σ C(codeg, 2) counts every rectangle at both diagonals — always
     # even, so the integer halving is exact

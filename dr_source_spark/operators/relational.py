@@ -916,7 +916,8 @@ def markov_stationary(
     domain, not row count — so folding it on the driver is as
     scale-clean as the bisect-quantile bounds state. For a chain whose
     state space IS row-scale (e.g. per-entity graphs), use
-    operators/graph.pagerank_fixed_point's distributed loop instead.
+    operators/graph.pagerank_fixed_point, whose distributed route
+    (``_fixed_point_rank``) keeps the ranks as a node table instead.
     Output: (event_type, pi_fp) with Σ pi_fp ≤ scale (truncation
     leaks ≤ 1 unit per state per round — deterministic).
     """

@@ -141,10 +141,11 @@ def test_hyperball_law_random_graphs(spark):
             assert got[v] == _py_hyperball_regs(ball), (trial, v)
 
 
-def test_personalized_pagerank_paths_agree_random_graphs(spark):
+def test_personalized_pagerank_paths_agree_random_graphs(spark, monkeypatch):
     """Driver and distributed PPR are bit-exact on random directed graphs
     with random seed sets — including dangling nodes (the dangling-mass
     share path) and seeds that are themselves dangling."""
+    from dr_source_spark.operators import graph
     from dr_source_spark.operators.graph import personalized_pagerank
 
     rng = random.Random(37)
@@ -161,10 +162,36 @@ def test_personalized_pagerank_paths_agree_random_graphs(spark):
             r.node: r.rank
             for r in personalized_pagerank(edges, seeds, iterations=5).collect()
         }
-        dist = {
-            r.node: r.rank
-            for r in personalized_pagerank(
-                edges, seeds, iterations=5, driver_max_edges=0
-            ).collect()
-        }
+        with monkeypatch.context() as mp:
+            mp.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)  # force the distributed loop
+            dist = {
+                r.node: r.rank
+                for r in personalized_pagerank(edges, seeds, iterations=5).collect()
+            }
         assert drv == dist, trial
+
+
+def test_pagerank_is_personalized_pagerank_with_every_node_seeded(spark, monkeypatch):
+    """Global fixed-point PageRank equals personalized PageRank seeded at
+    EVERY node, bit for bit, on random directed graphs (dangling nodes
+    included) and on both routes — the identity that lets the two
+    operators share one loop."""
+    from dr_source_spark.operators import graph
+
+    rng = random.Random(41)
+    for trial in range(4):
+        n = rng.randrange(4, 20)
+        e = {(rng.randrange(n), rng.randrange(n)) for _ in range(rng.randrange(n, 4 * n))}
+        edges = spark.createDataFrame(sorted(e), "src long, dst long")
+        every = spark.createDataFrame(
+            [(v,) for v in sorted({x for p in e for x in p})], "node long"
+        )
+        for cutoff in (graph.DRIVER_CC_MAX_EDGES, 0):
+            with monkeypatch.context() as mp:
+                mp.setattr(graph, "DRIVER_CC_MAX_EDGES", cutoff)
+                glob = {r.node: r.rank for r in graph.pagerank_fixed_point(edges).collect()}
+                ppr = {
+                    r.node: r.rank
+                    for r in graph.personalized_pagerank(edges, every, iterations=10).collect()
+                }
+            assert glob == ppr and glob, (trial, cutoff)

@@ -1108,13 +1108,14 @@ def test_boilerplate_cut_plan_complements_spans(spark):
     assert keeps[5] == [(1, 4)]    # clean doc keeps everything
 
 
-def test_star_components_driver_and_distributed_paths_agree(spark):
+def test_star_components_driver_and_distributed_paths_agree(spark, monkeypatch):
     """The adaptive small-graph union-find and the distributed
     alternating-star rounds must emit the IDENTICAL (node, min) edge
     list — on a random graph with chains, cliques, singleton edges and
     string node ids."""
     import random
 
+    from dr_source_spark.operators import graph
     from dr_source_spark.operators.graph import alternating_star_components
 
     rng = random.Random(7)
@@ -1122,7 +1123,8 @@ def test_star_components_driver_and_distributed_paths_agree(spark):
     edges += [(f"c{i}", f"c{i+1}") for i in range(10)]  # a chain
     df = spark.createDataFrame(edges, "src string, dst string")
     fast = {tuple(r) for r in alternating_star_components(df).collect()}
-    dist = {tuple(r) for r in alternating_star_components(df, driver_max_edges=0).collect()}
+    monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)  # force the distributed rounds
+    dist = {tuple(r) for r in alternating_star_components(df).collect()}
     assert fast == dist and len(fast) > 0
 
 
@@ -1628,11 +1630,12 @@ def test_mix_plan_known_budget_arithmetic(spark):
     assert got["empty"].epochs == 0
 
 
-def test_pagerank_driver_path_bit_equal_to_distributed(spark):
+def test_pagerank_driver_path_bit_equal_to_distributed(spark, monkeypatch):
     """The adaptive driver short-circuit and the distributed fixed-point
     loop must agree BIT-EXACTLY (integer sums are order-free, so there is
     no tolerance — equality or bug), on a graph with dangling nodes,
     multi-in-degree hubs, and an isolated 2-cycle."""
+    from dr_source_spark.operators import graph
     from dr_source_spark.operators.graph import pagerank_fixed_point
 
     edge_list = [
@@ -1642,10 +1645,8 @@ def test_pagerank_driver_path_bit_equal_to_distributed(spark):
     ]
     edges = spark.createDataFrame(edge_list, "src string, dst string")
     fast = {r.node: r.rank for r in pagerank_fixed_point(edges, iterations=8).collect()}
-    slow = {
-        r.node: r.rank
-        for r in pagerank_fixed_point(edges, iterations=8, driver_max_edges=0).collect()
-    }
+    monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)  # force the distributed loop
+    slow = {r.node: r.rank for r in pagerank_fixed_point(edges, iterations=8).collect()}
     assert fast == slow and len(fast) == 6
 
 
@@ -1653,38 +1654,56 @@ def test_pagerank_numpy_loop_bit_equal_to_python_reference():
     """The vectorized int64 driver loop (round-6 optimization) must equal
     the pure-Python integer reference bit-for-bit on a random multigraph
     with dangling nodes, hubs, and self-loops — and on string node ids
-    (the KG edge shape). No Spark session needed."""
+    (the KG edge shape) — with every node a seed (global PageRank) and
+    with a seed subset (personalized). No Spark session needed."""
     import random
 
-    from dr_source_spark.operators.graph import _driver_pagerank, _driver_pagerank_rows
+    from dr_source_spark.operators.graph import _driver_rank, _rank_reference
 
     random.seed(13)
     edges = list({(random.randrange(500), random.randrange(500)) for _ in range(3000)})
-    nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
-    n, scale, dp = len(nodes), 10**12, 85
-    base = (scale * (100 - dp)) // (100 * n)
-    assert _driver_pagerank_rows(edges, 10, scale, dp) == _driver_pagerank(
-        edges, 10, scale, dp, n, base
+    scale, dp = 10**12, 85
+    assert _driver_rank(edges, None, 10, scale, dp) == _rank_reference(
+        edges, None, 10, scale, dp
+    )
+    seeds = set(range(0, 500, 7))
+    assert _driver_rank(edges, seeds, 10, scale, dp) == _rank_reference(
+        edges, seeds, 10, scale, dp
     )
     sedges = [(f"n{s}", f"n{d}") for s, d in edges]
-    sn = sorted({a for a, _ in sedges} | {b for _, b in sedges})
-    sbase = (scale * (100 - dp)) // (100 * len(sn))
-    assert _driver_pagerank_rows(sedges, 10, scale, dp) == _driver_pagerank(
-        sedges, 10, scale, dp, len(sn), sbase
+    assert _driver_rank(sedges, None, 10, scale, dp) == _rank_reference(
+        sedges, None, 10, scale, dp
     )
-    # past the int64 headroom the rows entry must fall back to the
-    # arbitrary-precision loop and still validate the scale floor
+    # the largest scale the int64 loop admits (85 * 10**17 < 2**63):
+    # every intermediate still fits, so the loop stays exact
     big = 10**17
-    assert _driver_pagerank_rows(edges, 3, big, dp) == _driver_pagerank(
-        edges, 3, big, dp, n, (big * (100 - dp)) // (100 * n)
-    )
+    assert _driver_rank(edges, None, 3, big, dp) == _rank_reference(edges, None, 3, big, dp)
 
 
-def test_bfs_driver_path_identical_to_distributed(spark):
+def test_pagerank_scale_bound_same_on_both_routes(spark, monkeypatch):
+    """``scale * damping_pct`` must stay under 2**63 (rank <= scale, so
+    ``rank * damping_pct`` fits a long): at 10**17 both routes agree with
+    the reference; at 10**18 both raise the same ValueError up front
+    (the distributed route would otherwise overflow in ANSI mode)."""
+    from dr_source_spark.operators import graph
+
+    edge_list = [("a", "b"), ("b", "c"), ("a", "c"), ("d", "a")]
+    edges = spark.createDataFrame(edge_list, "src string, dst string")
+    ref = dict(graph._rank_reference(edge_list, None, 10, 10**17, 85))
+    for cutoff in (graph.DRIVER_CC_MAX_EDGES, 0):
+        monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", cutoff)
+        got = {r.node: r.rank for r in graph.pagerank_fixed_point(edges, scale=10**17).collect()}
+        assert got == ref, cutoff
+        with pytest.raises(ValueError, match="2\\*\\*63"):
+            graph.pagerank_fixed_point(edges, scale=10**18)
+
+
+def test_bfs_driver_path_identical_to_distributed(spark, monkeypatch):
     """The adaptive driver BFS and the distributed frontier loop must
     return the identical (node, hops) set — min-hop labels are order-free
     — including seeds-only components, unreachable nodes (absent), and
     the max_hops cutoff."""
+    from dr_source_spark.operators import graph
     from dr_source_spark.operators.graph import bfs_distances
 
     edges = spark.createDataFrame(
@@ -1694,10 +1713,12 @@ def test_bfs_driver_path_identical_to_distributed(spark):
     seeds = spark.createDataFrame([("a",), ("x",)], "node string")
     for hops in (2, 6):
         fast = {(r.node, r.hops) for r in bfs_distances(edges, seeds, max_hops=hops).collect()}
-        slow = {
-            (r.node, r.hops)
-            for r in bfs_distances(edges, seeds, max_hops=hops, driver_max_edges=0).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)  # force the distributed loop
+            slow = {
+                (r.node, r.hops)
+                for r in bfs_distances(edges, seeds, max_hops=hops).collect()
+            }
         assert fast == slow
     assert ("f", 5) in fast and ("y", 1) in fast
 
@@ -1853,13 +1874,14 @@ def test_hyperball_neighborhoods_known_graph(spark):
     assert rows[6].sum_rho == sum(exp6.values())
 
 
-def test_personalized_pagerank_parity_and_semantics(spark):
+def test_personalized_pagerank_parity_and_semantics(spark, monkeypatch):
     """Driver and distributed PPR paths are BIT-EXACT on the same graph;
     mass concentrates on/near the seeds (restart goes to seeds only) and
     non-seed rank decays with distance; a seed off the edge node set is
     ignored and an empty effective seed set raises."""
     import pytest
 
+    from dr_source_spark.operators import graph
     from dr_source_spark.operators.graph import personalized_pagerank
 
     # NON-bipartite on purpose: a bipartite path makes the 8-round walk
@@ -1871,10 +1893,9 @@ def test_personalized_pagerank_parity_and_semantics(spark):
     edges = spark.createDataFrame(sym, "src string, dst string")
     seeds = spark.createDataFrame([("s",), ("zzz-not-in-graph",)], "node string")
     drv = {r.node: r.rank for r in personalized_pagerank(edges, seeds).collect()}
-    dist = {
-        r.node: r.rank
-        for r in personalized_pagerank(edges, seeds, driver_max_edges=0).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)  # force the distributed loop
+        dist = {r.node: r.rank for r in personalized_pagerank(edges, seeds).collect()}
     assert drv == dist  # bit-exact across the two execution paths
     # seed holds the most mass; rank decays down the pendant chain
     assert drv["s"] > drv["b"] and drv["a"] > drv["c"] > drv["d"] > 0
