@@ -4351,22 +4351,9 @@ def _kg_triples_diff(spark, sf_dir):
 def _kg_components(spark, sf_dir):
     # component labeling over the KG (alternating large-star/small-star);
     # every endpoint labeled with its component minimum
-    from dr_source_spark.operators.graph import alternating_star_components
+    from dr_source_spark.operators.graph import component_labels
 
-    edges = _kg_triples(spark, sf_dir).edges
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    stars = alternating_star_components(edges)
-    # min-agg keeps the join 1:1 even if max_rounds cut convergence short
-    labels = stars.groupBy(F.col("src").alias("node")).agg(
-        F.min("dst").alias("component")
-    )
-    return nodes.join(labels, "node", "left").select(
-        "node", F.coalesce(F.col("component"), F.col("node")).alias("component")
-    )
+    return component_labels(_kg_triples(spark, sf_dir).edges)
 
 
 def _kg_component_risk(spark, sf_dir):

@@ -203,27 +203,16 @@ def er_entities(
     canonical entity — the component minimum over the verified-match
     graph; mentions with no verified match (including too-short-to-gram
     mentions) keep their own id."""
-    from dr_source_spark.operators.graph import alternating_star_components
+    from dr_source_spark.operators.graph import _label_components
 
     grams = mention_grams(mentions, id_col, text_col)
     pairs = er_candidate_pairs(grams, b, df_cap_pct, max_bucket)
     verified = er_verified_pairs(grams, pairs, min_pct)
-    stars = alternating_star_components(
-        verified.select(F.col("ia").alias("src"), F.col("ib").alias("dst")),
+    return _label_components(
+        mentions.select(F.col(id_col).cast("long").alias("node")),
+        verified.select(F.col("ia").cast("long").alias("src"), F.col("ib").cast("long").alias("dst")),
         max_rounds=max_rounds,
-    )
-    all_ids = mentions.select(F.col(id_col).cast("long").alias("mention_id"))
-    return all_ids.join(
-        stars.select(
-            F.col("src").cast("long").alias("mention_id"),
-            F.col("dst").cast("long").alias("_root"),
-        ),
-        "mention_id",
-        "left",
-    ).select(
-        "mention_id",
-        F.coalesce(F.col("_root"), F.col("mention_id")).cast("long").alias("entity_id"),
-    )
+    ).select(F.col("node").alias("mention_id"), F.col("component").cast("long").alias("entity_id"))
 
 
 def er_blocking_quality(

@@ -12,6 +12,15 @@ The operators are Spark jobs designed for 10^12-edge scale:
 * per-iteration lineage truncation (``localCheckpoint`` — swap for a
   reliable ``checkpoint`` dir on a real cluster),
 * deterministic arithmetic so a DuckDB oracle reproduces results exactly.
+
+The normal form. An operator over "the undirected simple graph" reads
+its input through `_undirected`: self-loops dropped, reversed and
+parallel edges collapsed into one canonical pair ``(a, b)`` with
+``a < b``; both engines agree on it by construction. `_adjacency` lists
+each canonical edge both ways, `_degrees` counts a node's neighbors in
+it, and `_endpoints` is the node set of an edge list. The directed
+operators (HITS, walk counts, reciprocity) read the directed simple
+graph, `_digraph`: distinct ``(src, dst)``, self-loops dropped.
 """
 
 from __future__ import annotations
@@ -77,6 +86,51 @@ def _driver_frame(spark, rows: list, schema) -> DataFrame:
     if not rows:
         return spark.createDataFrame([], schema)
     return spark.createDataFrame(pd.DataFrame(rows, columns=schema.fieldNames()), schema)
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The normal form of (src, dst) edges: distinct (a, b), a < b."""
+    return (
+        edges.filter(F.col("src") != F.col("dst"))
+        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
+        .distinct()
+    )
+
+
+def _digraph(edges: DataFrame) -> DataFrame:
+    """The directed simple graph: distinct (src, dst), src != dst."""
+    return edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct()
+
+
+def _adjacency(und: DataFrame) -> DataFrame:
+    """(node, neigh): every (a, b) edge both ways. One pass over ``und``
+    (an explode, not a union of two projections, which would plan the
+    lineage of an uncheckpointed ``und`` twice)."""
+    return und.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("a").alias("node"), F.col("b").alias("neigh")),
+                F.struct(F.col("b").alias("node"), F.col("a").alias("neigh")),
+            )
+        )
+    )
+
+
+def _degrees(adj: DataFrame) -> DataFrame:
+    """(node, d long) over an `_adjacency` list."""
+    return adj.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
+
+
+def _endpoints(edges: DataFrame, also: DataFrame | None = None) -> DataFrame:
+    """(node): the distinct endpoints of (src, dst) edges, plus the
+    ``node`` column of ``also``, under one distinct. A union, not an
+    explode: the optimizer then drops a distinct that ends ``edges``'
+    own lineage (an explode kept it: +10 Exchanges in dedup_hyperball's
+    plan)."""
+    ends = edges.select(F.col("src").alias("node")).union(edges.select(F.col("dst").alias("node")))
+    if also is not None:
+        ends = also.select("node").union(ends)
+    return ends.distinct()
 
 
 def pagerank_fixed_point(
@@ -161,11 +215,8 @@ def _ppr_node_table(e: DataFrame, deg: DataFrame, seeds: DataFrame | None) -> Da
     vacuous). The seed flag joins as an explicit broadcast: the seed set
     is small by construction. ``seeds=None`` (global PageRank) makes
     every node a seed with a literal flag and no join."""
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(deg.select(F.col("src").alias("node"), F.lit(False).alias("dang")), "node", "left")
+    nodes = _endpoints(e).join(
+        deg.select(F.col("src").alias("node"), F.lit(False).alias("dang")), "node", "left"
     )
     if seeds is None:
         seed = F.lit(True)
@@ -371,6 +422,12 @@ def alternating_star_components(edges: DataFrame, max_rounds: int = 50) -> DataF
     5.5 s best (8.2 s with 20 distributed rounds on the 83 k-edge
     graph), of which LSH candidate generation is 3.5 s and the jaccard
     verify 1.5 s — the component step is no longer the cost center."""
+    return _star_components(edges, max_rounds)[0]
+
+
+def _star_components(edges: DataFrame, max_rounds: int):
+    """`alternating_star_components` and whether its output is a
+    converged star (False when ``max_rounds`` ran out first)."""
 
     def star(df: DataFrame, large: bool) -> DataFrame:
         if large:
@@ -411,22 +468,23 @@ def alternating_star_components(edges: DataFrame, max_rounds: int = 50) -> DataF
     if 0 < prev_fp[0] <= DRIVER_CC_MAX_EDGES:
         pairs = _driver_union_find(_collect_pairs(cur))
         cur.unpersist()
-        return _driver_frame(edges.sparkSession, pairs, cur.schema)
+        return _driver_frame(edges.sparkSession, pairs, cur.schema), True
     for _ in range(max_rounds):
         if prev_fp[0] == 0:
-            break
+            return cur, True
         nxt, fp = _ckpt_with_fp(star(star(cur, large=True), large=False))
         cur.unpersist()
         cur = nxt
         if fp == prev_fp:
-            break
+            return cur, True
         prev_fp = fp
-    return cur
+    return cur, False
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
-    """Per-node triangle participation counts over the undirected version
-    of (src, dst) — every node of the input appears, zero-filled.
+    """Per-node triangle participation counts over the undirected simple
+    graph (`_triangle_list`) — every node of the input appears,
+    zero-filled.
 
     Scale shape (Suri & Vassilvitskii, "Counting Triangles and the Curse
     of the Last Reducer", WWW'11): each undirected edge is ORIENTED from
@@ -439,25 +497,33 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     the orientation-free sorted-triangle 3-way join — same triangles).
 
     The (narrow) edge list is checkpointed ONCE on entry and the oriented
-    edge list once more: the plan references edges ~8 times (nodes, the
+    edge list once more (in `_triangle_list`): the plan references edges ~8 times (nodes, the
     undirected/degree prep, and the o1/o2/closing join branches), so an
     expensive upstream — the LSH → jaccard-verify pipeline feeding
     dedup_triangles — would otherwise be recomputed per branch (measured
     14.7 s warm at sf0.1 before, 6.0 s after — the remainder is the one
     LSH → verify pass the query genuinely needs; identical output)."""
     e = edges.select("src", "dst").localCheckpoint(eager=True)
-    nodes = e.select(F.col("src").alias("node")).union(e.select("dst")).distinct()
-    und = (
-        e.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
+    triangles = _triangle_list(_undirected(e))
+    verts = (
+        triangles.select(F.col("w0").alias("node"))
+        .union(triangles.select("w1"))
+        .union(triangles.select("w2"))
     )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .union(und.select("b"))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
+    counts = verts.groupBy("node").agg(F.count("*").alias("n"))
+    return _endpoints(e).join(counts, "node", "left").select(
+        "node", F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n_triangles")
     )
+
+
+def _triangle_list(und: DataFrame) -> DataFrame:
+    """(w0, w1, w2): every triangle of the canonical undirected edge set
+    ``(a, b)`` with a < b, enumerated ONCE each via a degree-ordered
+    orientation (wedges form only at their lowest-(degree, id) vertex —
+    a celebrity node never materializes its neighbor pairs; see
+    ``triangle_counts``). Vertex order in the output row is
+    orientation order, not sorted."""
+    deg = _degrees(_adjacency(und))
     j = (
         und.join(deg.select(F.col("node").alias("a"), F.col("d").alias("da")), "a")
         .join(deg.select(F.col("node").alias("b"), F.col("d").alias("db")), "b")
@@ -473,55 +539,6 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     # wedge at u: pair (v1, v2) ordered by the SAME (deg, id) key the
     # orientation uses, so the closing edge (if any) is oriented v1 -> v2
-    wedges = o1.join(
-        o2,
-        (F.col("o1.u") == F.col("o2.u"))
-        & (
-            F.struct(F.col("o1.dv"), F.col("o1.v"))
-            < F.struct(F.col("o2.dv"), F.col("o2.v"))
-        ),
-    ).select(
-        F.col("o1.u").alias("w0"), F.col("o1.v").alias("w1"), F.col("o2.v").alias("w2")
-    )
-    closing = oriented.select(F.col("u").alias("w1"), F.col("v").alias("w2"))
-    triangles = wedges.join(closing, ["w1", "w2"])
-    verts = (
-        triangles.select(F.col("w0").alias("node"))
-        .union(triangles.select("w1"))
-        .union(triangles.select("w2"))
-    )
-    counts = verts.groupBy("node").agg(F.count("*").alias("n"))
-    return nodes.join(counts, "node", "left").select(
-        "node", F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n_triangles")
-    )
-
-
-def _triangle_list(und: DataFrame) -> DataFrame:
-    """(w0, w1, w2): every triangle of the canonical undirected edge set
-    ``(a, b)`` with a < b, enumerated ONCE each via the same
-    degree-ordered orientation as ``triangle_counts`` (wedges form only
-    at their lowest-(degree, id) vertex — a celebrity node never
-    materializes its neighbor pairs). Vertex order in the output row is
-    orientation order, not sorted."""
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .union(und.select("b"))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
-    j = (
-        und.join(deg.select(F.col("node").alias("a"), F.col("d").alias("da")), "a")
-        .join(deg.select(F.col("node").alias("b"), F.col("d").alias("db")), "b")
-    )
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    oriented = j.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).localCheckpoint(eager=True)
-    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     wedges = o1.join(
         o2,
         (F.col("o1.u") == F.col("o2.u"))
@@ -583,14 +600,8 @@ def ktruss_edges(edges: DataFrame, k: int = 4, rounds: int = 3) -> DataFrame:
     3-way explode + narrow (a, b) groupBy for supports, one equi-join
     filter. The shrinking edge list is checkpointed per round, so round
     r+1's plan starts from materialized data instead of r stacked
-    enumerations. Self-loops are dropped, parallel edges collapse in
-    the canonicalization — both engines agree by construction."""
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    enumerations."""
+    und = _undirected(edges).localCheckpoint(eager=True)
     for _ in range(rounds):
         und = (
             _edge_support(und)
@@ -670,18 +681,12 @@ def _class_compress(edges: DataFrame, class_max_degree: int):
     Returns (nodes, members, cls_info, cls_adj, adj, deg, und_ids):
     nodes = (node, nid) dictionary; members = (node=nid, cls, d);
     cls_info = (cls, d, m); cls_adj = distinct (cls, neigh-nid);
-    adj/deg by nid; und_ids = distinct undirected edges as (aid, bid)."""
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    adj/deg by nid; und_ids = the distinct undirected edges as (a, b)
+    nids."""
+    und = _undirected(edges).localCheckpoint(eager=True)
     nodes = (
-        und.select(F.col("a").alias("node"))
-        .union(und.select(F.col("b").alias("node")))
+        _adjacency(und)
+        .select("node")
         .distinct()
         .withColumn("nid", F.monotonically_increasing_id())
         .localCheckpoint(eager=True)
@@ -689,12 +694,10 @@ def _class_compress(edges: DataFrame, class_max_degree: int):
     und_ids = (
         und.join(nodes.select(F.col("node").alias("a"), F.col("nid").alias("aid")), "a")
         .join(nodes.select(F.col("node").alias("b"), F.col("nid").alias("bid")), "b")
-        .select("aid", "bid")
+        .select(F.col("aid").alias("a"), F.col("bid").alias("b"))
     )
-    adj = und_ids.select(F.col("aid").alias("node"), F.col("bid").alias("neigh")).union(
-        und_ids.select(F.col("bid").alias("node"), F.col("aid").alias("neigh"))
-    )
-    deg = adj.groupBy("node").agg(F.count("*").alias("d"))
+    adj = _adjacency(und_ids)
+    deg = _degrees(adj)
     keyed = adj.join(deg, "node")
     small = (
         keyed.filter(F.col("d") <= class_max_degree)
@@ -930,23 +933,11 @@ def kcore_nodes(edges: DataFrame, k: int = 2, max_rounds: int = 16) -> DataFrame
     rounds computes the same result. Worst-case full peeling of a path
     graph needs ~n/2 rounds; callers on chain-heavy graphs should raise
     ``max_rounds`` (and their oracle's unroll) together."""
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
-
-    cur, n_edges = _ckpt_counted(und, "kcore_edges")
+    cur, n_edges = _ckpt_counted(_undirected(edges), "kcore_edges")
     for _ in range(max_rounds):
         if n_edges == 0:
             break
-        deg = (
-            cur.select(F.col("a").alias("node"))
-            .union(cur.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("d"))
-        )
-        alive = deg.filter(F.col("d") >= k).select("node")
+        alive = _degrees(_adjacency(cur)).filter(F.col("d") >= k).select("node")
         nxt, n_new = _ckpt_counted(
             cur.join(alive.withColumnRenamed("node", "a"), "a", "left_semi")
             .join(alive.withColumnRenamed("node", "b"), "b", "left_semi")
@@ -959,11 +950,9 @@ def kcore_nodes(edges: DataFrame, k: int = 2, max_rounds: int = 16) -> DataFrame
             break
         n_edges = n_new
     return (
-        cur.select(F.col("a").alias("node"))
-        .union(cur.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("core_degree"))
-        .filter(F.col("core_degree") >= k)
+        _degrees(_adjacency(cur))
+        .filter(F.col("d") >= k)
+        .select("node", F.col("d").alias("core_degree"))
     )
 
 
@@ -982,33 +971,21 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     exists, and the table is checkpointed per round to truncate lineage.
 
     The node set comes from the UNFILTERED endpoints: a node whose only
-    edges are self-loops has no neighbors after the simple-graph filter
-    and keeps its own label — but it must still get a row ("every node
+    edges are self-loops has no neighbors in the simple graph and keeps
+    its own label — but it must still get a row ("every node
     starts labeled with its own id"), so such nodes are appended after
     the sweeps rather than silently omitted."""
-    all_nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    e = edges.filter(F.col("src") != F.col("dst")).select("src", "dst")
-    sym = (
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    adj = _adjacency(_undirected(edges)).localCheckpoint(eager=True)
     labels = (
-        sym.select(F.col("src").alias("node"))
+        adj.select("node")
         .distinct()
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    from pyspark.sql.window import Window
-
     for _ in range(rounds):
         neigh = (
-            sym.join(labels, sym["dst"] == labels["node"])
-            .select(F.col("src").alias("node"), "label")
+            adj.join(labels.withColumnRenamed("node", "neigh"), "neigh")
+            .select("node", "label")
             .groupBy("node", "label")
             .agg(F.count("*").alias("_c"))
         )
@@ -1021,7 +998,7 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
         )
         labels.unpersist()
         labels = new_labels
-    isolated = all_nodes.join(labels, "node", "left_anti").withColumn(
+    isolated = _endpoints(edges).join(labels, "node", "left_anti").withColumn(
         "label", F.col("node")
     )
     return labels.unionByName(isolated)
@@ -1126,12 +1103,7 @@ def _node_universe(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     halves operate on, so the registers == sketch(ball) law holds for any
     caller-supplied node table (a missing endpoint would get phantom
     registers on one side and a counted membership on the other)."""
-    return (
-        nodes.select("node")
-        .union(edges.select(F.col("src").alias("node")))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    return _endpoints(edges, also=nodes)
 
 
 def exact_ball(edges: DataFrame, nodes: DataFrame, hops: int) -> DataFrame:
@@ -1272,19 +1244,9 @@ def modularity_by_community(edges: DataFrame, labels: DataFrame) -> DataFrame:
     and a final groupBy on the community key. All DECIMAL(38,0)
     arithmetic so 10^12-edge graphs cannot overflow the q_num product.
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges).localCheckpoint(eager=True)
     m = und.count()  # scalar: one number on the driver, reused in the expr
-    adj = und.select(F.col("a").alias("node"), F.col("b").alias("neigh")).union(
-        und.select(F.col("b").alias("node"), F.col("a").alias("neigh"))
-    )
-    deg = adj.groupBy("node").agg(F.count("*").alias("d"))
+    deg = _degrees(_adjacency(und))
     nd = labels.join(deg, "node", "left").select(
         "node", "label", F.coalesce(F.col("d"), F.lit(0)).alias("d")
     )
@@ -1331,13 +1293,7 @@ def transitivity_global(edges: DataFrame) -> DataFrame:
     transitivity_bp). Scale shape: triangle_counts' equi-joins plus one
     degree aggregate; the two 1-row summaries cross-join at the end.
     """
-    und = (
-        edges.selectExpr("src", "dst")
-        .union(edges.selectExpr("dst AS src", "src AS dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    deg = und.groupBy("src").agg(F.count(F.lit(1)).cast(_D38).alias("_d"))
+    deg = _degrees(_adjacency(_undirected(edges))).select(F.col("d").cast(_D38).alias("_d"))
     wedges = deg.agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes"),
         F.sum("_d").alias("_deg_tot"),
@@ -1432,8 +1388,8 @@ def resource_allocation(
         .filter(F.col("n_common") >= min_common)
     )
     cls_edges = (
-        und_ids.join(members.select(F.col("node").alias("aid"), F.col("cls").alias("_ca")), "aid")
-        .join(members.select(F.col("node").alias("bid"), F.col("cls").alias("_cb")), "bid")
+        und_ids.join(members.select(F.col("node").alias("a"), F.col("cls").alias("_ca")), "a")
+        .join(members.select(F.col("node").alias("b"), F.col("cls").alias("_cb")), "b")
         .select(F.least("_ca", "_cb").alias("ca"), F.greatest("_ca", "_cb").alias("cb"))
         .distinct()
     )
@@ -1483,9 +1439,7 @@ def hits_scores(
     by any positive constant leaves HITS' direction unchanged (the
     classic L2 norm is also just a rescale), so max-norm is a faithful
     deterministic variant; ``rounds`` is fixed and part of the
-    contract, like the pagerank_fixed_point iteration count. Duplicate
-    (src, dst) pairs and self-loops are dropped first — HITS on the
-    simple digraph.
+    contract, like the pagerank_fixed_point iteration count.
 
     Complements pagerank: pagerank ranks by random-walk visitation,
     HITS separates "points at good things" (hub — a scanner file that
@@ -1498,17 +1452,8 @@ def hits_scores(
     """
     if rounds < 1:
         raise ValueError("hits_scores needs rounds >= 1")
-    e = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    e = _digraph(edges).localCheckpoint(eager=True)
+    nodes = _endpoints(e)
     hub = nodes.select("node", F.lit(scale).cast("long").alias("s"))
     auth = None
     for _ in range(rounds):
@@ -1569,17 +1514,7 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     Suri-Vassilvitskii shape, no celebrity blowup) plus one degree
     aggregate and a narrow join.
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .union(und.select("b"))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("degree"))
-    )
+    deg = _degrees(_adjacency(_undirected(edges))).withColumnRenamed("d", "degree")
     tri = triangle_counts(edges)
     return (
         tri.join(deg, "node", "left")
@@ -1615,15 +1550,7 @@ def four_cycle_census(edges: DataFrame) -> DataFrame:
     core/spam-farm signal the triangle census is blind to (bipartite
     graphs have zero triangles but abundant rectangles).
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    adj = und.select(F.col("a").alias("node"), F.col("b").alias("neigh")).union(
-        und.select(F.col("b").alias("node"), F.col("a").alias("neigh"))
-    )
+    adj = _adjacency(_undirected(edges).localCheckpoint(eager=True))
     x, y = adj.alias("x"), adj.alias("y")
     copairs = (
         x.join(
@@ -1659,8 +1586,7 @@ def walk_counts(edges: DataFrame, rounds: int = 3, alpha_inv: int = 4) -> DataFr
     No division ever happens (the attenuation is cleared to a common
     denominator), so unlike the fixed-point pagerank there is not even
     a flooring step — every cell is the exact walk-count arithmetic
-    any engine reproduces. Duplicate (src, dst) pairs and self-loops
-    drop first: walk counting on the simple digraph.
+    any engine reproduces. Walks are counted on the simple digraph.
 
     Complements the centrality family: pagerank ranks by stationary
     visitation (normalized), HITS by mutual reinforcement (max-norm),
@@ -1678,17 +1604,8 @@ def walk_counts(edges: DataFrame, rounds: int = 3, alpha_inv: int = 4) -> DataFr
     """
     if rounds < 1:
         raise ValueError("walk_counts needs rounds >= 1")
-    e = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    e = _digraph(edges).localCheckpoint(eager=True)
+    nodes = _endpoints(e)
     walks = []  # walks[k-1]: (node, w) — walks of length exactly k ending at node
     w = e.groupBy(F.col("dst").alias("node")).agg(
         F.count(F.lit(1)).cast(_D38).alias("w")
@@ -1790,8 +1707,8 @@ def metapath_census(edges: DataFrame, shape: str = "chain") -> DataFrame:
 
 
 def reciprocity(edges: DataFrame) -> DataFrame:
-    """One-row directed-graph reciprocity summary: of the distinct directed
-    edges (self-loops dropped), how many have their reverse edge present.
+    """One-row directed-graph reciprocity summary: of the edges of the
+    simple digraph, how many have their reverse edge present.
     (n_edges, n_pairs, n_mutual_pairs, reciprocity_bp) with
     reciprocity_bp = 10000 * 2*n_mutual_pairs div n_edges — the classic
     r = |mutual edges| / |edges| in exact basis points. On the KG this
@@ -1802,12 +1719,7 @@ def reciprocity(edges: DataFrame) -> DataFrame:
     pair key (least, greatest) and ONE map-side-combinable groupBy counts
     directions per pair (1 or 2, since edges are distinct); the final
     digest is a single-row aggregate. One narrow shuffle total."""
-    e = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    pairs = e.groupBy(
+    pairs = _digraph(edges).groupBy(
         F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
     ).agg(F.count(F.lit(1)).alias("n_dirs"))
     return pairs.select(
@@ -1841,16 +1753,9 @@ def eccentricity_profile(
     count; for large pivot sets the design swaps to one labeled frontier
     carrying (pivot, node) composite keys — same joins, one loop."""
     spark = edges.sparkSession
-    e = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    deg = sym.distinct().groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("degree")
-    )
+    und = _undirected(edges).localCheckpoint(eager=True)
+    e = und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    deg = _degrees(_adjacency(und)).withColumnRenamed("d", "degree")
     pivots = [
         (r["node"], r["degree"])
         for r in deg.orderBy(F.desc("degree"), F.asc("node")).limit(n_pivots).collect()
@@ -1871,7 +1776,7 @@ def eccentricity_profile(
                 ).alias("closeness_bp"),
             )
         )
-    e.unpersist()
+    und.unpersist()
     out = profiles[0]
     for p in profiles[1:]:
         out = out.unionByName(p)
@@ -1905,20 +1810,13 @@ def wl_colors(edges: DataFrame, rounds: int = 2) -> DataFrame:
     its degree, the true output size."""
     if rounds < 1:
         raise ValueError("wl_colors needs rounds >= 1")
-    e = edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct()
-    sym = (
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    colors = sym.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("color")
-    )
+    adj = _adjacency(_undirected(edges)).localCheckpoint(eager=True)
+    colors = _degrees(adj).withColumnRenamed("d", "color")
     for _ in range(rounds):
-        nc = sym.join(
-            colors.select(F.col("node").alias("dst"), F.col("color").alias("nc")),
-            "dst",
-        ).select(F.col("src").alias("node"), "nc")
+        nc = adj.join(
+            colors.select(F.col("node").alias("neigh"), F.col("color").alias("nc")),
+            "neigh",
+        ).select("node", "nc")
         sig = (
             colors.join(
                 nc.groupBy("node").agg(
@@ -1951,7 +1849,7 @@ def wl_colors(edges: DataFrame, rounds: int = 2) -> DataFrame:
         prev.unpersist()
     sizes = colors.groupBy("color").agg(F.count(F.lit(1)).cast("long").alias("class_size"))
     out = colors.join(sizes, "color").select("node", "color", "class_size")
-    sym.unpersist()
+    adj.unpersist()
     return out
 
 
@@ -1983,11 +1881,7 @@ def greedy_matching(edges: DataFrame, rounds: int = 3) -> DataFrame:
     if rounds < 1:
         raise ValueError("greedy_matching needs rounds >= 1")
     e = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
+        _undirected(edges)
         .withColumn("k", F.concat(F.col("a"), F.lit("|"), F.col("b")))
         .localCheckpoint(eager=True)
     )
@@ -2079,12 +1973,11 @@ def conductance_by_label(edges: DataFrame, labels: DataFrame) -> DataFrame:
     φ (few boundary edges relative to its internal volume); φ near
     10⁴ means the 'community' is mostly boundary.
 
-    Semantics (pinned): the graph is the DISTINCT undirected simple
-    edge set (self-loops dropped); vol(S) = Σ degree over members,
-    cut(S) = edges with exactly one endpoint in S; φ in truncated
-    integer bp. Labels whose volume is 0 (isolated nodes) or the
-    whole graph's volume (no complement) are excluded — φ is
-    undefined there.
+    Semantics (pinned): the undirected simple graph; vol(S) = Σ
+    degree over members, cut(S) = edges with exactly one endpoint in
+    S; φ in truncated integer bp. Labels whose volume is 0 (isolated
+    nodes) or the whole graph's volume (no complement) are excluded —
+    φ is undefined there.
 
     Scale shape: one distinct-edge pass, two broadcast-joinable
     narrow aggregates (degree, per-label volume), and the cut count
@@ -2092,18 +1985,8 @@ def conductance_by_label(edges: DataFrame, labels: DataFrame) -> DataFrame:
     endpoints — every shuffle keyed on node or label, nothing
     quadratic. Input ``labels``: (node, label).
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
-    adj = und.select(F.col("a").alias("node")).unionByName(
-        und.select(F.col("b").alias("node"))
-    )
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("d"))
+    und = _undirected(edges)
+    deg = _degrees(_adjacency(und))
     la = labels.select(F.col("node").alias("a"), F.col("label").alias("l_a"))
     lb = labels.select(F.col("node").alias("b"), F.col("label").alias("l_b"))
     el = und.join(la, "a").join(lb, "b")
@@ -2143,22 +2026,24 @@ def conductance_by_label(edges: DataFrame, labels: DataFrame) -> DataFrame:
 
 
 def component_labels(edges: DataFrame) -> DataFrame:
-    """(node, component) labels over the edge set — the
-    alternating-star loop with the 1:1 min-agg guard and the
-    isolated-endpoint coalesce, shared by kg_components and the
-    robustness census below."""
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    stars = alternating_star_components(edges)
-    labels = stars.groupBy(F.col("src").alias("node")).agg(
-        F.min("dst").alias("component")
-    )
+    """(node, component) labels for every endpoint of the edge set,
+    shared by kg_components and the robustness census below."""
+    return _label_components(_endpoints(edges), edges)
+
+
+def _label_components(nodes: DataFrame, edges: DataFrame, max_rounds: int = 50) -> DataFrame:
+    """(node, component) for every row of ``nodes``: the minimum node of
+    its connected component in ``edges`` (`alternating_star_components`),
+    or the node itself when no edge reaches it. A converged star has one
+    row per non-root node; when ``max_rounds`` cut convergence short, a
+    min-agg keeps the join 1:1 (on a converged star it is a no-op, so it
+    is skipped with its shuffle)."""
+    stars, converged = _star_components(edges, max_rounds)
+    labels = stars.select(F.col("src").alias("node"), F.col("dst").alias("component"))
+    if not converged:
+        labels = labels.groupBy("node").agg(F.min("component").alias("component"))
     return nodes.join(labels, "node", "left").select(
-        "node",
-        F.coalesce(F.col("component"), F.col("node")).alias("component"),
+        "node", F.coalesce(F.col("component"), F.col("node")).alias("component")
     )
 
 
@@ -2170,9 +2055,9 @@ def hub_removal_impact(edges: DataFrame, k: int = 5) -> DataFrame:
     giant-component size — the classic scale-free-network fragility
     audit (a hub-and-spoke KG shatters; a mesh barely notices).
 
-    Semantics (pinned): degree counts DISTINCT undirected neighbors
-    (self-loops dropped); the 'after' graph is the edge set with both
-    endpoints outside the hub list — nodes left with no surviving
+    Semantics (pinned): degree is in the undirected simple graph; the
+    'after' graph is the edge set with both endpoints outside the hub
+    list — nodes left with no surviving
     edge (including the hubs) drop out of the census entirely
     (component membership is defined by edges here, matching
     component_labels' node universe).
@@ -2182,18 +2067,7 @@ def hub_removal_impact(edges: DataFrame, k: int = 5) -> DataFrame:
     alternating-star machinery (adaptive driver escape at bounded
     edge counts); summaries are narrow label aggregates.
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
-    adj = und.select(F.col("a").alias("node")).unionByName(
-        und.select(F.col("b").alias("node"))
-    )
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("d"))
+    deg = _degrees(_adjacency(_undirected(edges)))
     hubs = deg.orderBy(F.desc("d"), F.asc("node")).limit(int(k)).select("node")
     kept = (
         edges.join(
@@ -2230,8 +2104,8 @@ def local_bridges(edges: DataFrame) -> DataFrame:
     clustering_coefficients: coefficient counts a node's closed
     wedges, this names the edges in NO closed wedge.
 
-    Semantics (pinned): the DISTINCT undirected simple graph
-    (self-loops dropped); an edge qualifies iff |N(a) ∩ N(b)| = 0.
+    Semantics (pinned): the undirected simple graph; an edge
+    qualifies iff |N(a) ∩ N(b)| = 0.
     Output: (a, b, deg_a, deg_b) with a < b.
 
     Scale shape (round-6 restructure, output row-identical and
@@ -2244,18 +2118,9 @@ def local_bridges(edges: DataFrame) -> DataFrame:
     is Σ_edges min(deg_a, deg_b) rows — linear-ish in edges on hubby
     graphs — and only edges are ever scored.
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
-    adj = und.select(F.col("a").alias("node"), F.col("b").alias("nb")).unionByName(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nb"))
-    )
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("d"))
+    und = _undirected(edges)
+    adj = _adjacency(und)
+    deg = _degrees(adj)
     ud = (
         und.join(deg.select(F.col("node").alias("a"), F.col("d").alias("deg_a")), "a")
         .join(deg.select(F.col("node").alias("b"), F.col("d").alias("deg_b")), "b")
@@ -2264,10 +2129,10 @@ def local_bridges(edges: DataFrame) -> DataFrame:
     other = F.when(F.col("deg_a") <= F.col("deg_b"), F.col("b")).otherwise(F.col("a"))
     probed = ud.select("a", "b", "deg_a", "deg_b", probe.alias("_p"), other.alias("_o"))
     cand = probed.join(
-        adj.select(F.col("node").alias("_p"), F.col("nb").alias("_x")), "_p"
+        adj.select(F.col("node").alias("_p"), F.col("neigh").alias("_x")), "_p"
     )
     in_triangle = cand.join(
-        adj.select(F.col("node").alias("_o"), F.col("nb").alias("_x")), ["_o", "_x"],
+        adj.select(F.col("node").alias("_o"), F.col("neigh").alias("_x")), ["_o", "_x"],
         "left_semi",
     ).select("a", "b").distinct()
     return (
@@ -2288,8 +2153,7 @@ def neighbor_jaccard_topk(
     adjacent pairs are role-redundant ties (the local_bridges
     complement at the pair level).
 
-    Semantics (pinned): DISTINCT undirected simple graph (self-loops
-    dropped); only pairs sharing ≥ 1 neighbor are scored (Jaccard 0
+    Semantics (pinned): the undirected simple graph; only pairs sharing ≥ 1 neighbor are scored (Jaccard 0
     pairs carry no signal and would force all-pairs); deterministic
     total order (jac_bp desc, a asc, b asc) before the cut. Output:
     (a, b, inter_cnt, deg_a, deg_b, jac_bp, adjacent), ≤ k rows.
@@ -2328,8 +2192,8 @@ def neighbor_jaccard_topk(
         )
     )
     cls_edges = (
-        und_ids.join(members.select(F.col("node").alias("aid"), F.col("cls").alias("_ca")), "aid")
-        .join(members.select(F.col("node").alias("bid"), F.col("cls").alias("_cb")), "bid")
+        und_ids.join(members.select(F.col("node").alias("a"), F.col("cls").alias("_ca")), "a")
+        .join(members.select(F.col("node").alias("b"), F.col("cls").alias("_cb")), "b")
         .select(F.least("_ca", "_cb").alias("ca"), F.greatest("_ca", "_cb").alias("cb"))
         .distinct()
         .withColumn("adj_hit", F.lit(1))
@@ -2396,7 +2260,7 @@ def rich_club(edges: DataFrame, ks: tuple[int, ...] = (5, 10, 20, 50)) -> DataFr
     hub_removal_impact, which measures what breaks when that core is
     deleted; this measures how tight the core itself is).
 
-    Semantics (pinned): DISTINCT undirected simple graph; the club =
+    Semantics (pinned): the undirected simple graph; the club =
     first k nodes by (degree desc, node asc) — a deterministic
     TakeOrdered cut, so degree ties at the boundary resolve stably;
     clubs larger than the graph clamp to all nodes. Output: one row
@@ -2407,18 +2271,8 @@ def rich_club(edges: DataFrame, ks: tuple[int, ...] = (5, 10, 20, 50)) -> DataFr
     — the edge table is never shuffled on a new key, and club sizes
     are constants.
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
-    adj = und.select(F.col("a").alias("node")).unionByName(
-        und.select(F.col("b").alias("node"))
-    )
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("d"))
+    und = _undirected(edges)
+    deg = _degrees(_adjacency(und))
     spark = edges.sparkSession
     out = None
     for k in ks:

@@ -647,28 +647,21 @@ def duplicate_clusters(
     ckpts: list = []
     if pairs is None:
         pairs = _verified_near_dup_pairs(documents, jaccard_threshold, _ckpt_sink=ckpts)
-    from ..operators.graph import alternating_star_components
+    from ..operators.graph import _label_components
 
-    edges = pairs.select(
-        F.col("doc_a").cast("long").alias("src"), F.col("doc_b").cast("long").alias("dst")
+    labels = _label_components(
+        documents.select(F.col("doc_id").cast("long").alias("node")),
+        pairs.select(
+            F.col("doc_a").cast("long").alias("src"), F.col("doc_b").cast("long").alias("dst")
+        ),
+        max_rounds=max_rounds,
     )
-    stars = alternating_star_components(edges, max_rounds=max_rounds)
-    # alternating_star materializes the pair graph into its own checkpoint
+    # the component run materializes the pair graph into its own checkpoint
     # eagerly, so the signature checkpoint is dead weight from here on
     for df in ckpts:
         df.unpersist()
-    # min-agg is a no-op on a converged star (one row per non-root node) but
-    # keeps the join 1:1 even if max_rounds cut convergence short
-    labels = stars.groupBy(F.col("src").alias("doc_id")).agg(
-        F.min("dst").alias("cluster_id")
-    )
-    return (
-        documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-        .join(labels, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("cluster_id"), F.col("doc_id")).cast("long").alias("cluster_id"),
-        )
+    return labels.select(
+        F.col("node").alias("doc_id"), F.col("component").cast("long").alias("cluster_id")
     )
 
 

@@ -485,26 +485,14 @@ def embedding_duplicate_clusters(
     (keep ``vec_id == cluster_id``, drop the rest). Pairs from
     embedding_near_duplicates (LSH buckets, never all-pairs); components
     via alternating large-star/small-star."""
-    from ..operators.graph import alternating_star_components
+    from ..operators.graph import _label_components
 
     pairs = embedding_near_duplicates(embeddings, threshold=threshold)
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    stars = alternating_star_components(edges, max_rounds=max_rounds)
-    all_ids = embeddings.select(F.col("vec_id").cast("long").alias("vec_id"))
-    return (
-        all_ids.join(
-            stars.select(
-                F.col("src").cast("long").alias("vec_id"),
-                F.col("dst").cast("long").alias("_root"),
-            ),
-            "vec_id",
-            "left",
-        )
-        .select(
-            "vec_id",
-            F.coalesce(F.col("_root"), F.col("vec_id")).cast("long").alias("cluster_id"),
-        )
-    )
+    return _label_components(
+        embeddings.select(F.col("vec_id").cast("long").alias("node")),
+        pairs.select(F.col("id_a").cast("long").alias("src"), F.col("id_b").cast("long").alias("dst")),
+        max_rounds=max_rounds,
+    ).select(F.col("node").alias("vec_id"), F.col("component").cast("long").alias("cluster_id"))
 
 
 def dimension_stats(

@@ -12,6 +12,8 @@ import os
 import random
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
@@ -195,3 +197,81 @@ def test_pagerank_is_personalized_pagerank_with_every_node_seeded(spark, monkeyp
                     for r in graph.personalized_pagerank(edges, every, iterations=10).collect()
                 }
             assert glob == ppr and glob, (trial, cutoff)
+
+
+# name -> (op(graph module, edges, labels), directed): every graph operator
+# that reads its input through the simple-graph normal form.
+# hub_removal_impact is left out: its 'after' census counts a node whose only
+# surviving edge is a self-loop as a component, so a self-loop on an existing
+# node changes its output.
+_NORMAL_FORM_OPS = {
+    "triangle_counts": (lambda g, e, lab: g.triangle_counts(e), False),
+    "ktruss_edges": (lambda g, e, lab: g.ktruss_edges(e, k=3, rounds=2), False),
+    "kcore_nodes": (lambda g, e, lab: g.kcore_nodes(e, k=2), False),
+    "label_propagation": (lambda g, e, lab: g.label_propagation(e, rounds=3), False),
+    "modularity_by_community": (lambda g, e, lab: g.modularity_by_community(e, lab), False),
+    "transitivity_global": (lambda g, e, lab: g.transitivity_global(e), False),
+    "clustering_coefficients": (lambda g, e, lab: g.clustering_coefficients(e), False),
+    "four_cycle_census": (lambda g, e, lab: g.four_cycle_census(e), False),
+    "eccentricity_profile": (lambda g, e, lab: g.eccentricity_profile(e, n_pivots=2), False),
+    "wl_colors": (lambda g, e, lab: g.wl_colors(e), False),
+    "greedy_matching": (lambda g, e, lab: g.greedy_matching(e), False),
+    "conductance_by_label": (lambda g, e, lab: g.conductance_by_label(e, lab), False),
+    "local_bridges": (lambda g, e, lab: g.local_bridges(e), False),
+    "rich_club": (lambda g, e, lab: g.rich_club(e, ks=(3, 6)), False),
+    "component_labels": (lambda g, e, lab: g.component_labels(e), False),
+    "neighbor_jaccard": (lambda g, e, lab: g.neighbor_jaccard(e, min_pct=0, min_common=1), False),
+    "resource_allocation": (lambda g, e, lab: g.resource_allocation(e), False),
+    "neighbor_jaccard_topk": (lambda g, e, lab: g.neighbor_jaccard_topk(e, k=5), False),
+    "hits_scores": (lambda g, e, lab: g.hits_scores(e), True),
+    "walk_counts": (lambda g, e, lab: g.walk_counts(e), True),
+    "reciprocity": (lambda g, e, lab: g.reciprocity(e), True),
+}
+# the row a self-loop-only node gets from the operators that list every endpoint
+_LONE = "z99"
+_LONE_ROW = {
+    "label_propagation": (_LONE, _LONE),
+    "component_labels": (_LONE, _LONE),
+    "triangle_counts": (_LONE, 0),
+    "clustering_coefficients": (_LONE, 0, 0, None),
+}
+
+
+def _rows_key(row):
+    return tuple(map(str, row))
+
+
+@pytest.mark.parametrize("name", list(_NORMAL_FORM_OPS))
+def test_graph_ops_see_the_simple_graph(spark, name):
+    """The normal form, operator by operator: on random edges, the output
+    equals the output on the same edges plus duplicate rows, self-loops on
+    their nodes and (for the undirected operators) reversed copies — value
+    and dtype. A node whose only edge is a self-loop is not in the simple
+    graph, but the operators that list every endpoint give it a row."""
+    from dr_source_spark.operators import graph
+
+    op, directed = _NORMAL_FORM_OPS[name]
+    rng = random.Random(sum(map(ord, name)))
+    n = rng.randrange(8, 14)
+    ids = [f"n{i:02d}" for i in range(n)]
+    base = sorted({tuple(rng.sample(ids, 2)) for _ in range(rng.randrange(n, 3 * n))})
+    if not directed:  # one orientation per undirected edge in the base
+        base = sorted({(min(p), max(p)) for p in base})
+    ends = sorted({v for p in base for v in p})
+    noisy = base + rng.sample(base, len(base) // 2) + [(v, v) for v in rng.sample(ends, 3)]
+    if not directed:
+        noisy += [(b, a) for a, b in rng.sample(base, len(base) // 2)]
+    noisy.append((_LONE, _LONE))
+    rng.shuffle(noisy)
+    labels = spark.createDataFrame(
+        [(v, f"c{i % 3}") for i, v in enumerate(ends)], "node string, label string"
+    )
+
+    def run(rows):
+        out = op(graph, spark.createDataFrame(rows, "src string, dst string"), labels)
+        return out.schema.simpleString(), sorted(map(tuple, out.collect()), key=_rows_key)
+
+    schema, want = run(base)
+    assert want, name
+    want += [_LONE_ROW[name]] if name in _LONE_ROW else []
+    assert run(noisy) == (schema, sorted(want, key=_rows_key))

@@ -4,7 +4,9 @@ Every mode runs each selected query inside its own Spark job group under a
 watchdog that cancels it after ``--timeout`` seconds, so one runaway query
 cannot wedge the sweep. Output is one JSON line per query
 (``query, mode, status, sec, rows`` plus the mode's fields), then one JSON
-summary line; the exit code is 1 when any query is not ``ok``.
+summary line; the exit code is 1 when any query is not ``ok``. Each query
+line also carries ``jvm_rss_mb``: the driver JVM's resident set (VmRSS in
+``/proc/<pid>/status``) after the query, ``null`` once the JVM is gone.
 
 Modes:
 
@@ -198,6 +200,18 @@ def _run_plan(spark, df) -> dict:
 
 # -- the sweep --------------------------------------------------------------
 
+def _rss_mb(pid: int) -> float | None:
+    """VmRSS of process ``pid`` in MB, or None when it cannot be read."""
+    try:
+        with open(f"/proc/{pid}/status") as f:
+            for line in f:
+                if line.startswith("VmRSS:"):
+                    return round(int(line.split()[1]) / 1024, 1)
+    except OSError:
+        pass
+    return None
+
+
 def sweep(spark, mode: str, sf: str, only=None, timeout: float = 300.0):
     """Yield one record per selected registry query (oracle/plan/time)."""
     import __spark_entry__ as E
@@ -217,6 +231,7 @@ def sweep(spark, mode: str, sf: str, only=None, timeout: float = 300.0):
             table = os.path.basename(path)[: -len(".parquet")]
             con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{path}'")
     sc = spark.sparkContext
+    jvm_pid = sc._jvm.java.lang.ProcessHandle.current().pid()
     for i, name in enumerate(names):
         group = f"sweep_{i}_{name}"
         sc.setJobGroup(group, name, interruptOnCancel=True)
@@ -245,7 +260,8 @@ def sweep(spark, mode: str, sf: str, only=None, timeout: float = 300.0):
         finally:
             timer.cancel()
             sc.setJobGroup(None, None)
-        yield {"query": name, "mode": mode, "sec": round(time.monotonic() - t0, 2), **rec}
+        sec = round(time.monotonic() - t0, 2)
+        yield {"query": name, "mode": mode, "sec": sec, "jvm_rss_mb": _rss_mb(jvm_pid), **rec}
 
 
 def _codegen(args):
