@@ -1,14 +1,14 @@
-"""Java intra-file taint analysis over the structural parser's nodes.
+"""Java intra-file taint analysis over the structural parser's nodes, on
+the shared taint algebra of taint_core.py.
 
-Reimplements the reference Java tier's semantics (plugins/java/
-taint_visitor.py, taint_detector.py, frameworks.py, plugin.py):
+The reference Java tier's semantics (plugins/java/taint_visitor.py,
+taint_detector.py, frameworks.py, plugin.py), where they are Java's own:
 
 * sources reduced to their last dotted segment (taint_visitor.py:31);
 * servlet getters (getParameter/getHeader/getCookies/getQueryString) are
   sources for EVERY category pass (frameworks.py:72, wired at
   taint_visitor.py:107-108);
-* PII-substring variable/parameter names self-taint (taint_visitor.py:34,
-  92-97,133-137);
+* PII names as in taint_core (taint_visitor.py:34, 92-97, 133-137);
 * sink match: exact method name, else any KB sink `X.name` by suffix
   (taint_visitor.py:158-163); only method invocations are sinks —
   constructor calls (`new File(x)`) never match, faithfully;
@@ -17,9 +17,11 @@ taint_visitor.py, taint_detector.py, frameworks.py, plugin.py):
   labeled `{TYPE} ({MapperName})`, during every category pass;
 * constants fold across `+` of two literal/constant operands
   (taint_visitor.py:73-83) and suppress taint;
-* local AND project-index callees are simulated to depth 3 with
-  `Passed to f() in <file> at line N` trace hops (taint_visitor.py:179-186,
-  225-248) — callee-file line numbers, caller-file attribution;
+* methods are registered before the class body is walked, so a call above
+  its callee's definition resolves (taint_visitor.py:120-126); local and
+  project-index callees are simulated (taint_visitor.py:179-186, 225-248)
+  with callee-file line numbers and caller-file attribution;
+* lambda bodies are opaque;
 * category severity (upper, default MEDIUM), message
   `Sink method '{sink}' called with tainted variable '{var}'`
   (taint_detector.py:33-44).
@@ -34,8 +36,8 @@ from typing import Any, Dict, List, Optional
 
 from ..kb.compile import TaintSpec
 from ..parsers.javaparse import parse_java
+from .taint_core import MAX_CALL_DEPTH, TaintEngine, Walker, analyze_fused, is_pii, parse_callee
 
-PII_NAMES = ("password", "email", "secret", "token", "credit_card", "cc", "ssn")
 SERVLET_SOURCES = ("getParameter", "getHeader", "getCookies", "getQueryString")
 SPRING_ANNOTATIONS = {"RequestParam", "PathVariable", "RequestBody", "RequestHeader", "CookieValue", "ModelAttribute"}
 JAXRS_ANNOTATIONS = {"QueryParam", "PathParam", "HeaderParam", "CookieParam", "FormParam", "MatrixParam", "Context"}
@@ -51,29 +53,6 @@ HIBERNATE_SINKS = {
     "createSelectionQuery": ("SQL_INJECTION", [0]),
     "createMutationQuery": ("SQL_INJECTION", [0]),
 }
-
-MAX_CALL_DEPTH = 3
-
-# Remote-callee parse memo: with fused walks, every category engine on every
-# calling file re-simulates the same indexed def_source — the parse is pure,
-# so one parse per executor process suffices. Bounded against adversarial
-# index churn.
-_CALLEE_MEMO: Dict[str, Any] = {}
-_CALLEE_MEMO_CAP = 2048
-
-
-def _parse_callee(wrapped: str):
-    hit = _CALLEE_MEMO.get(wrapped, False)
-    if hit is not False:
-        return hit
-    try:
-        program = parse_java(wrapped)
-    except (RecursionError, MemoryError):
-        program = None
-    if len(_CALLEE_MEMO) >= _CALLEE_MEMO_CAP:
-        _CALLEE_MEMO.clear()
-    _CALLEE_MEMO[wrapped] = program
-    return program
 
 
 def _path(node: Optional[Dict]) -> Optional[str]:
@@ -158,53 +137,16 @@ def _call_receiver_text(call: Dict) -> Optional[str]:
     return None
 
 
-class JavaTaintEngine:
-    def __init__(
-        self,
-        spec: TaintSpec,
-        fn_index: Optional[Dict[str, Any]] = None,
-        depth: int = 0,
-        seed_scope: Optional[Dict[str, Dict]] = None,
-    ):
-        self.spec = spec
-        self.sources = {s.split(".")[-1] for s in spec.sources}
-        self.sanitizers = {s.split(".")[-1] for s in spec.sanitizers}
-        self.sink_args: Dict[str, Optional[List[int]]] = {n: a for n, a in spec.sinks}
-        self.fn_index = fn_index
-        self.depth = depth
-        self.scopes: List[Dict[str, Dict]] = [seed_scope if seed_scope is not None else {}]
-        self.consts: List[Dict[str, Any]] = [{}]
-        self.hits: List[Dict[str, Any]] = []
-        self.functions: Dict[str, Dict] = {}
-        self.skip_first_scope = seed_scope is not None
-        self.lambda_bodies = False  # set by analyze_java(taint_through_lambdas=True)
+class JavaTaintEngine(TaintEngine):
+    plugin = "Java AST Analyzer (Tree-sitter)"  # reference plugin display name
+    message = "Sink method '{sink}' called with tainted variable '{variable}'"
+    _idents = staticmethod(_idents)
 
-    # -- state ----------------------------------------------------------------
+    @staticmethod
+    def _source_set(names: List[str]) -> set:
+        return {s.split(".")[-1] for s in names}
 
-    def lookup_taint(self, path: str) -> Optional[Dict]:
-        for scope in reversed(self.scopes):
-            if path in scope:
-                return scope[path]
-            if "." in path:
-                base = path.split(".")[0]
-                if base in scope:
-                    return scope[base]
-        return None
-
-    def lookup_const(self, path: str) -> Any:
-        for scope in reversed(self.consts):
-            if path in scope:
-                return scope[path]
-        return None
-
-    def taint(self, path: str, info: Dict) -> None:
-        self.scopes[-1][path] = info
-        self.consts[-1].pop(path, None)
-
-    def untaint(self, path: str) -> None:
-        self.scopes[-1].pop(path, None)
-
-    # -- classification ---------------------------------------------------------
+    _sanitizer_set = _source_set
 
     def _const_value(self, node: Optional[Dict]) -> Any:
         if node is None:
@@ -221,10 +163,8 @@ class JavaTaintEngine:
         return None
 
     def _classify(self, node: Dict, var_name: Optional[str] = None):
-        if var_name:
-            tail = var_name.lower().split(".")[-1]
-            if any(p in tail for p in PII_NAMES):
-                return "source", f"Sensitive variable name: {var_name}"
+        if var_name and is_pii(var_name.lower().split(".")[-1]):
+            return "source", f"Sensitive variable name: {var_name}"
         name = ""
         if node["t"] == "call":
             name = _call_method_name(node)
@@ -242,28 +182,8 @@ class JavaTaintEngine:
             return "source", name
         return None, None
 
-    # -- per-node state transitions (traversal lives in _Walker) ---------------
-
-    def _push_scope(self) -> bool:
-        if self.skip_first_scope:
-            self.skip_first_scope = False
-            return False
-        self.scopes.append({})
-        self.consts.append({})
-        return True
-
-    def _pop_scope(self, pushed: bool) -> None:
-        if pushed:
-            self.consts.pop()
-            self.scopes.pop()
-
     def _enter_param(self, p: Dict) -> None:
-        if any(x in p["name"].lower() for x in PII_NAMES):
-            self.taint(
-                p["name"],
-                {"source": f"Sensitive parameter: {p['name']}",
-                 "trace": [f"Sensitive data in parameter {p['name']} at line {p['line']}"]},
-            )
+        self._taint_pii_param(p["name"], p["line"])
         for ann in p.get("annotations", []):
             tail = ann.split(".")[-1]
             mapper = "SpringBootMapper" if tail in SPRING_ANNOTATIONS else (
@@ -274,26 +194,6 @@ class JavaTaintEngine:
                     p["name"],
                     {"source": "Framework", "trace": [f"Tainted by {mapper} at line {p['line']}"]},
                 )
-
-    def _assign(self, path: str, value: Dict, line: int) -> None:
-        kind, name = self._classify(value, var_name=path)
-        if kind == "sanitizer":
-            self.untaint(path)
-            return
-        if kind == "source":
-            self.taint(path, {"source": name, "trace": [f"Tainted by {name} at line {line}"]})
-            return
-        const_val = self._const_value(value)
-        if const_val is not None:
-            self.consts[-1][path] = const_val
-            self.untaint(path)
-            return
-        for ident in _idents(value):
-            info = self.lookup_taint(ident)
-            if info:
-                self.taint(path, {"source": info["source"], "trace": info["trace"] + [f"Propagated to {path} at line {line}"]})
-                return
-        self.untaint(path)
 
     def _handle_call(self, call: Dict) -> None:
         method = _call_method_name(call)
@@ -308,21 +208,20 @@ class JavaTaintEngine:
                     match_name = s_name
                     break
         if match_name:
-            self._sink_violation(call["args"], match_name, self.sink_args[match_name], call["line"])
+            self._check_args(call["args"], match_name, self.sink_args[match_name], call["line"])
             return
         fw = self._framework_sink(call, method)
         if fw:
             v_type, vuln_args, mapper = fw
-            label = f"{v_type} ({mapper})"
-            self._sink_violation(call["args"], label, vuln_args, call["line"])
+            self._check_args(call["args"], f"{v_type} ({mapper})", vuln_args, call["line"])
             return
         func = self.functions.get(method)
-        if func is None and self.fn_index is not None and self.depth < MAX_CALL_DEPTH:
+        if func is not None:
+            self._simulate_method(call, func, method, "locally")
+        elif self.fn_index is not None and self.depth < MAX_CALL_DEPTH:
             entry = self.fn_index.get(method)
             if entry and entry.get("lang") == "java":
                 self._simulate_remote(call, entry, method)
-        elif func is not None:
-            self._simulate_local(call, func, method)
 
     def _framework_sink(self, call: Dict, method: str):
         recv = _call_receiver_text(call)
@@ -341,92 +240,26 @@ class JavaTaintEngine:
             return v, a, "HibernateMapper"
         return None
 
-    def _sink_violation(self, args: List[Dict], sink_name: str, vuln_args: Optional[List[int]], line: int) -> None:
-        for idx, arg in enumerate(args):
-            if vuln_args is not None and idx not in vuln_args:
-                continue
-            for path in _idents(arg):
-                info = self.lookup_taint(path)
-                if info:
-                    self.hits.append({"sink": sink_name, "variable": path, "line": line, "trace": info["trace"]})
-                    break
-
-    def _bind_args(self, call: Dict, params: List[str], loc: str) -> Dict[str, Dict]:
-        seeded: Dict[str, Dict] = {}
-        for idx, arg in enumerate(call["args"]):
-            if idx >= len(params):
-                break
-            for path in _idents(arg):
-                info = self.lookup_taint(path)
-                if info:
-                    seeded[params[idx]] = {
-                        "source": info["source"],
-                        "trace": info["trace"] + [f"Passed to {_call_method_name(call)}() {loc} at line {call['line']}"],
-                    }
-                    break
-        return seeded
-
-    def _simulate_local(self, call: Dict, func: Dict, method: str) -> None:
-        if self.depth >= MAX_CALL_DEPTH:
-            return
-        seeded = self._bind_args(call, [p["name"] for p in func["params"]], "locally")
-        if seeded:
-            # NB: the sub-engine starts with an empty local-function registry
-            # (reference _simulate_call builds a fresh visitor,
-            # taint_visitor.py:247) — transitive local chains do not resolve,
-            # only project-index callees do.
-            sub = JavaTaintEngine(self.spec, self.fn_index, self.depth + 1, seed_scope=seeded)
-            sub.lambda_bodies = self.lambda_bodies
-            _Walker([sub], lambda_bodies=self.lambda_bodies).visit_block(func["body"])
-            self.hits.extend(sub.hits)
+    def _simulate_method(self, call: Dict, func: Dict, method: str, loc: str) -> None:
+        params = [p["name"] for p in func["params"]]
+        self._simulate(call["args"], params, method, loc, call["line"], func["body"])
 
     def _simulate_remote(self, call: Dict, entry: Dict[str, Any], method: str) -> None:
         # pad so the re-parsed snippet reports lines ABSOLUTE in the defining
         # file (reference keeps the original tree-sitter node, java/plugin.py:63)
         pad = "\n" * max(0, int(entry.get("def_line", 1)) - 1)
-        wrapped = "class __W {" + pad + (entry.get("def_source") or "") + "\n}"
-        program = _parse_callee(wrapped)
+        program = parse_callee(parse_java, "class __W {" + pad + (entry.get("def_source") or "") + "\n}")
         if program is None:
             return
         methods = [m for c in program["classes"] for m in c["methods"] if m["name"] == method]
-        if not methods:
-            return
-        func = methods[0]
-        loc = f"in {os.path.basename(entry['path'])}"
-        seeded = self._bind_args(call, [p["name"] for p in func["params"]], loc)
-        if seeded:
-            sub = JavaTaintEngine(self.spec, self.fn_index, self.depth + 1, seed_scope=seeded)
-            sub.lambda_bodies = self.lambda_bodies
-            _Walker([sub], lambda_bodies=self.lambda_bodies).visit_block(func["body"])
-            self.hits.extend(sub.hits)
+        if methods:
+            self._simulate_method(call, methods[0], method, f"in {os.path.basename(entry['path'])}")
 
 
-class _Walker:
-    """ONE traversal of the parsed program driving N per-category engines in
-    lockstep (the fusion the Python tier already does with _MultiWalk): the
-    AST is visited once per FILE instead of once per category. Each engine
-    keeps its own scope/taint/const state; the walker only owns structure.
-    Semantics-preserving because engines never interact and the reference
-    walks each category over the identical node sequence."""
-
-    def __init__(self, engines: List["JavaTaintEngine"], lambda_bodies: bool = False):
-        self.engines = engines
-        # lambda_bodies=True walks arrow-expression bodies as nested scopes
-        # (captured locals stay visible via the scope stack). Off by default:
-        # the engine-snapshot goldens were pinned with lambdas opaque
-        # (docs/FUTURE.md), so parity mode must not grow findings.
-        self.lambda_bodies = lambda_bodies
-
+class _Walker(Walker):
     def run(self, program: Dict) -> None:
         for cls in program.get("classes", []):
             self.visit_class(cls)
-
-    def _push(self) -> List[bool]:
-        return [e._push_scope() for e in self.engines]
-
-    def _pop(self, pushed: List[bool]) -> None:
-        for e, p in zip(self.engines, pushed):
-            e._pop_scope(p)
 
     def visit_class(self, cls: Dict) -> None:
         # pre-register methods (reference taint_visitor.py:120-126): calls
@@ -452,12 +285,6 @@ class _Walker:
             for e in self.engines:
                 e._enter_param(p)
         self.visit_block(m["body"])
-        self._pop(pushed)
-
-    def visit_block(self, block: Dict) -> None:
-        pushed = self._push()
-        for s in block.get("stmts", []):
-            self.visit_stmt(s)
         self._pop(pushed)
 
     def visit_stmt(self, s: Optional[Dict]) -> None:
@@ -486,6 +313,7 @@ class _Walker:
             self.visit_method(s)
 
     def visit_expr(self, e: Optional[Dict]) -> None:
+        # lambda ("arrow") bodies are opaque, as in the reference
         if e is None or not isinstance(e, dict):
             return
         t = e["t"]
@@ -524,64 +352,15 @@ class _Walker:
         elif t == "template":
             for part in e["parts"]:
                 self.visit_expr(part)
-        elif t == "arrow" and self.lambda_bodies:
-            pushed = self._push()
-            for name in e.get("params", []):
-                for eng in self.engines:
-                    eng._enter_param({"name": name, "annotations": [], "line": e["line"]})
-            self.visit_block(e.get("body") or {"t": "block", "stmts": [], "line": e["line"]})
-            self._pop(pushed)
 
 
-PLUGIN_NAME = "Java AST Analyzer (Tree-sitter)"  # reference plugin display name
+JavaTaintEngine.walker = _Walker
 
 
 def analyze_java(
     content: str,
     taint_specs: List[TaintSpec],
     fn_index: Optional[Dict[str, Any]] = None,
-    taint_through_lambdas: bool = False,
 ) -> List[Dict[str, Any]]:
-    """All Java AST-tier findings for one file: parse once, ONE fused walk
-    driving all eligible category engines (reference re-parses AND re-walks
-    per category; fusion is semantics-preserving, SURVEY.md §4 R6).
-
-    taint_through_lambdas=True additionally walks arrow-expression bodies
-    (captured locals visible; lambda params enter scope) — an EXTENSION over
-    the pinned parity behavior, where lambda bodies are opaque. Default off
-    so goldens/oracles are byte-identical."""
-    if not taint_specs:
-        # all categories screened out (or none eligible): no engine could
-        # emit a hit, so skip the parse AND the walk entirely
-        return []
-    try:
-        program = parse_java(content)
-    except (RecursionError, MemoryError):
-        return []
-    engines = [JavaTaintEngine(spec, fn_index=fn_index) for spec in taint_specs]
-    for e in engines:
-        e.lambda_bodies = taint_through_lambdas
-    try:
-        _Walker(engines, lambda_bodies=taint_through_lambdas).run(program)
-    except RecursionError:
-        engines = []
-    findings: List[Dict[str, Any]] = []
-    for engine in engines:
-        spec = engine.spec
-        for hit in engine.hits:
-            findings.append(
-                {
-                    "vuln_type": f"{spec.vuln_type} (AST Taint)",
-                    "message": f"Sink method '{hit['sink']}' called with tainted variable '{hit['variable']}'",
-                    "severity": spec.severity,
-                    "line": hit["line"],
-                    "plugin": PLUGIN_NAME,
-                    "trace": hit["trace"],
-                    "rule_id": None,
-                    "variable": hit["variable"],
-                    "sink": hit["sink"],
-                    "source": hit["trace"][0] if hit["trace"] else None,
-                    "base_type": spec.vuln_type,
-                }
-            )
-    return findings
+    """All Java AST-tier findings for one file (one parse, one fused walk)."""
+    return analyze_fused(JavaTaintEngine, parse_java, content, taint_specs, fn_index)

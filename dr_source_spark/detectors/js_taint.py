@@ -1,7 +1,8 @@
-"""JavaScript intra-file taint analysis over the structural parser's nodes.
+"""JavaScript intra-file taint analysis over the structural parser's nodes,
+on the shared taint algebra of taint_core.py.
 
-Reference semantics preserved (plugins/javascript/taint_visitor.py +
-plugin.py):
+Reference semantics that are JavaScript's own (plugins/javascript/
+taint_visitor.py + plugin.py):
 
 * sources matched by exact name OR prefix (`name.startswith(source)`,
   taint_visitor.py:105) — e.g. `req.query.command` matches `req.query`;
@@ -12,7 +13,8 @@ plugin.py):
   (taint_visitor.py:126-128);
 * constants fold over `+` only (taint_visitor.py:73-78);
 * function declarations register at visit time (no pre-registration);
-  local and project-index callees are simulated to depth 3;
+  local and project-index callees are simulated; arrow and function
+  expression bodies are walked as nested scopes;
 * message format `Sink method '{sink}' called with tainted var '{var}'`
   (plugin.py:99) and category severity.
 """
@@ -23,29 +25,8 @@ import os
 from typing import Any, Dict, List, Optional
 
 from ..kb.compile import TaintSpec
-from ..parsers.jsparse import parse_block, parse_js
-
-PII_NAMES = ("password", "email", "secret", "token", "credit_card", "cc", "ssn")
-MAX_CALL_DEPTH = 3
-
-# remote-callee parse memo (see java_taint._parse_callee): the parse is
-# pure, so one parse per executor process covers every engine × caller
-_CALLEE_MEMO: Dict[str, Any] = {}
-_CALLEE_MEMO_CAP = 2048
-
-
-def _parse_callee(src: str):
-    hit = _CALLEE_MEMO.get(src, False)
-    if hit is not False:
-        return hit
-    try:
-        program = parse_js(src)
-    except (RecursionError, MemoryError):
-        program = None
-    if len(_CALLEE_MEMO) >= _CALLEE_MEMO_CAP:
-        _CALLEE_MEMO.clear()
-    _CALLEE_MEMO[src] = program
-    return program
+from ..parsers.jsparse import parse_js
+from .taint_core import MAX_CALL_DEPTH, TaintEngine, Walker, analyze_fused, is_pii, parse_callee
 
 
 def _path(node: Optional[Dict]) -> Optional[str]:
@@ -113,49 +94,10 @@ def _idents(node: Optional[Any], out: Optional[List[str]] = None) -> List[str]:
     return out
 
 
-class JsTaintEngine:
-    def __init__(
-        self,
-        spec: TaintSpec,
-        fn_index: Optional[Dict[str, Any]] = None,
-        depth: int = 0,
-        seed_scope: Optional[Dict[str, Dict]] = None,
-    ):
-        self.spec = spec
-        self.sources = set(spec.sources)
-        self.sanitizers = set(spec.sanitizers)
-        self.sink_args: Dict[str, Optional[List[int]]] = {n: a for n, a in spec.sinks}
-        self.fn_index = fn_index
-        self.depth = depth
-        self.scopes: List[Dict[str, Dict]] = [seed_scope if seed_scope is not None else {}]
-        self.consts: List[Dict[str, Any]] = [{}]
-        self.hits: List[Dict[str, Any]] = []
-        self.functions: Dict[str, Dict] = {}
-        self.skip_first_scope = seed_scope is not None
-
-    # state helpers identical in shape to the Java engine
-    def lookup_taint(self, path: str) -> Optional[Dict]:
-        for scope in reversed(self.scopes):
-            if path in scope:
-                return scope[path]
-            if "." in path:
-                base = path.split(".")[0]
-                if base in scope:
-                    return scope[base]
-        return None
-
-    def lookup_const(self, path: str) -> Any:
-        for scope in reversed(self.consts):
-            if path in scope:
-                return scope[path]
-        return None
-
-    def taint(self, path: str, info: Dict) -> None:
-        self.scopes[-1][path] = info
-        self.consts[-1].pop(path, None)
-
-    def untaint(self, path: str) -> None:
-        self.scopes[-1].pop(path, None)
+class JsTaintEngine(TaintEngine):
+    plugin = "JavaScript AST Analyzer (Tree-sitter)"
+    message = "Sink method '{sink}' called with tainted var '{variable}'"
+    _idents = staticmethod(_idents)
 
     def _const_value(self, node: Optional[Dict]) -> Any:
         if node is None:
@@ -172,10 +114,8 @@ class JsTaintEngine:
         return None
 
     def _classify(self, node: Dict, var_name: Optional[str] = None):
-        if var_name:
-            tail = var_name.lower().split(".")[-1]
-            if any(p in tail for p in PII_NAMES):
-                return "source", f"Sensitive variable name: {var_name}"
+        if var_name and is_pii(var_name.lower().split(".")[-1]):
+            return "source", f"Sensitive variable name: {var_name}"
         name = ""
         if node["t"] == "call":
             name = _path(node["callee"]) or ""
@@ -192,54 +132,10 @@ class JsTaintEngine:
             return "source", name
         return None, None
 
-    # -- per-node state transitions (traversal lives in _JsWalker) ----------
-
-    def _push_scope(self) -> bool:
-        if self.skip_first_scope:
-            self.skip_first_scope = False
-            return False
-        self.scopes.append({})
-        self.consts.append({})
-        return True
-
-    def _pop_scope(self, pushed: bool) -> None:
-        if pushed:
-            self.consts.pop()
-            self.scopes.pop()
-
-    def _push_scope_raw(self) -> None:
-        # function-entry scope: unconditional (skip_first only applies to
-        # the seeded top-level block of a sub-simulation)
-        self.scopes.append({})
-        self.consts.append({})
-
-    def _pop_scope_raw(self) -> None:
-        self.consts.pop()
-        self.scopes.pop()
-
     def _prop_assign(self, prop: str, value: Dict, line: int) -> None:
         # property-assignment sink (el.innerHTML = tainted)
         if prop in self.sink_args:
-            self._check_node(value, prop, line)
-
-    def _assign(self, path: str, value: Dict, line: int) -> None:
-        kind, name = self._classify(value, var_name=path)
-        if kind == "sanitizer":
-            self.untaint(path)
-            return
-        if kind == "source":
-            self.taint(path, {"source": name, "trace": [f"Tainted by {name} at line {line}"]})
-            return
-        if self._const_value(value) is not None:
-            self.consts[-1][path] = self._const_value(value)
-            self.untaint(path)
-            return
-        for ident in _idents(value):
-            info = self.lookup_taint(ident)
-            if info:
-                self.taint(path, {"source": info["source"], "trace": info["trace"] + [f"Propagated to {path} at line {line}"]})
-                return
-        self.untaint(path)
+            self._check_arg(value, prop, line)
 
     def _handle_call(self, call: Dict) -> None:
         name = _path(call["callee"]) or ""
@@ -255,95 +151,43 @@ class JsTaintEngine:
                     match_name = s
                     break
         if match_name:
-            vuln_args = self.sink_args[match_name]
-            for idx, arg in enumerate(call["args"]):
-                if vuln_args is not None and idx not in vuln_args:
-                    continue
-                self._check_node(arg, match_name, call["line"])
+            self._check_args(call["args"], match_name, self.sink_args[match_name], call["line"])
             return
         f_def = self.functions.get(name)
-        if f_def is None and self.fn_index is not None and self.depth < MAX_CALL_DEPTH:
+        if f_def is not None:
+            self._simulate_def(call, f_def, name, "locally")
+        elif self.fn_index is not None and self.depth < MAX_CALL_DEPTH:
             entry = self.fn_index.get(name)
             if entry and entry.get("lang") == "javascript":
                 self._simulate_remote(call, entry, name)
-        elif f_def is not None:
-            self._simulate(call, f_def, name, None)
 
-    def _check_node(self, node: Dict, sink_name: str, line: int) -> None:
-        for path in _idents(node):
-            info = self.lookup_taint(path)
-            if info:
-                self.hits.append({"sink": sink_name, "variable": path, "line": line, "trace": info["trace"]})
-                break
-
-    def _bind(self, call: Dict, params: List[str], fn: str, loc: str) -> Dict[str, Dict]:
-        seeded: Dict[str, Dict] = {}
-        for idx, arg in enumerate(call["args"]):
-            if idx >= len(params):
-                break
-            for path in _idents(arg):
-                info = self.lookup_taint(path)
-                if info:
-                    seeded[params[idx]] = {
-                        "source": info["source"],
-                        "trace": info["trace"] + [f"Passed to {fn}() {loc} at line {call['line']}"],
-                    }
-                    break
-        return seeded
-
-    def _simulate(self, call: Dict, f_def: Dict, fn: str, target_file: Optional[str]) -> None:
-        if self.depth >= MAX_CALL_DEPTH:
-            return
-        loc = f"in {os.path.basename(target_file)}" if target_file else "locally"
-        seeded = self._bind(call, f_def.get("params", []), fn, loc)
-        if seeded:
-            sub = JsTaintEngine(self.spec, self.fn_index, self.depth + 1, seed_scope=seeded)
-            _JsWalker([sub]).visit_block(f_def["body"])
-            self.hits.extend(sub.hits)
+    def _simulate_def(self, call: Dict, f_def: Dict, fn: str, loc: str) -> None:
+        self._simulate(call["args"], f_def.get("params", []), fn, loc, call["line"], f_def["body"])
 
     def _simulate_remote(self, call: Dict, entry: Dict[str, Any], fn: str) -> None:
         pad = "\n" * max(0, int(entry.get("def_line", 1)) - 1)
-        program = _parse_callee(pad + (entry.get("def_source") or ""))
+        program = parse_callee(parse_js, pad + (entry.get("def_source") or ""))
         if program is None:
             return
         f_def = next(
             (s for s in program["stmts"] if s and s.get("t") == "func" and s.get("name") == fn.split(".")[-1]),
             None,
         )
-        if f_def is None:
-            return
-        self._simulate(call, f_def, fn, entry["path"])
+        if f_def is not None:
+            self._simulate_def(call, f_def, fn, f"in {os.path.basename(entry['path'])}")
 
 
-class _JsWalker:
-    """ONE traversal driving N per-category engines in lockstep — the same
-    fusion as the Python tier's _MultiWalk and java_taint._Walker."""
-
-    def __init__(self, engines: List["JsTaintEngine"]):
-        self.engines = engines
-
-    def run(self, program: Dict) -> None:
-        # program is NOT a scope node (reference scope list) — top-level
-        # statements live in the global scope.
-        for s in program.get("stmts", []):
-            self.visit_stmt(s)
-
-    def visit_block(self, block: Dict) -> None:
-        pushed = [e._push_scope() for e in self.engines]
-        for s in block.get("stmts", []):
-            self.visit_stmt(s)
-        for e, p in zip(self.engines, pushed):
-            e._pop_scope(p)
+class _JsWalker(Walker):
+    # the program is not a scope node (reference scope list): top-level
+    # statements live in the global scope
 
     def visit_function(self, fn: Dict) -> None:
         if fn.get("name"):
             for e in self.engines:
                 e.functions[fn["name"]] = fn
-        for e in self.engines:
-            e._push_scope_raw()
+        self._enter()
         self.visit_block(fn["body"])
-        for e in self.engines:
-            e._pop_scope_raw()
+        self._exit()
 
     def visit_stmt(self, s: Optional[Dict]) -> None:
         if s is None:
@@ -422,14 +266,12 @@ class _JsWalker:
             if t == "funcexpr" and e.get("name"):
                 for eng in self.engines:
                     eng.functions[e["name"]] = e
-            for eng in self.engines:
-                eng._push_scope_raw()
+            self._enter()
             self.visit_block(e["body"])
-            for eng in self.engines:
-                eng._pop_scope_raw()
+            self._exit()
 
 
-PLUGIN_NAME = "JavaScript AST Analyzer (Tree-sitter)"
+JsTaintEngine.walker = _JsWalker
 
 
 def analyze_js(
@@ -437,38 +279,6 @@ def analyze_js(
     taint_specs: List[TaintSpec],
     fn_index: Optional[Dict[str, Any]] = None,
 ) -> List[Dict[str, Any]]:
-    """Parse once, ONE fused walk for all eligible categories (the reference
-    re-parses and re-walks per category)."""
-    if not taint_specs:
-        # all categories screened out (or none eligible): no engine could
-        # emit a hit, so skip the parse AND the walk entirely
-        return []
-    try:
-        program = parse_js(content)
-    except (RecursionError, MemoryError):
-        return []
-    engines = [JsTaintEngine(spec, fn_index=fn_index) for spec in taint_specs]
-    try:
-        _JsWalker(engines).run(program)
-    except RecursionError:
-        engines = []
-    findings: List[Dict[str, Any]] = []
-    for engine in engines:
-        spec = engine.spec
-        for hit in engine.hits:
-            findings.append(
-                {
-                    "vuln_type": f"{spec.vuln_type} (AST Taint)",
-                    "message": f"Sink method '{hit['sink']}' called with tainted var '{hit['variable']}'",
-                    "severity": spec.severity,
-                    "line": hit["line"],
-                    "plugin": PLUGIN_NAME,
-                    "trace": hit["trace"],
-                    "rule_id": None,
-                    "variable": hit["variable"],
-                    "sink": hit["sink"],
-                    "source": hit["trace"][0] if hit["trace"] else None,
-                    "base_type": spec.vuln_type,
-                }
-            )
-    return findings
+    """All JavaScript AST-tier findings for one file (one parse, one fused
+    walk)."""
+    return analyze_fused(JsTaintEngine, parse_js, content, taint_specs, fn_index)

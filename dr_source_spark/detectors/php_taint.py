@@ -1,5 +1,6 @@
-"""PHP intra-file taint analysis (reference plugins/php/taint_visitor.py +
-plugin.py semantics):
+"""PHP intra-file taint analysis on the shared taint algebra of
+taint_core.py. Reference semantics that are PHP's own
+(plugins/php/taint_visitor.py + plugin.py):
 
 * paths: `$var`, `$obj->field`, `$arr[]` (subscript collapses to `base[]`,
   taint_visitor.py:42-47) with base-fallback lookups;
@@ -24,8 +25,7 @@ from typing import Any, Dict, List, Optional
 
 from ..kb.compile import TaintSpec
 from ..parsers.phpparse import interp_vars, parse_php
-
-PII_NAMES = ("password", "email", "secret", "token", "credit_card", "cc", "ssn")
+from .taint_core import TaintEngine, Walker, analyze_fused, is_pii
 
 
 def _path(node: Optional[Dict]) -> Optional[str]:
@@ -65,42 +65,12 @@ def _idents(node: Optional[Any], out: Optional[List[str]] = None) -> List[str]:
     return out
 
 
-class PhpTaintEngine:
-    def __init__(self, spec: TaintSpec):
-        self.spec = spec
-        self.sources = set(spec.sources)
-        self.sanitizers = set(spec.sanitizers)
-        self.sink_args: Dict[str, Optional[List[int]]] = {n: a for n, a in spec.sinks}
-        self.scopes: List[Dict[str, Dict]] = [{}]
-        self.consts: List[Dict[str, Any]] = [{}]
-        self.hits: List[Dict[str, Any]] = []
-
-    def lookup_taint(self, path: str) -> Optional[Dict]:
-        for scope in reversed(self.scopes):
-            if path in scope:
-                return scope[path]
-            if "->" in path:
-                base = path.split("->")[0]
-                if base in scope:
-                    return scope[base]
-            if "[]" in path:
-                base = path.split("[]")[0]
-                if base in scope:
-                    return scope[base]
-        return None
-
-    def lookup_const(self, path: str) -> Any:
-        for scope in reversed(self.consts):
-            if path in scope:
-                return scope[path]
-        return None
-
-    def taint(self, path: str, info: Dict) -> None:
-        self.scopes[-1][path] = info
-        self.consts[-1].pop(path, None)
-
-    def untaint(self, path: str) -> None:
-        self.scopes[-1].pop(path, None)
+class PhpTaintEngine(TaintEngine):
+    plugin = "PHP AST Analyzer (Tree-sitter)"
+    message = "Sink function '{sink}' called with tainted var '{variable}'"
+    base_seps = ("->", "[]")
+    literal_args_safe = True  # taint_visitor.py:182
+    _idents = staticmethod(_idents)
 
     def _const_value(self, node: Optional[Dict]) -> Any:
         if node is None:
@@ -114,10 +84,8 @@ class PhpTaintEngine:
         return None
 
     def _classify(self, node: Dict, var_name: Optional[str] = None):
-        if var_name:
-            clean = var_name.lower().replace("$", "")
-            if any(x in clean for x in PII_NAMES):
-                return "source", f"Sensitive variable name: {var_name}"
+        if var_name and is_pii(var_name.lower().replace("$", "")):
+            return "source", f"Sensitive variable name: {var_name}"
         name = ""
         if node["t"] == "call":
             callee = node["callee"]
@@ -135,78 +103,21 @@ class PhpTaintEngine:
             return "source", name
         return None, None
 
-    # -- per-node state transitions (traversal lives in _PhpWalker) -----------
-
-    def _push_scope_raw(self) -> None:
-        # scope push on function_definition (taint_visitor.py:115-119)
-        self.scopes.append({})
-        self.consts.append({})
-
-    def _pop_scope_raw(self) -> None:
-        self.consts.pop()
-        self.scopes.pop()
-
     def _echo_sink(self, s: Dict) -> None:
         if "echo" in self.sink_args:
-            vuln_args = self.sink_args["echo"]
-            for idx, arg in enumerate(s["args"]):
-                if vuln_args is not None and idx not in vuln_args:
-                    continue
-                self._check_node(arg, "echo", s["line"])
+            self._check_args(s["args"], "echo", self.sink_args["echo"], s["line"])
 
     def _include_sink(self, kw: str, arg: Optional[Dict], line: int) -> None:
         if kw in self.sink_args and arg is not None:
-            self._check_node(arg, kw, line)
+            self._check_arg(arg, kw, line)
 
     def _call_sink(self, e: Dict) -> None:
         callee = e["callee"]
         if callee["t"] == "name" and callee["id"] in self.sink_args:
-            vuln_args = self.sink_args[callee["id"]]
-            for idx, arg in enumerate(e["args"]):
-                if vuln_args is not None and idx not in vuln_args:
-                    continue
-                self._check_node(arg, callee["id"], e["line"])
-
-    def _assign(self, path: str, value: Dict, line: int) -> None:
-        kind, name = self._classify(value, var_name=path)
-        if kind == "sanitizer":
-            self.untaint(path)
-            return
-        if kind == "source":
-            self.taint(path, {"source": name, "trace": [f"Tainted by {name} at line {line}"]})
-            return
-        if self._const_value(value) is not None:
-            self.consts[-1][path] = self._const_value(value)
-            self.untaint(path)
-            return
-        for ident in _idents(value):
-            info = self.lookup_taint(ident)
-            if info:
-                self.taint(path, {"source": info["source"], "trace": info["trace"] + [f"Propagated to {path} at line {line}"]})
-                return
-        self.untaint(path)
-
-    def _check_node(self, node: Dict, sink_name: str, line: int) -> None:
-        if self._const_value(node) is not None:
-            return  # literal args are safe (taint_visitor.py:182)
-        for path in _idents(node):
-            info = self.lookup_taint(path)
-            if info:
-                self.hits.append({"sink": sink_name, "variable": path, "line": line, "trace": info["trace"]})
-                break
+            self._check_args(e["args"], callee["id"], self.sink_args[callee["id"]], e["line"])
 
 
-class _PhpWalker:
-    """ONE traversal driving N per-category engines in lockstep (the same
-    fusion as the Python tier's _MultiWalk)."""
-
-    def __init__(self, engines: List["PhpTaintEngine"]):
-        self.engines = engines
-
-    def run(self, program: Dict) -> None:
-        for s in program.get("stmts", []):
-            self.visit_stmt(s)
-
+class _PhpWalker(Walker):
     def visit_stmt(self, s: Optional[Dict]) -> None:
         if s is None:
             return
@@ -215,12 +126,11 @@ class _PhpWalker:
             for x in s["stmts"]:
                 self.visit_stmt(x)
         elif t == "func":
-            for e in self.engines:
-                e._push_scope_raw()
+            # scope push on function_definition (taint_visitor.py:115-119)
+            self._enter()
             for x in s["body"]["stmts"]:
                 self.visit_stmt(x)
-            for e in self.engines:
-                e._pop_scope_raw()
+            self._exit()
         elif t == "echo":
             for e in self.engines:
                 e._echo_sink(s)
@@ -280,42 +190,9 @@ class _PhpWalker:
             self.visit_expr(e["b"])
 
 
-PLUGIN_NAME = "PHP AST Analyzer (Tree-sitter)"
+PhpTaintEngine.walker = _PhpWalker
 
 
 def analyze_php(content: str, taint_specs: List[TaintSpec]) -> List[Dict[str, Any]]:
-    """Parse once, ONE fused walk for all eligible categories (the reference
-    re-parses and re-walks per category)."""
-    if not taint_specs:
-        # all categories screened out (or none eligible): no engine could
-        # emit a hit, so skip the parse AND the walk entirely
-        return []
-    try:
-        program = parse_php(content)
-    except (RecursionError, MemoryError):
-        return []
-    engines = [PhpTaintEngine(spec) for spec in taint_specs]
-    try:
-        _PhpWalker(engines).run(program)
-    except RecursionError:
-        engines = []
-    findings: List[Dict[str, Any]] = []
-    for engine in engines:
-        spec = engine.spec
-        for hit in engine.hits:
-            findings.append(
-                {
-                    "vuln_type": f"{spec.vuln_type} (AST Taint)",
-                    "message": f"Sink function '{hit['sink']}' called with tainted var '{hit['variable']}'",
-                    "severity": spec.severity,
-                    "line": hit["line"],
-                    "plugin": PLUGIN_NAME,
-                    "trace": hit["trace"],
-                    "rule_id": None,
-                    "variable": hit["variable"],
-                    "sink": hit["sink"],
-                    "source": hit["trace"][0] if hit["trace"] else None,
-                    "base_type": spec.vuln_type,
-                }
-            )
-    return findings
+    """All PHP AST-tier findings for one file (one parse, one fused walk)."""
+    return analyze_fused(PhpTaintEngine, parse_php, content, taint_specs)

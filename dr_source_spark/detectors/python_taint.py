@@ -1,20 +1,21 @@
-"""Python intra-file taint analysis (stdlib ``ast``), reimplemented from
-scratch against the observed behavior of the reference's Python tier
-(reference plugins/python/taint_visitor.py + plugin.py; behavior pinned by
-running the reference on its fixtures — tests/goldens/).
+"""Python intra-file taint analysis (stdlib ``ast``) on the shared taint
+algebra of taint_core.py, reimplemented against the observed behavior of
+the reference's Python tier (reference plugins/python/taint_visitor.py +
+plugin.py; behavior pinned by running the reference on its fixtures —
+tests/goldens/).
 
-Semantics intentionally preserved, including reference quirks that are part
-of finding identity (SURVEY.md §2B B16, §7):
+Python's own semantics, including reference quirks that are part of
+finding identity (SURVEY.md §2B B16, §7):
 
 * source matching is exact OR ``.``-suffix OR *substring* containment
   (python/taint_visitor.py:157);
 * sanitizer matching uses the last dotted segment;
-* PII variable/parameter names (substring) self-taint
-  (python/taint_visitor.py:28,112-114,130-133);
+* a PII assignment target is checked before the value, with its own trace
+  text (python/taint_visitor.py:28,112-114,130-133);
 * constants (literals, constant-var lookups, folded ``+`` of str) suppress
-  taint (python/taint_visitor.py:73-81,141-143);
-* whole-object taint covers sub-fields (base fallback in
-  ``lookup_taint``, python/taint_visitor.py:50-56);
+  taint (python/taint_visitor.py:73-81,141-143); whole-object taint covers
+  sub-fields (python/taint_visitor.py:50-56);
+* keyword arguments of a sink call are checked too;
 * framework mappers are INERT in the taint pass — the reference filters out
   every mapper because the base class defines ``analyze_node``
   (python/plugin.py:51); observed: no FastAPI/Django-sourced findings;
@@ -35,12 +36,15 @@ the process hash seed when an argument holds several tainted names).
 from __future__ import annotations
 
 import ast
+import os
+import textwrap
 from typing import Any, Dict, List, Optional, Tuple
 
 from ..kb.compile import TaintSpec
+from .taint_core import MAX_CALL_DEPTH, TaintEngine, is_pii, taint_findings
 
-PII_NAMES = ("password", "email", "secret", "token", "credit_card", "cc", "ssn")
-MAX_CALL_DEPTH = 3  # reference python/taint_visitor.py:14
+
+PLUGIN_NAME = "Python AST Analyzer"  # part of finding identity
 
 
 def _attr_path(node: ast.AST) -> Optional[str]:
@@ -87,53 +91,17 @@ def _ordered_idents(node: Optional[ast.AST]) -> List[str]:
     return list(seen)
 
 
-class PyTaintEngine(ast.NodeVisitor):
+class PyTaintEngine(TaintEngine):
     """One category's source→sink walk over one parsed module."""
 
-    def __init__(
-        self,
-        spec: TaintSpec,
-        fn_index: Optional[Any] = None,
-        depth: int = 0,
-        seed_scope: Optional[Dict[str, Dict[str, Any]]] = None,
-    ):
-        self.sources = set(spec.sources)
-        self.sanitizers = {s.split(".")[-1] for s in spec.sanitizers}
-        self.sink_args: Dict[str, Optional[List[int]]] = {name: args for name, args in spec.sinks}
-        self.spec = spec
-        self.fn_index = fn_index
-        self.depth = depth
-        self.scopes: List[Dict[str, Dict[str, Any]]] = [seed_scope if seed_scope is not None else {}]
-        self.consts: List[Dict[str, Any]] = [{}]
-        self.hits: List[Dict[str, Any]] = []
-        self.local_fns: Dict[str, ast.AST] = {}
+    plugin = PLUGIN_NAME
+    message = "Taint flow from source to sink '{sink}' via variable '{variable}'"
+    severity = "HIGH"  # reference python/plugin.py:64 hardcodes HIGH
+    _idents = staticmethod(_ordered_idents)
 
-    # -- taint/constant state ------------------------------------------------
-
-    def lookup_taint(self, path: str) -> Optional[Dict[str, Any]]:
-        for scope in reversed(self.scopes):
-            if path in scope:
-                return scope[path]
-            if "." in path:
-                base = path.split(".")[0]
-                if base in scope:
-                    return scope[base]
-        return None
-
-    def lookup_const(self, path: str) -> Any:
-        for scope in reversed(self.consts):
-            if path in scope:
-                return scope[path]
-        return None
-
-    def taint(self, path: str, info: Dict[str, Any]) -> None:
-        self.scopes[-1][path] = info
-        self.consts[-1].pop(path, None)
-
-    def untaint(self, path: str) -> None:
-        self.scopes[-1].pop(path, None)
-
-    # -- value/source classification ------------------------------------------
+    @staticmethod
+    def _sanitizer_set(names: List[str]) -> set:
+        return {s.split(".")[-1] for s in names}
 
     def _const_value(self, node: ast.AST) -> Any:
         if isinstance(node, ast.Constant):
@@ -147,8 +115,9 @@ class PyTaintEngine(ast.NodeVisitor):
                 return left + right
         return None
 
-    def _classify(self, node: ast.AST) -> Tuple[Optional[str], Optional[str]]:
-        """('source'|'sanitizer'|None, matched name)."""
+    def _classify(self, node: ast.AST, var_name: Optional[str] = None) -> Tuple[Optional[str], Optional[str]]:
+        """('source'|'sanitizer'|None, matched name); the PII target-name
+        rule lives in _assign."""
         name = _call_path(node) if isinstance(node, ast.Call) else (_attr_path(node) or "")
         if not name:
             return None, None
@@ -162,42 +131,9 @@ class PyTaintEngine(ast.NodeVisitor):
             return "source", name
         return None, None
 
-    # -- visitors --------------------------------------------------------------
-
-    def visit_FunctionDef(self, node: ast.FunctionDef) -> None:
-        self._enter_function(node)
-
-    def visit_AsyncFunctionDef(self, node: ast.AsyncFunctionDef) -> None:
-        self._enter_function(node)
-
-    def _enter_function(self, node: Any) -> None:
-        self.local_fns[node.name] = node
-        self.scopes.append({})
-        self.consts.append({})
-        for arg in node.args.args:
-            if any(p in arg.arg.lower() for p in PII_NAMES):
-                self.taint(
-                    arg.arg,
-                    {
-                        "source": f"Sensitive parameter: {arg.arg}",
-                        "trace": [f"Sensitive data in parameter {arg.arg} at line {node.lineno}"],
-                    },
-                )
-        self.generic_visit(node)
-        self.consts.pop()
-        self.scopes.pop()
-
-    def visit_Assign(self, node: ast.Assign) -> None:
-        if node.targets:
-            path = _attr_path(node.targets[0])
-            if path:
-                self._assign(path, node.value, node.lineno)
-        self.generic_visit(node)
-
     def _assign(self, path: str, value: ast.AST, line: int) -> None:
         # PII name heuristic beats everything else (python/taint_visitor.py:129-133)
-        tail = path.lower().split(".")[-1]
-        if any(p in tail for p in PII_NAMES):
+        if is_pii(path.lower().split(".")[-1]):
             self.taint(
                 path,
                 {
@@ -206,33 +142,7 @@ class PyTaintEngine(ast.NodeVisitor):
                 },
             )
             return
-
-        kind, name = self._classify(value)
-        if kind == "sanitizer":
-            self.untaint(path)
-            return
-        if kind == "source":
-            self.taint(path, {"source": name, "trace": [f"Tainted by {name} at line {line}"]})
-            return
-
-        if self._const_value(value) is not None:
-            self.consts[-1][path] = self._const_value(value)
-            self.untaint(path)
-            return
-
-        for ident in _ordered_idents(value):
-            info = self.lookup_taint(ident)
-            if info:
-                self.taint(
-                    path,
-                    {"source": info["source"], "trace": info["trace"] + [f"Propagated to {path} at line {line}"]},
-                )
-                return
-        self.untaint(path)
-
-    def visit_Call(self, node: ast.Call) -> None:
-        self._handle_call_node(node)
-        self.generic_visit(node)
+        super()._assign(path, value, line)
 
     def _handle_call_node(self, node: ast.Call) -> None:
         fn = _call_path(node)
@@ -245,35 +155,18 @@ class PyTaintEngine(ast.NodeVisitor):
                     matched = sink_name
                     break
         if matched:
-            arg_filter = self.sink_args[matched]
-            for idx, arg in enumerate(node.args):
-                if arg_filter is not None and idx not in arg_filter:
-                    continue
-                for ident in _ordered_idents(arg):
-                    info = self.lookup_taint(ident)
-                    if info:
-                        self.hits.append({"sink": matched, "variable": ident, "line": node.lineno, "trace": info["trace"]})
-                        break
+            self._check_args(node.args, matched, self.sink_args[matched], node.lineno)
             for kw in node.keywords:
-                for ident in _ordered_idents(kw.value):
-                    info = self.lookup_taint(ident)
-                    if info:
-                        self.hits.append({"sink": matched, "variable": ident, "line": node.lineno, "trace": info["trace"]})
-                        break
-        else:
-            # Only project-index callees are simulated; locally-registered
-            # functions are not (reference python/taint_visitor.py:184-189).
-            if fn not in self.local_fns and self.fn_index is not None and self.depth < MAX_CALL_DEPTH:
-                entry = self.fn_index.get(fn) if hasattr(self.fn_index, "get") else None
-                if entry and entry.get("lang") == "python":
-                    self._simulate(node, entry, fn)
+                self._check_arg(kw.value, matched, node.lineno)
+        # Only project-index callees are simulated; locally-registered
+        # functions are not (reference python/taint_visitor.py:184-189).
+        elif fn not in self.functions and self.fn_index is not None and self.depth < MAX_CALL_DEPTH:
+            entry = self.fn_index.get(fn) if hasattr(self.fn_index, "get") else None
+            if entry and entry.get("lang") == "python":
+                self._simulate_remote(node, entry, fn)
 
-    def _simulate(self, call: ast.Call, entry: Dict[str, Any], fn: str) -> None:
-        """Bind tainted actuals to formals and walk the callee body
-        (cross-file hop; reference python/taint_visitor.py:192-212)."""
-        import os
-        import textwrap
-
+    def _simulate_remote(self, call: ast.Call, entry: Dict[str, Any], fn: str) -> None:
+        """Cross-file hop (reference python/taint_visitor.py:192-212)."""
         # pad so callee line numbers are absolute in the defining file
         # (reference keeps the original ast node, project_index registration)
         pad = "\n" * max(0, int(entry.get("def_line", 1)) - 1)
@@ -281,26 +174,9 @@ class PyTaintEngine(ast.NodeVisitor):
             f_def = ast.parse(pad + textwrap.dedent(entry["def_source"])).body[0]
         except (SyntaxError, IndexError, ValueError):
             return
-        if not isinstance(f_def, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            return
-        params = [a.arg for a in f_def.args.args]
-        seeded: Dict[str, Dict[str, Any]] = {}
-        for idx, arg in enumerate(call.args):
-            if idx >= len(params):
-                break
-            for ident in _ordered_idents(arg):
-                info = self.lookup_taint(ident)
-                if info:
-                    loc = f"in {os.path.basename(entry['path'])}"
-                    seeded[params[idx]] = {
-                        "source": info["source"],
-                        "trace": info["trace"] + [f"Passed to {fn}() {loc} at line {call.lineno}"],
-                    }
-                    break
-        if seeded:
-            sub = PyTaintEngine(self.spec, self.fn_index, self.depth + 1, seed_scope=seeded)
-            sub.visit(f_def)
-            self.hits.extend(sub.hits)
+        if isinstance(f_def, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            params = [a.arg for a in f_def.args.args]
+            self._simulate(call.args, params, fn, f"in {os.path.basename(entry['path'])}", call.lineno, f_def)
 
 
 def find_django_mass_assignment(tree: ast.AST) -> List[Dict[str, Any]]:
@@ -335,15 +211,10 @@ def find_django_mass_assignment(tree: ast.AST) -> List[Dict[str, Any]]:
 
 
 class _MultiWalk:
-    """Drive K category engines through ONE AST traversal.
-
-    Semantics-preserving fusion of the reference's per-category re-walk
-    (SURVEY.md §4 R6): every engine sees the identical pre-order event
-    stream `ast.NodeVisitor` would produce — node handler first, children
-    after, function scopes popped on exit — while the (shared) traversal
-    cost is paid once. Engines keep fully independent scope/const state;
-    call simulation recursion stays inside each engine.
-    """
+    """Drive K category engines through ONE AST traversal, pre-order: node
+    handler first, children after, function scopes popped on exit (the
+    event stream of the reference's ast.NodeVisitor). A simulated callee is
+    walked the same way, from its def node."""
 
     def __init__(self, engines: List["PyTaintEngine"]):
         self.engines = engines
@@ -351,22 +222,13 @@ class _MultiWalk:
     def walk(self, node: ast.AST) -> None:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             for e in self.engines:
-                e.local_fns[node.name] = node
-                e.scopes.append({})
-                e.consts.append({})
+                e.functions[node.name] = node
+                e._push_scope_raw()
                 for arg in node.args.args:
-                    if any(p in arg.arg.lower() for p in PII_NAMES):
-                        e.taint(
-                            arg.arg,
-                            {
-                                "source": f"Sensitive parameter: {arg.arg}",
-                                "trace": [f"Sensitive data in parameter {arg.arg} at line {node.lineno}"],
-                            },
-                        )
+                    e._taint_pii_param(arg.arg, node.lineno)
             self._children(node)
             for e in self.engines:
-                e.consts.pop()
-                e.scopes.pop()
+                e._pop_scope_raw()
             return
         if isinstance(node, ast.Assign):
             if node.targets:
@@ -383,12 +245,14 @@ class _MultiWalk:
             return
         self._children(node)
 
+    walk_callee = walk
+
     def _children(self, node: ast.AST) -> None:
         for child in ast.iter_child_nodes(node):
             self.walk(child)
 
 
-PLUGIN_NAME = "Python AST Analyzer"  # part of finding identity
+PyTaintEngine.walker = _MultiWalk
 
 
 def analyze_python(
@@ -458,22 +322,4 @@ def analyze_python(
                 break
             done.append(eng)
         engines = done
-    for engine in engines:
-        spec = engine.spec
-        for hit in engine.hits:
-            findings.append(
-                {
-                    "vuln_type": f"{spec.vuln_type} (AST Taint)",
-                    "message": f"Taint flow from source to sink '{hit['sink']}' via variable '{hit['variable']}'",
-                    "severity": "HIGH",  # reference python/plugin.py:64 hardcodes HIGH
-                    "line": hit["line"],
-                    "plugin": PLUGIN_NAME,
-                    "trace": hit["trace"],
-                    "rule_id": None,
-                    "variable": hit["variable"],
-                    "sink": hit["sink"],
-                    "source": hit["trace"][0] if hit["trace"] else None,
-                    "base_type": spec.vuln_type,
-                }
-            )
-    return findings
+    return findings + taint_findings(engines)

@@ -1,5 +1,6 @@
-"""Ruby intra-file taint analysis (reference plugins/ruby/taint_visitor.py +
-plugin.py semantics):
+"""Ruby intra-file taint analysis on the shared taint algebra of
+taint_core.py. Reference semantics that are Ruby's own
+(plugins/ruby/taint_visitor.py + plugin.py):
 
 * every dotted access is a call; paths are `recv.method` / `base[]`;
 * DIRECT-SOURCE usage: a path whose base is a known source is tainted even
@@ -21,8 +22,7 @@ from typing import Any, Dict, List, Optional
 
 from ..kb.compile import TaintSpec
 from ..parsers.rubyparse import parse_ruby
-
-PII_NAMES = ("password", "email", "secret", "token", "credit_card", "cc", "ssn")
+from .taint_core import TaintEngine, Walker, analyze_fused, is_pii
 
 
 def _path(node: Optional[Dict]) -> Optional[str]:
@@ -71,45 +71,20 @@ def _idents(node: Optional[Any], out: Optional[List[str]] = None) -> List[str]:
     return out
 
 
-class RubyTaintEngine:
-    def __init__(self, spec: TaintSpec):
-        self.spec = spec
-        self.sources = set(spec.sources)
-        self.sanitizers = set(spec.sanitizers)
-        self.sink_args: Dict[str, Optional[List[int]]] = {n: a for n, a in spec.sinks}
-        self.scopes: List[Dict[str, Dict]] = [{}]
-        self.consts: List[Dict[str, Any]] = [{}]
-        self.hits: List[Dict[str, Any]] = []
+class RubyTaintEngine(TaintEngine):
+    plugin = "Ruby AST Analyzer (Tree-sitter)"
+    message = "Sink method '{sink}' called with tainted var '{variable}'"
+    base_seps = (".", "[]")
+    literal_args_safe = True  # taint_visitor.py:197
+    _idents = staticmethod(_idents)
 
     def lookup_taint(self, path: str) -> Optional[Dict]:
-        for scope in reversed(self.scopes):
-            if path in scope:
-                return scope[path]
-            if "." in path:
-                base = path.split(".")[0]
-                if base in scope:
-                    return scope[base]
-            if "[]" in path:
-                base = path.split("[]")[0]
-                if base in scope:
-                    return scope[base]
-        clean = path.split("[]")[0].split(".")[0]
-        if clean in self.sources:
-            return {"source": clean, "trace": [f"Direct usage of source {path}"]}
-        return None
-
-    def lookup_const(self, path: str) -> Any:
-        for scope in reversed(self.consts):
-            if path in scope:
-                return scope[path]
-        return None
-
-    def taint(self, path: str, info: Dict) -> None:
-        self.scopes[-1][path] = info
-        self.consts[-1].pop(path, None)
-
-    def untaint(self, path: str) -> None:
-        self.scopes[-1].pop(path, None)
+        info = super().lookup_taint(path)
+        if info is None:
+            clean = path.split("[]")[0].split(".")[0]
+            if clean in self.sources:
+                return {"source": clean, "trace": [f"Direct usage of source {path}"]}
+        return info
 
     def _const_value(self, node: Optional[Dict]) -> Any:
         if node is None:
@@ -125,10 +100,8 @@ class RubyTaintEngine:
         return None
 
     def _classify(self, node: Dict, var_name: Optional[str] = None):
-        if var_name:
-            clean = var_name.lower().replace("@", "")
-            if any(x in clean for x in PII_NAMES):
-                return "source", f"Sensitive variable name: {var_name}"
+        if var_name and is_pii(var_name.lower().replace("@", "")):
+            return "source", f"Sensitive variable name: {var_name}"
         name = ""
         if node["t"] == "rcall":
             name = node["name"]
@@ -146,36 +119,6 @@ class RubyTaintEngine:
             return "source", name
         return None, None
 
-    # -- per-node state transitions (traversal lives in _RubyWalker) ----------
-
-    def _push_scope_raw(self) -> None:
-        # scope push on method and do/brace blocks (taint_visitor.py)
-        self.scopes.append({})
-        self.consts.append({})
-
-    def _pop_scope_raw(self) -> None:
-        self.consts.pop()
-        self.scopes.pop()
-
-    def _assign(self, path: str, value: Dict, line: int) -> None:
-        kind, name = self._classify(value, var_name=path)
-        if kind == "sanitizer":
-            self.untaint(path)
-            return
-        if kind == "source":
-            self.taint(path, {"source": name, "trace": [f"Tainted by {name} at line {line}"]})
-            return
-        if self._const_value(value) is not None:
-            self.consts[-1][path] = self._const_value(value)
-            self.untaint(path)
-            return
-        for ident in _idents(value):
-            info = self.lookup_taint(ident)
-            if info:
-                self.taint(path, {"source": info["source"], "trace": info["trace"] + [f"Propagated to {path} at line {line}"]})
-                return
-        self.untaint(path)
-
     def _handle_call(self, call: Dict) -> None:
         method = call["name"]
         match_name = None
@@ -186,39 +129,17 @@ class RubyTaintEngine:
                 if method == s or method.endswith("." + s) or s.endswith("." + method):
                     match_name = s
                     break
-        if not match_name:
-            return
-        vuln_args = self.sink_args[match_name]
-        for idx, arg in enumerate(call.get("args", [])):
-            if vuln_args is not None and idx not in vuln_args:
-                continue
-            if self._const_value(arg) is not None:
-                continue
-            for path in _idents(arg):
-                info = self.lookup_taint(path)
-                if info:
-                    self.hits.append({"sink": match_name, "variable": path, "line": call["line"], "trace": info["trace"]})
-                    break
+        if match_name:
+            self._check_args(call.get("args", []), match_name, self.sink_args[match_name], call["line"])
 
 
-class _RubyWalker:
-    """ONE traversal driving N per-category engines in lockstep (the same
-    fusion as the Python tier's _MultiWalk)."""
-
-    def __init__(self, engines: List["RubyTaintEngine"]):
-        self.engines = engines
-
-    def run(self, program: Dict) -> None:
-        for s in program.get("stmts", []):
-            self.visit_stmt(s)
-
+class _RubyWalker(Walker):
     def _scoped(self, stmts: List[Dict]) -> None:
-        for e in self.engines:
-            e._push_scope_raw()
+        # scope push on method and do/brace blocks (taint_visitor.py)
+        self._enter()
         for x in stmts:
             self.visit_stmt(x)
-        for e in self.engines:
-            e._pop_scope_raw()
+        self._exit()
 
     def visit_stmt(self, s: Optional[Dict]) -> None:
         if s is None:
@@ -278,42 +199,9 @@ class _RubyWalker:
             self.visit_expr(e["b"])
 
 
-PLUGIN_NAME = "Ruby AST Analyzer (Tree-sitter)"
+RubyTaintEngine.walker = _RubyWalker
 
 
 def analyze_ruby(content: str, taint_specs: List[TaintSpec]) -> List[Dict[str, Any]]:
-    """Parse once, ONE fused walk for all eligible categories (the reference
-    re-parses and re-walks per category)."""
-    if not taint_specs:
-        # all categories screened out (or none eligible): no engine could
-        # emit a hit, so skip the parse AND the walk entirely
-        return []
-    try:
-        program = parse_ruby(content)
-    except (RecursionError, MemoryError):
-        return []
-    engines = [RubyTaintEngine(spec) for spec in taint_specs]
-    try:
-        _RubyWalker(engines).run(program)
-    except RecursionError:
-        engines = []
-    findings: List[Dict[str, Any]] = []
-    for engine in engines:
-        spec = engine.spec
-        for hit in engine.hits:
-            findings.append(
-                {
-                    "vuln_type": f"{spec.vuln_type} (AST Taint)",
-                    "message": f"Sink method '{hit['sink']}' called with tainted var '{hit['variable']}'",
-                    "severity": spec.severity,
-                    "line": hit["line"],
-                    "plugin": PLUGIN_NAME,
-                    "trace": hit["trace"],
-                    "rule_id": None,
-                    "variable": hit["variable"],
-                    "sink": hit["sink"],
-                    "source": hit["trace"][0] if hit["trace"] else None,
-                    "base_type": spec.vuln_type,
-                }
-            )
-    return findings
+    """All Ruby AST-tier findings for one file (one parse, one fused walk)."""
+    return analyze_fused(RubyTaintEngine, parse_ruby, content, taint_specs)

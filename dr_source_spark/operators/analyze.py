@@ -21,6 +21,7 @@ Scale design (SURVEY.md §4 R6/R9/R10):
 
 from __future__ import annotations
 
+import ast
 from itertools import repeat
 from typing import Any, Dict, List, Optional
 
@@ -33,6 +34,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..kb.compile import AST_LANG_MAP
 
 FINDINGS_FULL = StructType(
     [
@@ -205,16 +208,38 @@ def _screen_specs(specs, content: str) -> list:
     return out
 
 
-def _can_screen(lang: str, fn_index: Optional[Dict[str, Any]]) -> bool:
-    """Screening looks at THIS file's text only; a tier that may simulate
-    indexed callees (whose sinks live in other files) must not be screened."""
-    if fn_index is None or not fn_index:
-        return True
-    if lang in ("java", "javascript"):
-        return False
+def screen_ast_specs(lang: str, specs: list, content: str, fn_index: Optional[Dict[str, Any]]) -> list:
+    """The AST tier's category list for one file of ``lang``. Screening
+    reads this file's text only, so it is off for a tier that may simulate
+    indexed callees (whose sinks live in other files; php/ruby never
+    consult the index), and for Java when a framework-mapper token appears
+    (mapper sinks fire in every category)."""
+    if fn_index:
+        if lang in ("java", "javascript"):
+            return specs
+        if lang == "python" and any(e.get("lang") == "python" for e in fn_index.values()):
+            return specs
+    if lang == "java" and any(t in content for t in _JAVA_FRAMEWORK_TOKENS):
+        return specs
+    return _screen_specs(specs, content)
+
+
+def analyze_ast(
+    lang: str, content: str, specs: list, fn_index: Optional[Dict[str, Any]] = None, tree=None
+) -> List[Dict[str, Any]]:
+    """The AST tier for one file, dispatched on its AST_LANG_MAP language.
+    ``tree``: the file's parsed Python AST, shared with the pattern tier."""
+    from ..detectors import java_taint, js_taint, php_taint, python_taint, ruby_taint
+
     if lang == "python":
-        return not any(e.get("lang") == "python" for e in fn_index.values())
-    return True  # php/ruby never consult the index
+        return python_taint.analyze_python(content, specs, fn_index=fn_index, tree=tree)
+    if lang == "java":
+        return java_taint.analyze_java(content, specs, fn_index)
+    if lang == "javascript":
+        return js_taint.analyze_js(content, specs, fn_index)
+    if lang == "php":
+        return php_taint.analyze_php(content, specs)
+    return ruby_taint.analyze_ruby(content, specs)
 
 
 TIER_ERROR_PLUGIN = "__tier_error__"
@@ -269,7 +294,7 @@ def _analyze_one(
     TIER_ERROR_PLUGIN) per swallowed tier failure or timeout, so parse
     failures are observable at corpus scale instead of silent finding loss;
     off by default for exact reference parity."""
-    from ..detectors import pattern_match, python_taint, regex_scan
+    from ..detectors import pattern_match, regex_scan
 
     findings: List[Dict[str, Any]] = []
     errors: List[Dict[str, Any]] = []
@@ -287,14 +312,14 @@ def _analyze_one(
     py_tree_cell: List[Any] = []
 
     def _ast_tier() -> List[Dict[str, Any]]:
-        if ext == ".py":
-            import ast as _ast
-
-            specs = ckb.taint.get("python", [])
-            if _can_screen("python", fn_index):
-                specs = _screen_specs(specs, content)
+        lang = AST_LANG_MAP.get(ext)
+        if lang is None:
+            return []
+        specs = screen_ast_specs(lang, ckb.taint.get(lang, []), content, fn_index)
+        tree = None
+        if lang == "python":
             try:
-                tree = _ast.parse(content)
+                tree = ast.parse(content)
             except (SyntaxError, ValueError, RecursionError, MemoryError) as e:
                 if emit_errors:
                     from ..detectors import ParseFailed
@@ -302,32 +327,7 @@ def _analyze_one(
                     raise ParseFailed(f"python parse failed: {type(e).__name__}: {e}") from e
                 return []
             py_tree_cell.append(tree)
-            return python_taint.analyze_python(
-                content, specs, fn_index=fn_index, raise_parse_errors=emit_errors, tree=tree
-            )
-        if ext == ".java":
-            from ..detectors import java_taint
-
-            specs = ckb.taint.get("java", [])
-            if _can_screen("java", fn_index) and not any(t in content for t in _JAVA_FRAMEWORK_TOKENS):
-                specs = _screen_specs(specs, content)
-            return java_taint.analyze_java(content, specs, fn_index=fn_index)
-        if ext in (".js", ".jsx", ".ts", ".tsx"):
-            from ..detectors import js_taint
-
-            specs = ckb.taint.get("javascript", [])
-            if _can_screen("javascript", fn_index):
-                specs = _screen_specs(specs, content)
-            return js_taint.analyze_js(content, specs, fn_index=fn_index)
-        if ext in (".php", ".phtml", ".php4", ".php5"):
-            from ..detectors import php_taint
-
-            return php_taint.analyze_php(content, _screen_specs(ckb.taint.get("php", []), content))
-        if ext in (".rb", ".rake", ".gemspec"):
-            from ..detectors import ruby_taint
-
-            return ruby_taint.analyze_ruby(content, _screen_specs(ckb.taint.get("ruby", []), content))
-        return []
+        return analyze_ast(lang, content, specs, fn_index, tree)
 
     tier_fns = []
     if "ast" in tiers:

@@ -236,10 +236,10 @@ def test_compiled_kb_broadcast_stays_small():
     assert len(blob) < 512 * 1024, f"compiled KB pickle is {len(blob)} bytes"
 
 
-def test_java_lambda_taint_flag(ckb):
-    """Lambda bodies are opaque in parity mode (the pinned golden behavior,
-    docs/FUTURE.md) and walked as nested scopes — captured locals visible —
-    with taint_through_lambdas=True."""
+def test_java_lambda_bodies_are_opaque(ckb):
+    """Lambda bodies are opaque, as in the reference (docs/FUTURE.md): a
+    tainted local captured by a lambda reaches no sink, and an untainted
+    lambda parameter fires nothing."""
     from dr_source_spark.detectors.java_taint import analyze_java
 
     src = """import javax.servlet.http.HttpServletRequest;
@@ -254,12 +254,8 @@ public class App {
     }
 }
 """
-    parity = analyze_java(src, ckb.taint["java"])
-    assert parity == []  # opaque lambda: pinned behavior unchanged
-    ext = analyze_java(src, ckb.taint["java"], taint_through_lambdas=True)
-    assert any(f["sink"] == "executeQuery" and f["line"] == 7 for f in ext), ext
+    assert analyze_java(src, ckb.taint["java"]) == []
 
-    # untainted lambda PARAM must not fire in either mode (scoping sanity)
     clean = """import java.sql.Statement;
 public class App {
     public void handle(java.util.List<String> xs, Statement statement) {
@@ -267,7 +263,6 @@ public class App {
     }
 }
 """
-    assert analyze_java(clean, ckb.taint["java"], taint_through_lambdas=True) == []
     assert analyze_java(clean, ckb.taint["java"]) == []
 
 

@@ -151,21 +151,9 @@ def gen_program(lang: str, rng: random.Random) -> str:
 
 
 def _analyze(lang: str, src: str):
-    if lang == "java":
-        from dr_source_spark.detectors.java_taint import analyze_java
+    from dr_source_spark.operators.analyze import analyze_ast
 
-        return analyze_java(src, _CKB.taint["java"])
-    if lang == "javascript":
-        from dr_source_spark.detectors.js_taint import analyze_js
-
-        return analyze_js(src, _CKB.taint["javascript"])
-    if lang == "php":
-        from dr_source_spark.detectors.php_taint import analyze_php
-
-        return analyze_php(src, _CKB.taint["php"])
-    from dr_source_spark.detectors.ruby_taint import analyze_ruby
-
-    return analyze_ruby(src, _CKB.taint["ruby"])
+    return analyze_ast(lang, src, _CKB.taint[lang])
 
 
 # measured recovery floors at commit time (regression gate: a parser change

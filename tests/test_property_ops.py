@@ -199,11 +199,36 @@ def test_pagerank_is_personalized_pagerank_with_every_node_seeded(spark, monkeyp
             assert glob == ppr and glob, (trial, cutoff)
 
 
+def test_hub_removal_counts_a_self_loop_only_survivor(spark, monkeypatch):
+    """hub_removal_impact ranks hubs in the simple graph but takes its
+    'after' census over the raw surviving edges, so a node whose only
+    surviving edge is a self-loop is a one-node component. The kg_hub_removal
+    oracle builds its 'after' nodes from the same edges, self-loops
+    included: operator and oracle agree, and the row is intended."""
+    import duckdb
+
+    import __spark_entry__ as E
+    from dr_source_spark.operators.graph import hub_removal_impact
+    from dr_source_spark.sources import synth
+
+    # hub h; after removing it, a keeps only its self-loop, b-c survives
+    edges = [("h", "a"), ("h", "b"), ("h", "c"), ("h", "d"), ("a", "a"), ("b", "c")]
+    want = [("after", 3, 2, 2), ("before", 5, 1, 5)]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    got = sorted(tuple(r) for r in hub_removal_impact(df, k=1).collect())
+    assert got == want
+    values = ", ".join(f"('{a}', '{b}')" for a, b in edges)
+    monkeypatch.setattr(
+        synth, "kg_edges_oracle_sql", lambda: f"SELECT * FROM (VALUES {values}) t(src, dst)"
+    )
+    assert sorted(duckdb.connect().execute(E._kg_hub_removal_sql(k=1)).fetchall()) == want
+
+
 # name -> (op(graph module, edges, labels), directed): every graph operator
 # that reads its input through the simple-graph normal form.
-# hub_removal_impact is left out: its 'after' census counts a node whose only
-# surviving edge is a self-loop as a component, so a self-loop on an existing
-# node changes its output.
+# hub_removal_impact is left out: a self-loop-only survivor is its own
+# component in the 'after' census (pinned by the test above), so a self-loop
+# on an existing node changes its output.
 _NORMAL_FORM_OPS = {
     "triangle_counts": (lambda g, e, lab: g.triangle_counts(e), False),
     "ktruss_edges": (lambda g, e, lab: g.ktruss_edges(e, k=3, rounds=2), False),

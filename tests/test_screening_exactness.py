@@ -6,52 +6,54 @@ import os
 
 import pytest
 
-from dr_source_spark.detectors.java_taint import analyze_java
-from dr_source_spark.detectors.js_taint import analyze_js
-from dr_source_spark.detectors.php_taint import analyze_php
-from dr_source_spark.detectors.python_taint import analyze_python
-from dr_source_spark.detectors.ruby_taint import analyze_ruby
 from dr_source_spark.kb import compile_kb, load_kb
-from dr_source_spark.operators.analyze import _JAVA_FRAMEWORK_TOKENS, _screen_specs
-
-
-def _production_screen(lang, specs, content):
-    """The exact screening decision operators/analyze.py makes (incl. the
-    Java framework-mapper carve-out — mapper sinks fire in EVERY category,
-    so no java category may be dropped when a framework token appears)."""
-    if lang == "java" and any(t in content for t in _JAVA_FRAMEWORK_TOKENS):
-        return specs
-    return _screen_specs(specs, content)
+from dr_source_spark.kb.compile import AST_LANG_MAP
+from dr_source_spark.operators.analyze import analyze_ast, screen_ast_specs
 
 CKB = compile_kb(load_kb(project_dir="/nonexistent"))
-
-_TIERS = {
-    ".py": ("python", lambda c, s: analyze_python(c, s)),
-    ".java": ("java", lambda c, s: analyze_java(c, s)),
-    ".js": ("javascript", lambda c, s: analyze_js(c, s)),
-    ".php": ("php", lambda c, s: analyze_php(c, s)),
-    ".rb": ("ruby", lambda c, s: analyze_ruby(c, s)),
-}
 
 
 def _key(f):
     return (f["line"], f["vuln_type"], f["message"], f["severity"], tuple(f["trace"]))
 
 
-def test_screened_equals_full(reference_corpus):
-    n = 0
-    for dirpath, _dirs, files in os.walk(reference_corpus):
+def _corpus_files(root):
+    for dirpath, _dirs, files in os.walk(root):
         for fn in sorted(files):
-            ext = os.path.splitext(fn)[1]
-            if ext not in _TIERS:
-                continue
-            lang, analyze = _TIERS[ext]
-            content = open(os.path.join(dirpath, fn), encoding="utf-8", errors="ignore").read()
-            full = {_key(f) for f in analyze(content, CKB.taint[lang])}
-            screened = {_key(f) for f in analyze(content, _production_screen(lang, CKB.taint[lang], content))}
-            assert full == screened, fn
-            n += 1
+            with open(os.path.join(dirpath, fn), encoding="utf-8", errors="ignore") as f:
+                yield fn, f.read()
+
+
+def _synth_files():
+    from dr_source_spark.sources.synth import _TEMPLATES, render_template
+
+    return [render_template(tpl, 9, "token") for tpl in range(len(_TEMPLATES))]
+
+
+def _assert_screened_equals_full(files):
+    """The production screening rule (no project index) against the full
+    category list, through the production AST-tier dispatch."""
+    n = 0
+    for name, content in files:
+        lang = AST_LANG_MAP.get(os.path.splitext(name)[1])
+        if lang is None:
+            continue
+        specs = CKB.taint[lang]
+        full = {_key(f) for f in analyze_ast(lang, content, specs)}
+        screened = {_key(f) for f in analyze_ast(lang, content, screen_ast_specs(lang, specs, content, None))}
+        assert full == screened, name
+        n += 1
     assert n
+
+
+def test_screened_equals_full(reference_corpus):
+    _assert_screened_equals_full(_corpus_files(reference_corpus))
+
+
+def test_screened_equals_full_in_repo(realcode_dir):
+    """The same check over tests/realcode and the synth templates, which
+    need nothing outside this repository."""
+    _assert_screened_equals_full(list(_corpus_files(realcode_dir)) + _synth_files())
 
 
 def test_conditional_group_rules_stay_outside_screen():
