@@ -229,9 +229,6 @@ class JavaTaintEngine(TaintEngine):
         if full in SPRING_SINKS:
             v, a = SPRING_SINKS[full]
             return v, a, "SpringBootMapper"
-        if method in SPRING_SINKS:
-            v, a = SPRING_SINKS[method]
-            return v, a, "SpringBootMapper"
         if method in JAKARTA_SINKS:
             v, a = JAKARTA_SINKS[method]
             return v, a, "JakartaEEMapper"

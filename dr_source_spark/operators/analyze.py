@@ -62,9 +62,10 @@ _COLS = [f.name for f in FINDINGS_FULL.fields]
 
 # Java framework mapper sinks fire during EVERY category pass
 # (detectors/java_taint.py) — if any of these appear, no java category can
-# be screened out.
+# be screened out. Spring sinks match only as ``jdbcTemplate.<method>``,
+# so the receiver name is their token.
 _JAVA_FRAMEWORK_TOKENS = (
-    "query", "update", "execute", "getWriter", "getOutputStream",
+    "jdbcTemplate", "getWriter", "getOutputStream",
     "createQuery", "createNativeQuery", "createSelectionQuery", "createMutationQuery",
 )
 
@@ -208,6 +209,20 @@ def _screen_specs(specs, content: str) -> list:
     return out
 
 
+# the last index `_indexes_python` read and its answer: a worker screens
+# every file of a partition against the same broadcast index
+_PY_INDEX_SEEN: list = [None, False]
+
+
+def _indexes_python(fn_index: Dict[str, Any]) -> bool:
+    """Whether ``fn_index`` holds a Python def, decided once per index
+    object: the scan is linear in defs, 2.2 ms at the 50 k-def budget,
+    too much to repeat for every .py file."""
+    if _PY_INDEX_SEEN[0] is not fn_index:
+        _PY_INDEX_SEEN[:] = [fn_index, any(e.get("lang") == "python" for e in fn_index.values())]
+    return _PY_INDEX_SEEN[1]
+
+
 def screen_ast_specs(lang: str, specs: list, content: str, fn_index: Optional[Dict[str, Any]]) -> list:
     """The AST tier's category list for one file of ``lang``. Screening
     reads this file's text only, so it is off for a tier that may simulate
@@ -217,7 +232,7 @@ def screen_ast_specs(lang: str, specs: list, content: str, fn_index: Optional[Di
     if fn_index:
         if lang in ("java", "javascript"):
             return specs
-        if lang == "python" and any(e.get("lang") == "python" for e in fn_index.values()):
+        if lang == "python" and _indexes_python(fn_index):
             return specs
     if lang == "java" and any(t in content for t in _JAVA_FRAMEWORK_TOKENS):
         return specs

@@ -29,6 +29,7 @@ import itertools
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 _D38 = "decimal(38,0)"
 
@@ -38,15 +39,20 @@ PAGERANK_SCALE = 10**12
 # on a new plan silently never completes) — monotonic suffix per call site
 _OBS_SEQ = itertools.count()
 
-# The small-input escape hatch of PageRank (global and personalized),
-# connected components and BFS, one rule for all four: when the edge
-# count — an ``observe`` metric on the operator's own edge checkpoint, so
-# no extra job decides — is at most this (read at call time; patch it to
-# 0 to force the distributed route), the edges come over Arrow and the
-# identical algorithm runs on the driver instead of one fixed-cost Spark
-# job per round (20 component rounds measured 8.2 s at sf0.1's 83 k
-# edges, round 5). The distributed path is the DESIGN (a 100 TB near-dup
-# graph has billions of edges). Both routes are pytest-gated identical.
+# The small-graph rule, one for all seven driver routes (PageRank global
+# and personalized, components, BFS, label propagation, triangles,
+# 4-cycles, HyperBall), applied by `_small_graph` and read at call time
+# (patch it to 0 to force the distributed route): the operator's own edge
+# checkpoint observes its row count and its rows with a NULL endpoint in
+# the checkpoint's own job, so no extra job decides. At most this many
+# edges and no NULL endpoint, the edges come over Arrow and the identical
+# algorithm runs on the driver instead of one fixed-cost Spark job per
+# round (20 component rounds measured 8.2 s at sf0.1's 83 k edges, round
+# 5). The wedge kernels (triangles, 4-cycles, HyperBall's exact balls)
+# walk length-2 paths, so their driver cost grows with the wedges, not the
+# edges: they also need Σ_v d_v² over the undirected simple graph at most
+# this. The distributed path is the DESIGN (a 100 TB near-dup graph has
+# billions of edges). Both routes are pytest-gated identical.
 DRIVER_CC_MAX_EDGES = 2_000_000
 
 
@@ -70,22 +76,94 @@ def _collect_pairs(df: DataFrame) -> list:
     tuples via the Arrow path (`toPandas`) — row-based ``collect()`` builds
     one Row object per record and measured ~4x slower at the 10^5-10^6-row
     sizes the graph driver paths handle (round 6). Null-free inputs only
-    (edge lists are); pandas would surface NULLs as NaN/None unchanged."""
+    (`_small_graph` collects no edge list with a NULL endpoint); pandas
+    would surface NULLs as NaN/None unchanged."""
     pdf = df.toPandas()
     a, b = pdf.columns[0], pdf.columns[1]
     return list(zip(pdf[a].tolist(), pdf[b].tolist()))
 
 
-def _driver_frame(spark, rows: list, schema) -> DataFrame:
-    """A driver route's result rows as a DataFrame, over Arrow (a pandas
-    frame, not a tuple list: near the 2M-edge threshold the pickle path
-    would cost ~20 s of driver serialization and hand the advantage
-    back)."""
+def _driver_frame(spark, rows, schema) -> DataFrame:
+    """A driver route's result — a list of row tuples, or a dict of
+    columns by name — as a DataFrame, over Arrow (a pandas frame, not a
+    tuple list: near the 2M-edge threshold the pickle path would cost ~20
+    s of driver serialization and hand the advantage back)."""
     import pandas as pd
 
     if not rows:
         return spark.createDataFrame([], schema)
     return spark.createDataFrame(pd.DataFrame(rows, columns=schema.fieldNames()), schema)
+
+
+def _long(name: str) -> StructField:
+    """A long column of a driver route's hand-built result schema."""
+    return StructField(name, LongType())
+
+
+def _small_graph(df: DataFrame, name: str, *metrics, wedges: bool = False):
+    """The small-graph gate (see ``DRIVER_CC_MAX_EDGES``): checkpoint the
+    (src, dst) edge list ``df``, observing ``n`` (rows), ``n_null`` (rows
+    with a NULL endpoint) and ``metrics`` in the checkpoint's own job.
+    Returns (checkpoint, metrics, pairs). ``pairs`` is the collected edge
+    list when 0 < n <= DRIVER_CC_MAX_EDGES, no endpoint is NULL and, for a
+    wedge kernel (``wedges``), `_wedge_load` is at most the same bound; the
+    caller then unpersists the checkpoint when done with it. Otherwise
+    ``pairs`` is None and the caller runs its distributed route on the
+    checkpoint."""
+    nulls = F.col("src").isNull() | F.col("dst").isNull()
+    e, got = _ckpt_observed(
+        df, name, F.count(F.lit(1)).alias("n"), F.count_if(nulls).alias("n_null"), *metrics
+    )
+    if not 0 < got["n"] <= DRIVER_CC_MAX_EDGES or got["n_null"]:
+        return e, got, None
+    pairs = _collect_pairs(e)
+    if wedges and _wedge_load(pairs) > DRIVER_CC_MAX_EDGES:
+        return e, got, None
+    return e, got, pairs
+
+
+def _simple_codes(pairs, ordered: bool = False):
+    """(nodes, a, b): the distinct endpoints of ``pairs`` and the
+    undirected simple graph as int64 positions in ``nodes``, a < b, each
+    edge once. ``ordered`` sorts ``nodes`` as Spark orders them (Python
+    orders str by code point, Spark by UTF-8 bytes: the same); it costs a
+    sort of every node id, which only a kernel that compares ids needs."""
+    import numpy as np
+    import pandas as pd
+
+    ends = pd.Series([s for s, _ in pairs] + [d for _, d in pairs], dtype=object)
+    codes, nodes = pd.factorize(ends, sort=ordered)
+    m, n = len(pairs), len(nodes)
+    src, dst = codes[:m].astype(np.int64), codes[m:].astype(np.int64)
+    loop = src == dst
+    key = np.unique(np.minimum(src, dst)[~loop] * n + np.maximum(src, dst)[~loop])
+    return nodes.tolist(), key // n, key % n
+
+
+def _wedge_load(pairs) -> int:
+    """Σ_v d_v² over the undirected simple graph of ``pairs``: the bound
+    on the length-2 paths a wedge kernel walks (2 × wedges + edges × 2)."""
+    import numpy as np
+
+    nodes, a, b = _simple_codes(pairs)
+    deg = np.bincount(np.concatenate([a, b]), minlength=len(nodes))
+    return int((deg * deg).sum())
+
+
+def _wedges(center, member, n: int):
+    """(c, x, y): every pair of ``member`` entries that share a ``center``
+    (the (center, member) rows of a simple adjacency over n nodes), once,
+    x < y, with the center. Vectorized: the rows are grouped by center
+    and each row pairs with every later row of its group."""
+    import numpy as np
+
+    order = np.lexsort((member, center))
+    member, center = member[order], center[order]
+    row = np.arange(len(member))
+    after = np.cumsum(np.bincount(center, minlength=n))[center] - row - 1
+    first = np.cumsum(after) - after
+    partner = np.arange(int(after.sum())) - np.repeat(first - row - 1, after)
+    return np.repeat(center, after), np.repeat(member, after), member[partner]
 
 
 def _undirected(edges: DataFrame) -> DataFrame:
@@ -239,12 +317,11 @@ def _fixed_point_rank(
         raise ValueError(
             f"pagerank scale {scale} * damping_pct {damping_pct} must stay under 2**63"
         )
-    e, m = _ckpt_counted(edges.select("src", "dst").distinct(), "pagerank_edges")
+    e, got, edge_rows = _small_graph(edges.select("src", "dst").distinct(), "pagerank_edges")
     empty = e.select(F.col("src").alias("node"), F.lit(0).cast("long").alias("rank"))
-    if m == 0 and seeds is None:
+    if got["n"] == 0 and seeds is None:
         return empty
-    if 0 < m <= DRIVER_CC_MAX_EDGES:
-        edge_rows = _collect_pairs(e)
+    if edge_rows is not None:
         e.unpersist()
         seed_set = None if seeds is None else {
             r[0] for r in seeds.select("node").distinct().collect()
@@ -449,13 +526,10 @@ def _star_components(edges: DataFrame, max_rounds: int):
             )
         return out.filter(F.col("src") != F.col("dst")).distinct()
 
+    xor = F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h")
+
     def _ckpt_with_fp(df: DataFrame):
-        df, got = _ckpt_observed(
-            df,
-            "cc_fingerprint",
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-        )
+        df, got = _ckpt_observed(df, "cc_fingerprint", F.count(F.lit(1)).alias("n"), xor)
         return df, (got["n"], got["h"])
 
     # no up-front .distinct(): the driver union-find dedups implicitly,
@@ -464,11 +538,11 @@ def _star_components(edges: DataFrame, max_rounds: int):
     # would need identical counts AND xor — impossible when dups were
     # dropped, astronomically unlikely otherwise). Saves one full shuffle
     # of the edge list per call (round 6).
-    cur, prev_fp = _ckpt_with_fp(edges.select("src", "dst"))
-    if 0 < prev_fp[0] <= DRIVER_CC_MAX_EDGES:
-        pairs = _driver_union_find(_collect_pairs(cur))
+    cur, got, pairs = _small_graph(edges.select("src", "dst"), "cc_fingerprint", xor)
+    prev_fp = (got["n"], got["h"])
+    if pairs is not None:
         cur.unpersist()
-        return _driver_frame(edges.sparkSession, pairs, cur.schema), True
+        return _driver_frame(edges.sparkSession, _driver_union_find(pairs), cur.schema), True
     for _ in range(max_rounds):
         if prev_fp[0] == 0:
             return cur, True
@@ -502,8 +576,16 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     expensive upstream — the LSH → jaccard-verify pipeline feeding
     dedup_triangles — would otherwise be recomputed per branch (measured
     14.7 s warm at sf0.1 before, 6.0 s after — the remainder is the one
-    LSH → verify pass the query genuinely needs; identical output)."""
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
+    LSH → verify pass the query genuinely needs; identical output).
+
+    Small graphs (the `_small_graph` gate, wedge bound included) count on
+    the driver with `_driver_triangles` over the entry checkpoint: two
+    Spark jobs per call instead of one per join stage."""
+    e, _, pairs = _small_graph(edges.select("src", "dst"), "triangle_edges", wedges=True)
+    if pairs is not None:
+        e.unpersist()
+        schema = StructType([StructField("node", edges.schema["src"].dataType), _long("n_triangles")])
+        return _driver_frame(edges.sparkSession, _driver_triangles(pairs), schema)
     triangles = _triangle_list(_undirected(e))
     verts = (
         triangles.select(F.col("w0").alias("node"))
@@ -514,6 +596,26 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     return _endpoints(e).join(counts, "node", "left").select(
         "node", F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n_triangles")
     )
+
+
+def _driver_triangles(pairs) -> list:
+    """(node, n_triangles) for every endpoint of ``pairs``, zero-filled:
+    `_triangle_list`'s degree-ordered orientation over int64 numpy arrays.
+    A triangle is the one wedge at its lowest vertex whose two oriented
+    out-neighbors are joined by an edge (looked up by ``searchsorted`` in
+    the sorted edge keys)."""
+    import numpy as np
+
+    nodes, a, b = _simple_codes(pairs)
+    n = len(nodes)
+    deg = np.bincount(np.concatenate([a, b]), minlength=n)
+    a_first = (deg[a] < deg[b]) | ((deg[a] == deg[b]) & (a < b))
+    u, x, y = _wedges(np.where(a_first, a, b), np.where(a_first, b, a), n)
+    keys = a * n + b
+    probe = np.minimum(x, y) * n + np.maximum(x, y)
+    closed = keys[np.minimum(np.searchsorted(keys, probe), len(keys) - 1)] == probe
+    tri = np.bincount(np.concatenate([u[closed], x[closed], y[closed]]), minlength=n)
+    return list(zip(nodes, tri.tolist()))
 
 
 def _triangle_list(und: DataFrame) -> DataFrame:
@@ -874,10 +976,10 @@ def bfs_distances(
     for billions-edge graphs."""
     e = edges.select("src", "dst")
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))) if undirected else e
-    sym, m = _ckpt_counted(sym.distinct(), "bfs_edges")
-    if 0 < m <= DRIVER_CC_MAX_EDGES:
+    sym, _, pairs = _small_graph(sym.distinct(), "bfs_edges")
+    if pairs is not None:
         adj = {}
-        for s, d in _collect_pairs(sym):
+        for s, d in pairs:
             adj.setdefault(s, []).append(d)
         dist = {r[0]: 0 for r in seeds.select("node").distinct().collect()}
         frontier = list(dist)
@@ -892,7 +994,7 @@ def bfs_distances(
             frontier = nxt
         sym.unpersist()
         schema = seeds.select("node").withColumn("hops", F.lit(0).cast("long")).schema
-        return _driver_frame(edges.sparkSession, sorted(dist.items()), schema)
+        return _driver_frame(edges.sparkSession, list(dist.items()), schema)
 
     dist, _ = _ckpt_counted(
         seeds.select("node").distinct().withColumn("hops", F.lit(0)), "bfs_frontier"
@@ -974,8 +1076,18 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     edges are self-loops has no neighbors in the simple graph and keeps
     its own label — but it must still get a row ("every node
     starts labeled with its own id"), so such nodes are appended after
-    the sweeps rather than silently omitted."""
-    adj = _adjacency(_undirected(edges)).localCheckpoint(eager=True)
+    the sweeps rather than silently omitted.
+
+    Small graphs (the `_small_graph` gate) run the same sweeps on the
+    driver (`_driver_label_propagation`): two Spark jobs per call instead
+    of ~6 per round."""
+    e, _, pairs = _small_graph(edges.select("src", "dst"), "lpa_edges")
+    if pairs is not None:
+        e.unpersist()
+        t = edges.schema["src"].dataType
+        schema = StructType([StructField("node", t), StructField("label", t)])
+        return _driver_frame(edges.sparkSession, _driver_label_propagation(pairs, rounds), schema)
+    adj = _adjacency(_undirected(e)).localCheckpoint(eager=True)
     labels = (
         adj.select("node")
         .distinct()
@@ -998,10 +1110,35 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
         )
         labels.unpersist()
         labels = new_labels
-    isolated = _endpoints(edges).join(labels, "node", "left_anti").withColumn(
+    isolated = _endpoints(e).join(labels, "node", "left_anti").withColumn(
         "label", F.col("node")
     )
     return labels.unionByName(isolated)
+
+
+def _driver_label_propagation(pairs, rounds: int) -> list:
+    """(node, label) for every endpoint of ``pairs``: `label_propagation`'s
+    synchronous sweeps over int64 numpy arrays. Labels are positions in
+    the sorted node list, so the minimum position is the minimum label a
+    tie takes. A round counts (node, neighbor label) pairs with
+    ``np.unique`` and keeps, per node, the first row in (node, -count,
+    label) order. A node without neighbors in the simple graph keeps its
+    own label."""
+    import numpy as np
+
+    nodes, a, b = _simple_codes(pairs, ordered=True)
+    n = len(nodes)
+    node, neigh = np.concatenate([a, b]), np.concatenate([b, a])
+    label = np.arange(n, dtype=np.int64)
+    for _ in range(rounds):
+        key, count = np.unique(node * n + label[neigh], return_counts=True)
+        v, lab = key // n, key % n
+        order = np.lexsort((lab, -count, v))
+        v, lab = v[order], lab[order]
+        first = np.ones(len(v), dtype=bool)
+        first[1:] = v[1:] != v[:-1]
+        label[v[first]] = lab[first]
+    return list(zip(nodes, [nodes[i] for i in label.tolist()]))
 
 
 def two_hop_paths(
@@ -1075,17 +1212,7 @@ def hyperball_registers(
     endpoint missing from ``nodes`` would otherwise have no initial
     self-register and its neighbors' sketches would silently miss it,
     breaking the law above (``exact_ball`` normalizes identically)."""
-    m = 1 << p
-    maxrho = 32 - p + 1
-    h = _hash32(F.col("node").cast("string"))
-    rem = F.floor(h / m)
-    rho = F.when(rem == 0, F.lit(maxrho)).otherwise(
-        F.lit(32 - p) - F.length(F.bin(rem)) + 1
-    )
-    universe = _node_universe(edges, nodes)
-    regs = universe.select(
-        "node", (h % m).alias("bucket"), rho.cast("int").alias("r")
-    )
+    regs = _initial_registers(_node_universe(edges, nodes), p)
     for _ in range(rounds):
         prop = edges.join(
             regs.withColumnRenamed("node", "dst"), "dst"
@@ -1096,6 +1223,20 @@ def hyperball_registers(
             .agg(F.max("r").alias("r"))
         )
     return regs
+
+
+def _initial_registers(universe: DataFrame, p: int) -> DataFrame:
+    """(node, bucket, r): R_0, each node's register in the sketch of
+    itself — bucket the low ``p`` bits of `_hash32`, r the rank of the
+    rest's leading one."""
+    m = 1 << p
+    maxrho = 32 - p + 1
+    h = _hash32(F.col("node").cast("string"))
+    rem = F.floor(h / m)
+    rho = F.when(rem == 0, F.lit(maxrho)).otherwise(
+        F.lit(32 - p) - F.length(F.bin(rem)) + 1
+    )
+    return universe.select("node", (h % m).alias("bucket"), rho.cast("int").alias("r"))
 
 
 def _node_universe(edges: DataFrame, nodes: DataFrame) -> DataFrame:
@@ -1147,7 +1288,26 @@ def hyperball_neighborhoods(
       read-time computation.
 
     At 100 TB only the register half runs (rounds bounded, state linear in
-    nodes); the exact half is the benchmark-scale witness."""
+    nodes); the exact half is the benchmark-scale witness.
+
+    Small graphs (the `_small_graph` gate; the wedge bound covers the
+    exact 2-hop balls) run both halves on the driver
+    (`_driver_hyperball`) from R_0 as Spark computes it, collected from
+    the universe over the edge checkpoint: the checkpoint, the edges'
+    collect and R_0's are the only Spark jobs."""
+    e, _, pairs = _small_graph(edges.select("src", "dst"), "hyperball_edges", wedges=True)
+    if pairs is not None:
+        r0 = _initial_registers(_node_universe(e, nodes), p).where(F.col("node").isNotNull())
+        regs0 = r0.toPandas()
+        e.unpersist()
+        schema = StructType(
+            [StructField("node", r0.schema["node"].dataType), *map(_long, _HYPERBALL_COLS)]
+        )
+        rows = _driver_hyperball(
+            pairs, regs0["node"].tolist(), regs0["bucket"].to_numpy(), regs0["r"].to_numpy(), p
+        )
+        return _driver_frame(edges.sparkSession, rows, schema)
+    edges = e
     m = 1 << p
     maxrho = 32 - p + 1
     regs = hyperball_registers(edges, nodes, p=p, rounds=2)
@@ -1184,11 +1344,61 @@ def hyperball_neighborhoods(
             ).cast("long"),
         )
         .join(summ, "node")
-        .select(
-            "node", "ball1_exact", "ball2_exact", "harmonic_x2", "m",
-            "used_regs", "zero_regs", "sum_rho", "harmonic_scaled",
-        )
+        .select("node", *_HYPERBALL_COLS)
     )
+
+
+_HYPERBALL_COLS = (
+    "ball1_exact", "ball2_exact", "harmonic_x2", "m",
+    "used_regs", "zero_regs", "sum_rho", "harmonic_scaled",
+)
+
+
+def _driver_hyperball(pairs, nodes: list, bucket, r, p: int) -> dict:
+    """`hyperball_neighborhoods`' columns on the driver, over int64 numpy
+    arrays: ``nodes`` is the universe and (``bucket``, ``r``) its R_0.
+    Self-loops and repeated edges change no ball and no register, so the
+    kernel runs on the distinct non-loop (src, dst) edges, src-sorted.
+    Registers are an (n, 2^p) int8 array, 0 where absent; a round max-merges
+    each node's out-neighbors' registers (``np.maximum.reduceat``). ball1
+    is self plus the out-degree; ball2 counts the distinct members of
+    ball1 ∪ every out-neighbor's out-list, listed by ``np.repeat``."""
+    import numpy as np
+    import pandas as pd
+
+    m, maxrho, n = 1 << p, 32 - p + 1, len(nodes)
+    # factorize numbers values by first appearance: nodes[i] is code i
+    ends = pd.Series(nodes + [v for pair in pairs for v in pair], dtype=object)
+    codes = pd.factorize(ends)[0][n:]
+    src, dst = codes[0::2].astype(np.int64), codes[1::2].astype(np.int64)
+    key = np.unique(src[src != dst] * n + dst[src != dst])
+    src, dst = key // n, key % n
+    heads, starts = np.unique(src, return_index=True)
+    regs = np.zeros((n, m), dtype=np.int8)  # r <= maxrho <= 32
+    regs[np.arange(n), bucket] = r
+    for _ in range(2):
+        regs[heads] = np.maximum(regs[heads], np.maximum.reduceat(regs[dst], starts))
+    used = (regs > 0).sum(axis=1)
+    out_deg = np.bincount(src, minlength=n)
+    # the out-list of each edge's head, row by row: edge (v, u) lists out(u)
+    first = np.cumsum(out_deg) - out_deg
+    fan = out_deg[dst]
+    hop2 = np.repeat(first[dst] - (np.cumsum(fan) - fan), fan) + np.arange(int(fan.sum()))
+    self_key = np.arange(n) * (n + 1)
+    ball2 = np.unique(np.concatenate([self_key, key, np.repeat(src, fan) * n + dst[hop2]]))
+    b1, b2 = out_deg + 1, np.bincount(ball2 // n, minlength=n)
+    return {
+        "node": nodes,
+        "ball1_exact": b1,
+        "ball2_exact": b2,
+        "harmonic_x2": 2 * (b1 - 1) + (b2 - b1),
+        "m": np.full(n, m),
+        "used_regs": used,
+        "zero_regs": m - used,
+        "sum_rho": regs.sum(axis=1, dtype=np.int64),
+        # an absent register (0) adds 2^maxrho, the read-time convention
+        "harmonic_scaled": (1 << (maxrho - regs.astype(np.int64))).sum(axis=1),
+    }
 
 
 def degree_mixing_stats(edges: DataFrame) -> DataFrame:
@@ -1549,8 +1759,15 @@ def four_cycle_census(edges: DataFrame) -> DataFrame:
     undercount instead. The 4-cycle count is the standard bipartite-
     core/spam-farm signal the triangle census is blind to (bipartite
     graphs have zero triangles but abundant rectangles).
-    """
-    adj = _adjacency(_undirected(edges).localCheckpoint(eager=True))
+
+    Small graphs (the `_small_graph` gate, wedge bound included) run the
+    census on the driver (`_driver_four_cycles`)."""
+    e, _, pairs = _small_graph(edges.select("src", "dst"), "c4_edges", wedges=True)
+    if pairs is not None:
+        e.unpersist()
+        schema = StructType([_long("n_copair_rows"), _long("n_wedges"), _long("n_four_cycles")])
+        return _driver_frame(edges.sparkSession, [_driver_four_cycles(pairs)], schema)
+    adj = _adjacency(_undirected(e))
     x, y = adj.alias("x"), adj.alias("y")
     copairs = (
         x.join(
@@ -1572,6 +1789,22 @@ def four_cycle_census(edges: DataFrame) -> DataFrame:
         "n_wedges",
         F.expr("cast(_diag div 2 as long)").alias("n_four_cycles"),
     )
+
+
+def _driver_four_cycles(pairs) -> tuple:
+    """`four_cycle_census`'s one row over int64 numpy arrays: `_wedges`
+    lists every co-neighbor pair (x, y) at each shared neighbor, and
+    ``np.unique`` counts each pair's codegree. No wedge gives the
+    distributed route's row over no co-pairs: (0, NULL, NULL)."""
+    import numpy as np
+
+    nodes, a, b = _simple_codes(pairs)
+    n = len(nodes)
+    _, x, y = _wedges(np.concatenate([b, a]), np.concatenate([a, b]), n)
+    if len(x) == 0:
+        return 0, None, None
+    _, codeg = np.unique(x * n + y, return_counts=True)
+    return len(codeg), len(x), int((codeg * (codeg - 1) // 2).sum()) // 2
 
 
 def walk_counts(edges: DataFrame, rounds: int = 3, alpha_inv: int = 4) -> DataFrame:

@@ -337,11 +337,14 @@ def test_simhash_pairs_join_is_banded_equi(spark):
     assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
 
 
-def test_triangle_counting_is_equi_join_only(spark):
+def test_triangle_counting_is_equi_join_only(spark, monkeypatch):
     """Degree-ordered triangle counting: wedge generation and closure are
-    equi-joins (plus an inequality residual) — no Cartesian anywhere."""
+    equi-joins (plus an inequality residual) — no Cartesian anywhere. The
+    distributed route is forced: a small graph would run on the driver."""
     import __spark_entry__ as E
+    from dr_source_spark.operators import graph
 
+    monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)
     plan = _plan(E.queries()["kg_triangles"](spark, SF))
     assert "CartesianProduct" not in plan
 
@@ -467,13 +470,16 @@ def test_incremental_dedup_backfill_mode_shuffled_equi(spark):
     assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
 
 
-def test_hyperball_propagation_equi_joins_only(spark):
+def test_hyperball_propagation_equi_joins_only(spark, monkeypatch):
     """HyperBall's per-round register propagation is an equi-join on the
     edge endpoint plus a max-aggregate; the exact-ball witness joins on
     the member key. No Cartesian/BNLJ anywhere — an all-pairs shape here
-    would be fatal on a 10^12-edge graph."""
+    would be fatal on a 10^12-edge graph. The distributed route is
+    forced: a small graph would run on the driver."""
+    from dr_source_spark.operators import graph
     from dr_source_spark.operators.graph import hyperball_neighborhoods
 
+    monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (3, 2)], "src long, dst long"
     )

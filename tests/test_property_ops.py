@@ -262,12 +262,24 @@ _LONE_ROW = {
 }
 
 
+# the operators with a small-graph driver route (or built on one) run on
+# both routes: at the default DRIVER_CC_MAX_EDGES (driver) and at 0
+_BOTH_ROUTES = (
+    "triangle_counts", "four_cycle_census", "label_propagation",
+    "transitivity_global", "clustering_coefficients",
+)
+
+
 def _rows_key(row):
     return tuple(map(str, row))
 
 
-@pytest.mark.parametrize("name", list(_NORMAL_FORM_OPS))
-def test_graph_ops_see_the_simple_graph(spark, name):
+@pytest.mark.parametrize(
+    "name, cutoff",
+    [pytest.param(n, None, id=n) for n in _NORMAL_FORM_OPS]
+    + [pytest.param(n, 0, id=f"{n}-distributed") for n in _BOTH_ROUTES],
+)
+def test_graph_ops_see_the_simple_graph(spark, monkeypatch, name, cutoff):
     """The normal form, operator by operator: on random edges, the output
     equals the output on the same edges plus duplicate rows, self-loops on
     their nodes and (for the undirected operators) reversed copies — value
@@ -275,6 +287,8 @@ def test_graph_ops_see_the_simple_graph(spark, name):
     graph, but the operators that list every endpoint give it a row."""
     from dr_source_spark.operators import graph
 
+    if cutoff is not None:
+        monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", cutoff)
     op, directed = _NORMAL_FORM_OPS[name]
     rng = random.Random(sum(map(ord, name)))
     n = rng.randrange(8, 14)

@@ -124,3 +124,31 @@ def test_regex_line_screen_is_exact(corpus, request):
         assert got == brute(content, ext), f"screen changed output for ext {ext}"
         checked += 1
     assert checked > 20
+
+
+def test_java_templates_without_framework_sinks_screen():
+    """The App and DbHelper synth templates reach SQL through
+    ``executeQuery`` and name no framework mapper (a Spring sink needs the
+    ``jdbcTemplate`` receiver), so the Java tier screens their categories
+    instead of walking every one."""
+    from dr_source_spark.sources.synth import _TEMPLATES, render_template
+
+    specs = CKB.taint["java"]
+    screened = {}
+    for tpl, (_lang, path, _body) in enumerate(_TEMPLATES):
+        name, content = render_template(tpl, 9, "token")
+        if path.startswith(("src/App", "src/DbHelper")):
+            screened[name] = len(screen_ast_specs("java", specs, content, None))
+    assert len(screened) == 2 and all(0 < n < len(specs) for n in screened.values()), screened
+
+
+def test_python_index_check_follows_the_index_object():
+    """Whether an index holds Python defs is decided once per index
+    object, and a different index is read afresh."""
+    specs = CKB.taint["python"]
+    content = "import os\n"
+    java_only = {"f": {"lang": "java"}}
+    with_py = {"f": {"lang": "java"}, "g": {"lang": "python"}}
+    for _ in range(2):
+        assert screen_ast_specs("python", specs, content, java_only) != specs
+        assert screen_ast_specs("python", specs, content, with_py) == specs
