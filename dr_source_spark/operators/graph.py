@@ -50,9 +50,17 @@ _OBS_SEQ = itertools.count()
 # round (20 component rounds measured 8.2 s at sf0.1's 83 k edges, round
 # 5). The wedge kernels (triangles, 4-cycles, HyperBall's exact balls)
 # walk length-2 paths, so their driver cost grows with the wedges, not the
-# edges: they also need Σ_v d_v² over the undirected simple graph at most
-# this. The distributed path is the DESIGN (a 100 TB near-dup graph has
-# billions of edges). Both routes are pytest-gated identical.
+# edges: `_wedge_graph` also holds Σ_v d_v² over the undirected simple
+# graph to this. That half is a size bound, not a speed crossover: Σ d² is
+# at least twice the simple edges, so it caps the wedge work at the size
+# the edge half admits. Measured on 4 cores (200 k random edges, warm),
+# the driver route beat the distributed one at every load tried, Σ d²
+# 1.2 M to 16.3 M (4-cycles 1.1 vs 14 s at 16.3 M); a kernel's peak
+# traced allocation was at most ~70 bytes per unit of Σ d² (HyperBall,
+# 83 MB at 1.2 M; 4-cycles 480 MB at 16.3 M), so ~140 MB at this bound.
+# HyperBall's nodes on no edge never reach the driver. The distributed
+# path is the DESIGN (a 100 TB near-dup graph has billions of edges).
+# Both routes are pytest-gated identical.
 DRIVER_CC_MAX_EDGES = 2_000_000
 
 
@@ -100,26 +108,23 @@ def _long(name: str) -> StructField:
     return StructField(name, LongType())
 
 
-def _small_graph(df: DataFrame, name: str, *metrics, wedges: bool = False):
+def _small_graph(df: DataFrame, name: str, *metrics):
     """The small-graph gate (see ``DRIVER_CC_MAX_EDGES``): checkpoint the
     (src, dst) edge list ``df``, observing ``n`` (rows), ``n_null`` (rows
     with a NULL endpoint) and ``metrics`` in the checkpoint's own job.
     Returns (checkpoint, metrics, pairs). ``pairs`` is the collected edge
-    list when 0 < n <= DRIVER_CC_MAX_EDGES, no endpoint is NULL and, for a
-    wedge kernel (``wedges``), `_wedge_load` is at most the same bound; the
+    list when 0 < n <= DRIVER_CC_MAX_EDGES and no endpoint is NULL; the
     caller then unpersists the checkpoint when done with it. Otherwise
     ``pairs`` is None and the caller runs its distributed route on the
-    checkpoint."""
+    checkpoint. A wedge kernel also passes ``pairs`` through
+    `_wedge_graph`."""
     nulls = F.col("src").isNull() | F.col("dst").isNull()
     e, got = _ckpt_observed(
         df, name, F.count(F.lit(1)).alias("n"), F.count_if(nulls).alias("n_null"), *metrics
     )
     if not 0 < got["n"] <= DRIVER_CC_MAX_EDGES or got["n_null"]:
         return e, got, None
-    pairs = _collect_pairs(e)
-    if wedges and _wedge_load(pairs) > DRIVER_CC_MAX_EDGES:
-        return e, got, None
-    return e, got, pairs
+    return e, got, _collect_pairs(e)
 
 
 def _simple_codes(pairs, ordered: bool = False):
@@ -140,14 +145,26 @@ def _simple_codes(pairs, ordered: bool = False):
     return nodes.tolist(), key // n, key % n
 
 
-def _wedge_load(pairs) -> int:
-    """Σ_v d_v² over the undirected simple graph of ``pairs``: the bound
-    on the length-2 paths a wedge kernel walks (2 × wedges + edges × 2)."""
+def _wedge_load(simple) -> int:
+    """Σ_v d_v² over the undirected simple graph ``simple`` (`_simple_codes`):
+    the bound on the length-2 paths a wedge kernel walks (2 × wedges +
+    edges × 2)."""
     import numpy as np
 
-    nodes, a, b = _simple_codes(pairs)
+    nodes, a, b = simple
     deg = np.bincount(np.concatenate([a, b]), minlength=len(nodes))
     return int((deg * deg).sum())
+
+
+def _wedge_graph(pairs):
+    """The wedge kernels' half of the gate: `_simple_codes` of the pairs
+    `_small_graph` collected, built once for both the bound and the
+    kernel, or None when ``pairs`` is None or `_wedge_load` is over
+    ``DRIVER_CC_MAX_EDGES``."""
+    if pairs is None:
+        return None
+    simple = _simple_codes(pairs)
+    return simple if _wedge_load(simple) <= DRIVER_CC_MAX_EDGES else None
 
 
 def _wedges(center, member, n: int):
@@ -581,11 +598,12 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     Small graphs (the `_small_graph` gate, wedge bound included) count on
     the driver with `_driver_triangles` over the entry checkpoint: two
     Spark jobs per call instead of one per join stage."""
-    e, _, pairs = _small_graph(edges.select("src", "dst"), "triangle_edges", wedges=True)
-    if pairs is not None:
+    e, _, pairs = _small_graph(edges.select("src", "dst"), "triangle_edges")
+    simple = _wedge_graph(pairs)
+    if simple is not None:
         e.unpersist()
         schema = StructType([StructField("node", edges.schema["src"].dataType), _long("n_triangles")])
-        return _driver_frame(edges.sparkSession, _driver_triangles(pairs), schema)
+        return _driver_frame(edges.sparkSession, _driver_triangles(*simple), schema)
     triangles = _triangle_list(_undirected(e))
     verts = (
         triangles.select(F.col("w0").alias("node"))
@@ -598,15 +616,15 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
 
 
-def _driver_triangles(pairs) -> list:
-    """(node, n_triangles) for every endpoint of ``pairs``, zero-filled:
-    `_triangle_list`'s degree-ordered orientation over int64 numpy arrays.
+def _driver_triangles(nodes: list, a, b) -> list:
+    """(node, n_triangles) for every node of the simple graph (`_simple_codes`:
+    every endpoint), zero-filled: `_triangle_list`'s degree-ordered
+    orientation over int64 numpy arrays.
     A triangle is the one wedge at its lowest vertex whose two oriented
     out-neighbors are joined by an edge (looked up by ``searchsorted`` in
     the sorted edge keys)."""
     import numpy as np
 
-    nodes, a, b = _simple_codes(pairs)
     n = len(nodes)
     deg = np.bincount(np.concatenate([a, b]), minlength=n)
     a_first = (deg[a] < deg[b]) | ((deg[a] == deg[b]) & (a < b))
@@ -1290,23 +1308,27 @@ def hyperball_neighborhoods(
     At 100 TB only the register half runs (rounds bounded, state linear in
     nodes); the exact half is the benchmark-scale witness.
 
-    Small graphs (the `_small_graph` gate; the wedge bound covers the
-    exact 2-hop balls) run both halves on the driver
-    (`_driver_hyperball`) from R_0 as Spark computes it, collected from
-    the universe over the edge checkpoint: the checkpoint, the edges'
-    collect and R_0's are the only Spark jobs."""
-    e, _, pairs = _small_graph(edges.select("src", "dst"), "hyperball_edges", wedges=True)
-    if pairs is not None:
-        r0 = _initial_registers(_node_universe(e, nodes), p).where(F.col("node").isNotNull())
-        regs0 = r0.toPandas()
+    Small graphs (the `_small_graph` gate; `_wedge_graph`'s bound covers
+    the exact 2-hop balls) run both halves on the driver
+    (`_driver_hyperball`) for the edge endpoints, from their R_0 as
+    Spark's `_initial_registers` computes it over a local frame of the
+    collected endpoints. ``nodes`` on no edge never reach the driver:
+    their rows are `_lone_hyperball`'s, projected in Spark, so a large
+    node table beside few edges is no large driver input. The call's
+    Spark jobs are the checkpoint, the edges' collect and R_0's; the
+    result's Spark-side rows run when it is read."""
+    e, _, pairs = _small_graph(edges.select("src", "dst"), "hyperball_edges")
+    simple = _wedge_graph(pairs)
+    if simple is not None:
         e.unpersist()
-        schema = StructType(
-            [StructField("node", r0.schema["node"].dataType), *map(_long, _HYPERBALL_COLS)]
-        )
+        spark, node = edges.sparkSession, StructField("node", edges.schema["src"].dataType)
+        ends = _driver_frame(spark, {"node": simple[0]}, StructType([node]))
+        regs0 = _initial_registers(ends, p).toPandas()
         rows = _driver_hyperball(
             pairs, regs0["node"].tolist(), regs0["bucket"].to_numpy(), regs0["r"].to_numpy(), p
         )
-        return _driver_frame(edges.sparkSession, rows, schema)
+        near = _driver_frame(spark, rows, StructType([node, *map(_long, _HYPERBALL_COLS)]))
+        return near.unionByName(_lone_hyperball(nodes, near, p))
     edges = e
     m = 1 << p
     maxrho = 32 - p + 1
@@ -1354,9 +1376,39 @@ _HYPERBALL_COLS = (
 )
 
 
+def _lone_hyperball(nodes: DataFrame, near: DataFrame, p: int) -> DataFrame:
+    """`hyperball_neighborhoods`' rows for the non-NULL ``nodes`` absent
+    from ``near`` (the driver route's rows, one per edge endpoint), in
+    closed form: a node on no edge has itself for both balls and its R_0,
+    one register, for its sketch."""
+    m = 1 << p
+    maxrho = 32 - p + 1
+    lone = (
+        nodes.select("node")
+        .where(F.col("node").isNotNull())
+        .join(near.select("node"), "node", "left_anti")
+        .distinct()
+    )
+    one = F.lit(1).cast("long")
+    return _initial_registers(lone, p).select(
+        "node",
+        one.alias("ball1_exact"),
+        one.alias("ball2_exact"),
+        F.lit(0).cast("long").alias("harmonic_x2"),
+        F.lit(m).cast("long").alias("m"),
+        one.alias("used_regs"),
+        F.lit(m - 1).cast("long").alias("zero_regs"),
+        F.col("r").cast("long").alias("sum_rho"),
+        (
+            F.pow(F.lit(2), F.lit(maxrho) - F.col("r")).cast("long") + F.lit((m - 1) << maxrho)
+        ).alias("harmonic_scaled"),
+    )
+
+
 def _driver_hyperball(pairs, nodes: list, bucket, r, p: int) -> dict:
     """`hyperball_neighborhoods`' columns on the driver, over int64 numpy
-    arrays: ``nodes`` is the universe and (``bucket``, ``r``) its R_0.
+    arrays: ``nodes`` holds every endpoint of ``pairs`` and (``bucket``,
+    ``r``) is its R_0.
     Self-loops and repeated edges change no ball and no register, so the
     kernel runs on the distinct non-loop (src, dst) edges, src-sorted.
     Registers are an (n, 2^p) int8 array, 0 where absent; a round max-merges
@@ -1762,11 +1814,12 @@ def four_cycle_census(edges: DataFrame) -> DataFrame:
 
     Small graphs (the `_small_graph` gate, wedge bound included) run the
     census on the driver (`_driver_four_cycles`)."""
-    e, _, pairs = _small_graph(edges.select("src", "dst"), "c4_edges", wedges=True)
-    if pairs is not None:
+    e, _, pairs = _small_graph(edges.select("src", "dst"), "c4_edges")
+    simple = _wedge_graph(pairs)
+    if simple is not None:
         e.unpersist()
         schema = StructType([_long("n_copair_rows"), _long("n_wedges"), _long("n_four_cycles")])
-        return _driver_frame(edges.sparkSession, [_driver_four_cycles(pairs)], schema)
+        return _driver_frame(edges.sparkSession, [_driver_four_cycles(*simple)], schema)
     adj = _adjacency(_undirected(e))
     x, y = adj.alias("x"), adj.alias("y")
     copairs = (
@@ -1791,14 +1844,13 @@ def four_cycle_census(edges: DataFrame) -> DataFrame:
     )
 
 
-def _driver_four_cycles(pairs) -> tuple:
-    """`four_cycle_census`'s one row over int64 numpy arrays: `_wedges`
-    lists every co-neighbor pair (x, y) at each shared neighbor, and
-    ``np.unique`` counts each pair's codegree. No wedge gives the
+def _driver_four_cycles(nodes: list, a, b) -> tuple:
+    """`four_cycle_census`'s one row over the simple graph's int64 codes
+    (`_simple_codes`): `_wedges` lists every co-neighbor pair (x, y) at
+    each shared neighbor, and ``np.unique`` counts each pair's codegree. No wedge gives the
     distributed route's row over no co-pairs: (0, NULL, NULL)."""
     import numpy as np
 
-    nodes, a, b = _simple_codes(pairs)
     n = len(nodes)
     _, x, y = _wedges(np.concatenate([b, a]), np.concatenate([a, b]), n)
     if len(x) == 0:

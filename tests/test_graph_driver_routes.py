@@ -125,6 +125,35 @@ def test_hyperball_routes_agree_with_absent_nodes(spark, monkeypatch, typ):
     assert set(extra) <= got and {v for p in rows for v in p} <= got
 
 
+def test_hyperball_driver_holds_only_the_edge_endpoints(spark, monkeypatch):
+    """A node table larger than the bound beside a small edge set: the
+    driver kernel sees the edge endpoints only, the nodes on no edge come
+    from Spark, and the output is the distributed route's."""
+    rows = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "d")]
+    edges = spark.createDataFrame(rows, "src string, dst string")
+    ids = ["a", "c", None, "lone"] + [f"x{i:03d}" for i in range(200)]
+    nodes = spark.createDataFrame([(v,) for v in ids + ids[:50]], "node string")
+    cutoff = 40
+    assert len(ids) > cutoff >= graph._wedge_load(graph._simple_codes(rows))
+
+    def op():
+        return graph.hyperball_neighborhoods(edges, nodes, p=4)
+
+    want = _run(monkeypatch, 0, op)
+    seen = []
+    kernel = graph._driver_hyperball
+
+    def spy(pairs, ns, *rest):
+        seen.append(ns)
+        return kernel(pairs, ns, *rest)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(graph, "_driver_hyperball", spy)
+        got = _run(monkeypatch, cutoff, op)
+    assert got == want and len(got[1]) == len(ids) - 1 + 2
+    assert [sorted(ns) for ns in seen] == [["a", "b", "c", "d"]]
+
+
 def test_wedge_bound_sends_wedge_kernels_to_the_distributed_route(spark, monkeypatch):
     """With the bound at the edge count, a graph whose Σ d² exceeds it
     runs the wedge kernels (triangles, 4-cycles, HyperBall) distributed
@@ -134,8 +163,8 @@ def test_wedge_bound_sends_wedge_kernels_to_the_distributed_route(spark, monkeyp
     und = [(f"h{h}", f"l{i}") for h in range(2) for i in range(12)] + [("l0", "l1"), ("l2", "l3")]
     edges = spark.createDataFrame(und, "src string, dst string")
     nodes = spark.createDataFrame([("h0",)], "node string")
-    pairs = [tuple(r) for r in und]
-    assert len(und) < graph._wedge_load(pairs)
+    load = graph._wedge_load(graph._simple_codes([tuple(r) for r in und]))
+    assert len(und) < load
     wedge_ops = {
         "_driver_triangles": lambda: graph.triangle_counts(edges),
         "_driver_four_cycles": lambda: graph.four_cycle_census(edges),
@@ -146,7 +175,7 @@ def test_wedge_bound_sends_wedge_kernels_to_the_distributed_route(spark, monkeyp
         with monkeypatch.context() as mp:
             mp.setattr(graph, kernel, lambda *a: pytest.fail(f"{kernel} ran over the wedge bound"))
             assert _run(monkeypatch, len(und), op) == want
-        assert _run(monkeypatch, graph._wedge_load(pairs), op) == want
+        assert _run(monkeypatch, load, op) == want
 
     def lpa():
         return graph.label_propagation(edges, rounds=2)
@@ -163,14 +192,16 @@ def test_wedge_load_is_sum_of_squared_simple_degrees():
     """Σ_v d_v² counts each undirected simple edge once per endpoint:
     duplicates, reversed copies and self-loops add nothing."""
     pairs = [("a", "b"), ("b", "a"), ("a", "b"), ("a", "c"), ("c", "c"), ("d", "d")]
-    assert graph._wedge_load(pairs) == 2 * 2 + 1 + 1
+    assert graph._wedge_load(graph._simple_codes(pairs)) == 2 * 2 + 1 + 1
 
 
 # jobs per call, result collected, on a ~1 k-edge graph: the gate's
 # checkpoint (two where it takes a distinct: the shuffle stage is its own
 # job), the Arrow collect of the edges, and any other driver-side input
-# (BFS's seeds, HyperBall's R_0 over the node universe: a distinct each).
-# The result is a local relation: collecting it runs no job.
+# (BFS's seeds: a distinct; HyperBall's R_0 over the endpoints, from a
+# local frame). The result is a local relation, whose collect runs no
+# job, except HyperBall's rows for the nodes on no edge: a broadcast
+# anti-join and a distinct, three jobs.
 _JOBS = {
     "pagerank_fixed_point": 3,
     "alternating_star_components": 2,
@@ -178,7 +209,7 @@ _JOBS = {
     "triangle_counts": 2,
     "four_cycle_census": 2,
     "label_propagation": 2,
-    "hyperball_neighborhoods": 4,
+    "hyperball_neighborhoods": 6,
 }
 
 
