@@ -182,7 +182,17 @@ def ensure_min_parallelism(
 
     So a 10-file commit (~4 KB) runs as the 1 task it arrives in, with no
     shuffle, and an input that already arrives as cores splits skips the
-    content shuffle."""
+    content shuffle.
+
+    The floor and the 16 KB crossover above were measured while every warm
+    task also paid ~0.1-0.2 s in PySpark's per-task
+    ``importlib.invalidate_caches()``, re-reading ``pyspark.zip`` and the
+    spark-core jar (see deploy.drop_zip_finders, which now removes it).
+    Re-measured on the same box over 2000 ingested synth files in one
+    parquet split (median of 9, one probe per side): the identity floor
+    0.29 -> 0.17 s as 1 task and 0.43 -> 0.22 s hashed to 4; the detector
+    as 1 task 0.69 -> 0.45 s. Widening now costs less, so the crossover may
+    sit lower; DETECTOR_TASK_BYTES has not been re-swept."""
     target = df.sparkSession.sparkContext.defaultParallelism
     size = _plan_size_bytes(df) if task_bytes else None
     if size is not None:
@@ -416,7 +426,7 @@ def run_detectors(
     emit_tier_errors: append one sentinel row (plugin = TIER_ERROR_PLUGIN)
     per swallowed tier failure/timeout so parse failures become an
     observable metric at corpus scale (pipeline.extract splits them off)."""
-    from ..deploy import ensure_shipped
+    from ..deploy import drop_zip_finders, ensure_shipped
 
     spark = files_df.sparkSession
     ensure_shipped(spark)
@@ -453,6 +463,7 @@ def run_detectors(
     )
 
     def process_arrow(batches):
+        drop_zip_finders()
         ckb_local = ckb_bc.value
         fn_index = fn_index_broadcast.value if fn_index_broadcast is not None else None
         for batch in batches:
@@ -470,5 +481,7 @@ def run_detectors(
                 )
             arrays = [pa.array([r[f.name] for r in rows], type=f.type) for f in arrow_schema]
             yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+        # the first batch may have imported more from the archives
+        drop_zip_finders()
 
     return narrow.mapInArrow(process_arrow, FINDINGS_FULL)

@@ -75,7 +75,7 @@ def _js_defs(content: str) -> List[Dict[str, Any]]:
 
 def build_symbol_index(files_df: DataFrame, include_python: bool = False) -> DataFrame:
     """→ PROJECT_INDEX DataFrame with the last-wins rule applied."""
-    from ..deploy import ensure_shipped
+    from ..deploy import drop_zip_finders, ensure_shipped
 
     ensure_shipped(files_df.sparkSession)
     langs = ["java", "javascript"] + (["python"] if include_python else [])
@@ -91,6 +91,7 @@ def build_symbol_index(files_df: DataFrame, include_python: bool = False) -> Dat
     narrow = ensure_min_parallelism(narrow, task_bytes=_INDEX_TASK_BYTES)
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             rows = []
             for repo, path, lang, content in zip(pdf["repo"], pdf["path"], pdf["lang"], pdf["content"]):
@@ -123,6 +124,8 @@ def build_symbol_index(files_df: DataFrame, include_python: bool = False) -> Dat
                 if rows
                 else pd.DataFrame({c: pd.Series([], dtype="object") for c in _INDEX_COLS})
             )
+        # the parsers import lazily on the first batch
+        drop_zip_finders()
 
     raw = narrow.mapInPandas(extract, PROJECT_INDEX)
     # Last-registered wins (reference project_index.py:24-26). DELIBERATE

@@ -15,7 +15,6 @@ import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..kb.compile import AST_LANG_MAP
 from ..schema import SOURCE_FILES
@@ -108,28 +107,39 @@ def ingest_source_files(df: DataFrame, apply_ignore_rules: bool = True) -> DataF
     apply_ignore_rules=False to reproduce that observed behavior on corpora
     that contain such directories (the parity fixtures never do).
     """
-    ext_expr = F.regexp_extract(F.col("path"), r"(\.[^./\\]+)$", 1)
-    df = (
-        df.withColumn("ext", ext_expr)
-        .withColumn(
-            "lang",
-            F.coalesce(
-                F.col("lang"),
-                F.element_at(
-                    F.create_map(*[F.lit(x) for kv in AST_LANG_MAP.items() for x in kv]),
-                    F.col("ext"),
-                ),
-                F.lit("other"),
-            ),
-        )
-        .withColumn("content_sha256", F.sha2(F.col("content"), 256))
-        .withColumn("size_bytes", F.octet_length(F.col("content")).cast("long"))
-    )
-
+    # SQL text, not Column builders: a create_map of 26 literals, an isin
+    # over 25 extensions and four withColumns cost 406 py4j round trips
+    # (~100 ms, paid once per commit); one selectExpr and one where cost 14
+    derived = {
+        "ext": _EXT_SQL,
+        "lang": f"coalesce(lang, element_at({_LANG_MAP_SQL}, {_EXT_SQL}), 'other')",
+        "content_sha256": "sha2(content, 256)",
+        "size_bytes": "CAST(octet_length(content) AS BIGINT)",
+    }
+    # withColumn's placement: a derived column replaces one of its name in
+    # place, the others are appended in order
+    cols = [f"{derived.pop(c)} AS {c}" if c in derived else _quoted(c) for c in df.columns]
+    df = df.selectExpr(*cols, *(f"{e} AS {c}" for c, e in derived.items()))
     if not apply_ignore_rules:
         return df
-    ignored_ext = ~F.col("ext").isin(IGNORED_EXTENSIONS)
-    # intended dir rule: no path segment equals an ignored dir name
-    seg_pattern = "(^|/)(" + "|".join(d.replace(".", r"\.") for d in IGNORED_DIRS) + ")(/)"
-    not_ignored_dir = ~F.col("path").rlike(seg_pattern)
-    return df.filter(ignored_ext & not_ignored_dir)
+    return df.where(_NOT_IGNORED_SQL)
+
+
+def _sql_literal(s: str) -> str:
+    """A Spark SQL string literal (backslash escapes are on by default)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+_EXT_PATTERN = r"(\.[^./\\]+)$"
+_EXT_SQL = f"regexp_extract(path, {_sql_literal(_EXT_PATTERN)}, 1)"
+_LANG_MAP_SQL = "map(" + ", ".join(_sql_literal(x) for kv in AST_LANG_MAP.items() for x in kv) + ")"
+# intended dir rule: no path segment equals an ignored dir name
+_SEGMENT_PATTERN = "(^|/)(" + "|".join(d.replace(".", r"\.") for d in IGNORED_DIRS) + ")(/)"
+_NOT_IGNORED_SQL = (
+    f"NOT ext IN ({', '.join(map(_sql_literal, IGNORED_EXTENSIONS))})"
+    f" AND NOT path RLIKE {_sql_literal(_SEGMENT_PATTERN)}"
+)
