@@ -8,6 +8,7 @@ for interactive/driver-harness sessions we build the same zip once and
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 import tempfile
@@ -20,9 +21,12 @@ _SHIPPED_SESSIONS: "set[int]" = set()
 
 
 def package_zip_path() -> str:
-    """Build (idempotently) a zip of the dr_source_spark package."""
+    """Build (idempotently) a zip of the dr_source_spark package. The zip is
+    named after the package directory it is built from, so two checkouts
+    on one machine never ship each other's tree."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(tempfile.gettempdir(), "dr_source_spark_pyfiles.zip")
+    tree = hashlib.sha1(pkg_dir.encode()).hexdigest()[:12]
+    out = os.path.join(tempfile.gettempdir(), f"dr_source_spark_pyfiles_{tree}.zip")
     sources = []
     for dirpath, _dirs, files in os.walk(pkg_dir):
         for fn in sorted(files):

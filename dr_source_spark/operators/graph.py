@@ -1199,7 +1199,7 @@ def two_hop_paths(
 def _hash32(col):
     """32-bit md5-prefix hash — same family as ``training.dedup._minhash_base``
     (inlined here: training imports this module, so importing back would
-    cycle). DuckDB mirror: ``_duck_minhash_base`` in ``__spark_entry__``."""
+    cycle). DuckDB mirror: ``_duck_minhash_base`` in ``queries/_common.py``."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 

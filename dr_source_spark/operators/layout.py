@@ -22,7 +22,7 @@ as deterministic, exactly-oracle-checkable queries:
 
 Everything is integer math over built-in expressions — no UDFs, no
 floats in any grouping key — so the DuckDB oracles in
-``__spark_entry__`` compare cell-for-cell.
+``queries/events.py`` compare cell-for-cell.
 
 The reference has no layout/statistics surface; this extends the engine
 along the at-scale-operations axis of the brief.

@@ -51,14 +51,6 @@ def scan_diff(curr: DataFrame, prev: DataFrame, key: Sequence[str]) -> dict:
     }
 
 
-def run_summary(findings: DataFrame, run_col: str = "run_id") -> DataFrame:
-    """A8 — per-run scan summary (reference db.py:154-169)."""
-    return findings.groupBy(run_col).agg(
-        F.count("*").alias("num_vulnerabilities"),
-        F.countDistinct("path").alias("num_files_with_findings"),
-    )
-
-
 def severity_histogram(findings: DataFrame) -> DataFrame:
     """A8 — severity histogram (reference cli.py:244-249)."""
     return findings.groupBy("severity").agg(F.count("*").alias("n"))
@@ -76,7 +68,7 @@ def latest_per_group(df: DataFrame, group: Sequence[str], order: List) -> DataFr
     ~0.85 s: the floor is the single-row-group scan plus one pass of
     every row through a shuffle, which no rank-1 formulation removes.
     The window form stays because it is the simplest at the same cost;
-    callers should project the consumed columns first (see _a10_latest)."""
+    callers should project the consumed columns first (see a10_latest)."""
     w = Window.partitionBy(*group).orderBy(*order)
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
@@ -101,11 +93,13 @@ def where_used(files_df: DataFrame, class_name: str, ast_confirm: bool = False) 
     if not ast_confirm:
         return candidates.select("repo", "path", "commit")
 
-    from ..deploy import ensure_shipped
+    from ..deploy import drop_zip_finders, ensure_shipped
 
     ensure_shipped(files_df.sparkSession)
 
     def confirm(batches):
+        drop_zip_finders()
+
         import pandas as pd
 
         from ..parsers.javaparse import parse_java
@@ -141,6 +135,7 @@ def where_used(files_df: DataFrame, class_name: str, ast_confirm: bool = False) 
             yield pd.DataFrame(rows, columns=["repo", "path", "commit"]) if rows else pd.DataFrame(
                 {c: pd.Series([], dtype="object") for c in ("repo", "path", "commit")}
             )
+        drop_zip_finders()
 
     return candidates.select("repo", "path", "commit", "content").mapInPandas(
         confirm, "repo string, path string, commit string"

@@ -20,10 +20,11 @@ the corpus still belongs in Iceberg/parquet (read_source_files) — this
 source covers the "point Spark at a checkout tree" on-ramp without a
 driver bottleneck.
 
-Pickling note: executors receive the READER object by pickle, so every
-constant it needs (ignore lists, the extension→lang map) is captured as
-instance state in ``__init__`` — the executor never imports this
-package, which keeps the source usable before ensure_shipped runs.
+Pickling note: executors receive the READER object by pickle, and its
+class pickles by reference, so a worker imports this module: the source
+ships the package (``ensure_shipped``) before it reads. Every constant
+the reader needs (ignore lists, the extension→lang map) is captured as
+instance state in ``__init__``.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ from typing import Iterator, List
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from ..deploy import drop_zip_finders, ensure_shipped
 from ..kb.compile import AST_LANG_MAP
 from .corpus import IGNORED_DIRS, IGNORED_EXTENSIONS
 
@@ -92,6 +94,7 @@ class CorpusDirReader(DataSourceReader):
         return [_Shard(s) for s in shards] or [_Shard([])]
 
     def read(self, partition: _Shard) -> Iterator[tuple]:
+        drop_zip_finders()
         for fp in partition.files:
             with open(fp, "r", encoding="utf-8", errors="ignore") as f:
                 content = f.read()
@@ -104,6 +107,7 @@ class CorpusDirReader(DataSourceReader):
                 self.lang_map.get(ext, "other"),
                 content,
             )
+        drop_zip_finders()
 
 
 def corpus_from_dir_distributed(
@@ -115,6 +119,7 @@ def corpus_from_dir_distributed(
     num_shards: int = 8,
 ):
     """Register (idempotent) and read the corpus_dir data source."""
+    ensure_shipped(spark)
     spark.dataSource.register(CorpusDirDataSource)
     return (
         spark.read.format("corpus_dir")

@@ -17,6 +17,8 @@ from pyspark.sql.types import (
     LongType, DoubleType, StringType, StructField, StructType,
 )
 
+from ..deploy import drop_zip_finders
+
 SEVERITY_WEIGHTS = {"CRITICAL": 8.0, "HIGH": 4.0, "MEDIUM": 2.0, "LOW": 1.0, "INFO": 0.5}
 
 STATE_SCHEMA = StructType(
@@ -40,6 +42,7 @@ OUTPUT_SCHEMA = StructType(
 def _update(
     key: Tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
+    drop_zip_finders()
     (repo,) = key
     if state.exists:
         score, n, nxt = state.get
@@ -57,6 +60,7 @@ def _update(
     if rows:
         state.update((score, n, nxt))
         yield pd.DataFrame(rows, columns=[f.name for f in OUTPUT_SCHEMA.fields])
+    drop_zip_finders()
 
 
 def repo_risk_ledger(findings_stream: DataFrame) -> DataFrame:

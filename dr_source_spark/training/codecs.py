@@ -42,6 +42,8 @@ from typing import Iterator, List, Tuple
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..deploy import drop_zip_finders
+
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
@@ -411,6 +413,7 @@ def synth_compressed_media(documents: DataFrame) -> DataFrame:
     ensure_shipped(documents.sparkSession)
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             rows = []
             for doc_id in pdf["doc_id"]:
@@ -429,5 +432,6 @@ def synth_compressed_media(documents: DataFrame) -> DataFrame:
             ) if rows else pd.DataFrame(
                 {c: pd.Series([], dtype="object") for c in ("media_id", "kind", "payload", "meta")}
             )
+        drop_zip_finders()
 
     return documents.select("doc_id").mapInPandas(process, MEDIA_SCHEMA)

@@ -30,7 +30,7 @@ def quality_reason_expr(text_col, min_tokens: int = 5, min_stopword_ratio: float
 
     This is THE verdict definition: batch ``curation_decisions`` layers the
     duplicate check on top of it and the streaming curation query
-    (``__spark_entry__._stream_curation``) consumes it directly, so the two
+    (``queries.stream.stream_curation``) consumes it directly, so the two
     paths cannot drift. Null-safe: NULL text is scored as the empty string
     (0 tokens -> too_short) — a curation verdict must exist for every row.
     The empty-token filter makes that literal: splitting a blank string

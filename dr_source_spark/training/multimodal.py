@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StringType, StructField, StructType,
 )
 
+from ..deploy import drop_zip_finders
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -101,6 +103,7 @@ def extract_media_metadata(media: DataFrame) -> DataFrame:
     ensure_shipped(media.sparkSession)
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         cols = [f.name for f in MEDIA_META_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -122,6 +125,7 @@ def extract_media_metadata(media: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
                 {c: pd.Series([], dtype="object") for c in cols}
             )
+        drop_zip_finders()
 
     return media.select("media_id", "kind", "payload").mapInPandas(process, MEDIA_META_SCHEMA)
 
@@ -144,6 +148,7 @@ def decode_media(media: DataFrame, fake: bool = False) -> DataFrame:
         )
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -156,6 +161,7 @@ def decode_media(media: DataFrame, fake: bool = False) -> DataFrame:
             yield pd.DataFrame(rows, columns=["media_id", "feature"]) if rows else pd.DataFrame(
                 {"media_id": pd.Series([], dtype="object"), "feature": pd.Series([], dtype="object")}
             )
+        drop_zip_finders()
 
     return media.select("media_id", "payload").mapInPandas(process, FEATURES_SCHEMA)
 
@@ -179,6 +185,7 @@ def synth_media_corpus(documents: DataFrame) -> DataFrame:
     bytes. doc_id % 3 picks the container."""
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             rows = []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
@@ -198,6 +205,7 @@ def synth_media_corpus(documents: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"]) if rows else pd.DataFrame(
                 {c: pd.Series([], dtype="object") for c in ("media_id", "kind", "payload", "meta")}
             )
+        drop_zip_finders()
 
     from ..deploy import ensure_shipped
 
@@ -285,6 +293,7 @@ def synth_decodable_media(documents: DataFrame, wrap: int = 0) -> DataFrame:
     tests; use an even wrap so the BMP/WAV parity split is preserved."""
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             rows = []
             for doc_id in pdf["doc_id"]:
@@ -298,6 +307,7 @@ def synth_decodable_media(documents: DataFrame, wrap: int = 0) -> DataFrame:
             yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"]) if rows else pd.DataFrame(
                 {c: pd.Series([], dtype="object") for c in ("media_id", "kind", "payload", "meta")}
             )
+        drop_zip_finders()
 
     from ..deploy import ensure_shipped
 
@@ -379,6 +389,7 @@ def decode_features(media: DataFrame) -> DataFrame:
     ensure_shipped(media.sparkSession)
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         from .codecs import PNG_SIG, decode_gif, decode_png
 
         cols = [f.name for f in DECODE_FEATURES_SCHEMA.fields]
@@ -412,6 +423,7 @@ def decode_features(media: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
                 {c: pd.Series([], dtype="object") for c in cols}
             )
+        drop_zip_finders()
 
     return media.select("media_id", "payload").mapInPandas(process, DECODE_FEATURES_SCHEMA)
 
@@ -429,6 +441,7 @@ def resize_media_bmp(media: DataFrame, out_w: int = 8, out_h: int = 6) -> DataFr
     ensure_shipped(media.sparkSession)
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             rows = []
             for mid, kind, payload, meta in zip(pdf["media_id"], pdf["kind"], pdf["payload"], pdf["meta"]):
@@ -464,6 +477,7 @@ def resize_media_bmp(media: DataFrame, out_w: int = 8, out_h: int = 6) -> DataFr
             yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"]) if rows else pd.DataFrame(
                 {c: pd.Series([], dtype="object") for c in ("media_id", "kind", "payload", "meta")}
             )
+        drop_zip_finders()
 
     return media.select("media_id", "kind", "payload", "meta").mapInPandas(process, MEDIA_SCHEMA)
 
@@ -520,6 +534,7 @@ def audio_frame_energy(media: DataFrame, frame: int = 25) -> DataFrame:
     ensure_shipped(media.sparkSession)
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         cols = [f.name for f in AUDIO_ENERGY_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -539,6 +554,7 @@ def audio_frame_energy(media: DataFrame, frame: int = 25) -> DataFrame:
             yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
                 {c: pd.Series([], dtype="object") for c in cols}
             )
+        drop_zip_finders()
 
     return media.select("media_id", "payload").mapInPandas(process, AUDIO_ENERGY_SCHEMA)
 
@@ -575,6 +591,7 @@ def image_patches(media: DataFrame, patch: int = 2) -> DataFrame:
     ensure_shipped(media.sparkSession)
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         cols = [f.name for f in PATCH_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -610,6 +627,7 @@ def image_patches(media: DataFrame, patch: int = 2) -> DataFrame:
             yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
                 {c: pd.Series([], dtype="object") for c in cols}
             )
+        drop_zip_finders()
 
     return media.select("media_id", "payload").mapInPandas(process, PATCH_SCHEMA)
 
@@ -644,6 +662,7 @@ def dhash_signatures(media: DataFrame) -> DataFrame:
     ensure_shipped(media.sparkSession)
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         cols = [f.name for f in DHASH_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -674,6 +693,7 @@ def dhash_signatures(media: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
                 {c: pd.Series([], dtype="object") for c in cols}
             )
+        drop_zip_finders()
 
     return media.select("media_id", "payload").mapInPandas(process, DHASH_SCHEMA)
 

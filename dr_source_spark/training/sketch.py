@@ -4,7 +4,7 @@ Classic sketch structures a 100 TB curation pipeline leans on — distinct
 counts per slice without a count-distinct shuffle of everything, and
 heavy-hitter frequency estimates in bounded memory — implemented so that
 every emitted cell is an exact integer a second engine (the DuckDB
-oracles in ``__spark_entry__``) reproduces bit-for-bit:
+oracles in ``queries/``) reproduces bit-for-bit:
 
 * ``kmv_distinct`` — K-minimum-values distinct estimator (Bar-Yossef et
   al.): the k-th smallest hash of a set of n uniform 32-bit hashes sits

@@ -207,9 +207,8 @@ def test_hub_removal_counts_a_self_loop_only_survivor(spark, monkeypatch):
     included: operator and oracle agree, and the row is intended."""
     import duckdb
 
-    import __spark_entry__ as E
     from dr_source_spark.operators.graph import hub_removal_impact
-    from dr_source_spark.sources import synth
+    from dr_source_spark.queries import kg
 
     # hub h; after removing it, a keeps only its self-loop, b-c survives
     edges = [("h", "a"), ("h", "b"), ("h", "c"), ("h", "d"), ("a", "a"), ("b", "c")]
@@ -219,9 +218,9 @@ def test_hub_removal_counts_a_self_loop_only_survivor(spark, monkeypatch):
     assert got == want
     values = ", ".join(f"('{a}', '{b}')" for a, b in edges)
     monkeypatch.setattr(
-        synth, "kg_edges_oracle_sql", lambda: f"SELECT * FROM (VALUES {values}) t(src, dst)"
+        kg, "kg_edges_oracle_sql", lambda: f"SELECT * FROM (VALUES {values}) t(src, dst)"
     )
-    assert sorted(duckdb.connect().execute(E._kg_hub_removal_sql(k=1)).fetchall()) == want
+    assert sorted(duckdb.connect().execute(kg.kg_hub_removal_sql(k=1)).fetchall()) == want
 
 
 # name -> (op(graph module, edges, labels), directed): every graph operator

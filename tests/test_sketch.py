@@ -472,7 +472,7 @@ def test_hdr_extreme_int64_values_match_model_and_duckdb(spark):
     extremes."""
     import duckdb
 
-    from __spark_entry__ import _duck_hdr_bounds, _duck_hdr_bucket
+    from dr_source_spark.queries._common import _duck_hdr_bounds, _duck_hdr_bucket
     from dr_source_spark.training.sketch import _hdr_bounds, _hdr_bucket
 
     probes = [

@@ -4,7 +4,9 @@ on every task, and no import result changes.
 The unit test runs in-process on a temporary zip. The worker test runs a
 small `local[1]` session in a subprocess from outside the repository, so the
 package arrives on the worker as the shipped zip, the way spark-submit
-ships it."""
+ships it. It probes the worker after a `mapInPandas` site (`where_used`'s
+AST confirm, run first in the fresh worker) and after the detector's
+`mapInArrow`."""
 
 import importlib
 import json
@@ -70,27 +72,36 @@ WORKER_SCRIPT = textwrap.dedent(
     import pyarrow as pa
     from dr_source_spark.kb.compile import compiled_kb_cached
     from dr_source_spark.operators.analyze import run_detectors
+    from dr_source_spark.operators.relational import where_used
     from dr_source_spark.session import get_spark
     from dr_source_spark.sources.corpus import corpus_from_dir, ingest_source_files
 
     spark = get_spark(master="local[1]")
     files = ingest_source_files(corpus_from_dir(spark, sys.argv[2], repo="realcode", commit="pin"))
-    ckb = compiled_kb_cached()
-    runs = [sorted(map(tuple, run_detectors(files, ckb).select("path", "vuln_type", "line").collect()))
-            for _ in range(2)]
 
     def probe(batches):
         # first thing in the UDF: what the task's setup left in the cache
         archives = sorted({os.path.basename(f.archive) for f in sys.path_importer_cache.values()
                            if isinstance(f, zipimport.zipimporter)})
-        warm = "dr_source_spark.operators.analyze" in sys.modules
+        warm = {m: m in sys.modules for m in ("dr_source_spark.parsers.javaparse",
+                                                "dr_source_spark.operators.analyze")}
         for _ in batches:
             pass
-        yield pa.RecordBatch.from_pylist([{"archives": json.dumps(archives), "warm": warm}])
+        yield pa.RecordBatch.from_pylist([{"archives": json.dumps(archives), "warm": json.dumps(warm)}])
 
-    row = spark.range(1).coalesce(1).mapInArrow(probe, "archives string, warm boolean").collect()[0]
+    def probed():
+        row = spark.range(1).coalesce(1).mapInArrow(probe, "archives string, warm string").collect()[0]
+        return {"archives": json.loads(row.archives), "warm": json.loads(row.warm)}
+
+    # a mapInPandas site first, in the fresh worker: where_used's AST confirm
+    used = where_used(files, "SparkSession", ast_confirm=True).count()
+    after_pandas = probed()
+    ckb = compiled_kb_cached()
+    runs = [sorted(map(tuple, run_detectors(files, ckb).select("path", "vuln_type", "line").collect()))
+            for _ in range(2)]
     print("RESULT " + json.dumps({"same": runs[0] == runs[1], "findings": len(runs[0]),
-                                  "archives": json.loads(row.archives), "warm": row.warm}))
+                                  "used": used, "after_pandas": after_pandas,
+                                  "after_detector": probed()}))
     spark.stop()
     """
 )
@@ -106,7 +117,11 @@ def test_warm_worker_holds_no_spark_archive_finders(tmp_path):
     )
     assert p.returncode == 0, p.stderr[-3000:]
     res = json.loads([ln for ln in p.stdout.splitlines() if ln.startswith("RESULT ")][-1][len("RESULT "):])
-    assert res["same"] and res["findings"] > 0
-    # the probe ran in the worker that ran the detector
-    assert res["warm"]
-    assert not [a for a in res["archives"] if a == "pyspark.zip" or a.startswith("spark-core")]
+    assert res["same"] and res["findings"] > 0 and res["used"] > 0
+    for site, module in (("after_pandas", "dr_source_spark.parsers.javaparse"),
+                         ("after_detector", "dr_source_spark.operators.analyze")):
+        probe = res[site]
+        # the probe ran in the worker that ran the site
+        assert probe["warm"][module], site
+        spark_archives = [a for a in probe["archives"] if a == "pyspark.zip" or a.startswith("spark-core")]
+        assert not spark_archives, (site, probe["archives"])

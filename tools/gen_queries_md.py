@@ -6,6 +6,7 @@ Usage: python tools/gen_queries_md.py   (run after adding queries)
 
 from __future__ import annotations
 
+import inspect
 import re
 import sys
 
@@ -39,79 +40,73 @@ OVERRIDES = {
     "kg_graph_nodes": "materialized KG node table with entity kinds (file/CWE/rule/variable) from the flagship extraction",
 }
 
-FAMILIES = [
-    ("KG construction & graph analytics", lambda q: q.startswith("kg_")),
-    ("Detector & findings store (reference surface)",
-     lambda q: q.startswith(
-         ("a6_", "a8_", "a9_", "a10_", "a11_", "b1_", "tier_", "scalar_")
-     )),
-    ("Deduplication", lambda q: q.startswith("dedup_")),
-    ("Text curation & analysis", lambda q: q.startswith(("text_", "corpus_"))),
-    ("Embeddings & ANN", lambda q: q.startswith(("emb_", "ann_"))),
-    ("Multimodal", lambda q: q.startswith("media_")),
-    ("Streaming", lambda q: q.startswith("stream_")),
-    ("Relational / TPC-H-style", lambda q: True),
-]
+# section title per query module (dr_source_spark/queries/<module>.py), in
+# catalog order; events and tpch share the relational section
+FAMILIES = {
+    "kg": "KG construction & graph analytics",
+    "detector": "Detector & findings store (reference surface)",
+    "dedup": "Deduplication",
+    "text": "Text curation & analysis",
+    "emb": "Embeddings & ANN",
+    "media": "Multimodal",
+    "stream": "Streaming",
+    "events": "Relational / TPC-H-style",
+    "tpch": "Relational / TPC-H-style",
+}
 
 
-def main() -> None:
-    src = open(f"{REPO}/__spark_entry__.py").read()
+def describe(build) -> str:
+    """The build function's leading comment lines, joined: anything else
+    (code, docstring, blank) ends the scan, so an unrelated inner comment
+    never ships as the catalog description."""
+    body = re.match(r"def \w+\(.*?\):\n(.*)", inspect.getsource(build), re.S).group(1)
+    block = []
+    for line in body.splitlines():
+        stripped = line.strip()
+        if not stripped.startswith("#"):
+            break
+        block.append(stripped.lstrip("#").strip())
+    return re.sub(r"\s+", " ", " ".join(block))
+
+
+def render() -> str:
+    """The catalog text ``main()`` writes to docs/QUERIES.md."""
     import __spark_entry__ as E
 
     registry = E.queries()
-    qs = list(registry)
-    # the registry values ARE the functions — no source parsing needed
-    fn_of = {k: v.__name__ for k, v in registry.items()}
-
-    def desc(q: str) -> str:
-        if q in OVERRIDES:
-            return OVERRIDES[q]
-        g = re.search(
-            rf"\ndef {re.escape(fn_of[q])}\(.*?\):\n(.*?)(?=\ndef |\nclass |\n_[A-Z]|\Z)",
-            src, re.S,
-        )
-        block = []
-        if g:
-            for line in g.group(1).splitlines():
-                stripped = line.strip()
-                if stripped.startswith("#"):
-                    block.append(stripped.lstrip("#").strip())
-                else:
-                    # LEADING comments only: anything else (code, docstring,
-                    # blank) ends the scan, so an unrelated inner comment
-                    # can never ship as the catalog description
-                    break
-        return re.sub(r"\s+", " ", " ".join(block))
-
-    missing = [q for q in qs if not desc(q)]
+    desc = {q: OVERRIDES.get(q) or describe(build) for q, build in registry.items()}
+    missing = [q for q, d in desc.items() if not d]
     assert not missing, f"queries without a description: {missing}"
 
     groups: dict[str, list[str]] = {}
-    for q in qs:
-        for fam, pred in FAMILIES:
-            if pred(q):
-                groups.setdefault(fam, []).append(q)
-                break
+    for q, build in registry.items():
+        family = FAMILIES[build.__module__.rsplit(".", 1)[1]]
+        groups.setdefault(family, []).append(q)
 
     out = [
         "# Query catalog — every driver-facing oracle-checked query", "",
-        f"{len(qs)} queries in `__spark_entry__.queries()`; every one has a",
+        f"{len(registry)} queries in `__spark_entry__.queries()`; every one has a",
         "value-hash DuckDB oracle in `oracle_sql()` (cell-exact at sf0.01,",
         "`tools/sweep.py --mode oracle`). Grouped by family; descriptions are the",
         "implementation notes from the query functions. Regenerate with",
         "`python tools/gen_queries_md.py`.", "",
     ]
-    for fam, _ in FAMILIES:
-        fam_qs = groups.get(fam, [])
+    for family in dict.fromkeys(FAMILIES.values()):
+        fam_qs = groups.get(family, [])
         if not fam_qs:
             continue
-        out.append(f"## {fam} ({len(fam_qs)})")
+        out.append(f"## {family} ({len(fam_qs)})")
         out.append("")
         for q in fam_qs:
-            out.append(f"* **`{q}`** — {desc(q)}")
+            out.append(f"* **`{q}`** — {desc[q]}")
         out.append("")
-    open(f"{REPO}/docs/QUERIES.md", "w").write("\n".join(out) + "\n")
-    print(f"docs/QUERIES.md regenerated: {len(qs)} queries")
+    return "\n".join(out) + "\n"
+
+
+def main() -> None:
+    with open(f"{REPO}/docs/QUERIES.md", "w") as f:
+        f.write(render())
+    print("docs/QUERIES.md regenerated")
 
 
 if __name__ == "__main__":

@@ -213,8 +213,10 @@ def _rss_mb(pid: int) -> float | None:
 
 
 def sweep(spark, mode: str, sf: str, only=None, timeout: float = 300.0):
-    """Yield one record per selected registry query (oracle/plan/time)."""
+    """Yield one record per selected registry query (oracle/plan/time), then
+    release every frame the queries left persisted."""
     import __spark_entry__ as E
+    from dr_source_spark.queries import PERSISTED
 
     qs = E.queries()
     unknown = sorted(set(only or ()) - set(qs))
@@ -262,6 +264,7 @@ def sweep(spark, mode: str, sf: str, only=None, timeout: float = 300.0):
             sc.setJobGroup(None, None)
         sec = round(time.monotonic() - t0, 2)
         yield {"query": name, "mode": mode, "sec": sec, "jvm_rss_mb": _rss_mb(jvm_pid), **rec}
+    PERSISTED.release()
 
 
 def _codegen(args):
