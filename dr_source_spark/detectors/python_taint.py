@@ -259,28 +259,20 @@ def analyze_python(
     content: str,
     taint_specs: List[TaintSpec],
     fn_index: Optional[Any] = None,
-    raise_parse_errors: bool = False,
     tree: Optional[ast.AST] = None,
 ) -> List[Dict[str, Any]]:
     """All Python-tier findings for one file: structural pass, then ALL
     eligible category engines driven through one parse + one walk
     (parse-once + walk-once fusion of the reference's per-category
-    re-parse/re-walk, SURVEY.md §4 R6).
-
-    raise_parse_errors=True raises detectors.ParseFailed on an unparseable
-    file instead of the reference-faithful silent [] — the analyze stage
-    uses it to surface parse loss as an observable tier-error metric.
+    re-parse/re-walk, SURVEY.md §4 R6). An unparseable file yields the
+    reference-faithful silent [].
 
     tree: pre-parsed AST of ``content`` (the analyze stage shares one parse
     between this tier and the pattern tier)."""
     if tree is None:
         try:
             tree = ast.parse(content)
-        except (SyntaxError, ValueError, RecursionError, MemoryError) as e:
-            if raise_parse_errors:
-                from . import ParseFailed
-
-                raise ParseFailed(f"python parse failed: {type(e).__name__}: {e}") from e
+        except (SyntaxError, ValueError, RecursionError, MemoryError):
             return []
 
     findings: List[Dict[str, Any]] = []

@@ -27,38 +27,9 @@ from typing import Any, Dict, List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..kb.compile import AST_LANG_MAP
-
-FINDINGS_FULL = StructType(
-    [
-        StructField("repo", StringType(), False),
-        StructField("path", StringType(), False),
-        StructField("commit", StringType(), False),
-        StructField("vuln_type", StringType(), False),
-        StructField("message", StringType(), False),
-        StructField("severity", StringType(), False),
-        StructField("line", IntegerType(), False),
-        StructField("plugin", StringType(), False),
-        StructField("trace", ArrayType(StringType()), True),
-        StructField("rule_id", StringType(), True),
-        StructField("cwe", StringType(), True),
-        StructField("variable", StringType(), True),
-        StructField("sink", StringType(), True),
-        StructField("source", StringType(), True),
-        StructField("base_type", StringType(), True),
-    ]
-)
-
-_COLS = [f.name for f in FINDINGS_FULL.fields]
-
+from ..schema import FINDINGS
 
 # Java framework mapper sinks fire during EVERY category pass
 # (detectors/java_taint.py) — if any of these appear, no java category can
@@ -390,17 +361,16 @@ def _analyze_one(
 
     if emit_errors:
         for e in errors:
-            out.append(
-                {
-                    "repo": repo, "path": path, "commit": commit,
-                    "vuln_type": "__TIER_ERROR__",
-                    "message": f"{e['tier']}: {e['err']}"[:500],
-                    "severity": "INFO", "line": 0,
-                    "plugin": TIER_ERROR_PLUGIN, "trace": [],
-                    "rule_id": None, "cwe": None, "variable": None,
-                    "sink": None, "source": None, "base_type": "__TIER_ERROR__",
-                }
+            row = dict.fromkeys(FINDINGS.fieldNames())
+            row.update(
+                repo=repo, path=path, commit=commit,
+                vuln_type="__TIER_ERROR__",
+                message=f"{e['tier']}: {e['err']}"[:500],
+                severity="INFO", line=0,
+                plugin=TIER_ERROR_PLUGIN, trace=[],
+                base_type="__TIER_ERROR__",
             )
+            out.append(row)
     return out
 
 
@@ -448,19 +418,9 @@ def run_detectors(
         return {k: dict(v) if not isinstance(v, dict) else v for k, v in cell}
 
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    arrow_schema = pa.schema(
-        [
-            pa.field("repo", pa.string()), pa.field("path", pa.string()),
-            pa.field("commit", pa.string()), pa.field("vuln_type", pa.string()),
-            pa.field("message", pa.string()), pa.field("severity", pa.string()),
-            pa.field("line", pa.int32()), pa.field("plugin", pa.string()),
-            pa.field("trace", pa.list_(pa.string())), pa.field("rule_id", pa.string()),
-            pa.field("cwe", pa.string()), pa.field("variable", pa.string()),
-            pa.field("sink", pa.string()), pa.field("source", pa.string()),
-            pa.field("base_type", pa.string()),
-        ]
-    )
+    arrow_schema = to_arrow_schema(FINDINGS)
 
     def process_arrow(batches):
         drop_zip_finders()
@@ -484,4 +444,4 @@ def run_detectors(
         # the first batch may have imported more from the archives
         drop_zip_finders()
 
-    return narrow.mapInArrow(process_arrow, FINDINGS_FULL)
+    return narrow.mapInArrow(process_arrow, FINDINGS)

@@ -25,7 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .analyze import _COLS, run_detectors
+from ..schema import FINDINGS
+from .analyze import run_detectors
 
 
 def run_detectors_content_deduped(files_df: DataFrame, ckb, **run_detector_kwargs) -> DataFrame:
@@ -59,4 +60,4 @@ def run_detectors_content_deduped(files_df: DataFrame, ckb, **run_detector_kwarg
         .withColumnRenamed("repo", "_ckey")
     )
     members = files.select("repo", "path", "commit", "_ckey")
-    return members.join(rep_findings, "_ckey").select(*_COLS)
+    return members.join(rep_findings, "_ckey").select(*FINDINGS.fieldNames())

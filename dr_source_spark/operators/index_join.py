@@ -5,10 +5,10 @@ Instead of shipping one global dict to every executor, each file gets its
 own (tiny) slice of the index attached as a map column:
 
   round 1: call-shaped identifiers per file  ⋈  index on name
-  rounds 2..max_depth: the names first reached in the previous round
-                       ⋈ def → callee edges, minus the names the file
-                       already reaches (transitive closure to the same
-                       depth-3 the reference's simulation recurses)
+  rounds 2..MAX_CALL_DEPTH: the names first reached in the previous round
+                            ⋈ def → callee edges, minus the names the file
+                            already reaches (transitive closure to the same
+                            depth-3 the reference's simulation recurses)
 
 All joins are plain equi-joins on a short string key — shuffle-partitioned,
 skew handled by AQE; nothing is collected to the driver. The detector stage
@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..detectors.taint_core import MAX_CALL_DEPTH
 
 # doubled backslashes: this literal is embedded inside a SQL expr string
 CALL_NAME_RE = r"([A-Za-z_$][A-Za-z0-9_$]*)\\s*\\("
@@ -33,15 +35,16 @@ def _called(df: DataFrame, key_cols: list, text_col: str) -> DataFrame:
     )
 
 
-def attach_called_defs(files: DataFrame, index_df: DataFrame, max_depth: int = 3) -> DataFrame:
+def attach_called_defs(files: DataFrame, index_df: DataFrame) -> DataFrame:
     """files(repo, path, …, content) → same rows + ``called_defs``
     map<string, struct<path, lang, def_source, def_line, params>> holding
-    every def reachable from the file within ``max_depth`` call hops.
+    every def reachable from the file within MAX_CALL_DEPTH call hops (the
+    depth the taint engines follow callees to).
 
     Semi-naive: each hop expands only the names first reached at the
     previous hop, deduplicated per file and anti-joined against everything
     reached so far. BFS reaches each def at its shortest depth, so the set
-    within ``max_depth`` is the same as re-expanding every call path, while
+    within that depth is the same as re-expanding every call path, while
     the rows per hop stay bounded by the distinct reachable names."""
     names = index_df.select(F.col("name").alias("callee"))
     # def → indexed callee edges, extracted once per def (not once per file
@@ -59,7 +62,7 @@ def attach_called_defs(files: DataFrame, index_df: DataFrame, max_depth: int = 3
         .localCheckpoint()
     )
     reached = frontier
-    for _hop in range(1, max_depth):
+    for _hop in range(1, MAX_CALL_DEPTH):
         frontier = (
             frontier.join(calls, "name")
             .select("repo", "path", F.col("callee").alias("name"))

@@ -3,7 +3,8 @@
 Data model re-expressed from the reference's in-memory objects / SQLite
 store (reference: dr_source/api.py:13-32 Vulnerability dataclass,
 dr_source/core/db.py:34-56 DDL, dr_source/core/project_index.py:7-12
-FunctionDefinition) as columnar Spark schemas.
+FunctionDefinition) as columnar Spark schemas. The lineage tables of
+resumable runs are written by one runner, operators/lineage.run_splits.
 """
 
 from __future__ import annotations
@@ -29,17 +30,10 @@ SOURCE_FILES = StructType(
     ]
 )
 
-SOURCE_FILES_INGESTED = StructType(
-    SOURCE_FILES.fields
-    + [
-        StructField("content_sha256", StringType(), True),
-        StructField("size_bytes", LongType(), True),
-    ]
-)
-
-# Findings fact table — reference Vulnerability dataclass plus corpus keys.
-# `trace` stays a native array (reference flattens to " -> " only at the
-# SQLite boundary, scanner.py:209 / db.py:246-248).
+# Findings fact table: the row the detector stage writes
+# (operators/analyze.run_detectors) — reference Vulnerability dataclass plus
+# corpus keys. `trace` stays a native array (reference flattens to " -> "
+# only at the SQLite boundary, scanner.py:209 / db.py:246-248).
 FINDINGS = StructType(
     [
         StructField("repo", StringType(), False),
@@ -53,6 +47,10 @@ FINDINGS = StructType(
         StructField("trace", ArrayType(StringType()), True),
         StructField("rule_id", StringType(), True),  # regex tier only
         StructField("cwe", StringType(), True),
+        StructField("variable", StringType(), True),
+        StructField("sink", StringType(), True),
+        StructField("source", StringType(), True),
+        StructField("base_type", StringType(), True),  # vuln_type without the " (…)" suffix
     ]
 )
 
@@ -104,7 +102,7 @@ TRIPLES = StructType(
 NODES = StructType(
     [
         StructField("node_id", StringType(), False),
-        StructField("kind", StringType(), False),  # file|rule|cwe|entity
+        StructField("kind", StringType(), False),  # file|file_line|rule|cwe|sink|entity
         StructField("label", StringType(), True),
     ]
 )
@@ -115,17 +113,5 @@ EDGES = StructType(
         StructField("pred", StringType(), False),
         StructField("dst", StringType(), False),
         StructField("line", IntegerType(), True),
-    ]
-)
-
-# Per-partition lineage for resume (reference has none; north-rule requires it).
-LINEAGE = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("split_key", StringType(), False),  # stable input-split identity
-        StructField("files", LongType(), True),
-        StructField("findings", LongType(), True),
-        StructField("status", StringType(), True),
     ]
 )

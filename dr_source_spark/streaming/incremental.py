@@ -13,8 +13,6 @@ stops — the batch-job shape that still keeps streaming checkpoints.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schema import SOURCE_FILES
@@ -27,13 +25,13 @@ def incremental_extract(
     output_dir: str,
     checkpoint_dir: str,
     ckb,
-    fn_index_broadcast=None,
-    await_termination: bool = True,
     dedup_across_batches: bool = False,
 ):
-    """Stream new source_files parquet from ``source_dir`` → findings parquet.
+    """Stream new source_files parquet from ``source_dir`` → findings parquet,
+    draining what is available and returning the finished query.
 
-    Each micro-batch runs the fused detector stage. Re-running after new
+    Each micro-batch runs the fused detector stage without the inter-file
+    index (callee resolution stays within a file). Re-running after new
     files land processes only the delta (streaming file-source ledger).
 
     dedup_across_batches: stateful streaming dropDuplicates on
@@ -53,7 +51,7 @@ def incremental_extract(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         files = ingest_source_files(batch_df)
-        findings = run_detectors(files, ckb, fn_index_broadcast=fn_index_broadcast)
+        findings = run_detectors(files, ckb)
         findings.write.mode("append").parquet(f"{output_dir}/findings")
 
     query = (
@@ -62,8 +60,7 @@ def incremental_extract(
         .trigger(availableNow=True)
         .start()
     )
-    if await_termination:
-        query.awaitTermination()
+    query.awaitTermination()
     return query
 
 

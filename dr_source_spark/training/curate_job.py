@@ -4,11 +4,10 @@ production shape of the curation pipeline at 100 TB.
 Stage 1 (resumable, split-local): each split of the corpus checkpoints
 its NARROW per-document artifacts — doc stats (token count, quality
 reason, exact-dup fingerprint) and MinHash band signatures — partitioned
-by (run_id, split_key) with a lineage row per completed split, exactly
-the contract `operators.lineage.extract_with_lineage` gives the KG
-extraction stage. An interrupted run resumes by skipping splits whose
-lineage row says 'done'; dynamic partition overwrite keeps re-processing
-idempotent.
+by (run_id, split_key) with a lineage row per completed split, through
+the same runner (`operators.lineage.run_splits`) as the KG extraction
+stage. An interrupted run resumes by skipping splits whose lineage row
+says 'done'; dynamic partition overwrite keeps re-processing idempotent.
 
 Stage 2 (global, cheap): once every split is checkpointed, the LSH
 banding → Jaccard verify → connected components → keep-list pass runs
@@ -20,13 +19,12 @@ equal `training.curate.final_keep_list` run in one shot.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
+from ..operators.lineage import completed_splits, run_splits
 from .curate import REASON_KEPT, quality_reason_expr
 from .dedup import _band_signatures, _pairs_from_band_sigs, duplicate_clusters, ngram_jaccard
 
@@ -40,32 +38,6 @@ class CurateRun:
     batches_run: int
     splits_done: int
     docs: int
-
-
-def _with_split(documents: DataFrame, num_splits: int) -> DataFrame:
-    return documents.withColumn(
-        "split_key", F.pmod(F.xxhash64("doc_id"), F.lit(num_splits)).cast("int")
-    )
-
-
-def _completed(spark: SparkSession, lineage_path: str, run_id: str) -> list[int]:
-    try:
-        lin = spark.read.parquet(lineage_path)
-    except AnalysisException as e:
-        # Only a missing lineage table means "fresh run". Any OTHER read
-        # failure (permissions, corrupt footer, transient storage) must
-        # propagate — swallowing it would silently re-process every split
-        # of the corpus and misreport splits_done.
-        if "PATH_NOT_FOUND" in str(getattr(e, "errorClass", "") or "") or (
-            "Path does not exist" in str(e)
-        ):
-            return []
-        raise
-    rows = (
-        lin.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
-        .select("split_key").distinct().collect()
-    )
-    return sorted(r.split_key for r in rows)
 
 
 def curate_stage1_with_lineage(
@@ -88,27 +60,12 @@ def curate_stage1_with_lineage(
     Each split writes two narrow tables partitioned by (run_id,
     split_key): ``doc_stats`` (doc_id, lang, n_tokens, fp, quality_reason)
     and ``signatures`` (doc_id, band, band_sig)."""
-    stats_path = f"{output_dir}/doc_stats"
-    sigs_path = f"{output_dir}/signatures"
-    lineage_path = f"{output_dir}/lineage"
-
-    docs = _with_split(documents, num_splits)
-    done = set(_completed(spark, lineage_path, run_id))
-    pending = [s for s in range(num_splits) if s not in done]
-    per_batch = max(1, (len(pending) + num_batches - 1) // num_batches) if pending else 1
-
     txt = F.coalesce(F.col("text"), F.lit(""))
     norm = F.regexp_replace(F.lower(txt), r"\s+", " ")
     toks = F.filter(F.split(F.trim(F.lower(txt)), r"\s+"), lambda w: w != "")
 
-    batches_run = 0
-    total_docs = 0
-    for i in range(0, len(pending), per_batch):
-        if max_batches is not None and batches_run >= max_batches:
-            break
-        batch = pending[i : i + per_batch]
-        bdocs = docs.filter(F.col("split_key").isin(batch))
-        stats = bdocs.select(
+    def artifacts(batch: DataFrame, write) -> dict:
+        stats = batch.select(
             "doc_id",
             "lang",
             F.size(toks).cast("long").alias("n_tokens"),
@@ -116,41 +73,22 @@ def curate_stage1_with_lineage(
             quality_reason_expr(F.col("text"), min_tokens, min_stopword_ratio).alias(
                 "quality_reason"
             ),
-            "split_key",
         )
-        sigs = _band_signatures(bdocs, num_hashes, bands).withColumn(
-            "split_key", F.pmod(F.xxhash64("doc_id"), F.lit(num_splits)).cast("int")
-        )
-        for df, path in ((stats, stats_path), (sigs, sigs_path)):
-            (
-                df.withColumn("run_id", F.lit(run_id))
-                .repartition("split_key")
-                .write.partitionBy("run_id", "split_key")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(path)
-            )
-        counts = bdocs.groupBy("split_key").agg(F.count("*").alias("docs")).collect()
-        rows = [
-            (run_id, int(r.split_key), f"split={r.split_key}", int(r.docs), "done", time.time())
-            for r in counts
-        ]
-        empty = [s for s in batch if s not in {r.split_key for r in counts}]
-        rows += [(run_id, int(s), f"split={s}", 0, "done", time.time()) for s in empty]
-        spark.createDataFrame(
-            rows, "run_id string, split_key int, split_id string, docs long, status string, ts double"
-        ).write.mode("append").parquet(lineage_path)
-        batches_run += 1
-        total_docs += sum(r.docs for r in counts)
+        write(stats, "doc_stats")
+        write(_band_signatures(batch, num_hashes, bands), "signatures")
+        return {"docs": batch}
 
+    batches_run, splits_done, totals = run_splits(
+        spark, documents, ["doc_id"], output_dir, run_id, num_splits, num_batches, max_batches, artifacts
+    )
     return CurateRun(
         run_id=run_id,
-        stats_path=stats_path,
-        sigs_path=sigs_path,
-        lineage_path=lineage_path,
+        stats_path=f"{output_dir}/doc_stats",
+        sigs_path=f"{output_dir}/signatures",
+        lineage_path=f"{output_dir}/lineage",
         batches_run=batches_run,
-        splits_done=len(_completed(spark, lineage_path, run_id)),
-        docs=total_docs,
+        splits_done=splits_done,
+        docs=totals["docs"],
     )
 
 
@@ -186,7 +124,7 @@ def curate_finalize(
     )
     n_docs, n_stats = documents.count(), stats.count()
     if n_docs != n_stats:
-        done = _completed(spark, f"{output_dir}/lineage", run_id)
+        done = completed_splits(spark, f"{output_dir}/lineage", run_id)
         raise ValueError(
             f"curate_finalize: stage 1 incomplete for run {run_id!r} — "
             f"{n_stats} checkpointed doc_stats rows vs {n_docs} input "

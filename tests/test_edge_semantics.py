@@ -95,15 +95,15 @@ render v
 
 
 def test_canonicalize_collapses_variants(spark):
-    from dr_source_spark.operators.analyze import FINDINGS_FULL
     from dr_source_spark.operators.canonicalize import canonicalize_findings
+    from dr_source_spark.schema import FINDINGS
 
     rows = [
         ("r", "f.py", "c", "SQL_INJECTION (AST Taint)", "m-via-a", "HIGH", 10, "p", ["t1"], None, None, "a", "exec", "s", "SQL_INJECTION"),
         ("r", "f.py", "c", "SQL_INJECTION (AST Taint)", "m-via-b", "HIGH", 10, "p", ["t2"], None, None, "b", "exec", "s", "SQL_INJECTION"),
         ("r", "f.py", "c", "SQL_INJECTION (AST Taint)", "m-other", "HIGH", 30, "p", [], None, None, "x", "exec", "s", "SQL_INJECTION"),
     ]
-    df = spark.createDataFrame(rows, FINDINGS_FULL)
+    df = spark.createDataFrame(rows, FINDINGS)
     plain = canonicalize_findings(df, line_span=5)
     out = {(r.line_span): (r.message, r.n_variants) for r in plain.collect()}
     assert out[2] == ("m-via-a", 2)  # deterministic first variant kept
@@ -179,30 +179,6 @@ CUSTOM_MARKER:
     assert f.cwe == "CWE-999" and f.severity == "MEDIUM"  # rule-level default, observed behavior
     triples = {(t.pred, t.obj) for t in res.triples.collect()}
     assert ("HAS_VULN", "CWE-999") in triples and ("MATCHES_RULE", "X-MARK-1") in triples
-
-
-def test_scalar_function_surface(spark):
-    import hashlib
-
-    from dr_source_spark.functions import (
-        content_sha256, file_uri, flatten_trace, normalize_severity, split_trace,
-    )
-
-    df = spark.createDataFrame(
-        [("r", "a.py", "c", "print(1)", ["h1", "h2"], "high"), ("r", "b.py", "c", "x", [], "weird")],
-        "repo string, path string, commit string, content string, trace array<string>, severity string",
-    ).select(
-        content_sha256().alias("sha"),
-        file_uri().alias("uri"),
-        flatten_trace().alias("flat"),
-        normalize_severity().alias("sev"),
-    ).withColumn("back", split_trace("flat"))
-    rows = df.collect()
-    assert rows[0].sha == hashlib.sha256(b"print(1)").hexdigest()
-    assert rows[0].uri == "r:a.py@c"
-    assert rows[0].flat == "h1 -> h2" and list(rows[0].back) == ["h1", "h2"]
-    assert rows[0].sev == "HIGH" and rows[1].sev == "INFO"
-    assert rows[1].flat == "" and list(rows[1].back) == []
 
 
 def test_fused_walk_engines_do_not_interfere():

@@ -73,3 +73,15 @@ def test_overlay_merge_adds_rules():
     sinks = merged.ast_sinks("SQL_INJECTION", "python")
     assert "my.execute" in [s if isinstance(s, str) else s["name"] for s in sinks]
     assert merged.severity("NEW_CAT") == "LOW"
+
+
+def test_rule_severity_normalized():
+    """Rule severities are uppercased; a value outside the whitelist
+    becomes INFO (reference regex/plugin.py:73-75)."""
+    kb = load_kb(project_dir="/nonexistent")
+    overlay = {"NEW_CAT": {"cwe": "CWE-1", "general_regex_patterns": [
+        {"id": "X-1", "message": "m", "pattern": "abc", "severity": "high"},
+        {"id": "X-2", "message": "m", "pattern": "abd", "severity": "weird"}]}}
+    ckb = compile_kb(KnowledgeBase(deep_merge_config(kb.rules, overlay)))
+    sev = {r.rule_id: r.severity for r in ckb.general_regex}
+    assert (sev["X-1"], sev["X-2"]) == ("HIGH", "INFO")

@@ -214,7 +214,6 @@ def test_curation_stage1_interrupt_resume_and_parity(spark, tmp_path_factory):
     the SAME verdict, just resumable."""
     from dr_source_spark.training.curate import final_keep_list
     from dr_source_spark.training.curate_job import (
-        _completed,
         curate_finalize,
         curate_stage1_with_lineage,
     )
@@ -226,7 +225,7 @@ def test_curation_stage1_interrupt_resume_and_parity(spark, tmp_path_factory):
         spark, docs, out, "curA", num_splits=8, num_batches=4, max_batches=2
     )
     assert run1.batches_run == 2
-    assert 0 < len(_completed(spark, f"{out}/lineage", "curA")) < 8
+    assert 0 < len(completed_splits(spark, f"{out}/lineage", "curA")) < 8
 
     run2 = curate_stage1_with_lineage(
         spark, docs, out, "curA", num_splits=8, num_batches=4

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 
 def test_repo_risk_ledger_crossings(spark, tmp_path_factory):
-    from dr_source_spark.operators.analyze import FINDINGS_FULL
+    from dr_source_spark.schema import FINDINGS
     from dr_source_spark.streaming.stateful import repo_risk_ledger
 
     src = str(tmp_path_factory.mktemp("ledger_src"))
@@ -20,8 +20,8 @@ def test_repo_risk_ledger_crossings(spark, tmp_path_factory):
         ]
 
     # batch 1: repoA scores 3 HIGHs = 12 → crosses 1,2,4,8
-    spark.createDataFrame(mk("repoA", "HIGH", 3), FINDINGS_FULL).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(FINDINGS_FULL).parquet(src)
+    spark.createDataFrame(mk("repoA", "HIGH", 3), FINDINGS).write.mode("append").parquet(src)
+    stream = spark.readStream.schema(FINDINGS).parquet(src)
     q = (
         repo_risk_ledger(stream)
         .writeStream.format("parquet")
@@ -37,9 +37,9 @@ def test_repo_risk_ledger_crossings(spark, tmp_path_factory):
     assert crossed == [1.0, 2.0, 4.0, 8.0]
 
     # batch 2: +2 LOW (score 14) → crosses nothing; +1 CRITICAL later run
-    spark.createDataFrame(mk("repoA", "LOW", 2), FINDINGS_FULL).write.mode("append").parquet(src)
+    spark.createDataFrame(mk("repoA", "LOW", 2), FINDINGS).write.mode("append").parquet(src)
     q = (
-        repo_risk_ledger(spark.readStream.schema(FINDINGS_FULL).parquet(src))
+        repo_risk_ledger(spark.readStream.schema(FINDINGS).parquet(src))
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
@@ -51,9 +51,9 @@ def test_repo_risk_ledger_crossings(spark, tmp_path_factory):
     rows2 = spark.read.parquet(out).collect()
     assert sorted(r.threshold_crossed for r in rows2 if r.repo == "repoA") == [1.0, 2.0, 4.0, 8.0]
     # cumulative state survived the restart (score 14 recorded, next=16)
-    spark.createDataFrame(mk("repoA", "CRITICAL", 1), FINDINGS_FULL).write.mode("append").parquet(src)
+    spark.createDataFrame(mk("repoA", "CRITICAL", 1), FINDINGS).write.mode("append").parquet(src)
     q = (
-        repo_risk_ledger(spark.readStream.schema(FINDINGS_FULL).parquet(src))
+        repo_risk_ledger(spark.readStream.schema(FINDINGS).parquet(src))
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
