@@ -60,8 +60,8 @@ PATTERN_LANG_MAP = {
 }
 
 
-def _norm_severity(raw: Any, default: str = "MEDIUM") -> str:
-    sev = str(raw if raw is not None else default).upper()
+def _norm_severity(raw: Any) -> str:
+    sev = str(raw if raw is not None else "MEDIUM").upper()
     return sev if sev in SEVERITY_WHITELIST else "INFO"
 
 

@@ -9,8 +9,7 @@ Scale design (SURVEY.md §4 R6/R9/R10):
 * The stage is sized to its input (ensure_min_parallelism): one task per
   DETECTOR_TASK_BYTES of input, up to cores, and no shuffle when the input
   already arrives that wide. Widening hashes on (repo, path), so one
-  mega-repo never pins a single task (callers can also bucket by
-  repo-size, see operators/skew.repartition_by_size_buckets).
+  mega-repo never pins a single task.
 * Output rows carry only narrow columns — the wide ``content`` column dies
   inside this stage (column pruning: we select exactly what we need first).
 * Finding dedup on the reference identity key (path, line, type, message)
@@ -374,11 +373,18 @@ def _analyze_one(
     return out
 
 
+def _null_key_message(repo, path, commit) -> str:
+    column = ("repo", "path", "commit")[(repo, path, commit).index(None)]
+    return (
+        f"source file repo={repo!r} path={path!r}: {column} is NULL; repo, path "
+        "and commit key every finding (schema.FINDINGS) and must be set"
+    )
+
+
 def run_detectors(
     files_df: DataFrame,
     ckb,
     fn_index_broadcast=None,
-    tiers: tuple = ("regex", "ast", "pattern"),
     per_file_timeout_s: float = 0.0,
     emit_tier_errors: bool = False,
 ) -> DataFrame:
@@ -392,6 +398,10 @@ def run_detectors(
     ``called_defs`` column (join mode, index_build.resolve_symbol_index)
     each file reads its own map; otherwise every file reads
     ``fn_index_broadcast``.
+
+    A row whose repo, path or commit is NULL fails the job with a
+    ValueError naming the column and the row: those columns key every
+    finding.
 
     emit_tier_errors: append one sentinel row (plugin = TIER_ERROR_PLUGIN)
     per swallowed tier failure/timeout so parse failures become an
@@ -431,12 +441,14 @@ def run_detectors(
             defs = map(_norm_map, batch.column(5).to_pylist()) if from_column else repeat(fn_index)
             rows: List[Dict[str, Any]] = []
             for repo, path, commit, ext, content, fn_defs in zip(*cols, defs):
+                if None in (repo, path, commit):
+                    raise ValueError(_null_key_message(repo, path, commit))
                 if content is None:
                     continue
                 rows.extend(
                     _analyze_one(
                         repo, path, commit, ext or "", content, ckb_local, fn_defs,
-                        tiers, per_file_timeout_s, emit_tier_errors,
+                        ("regex", "ast", "pattern"), per_file_timeout_s, emit_tier_errors,
                     )
                 )
             arrays = [pa.array([r[f.name] for r in rows], type=f.type) for f in arrow_schema]

@@ -23,6 +23,30 @@ _KEY = ["repo", "path", "commit", "base_type"]
 _CANON_STRUCT = ["line", "message", "variable", "sink", "severity", "trace"]
 
 
+def row_salt(salt_buckets: int, cols):
+    """A ROW-varying, RETRY-DETERMINISTIC salt column for two-phase skewed
+    aggregations over the given columns (pass every column of the frame).
+
+    Two requirements pull in different directions:
+
+    * The salt must vary across rows of the SAME grouping key — a salt
+      derived from the key alone (hash(key) % buckets) is constant per key,
+      so every row of a hot key still lands on one reducer and the
+      'salting' is a no-op. Hashing the FULL row varies wherever any
+      non-key column differs (for findings: path/line/message always do).
+    * The salt must be identical when a task is recomputed —
+      monotonically_increasing_id (used before round 3) changes its id
+      assignment under partial stage retry, so a reducer that already
+      fetched some map outputs could see rows move between salt groups and
+      double-count or drop them. A content hash can't move.
+
+    Residual caveat: rows that are byte-identical across ALL columns share
+    a salt, so a hot key made of exact duplicate rows is spread only by the
+    map-side partial aggregate (which collapses those duplicates to one
+    partial row per partition before the shuffle — bounded either way)."""
+    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(salt_buckets))
+
+
 def _with_span(findings: DataFrame, line_span: int) -> DataFrame:
     return findings.withColumn("line_span", (F.col("line") / F.lit(line_span)).cast("long"))
 
@@ -43,12 +67,10 @@ def canonicalize_findings(
             F.min("_c").alias("_c"), F.count("*").alias("n_variants")
         )
     else:
-        from .skew import row_salt
-
         # row-varying salt over the full row (key + canonical struct): a
         # key-derived salt is constant per key and would leave the hot key
         # on a single reducer; hashing row content keeps the salt stable
-        # across stage retries (see skew.row_salt)
+        # across stage retries (see row_salt)
         pre = df.select(*keys, canon)
         salted = pre.withColumn("_salt", row_salt(salt_buckets, pre.columns))
         partial = salted.groupBy(*keys, "_salt").agg(

@@ -191,25 +191,23 @@ def er_verified_pairs(
 
 def er_entities(
     mentions: DataFrame,
-    id_col: str = "mention_id",
-    text_col: str = "name",
     b: int = 4,
     df_cap_pct: int = 5,
     max_bucket: int = 64,
     min_pct: int = 60,
-    max_rounds: int = 50,
 ) -> DataFrame:
     """(mention_id, entity_id): every input mention labeled with its
     canonical entity — the component minimum over the verified-match
     graph; mentions with no verified match (including too-short-to-gram
     mentions) keep their own id."""
+    max_rounds = 50
     from dr_source_spark.operators.graph import _label_components
 
-    grams = mention_grams(mentions, id_col, text_col)
+    grams = mention_grams(mentions, "mention_id", "name")
     pairs = er_candidate_pairs(grams, b, df_cap_pct, max_bucket)
     verified = er_verified_pairs(grams, pairs, min_pct)
     return _label_components(
-        mentions.select(F.col(id_col).cast("long").alias("node")),
+        mentions.select(F.col("mention_id").cast("long").alias("node")),
         verified.select(F.col("ia").cast("long").alias("src"), F.col("ib").cast("long").alias("dst")),
         max_rounds=max_rounds,
     ).select(F.col("node").alias("mention_id"), F.col("component").cast("long").alias("entity_id"))
@@ -305,7 +303,6 @@ def er_fs_weights(
     b: int = 4,
     df_cap_pct: int = 5,
     max_bucket: int = 64,
-    jaccard_agree_pct: int = 70,
 ) -> DataFrame:
     """Fellegi-Sunter agreement weights learned from labeled candidates:
     for each comparison feature, m = P(agree | true match) and
@@ -324,6 +321,7 @@ def er_fs_weights(
     intersections, two broadcast-size joins for names/truth, a 3-way
     stack and one tiny groupBy. Nothing here is all-pairs.
     """
+    jaccard_agree_pct = 70
     grams = mention_grams(mentions)
     cand = er_candidate_pairs(grams, b=b, df_cap_pct=df_cap_pct, max_bucket=max_bucket)
     # corpus-scaling join sides pinned to SHUFFLE_HASH — same driver-OOM

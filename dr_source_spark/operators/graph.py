@@ -232,7 +232,6 @@ def pagerank_fixed_point(
     edges: DataFrame,
     iterations: int = 10,
     scale: int = PAGERANK_SCALE,
-    damping_pct: int = 85,
 ) -> DataFrame:
     """PageRank in 64-bit FIXED-POINT arithmetic: ranks are integers in
     ``scale`` units and every division is an integer floor (`div`), so the
@@ -269,16 +268,11 @@ def pagerank_fixed_point(
     degree and node checkpoints before deciding the route cost 4 more
     jobs: 4.0 s for kg_pagerank over 180 k cached edge rows, of which the
     rank loop was under 0.5 s (round 6)."""
+    damping_pct = 85
     return _fixed_point_rank(edges, None, iterations, scale, damping_pct)
 
 
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iterations: int = 8,
-    scale: int = PAGERANK_SCALE,
-    damping_pct: int = 85,
-) -> DataFrame:
+def personalized_pagerank(edges: DataFrame, seeds: DataFrame, iterations: int = 8) -> DataFrame:
     """Personalized PageRank (random walk with restart) — the seeded
     relevance query a KG consumer runs constantly ("rank every entity by
     exposure to THESE nodes"): ``pagerank_fixed_point`` with the seed set
@@ -287,6 +281,8 @@ def personalized_pagerank(
     mirrored in the DuckDB oracle). Seeds outside the edge node set are
     ignored (they can neither send nor receive mass); an empty effective
     seed set raises ``ValueError``."""
+    scale = PAGERANK_SCALE
+    damping_pct = 85
     return _fixed_point_rank(edges, seeds, iterations, scale, damping_pct)
 
 
@@ -489,7 +485,7 @@ def _driver_union_find(rows) -> list:
     return [(x, comp_min[find(x)]) for x in parent if x != comp_min[find(x)]]
 
 
-def alternating_star_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
+def alternating_star_components(edges: DataFrame) -> DataFrame:
     """Connected components by alternating large-star/small-star (Kiveris
     et al., "Connected Components in MapReduce and Beyond", SoCC'14) —
     O(log n) rounds, each round two narrow-key groupBy shuffles, no
@@ -516,6 +512,7 @@ def alternating_star_components(edges: DataFrame, max_rounds: int = 50) -> DataF
     5.5 s best (8.2 s with 20 distributed rounds on the 83 k-edge
     graph), of which LSH candidate generation is 3.5 s and the jaccard
     verify 1.5 s — the component step is no longer the cost center."""
+    max_rounds = 50
     return _star_components(edges, max_rounds)[0]
 
 
@@ -974,9 +971,7 @@ def neighbor_jaccard(
     )
 
 
-def bfs_distances(
-    edges: DataFrame, seeds: DataFrame, max_hops: int = 6, undirected: bool = True
-) -> DataFrame:
+def bfs_distances(edges: DataFrame, seeds: DataFrame, max_hops: int = 6) -> DataFrame:
     """Minimum hop distance from ANY seed node: (node, hops), seeds at 0,
     nodes unreachable within ``max_hops`` absent.
 
@@ -993,7 +988,7 @@ def bfs_distances(
     IDENTICAL (pytest parity gate); the distributed loop is the design
     for billions-edge graphs."""
     e = edges.select("src", "dst")
-    sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))) if undirected else e
+    sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     sym, _, pairs = _small_graph(sym.distinct(), "bfs_edges")
     if pairs is not None:
         adj = {}
@@ -1690,9 +1685,7 @@ def resource_allocation(
     )
 
 
-def hits_scores(
-    edges: DataFrame, rounds: int = 2, scale: int = 10000
-) -> DataFrame:
+def hits_scores(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """HITS hubs & authorities (Kleinberg) over the directed simple
     graph, with the normalization made ENGINE-EXACT: each half-step
     rescales by the current maximum via integer division
@@ -1712,6 +1705,7 @@ def hits_scores(
     groupBy — both map-side combinable — plus a 1-row max broadcast;
     2·rounds such steps, no iteration-to-convergence (fixed unroll).
     """
+    scale = 10000
     if rounds < 1:
         raise ValueError("hits_scores needs rounds >= 1")
     e = _digraph(edges).localCheckpoint(eager=True)
@@ -1859,7 +1853,7 @@ def _driver_four_cycles(nodes: list, a, b) -> tuple:
     return len(codeg), len(x), int((codeg * (codeg - 1) // 2).sum()) // 2
 
 
-def walk_counts(edges: DataFrame, rounds: int = 3, alpha_inv: int = 4) -> DataFrame:
+def walk_counts(edges: DataFrame, rounds: int = 3) -> DataFrame:
     """Exact directed walk-count profile + truncated Katz centrality:
     for each node v, the number of directed walks of length exactly
     k (k = 1..rounds) ENDING at v, and the truncated Katz index with
@@ -1887,6 +1881,7 @@ def walk_counts(edges: DataFrame, rounds: int = 3, alpha_inv: int = 4) -> DataFr
     whenever max_indeg^rounds · alpha_inv^rounds < 2^63 — on hub-heavy
     graphs at extreme scale keep the decimal column instead.
     """
+    alpha_inv = 4
     if rounds < 1:
         raise ValueError("walk_counts needs rounds >= 1")
     e = _digraph(edges).localCheckpoint(eager=True)
@@ -2426,9 +2421,7 @@ def local_bridges(edges: DataFrame) -> DataFrame:
     )
 
 
-def neighbor_jaccard_topk(
-    edges: DataFrame, k: int = 100, class_max_degree: int = 256
-) -> DataFrame:
+def neighbor_jaccard_topk(edges: DataFrame, k: int = 100) -> DataFrame:
     """Top-k node pairs by NEIGHBOR-SET JACCARD — the classic
     structural-similarity / link-prediction score: two nodes are alike
     to the degree their open neighborhoods overlap, jac_bp =
@@ -2461,6 +2454,7 @@ def neighbor_jaccard_topk(
       at the same jac — it can never reach the top k. Expansion is
       ≤ (k+1)² per kept class pair regardless of twin-class size.
     """
+    class_max_degree = 256
     nodes, members, cls_info, cls_adj, adj, deg, und_ids = _class_compress(
         edges, class_max_degree
     )

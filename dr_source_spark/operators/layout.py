@@ -214,11 +214,9 @@ def hilbert_manifest(
     )
 
 
-def equidepth_histogram(
-    events: DataFrame, value_col: str = "value", buckets: int = 16, scale: int = 100
-) -> DataFrame:
+def equidepth_histogram(events: DataFrame, buckets: int = 16) -> DataFrame:
     """(bucket, n_rows, n_values, v_lo, v_hi): tie-coalesced equi-depth
-    histogram of ``value_col``.
+    histogram of ``value``.
 
     Values are keyed by ``vk = round(value * scale)`` (the synthetic data
     is 2-decimal; a finer column just coalesces sub-resolution ties —
@@ -234,15 +232,16 @@ def equidepth_histogram(
     SinglePartition window is over its bucket totals (plan-gated in
     tests/test_plans.py for the underlying helper); N rides a broadcast
     1-row cross join, not a driver action."""
+    scale = 100
     # histograms cover NON-NULL values (null_count is a separate stat in
     # every engine's column statistics) — the filter is explicit here and
     # in the SQL oracle; without it, NULL keys would silently vanish in
     # the prefix join (join-on-NULL never matches) while the oracle kept
     # them: an engine-divergence class, not just a semantics choice.
-    vk = F.round(F.col(value_col) * scale).cast("long")
+    vk = F.round(F.col("value") * scale).cast("long")
     per_value = (
-        events.where(F.col(value_col).isNotNull())
-        .select(vk.alias("vk"), F.col(value_col).alias("_v"))
+        events.where(F.col("value").isNotNull())
+        .select(vk.alias("vk"), F.col("value").alias("_v"))
         .groupBy("vk")
         .agg(
             F.count("*").cast("long").alias("cnt"),
@@ -264,9 +263,7 @@ def equidepth_histogram(
         )
     )
 
-def range_partition_advice(
-    events: DataFrame, value_col: str = "value", parts: int = 8, scale: int = 100
-) -> DataFrame:
+def range_partition_advice(events: DataFrame, parts: int = 8) -> DataFrame:
     """(partition, n_rows, n_values, v_lo, v_hi, skew_pct, max_value_rows,
     salt_factor): the equi-depth histogram wired into a repartitioning
     advisor — the exact version of what ``repartitionByRange``'s sampler
@@ -289,10 +286,11 @@ def range_partition_advice(
     ``equidepth_histogram`` — no global sort, no sampling, no floats.
     Scale shape: identical to the histogram — the only full-data shuffle
     is the map-side-combined groupBy(vk); output rows = ``parts``."""
-    vk = F.round(F.col(value_col) * scale).cast("long")
+    scale = 100
+    vk = F.round(F.col("value") * scale).cast("long")
     per_value = (
-        events.where(F.col(value_col).isNotNull())
-        .select(vk.alias("vk"), F.col(value_col).alias("_v"))
+        events.where(F.col("value").isNotNull())
+        .select(vk.alias("vk"), F.col("value").alias("_v"))
         .groupBy("vk")
         .agg(
             F.count("*").cast("long").alias("cnt"),

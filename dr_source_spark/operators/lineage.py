@@ -172,32 +172,3 @@ def extract_with_lineage(
 
 def read_findings(spark: SparkSession, output_dir: str, run_id: str) -> DataFrame:
     return spark.read.parquet(f"{output_dir}/findings").filter(F.col("run_id") == run_id)
-
-
-def run_history(spark: SparkSession, output_dir: str) -> DataFrame:
-    """A10/A8 — per-run summary over the lineage store, newest first
-    (reference db.py:171-189, 253-297: scan history + per-project listing)."""
-    lin = spark.read.parquet(f"{output_dir}/lineage")
-    return (
-        lin.groupBy("run_id")
-        .agg(
-            F.sum("files").cast("long").alias("num_files_analyzed"),
-            F.sum("findings").cast("long").alias("num_vulnerabilities"),
-            F.countDistinct("split_key").alias("splits_done"),
-            F.max("ts").alias("last_update_ts"),
-        )
-        .orderBy(F.desc("last_update_ts"))
-    )
-
-
-def compare_runs(spark: SparkSession, output_dir: str, old_run: str, new_run: str) -> dict:
-    """A9 — new/resolved/persistent findings between two stored runs
-    (reference db.py:191-219 tuple set algebra)."""
-    from .relational import scan_diff
-
-    key = ["path", "vuln_type", "message", "line"]
-    return scan_diff(
-        read_findings(spark, output_dir, new_run),
-        read_findings(spark, output_dir, old_run),
-        key,
-    )

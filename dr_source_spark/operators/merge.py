@@ -1,24 +1,21 @@
-"""CDC MERGE (upsert) classification and application, relationally.
+"""CDC MERGE (upsert) classification, relationally.
 
 The maintenance loop of every incrementally-loaded 100 TB table:
 a new batch arrives and each existing row is kept, updated, or joined
 by an insert — SQL's MERGE INTO. Without a transactional table format
-the operator is still well-defined relationally, and splitting it into
-CLASSIFY (what would change) and APPLY (the next snapshot) gives the
-audit artifact MERGE INTO never shows: the per-key action census a
-reviewer signs before the write.
+the operator is still well-defined relationally, and its CLASSIFY half
+(what would change) gives the audit artifact MERGE INTO never shows:
+the per-key action census a reviewer signs before the write.
 
 Shape at scale: one full-outer hash join on the key — the same single
 shuffle MERGE INTO's join phase costs — then pure column logic. Change
 detection compares a caller-supplied list of value columns exactly
-(integers / exact decimals; floor floats to cents first). The applied
-snapshot takes the update side's values for update/insert keys and the
-existing side's for keep keys; deletes are modeled the standard CDC way
-(an ``is_delete`` flag on the batch) rather than by absence, because at
-100 TB "absent from today's batch" almost never means "deleted".
+(integers / exact decimals; floor floats to cents first). Deletes are
+modeled the standard CDC way (an ``is_delete`` flag on the batch) rather
+than by absence, because at 100 TB "absent from today's batch" almost
+never means "deleted".
 
-``sources/catalog.py`` holds the Iceberg write path this pairs with
-when the jars exist; ``operators/lineage.py`` gives the resume story.
+``operators/lineage.py`` gives the resume story.
 """
 
 from __future__ import annotations
@@ -72,39 +69,6 @@ def classify_merge(
             *[F.col(f"new_{c}") for c in value_cols],
         )
         .filter(F.col("action").isNotNull())
-    )
-
-
-def apply_merge(
-    existing: DataFrame,
-    updates: DataFrame,
-    key: str,
-    value_cols: list[str],
-    delete_col: str | None = None,
-) -> DataFrame:
-    """The next snapshot: batch values win for surviving batch keys,
-    flagged deletes drop out, untouched existing rows pass through.
-    Same single full-outer shuffle as the census."""
-    ex = existing.select(
-        F.col(key).alias("_k"), *[F.col(c).alias(f"old_{c}") for c in value_cols]
-    )
-    up_cols = [F.col(key).alias(key), *[F.col(c).alias(f"new_{c}") for c in value_cols]]
-    if delete_col is not None:
-        up_cols.append(F.col(delete_col).alias("_del"))
-    up = updates.select(*up_cols)
-    j = up.join(ex, up[key] == ex["_k"], "full_outer")
-    deleted = F.coalesce(F.col("_del"), F.lit(False)) if delete_col else F.lit(False)
-    return (
-        j.filter(~deleted)
-        .select(
-            F.coalesce(up[key], F.col("_k")).alias(key),
-            *[
-                F.when(up[key].isNotNull(), F.col(f"new_{c}"))
-                .otherwise(F.col(f"old_{c}"))
-                .alias(c)
-                for c in value_cols
-            ],
-        )
     )
 
 

@@ -89,13 +89,7 @@ def basket_rules(
     return fwd.union(rev)
 
 
-def rfm_segments(
-    orders: DataFrame,
-    key_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
-    amount_col: str = "o_totalprice",
-    n_bins: int = 5,
-) -> DataFrame:
+def rfm_segments(orders: DataFrame) -> DataFrame:
     """RFM (recency / frequency / monetary) quintile segmentation — the
     classic customer-value grid, exact end to end. Per customer:
     recency_days = days from their last order to the corpus max date,
@@ -115,12 +109,13 @@ def rfm_segments(
     aggregated, orders of magnitude below the order table), then one
     tiny groupBy over ≤ n_bins³ cells.
     """
+    n_bins = 5
     from pyspark.sql.window import Window
 
     narrow = orders.select(
-        F.col(key_col).alias("cust"),
-        F.col(date_col).cast("date").alias("_d"),
-        F.floor(F.col(amount_col).cast("decimal(18,4)") * 100)
+        F.col("o_custkey").alias("cust"),
+        F.col("o_orderdate").cast("date").alias("_d"),
+        F.floor(F.col("o_totalprice").cast("decimal(18,4)") * 100)
         .cast("long")
         .alias("_cents"),
     )
@@ -161,8 +156,6 @@ def rfm_segments(
 
 def item_cosine_pairs(
     baskets: DataFrame,
-    entity_col: str = "ent",
-    item_col: str = "item",
     min_co: int = 2,
     min_cos_bp: int = 0,
     max_basket: int = 0,
@@ -192,7 +185,7 @@ def item_cosine_pairs(
 
     inc = (
         baskets.select(
-            F.col(entity_col).alias("ent"), F.col(item_col).alias("item")
+            F.col("ent"), F.col("item")
         )
         .distinct()
         .localCheckpoint(eager=True)
@@ -248,13 +241,7 @@ def item_cosine_pairs(
     )
 
 
-def tier_migration(
-    orders: DataFrame,
-    key_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
-    amount_col: str = "o_totalprice",
-    n_bins: int = 5,
-) -> DataFrame:
+def tier_migration(orders: DataFrame) -> DataFrame:
     """Customer VALUE-TIER MIGRATION matrix — the segment-dynamics
     report RFM's static grid can't show: split the corpus at its
     temporal midpoint, assign every customer an exact spend-quintile
@@ -277,12 +264,13 @@ def tier_migration(
     n_customers, cents_to) — cents_to = second-half spend of the
     cell's customers (0 for churn cells).
     """
+    n_bins = 5
     from pyspark.sql.window import Window
 
     narrow = orders.select(
-        F.col(key_col).alias("cust"),
-        F.col(date_col).cast("date").alias("d"),
-        F.floor(F.col(amount_col).cast("decimal(18,4)") * 100)
+        F.col("o_custkey").alias("cust"),
+        F.col("o_orderdate").cast("date").alias("d"),
+        F.floor(F.col("o_totalprice").cast("decimal(18,4)") * 100)
         .cast("long")
         .alias("cents"),
     )
@@ -337,11 +325,7 @@ def tier_migration(
     )
 
 
-def overdue_customers(
-    orders: DataFrame,
-    factor: int = 2,
-    min_orders: int = 3,
-) -> DataFrame:
+def overdue_customers(orders: DataFrame) -> DataFrame:
     """CHURN-RISK screen by purchase rhythm: customers whose silence
     since their last order has outlasted ``factor``× their own mean
     inter-order gap — the classic "overdue" reactivation trigger,
@@ -360,6 +344,8 @@ def overdue_customers(
     map-side combinable), the global clock taken by a window over the
     aggregate, pure column math after.
     """
+    factor = 2
+    min_orders = 3
     from pyspark.sql.window import Window
 
     per = orders.groupBy("o_custkey").agg(
@@ -443,7 +429,7 @@ def monthly_streaks(orders: DataFrame) -> DataFrame:
     )
 
 
-def gap_histogram(orders: DataFrame, min_orders: int = 3) -> DataFrame:
+def gap_histogram(orders: DataFrame) -> DataFrame:
     """Customer PURCHASE-RHYTHM histogram — the population view over
     the same per-customer mean inter-order gap overdue_customers
     screens individually: customers bucketed by mean gap in whole
@@ -457,6 +443,7 @@ def gap_histogram(orders: DataFrame, min_orders: int = 3) -> DataFrame:
     Scale shape: one narrow per-customer aggregate, one bounded
     histogram aggregate; shares window over the histogram only.
     """
+    min_orders = 3
     per = orders.groupBy("o_custkey").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
         F.min(F.col("o_orderdate").cast("date")).alias("first_d"),
@@ -527,9 +514,7 @@ def new_vs_repeat(orders: DataFrame) -> DataFrame:
     )
 
 
-def spend_volatility(
-    orders: DataFrame, min_orders: int = 3, volatile_cv2_fp: int = 100000000
-) -> DataFrame:
+def spend_volatility(orders: DataFrame) -> DataFrame:
     """Per-customer SPEND VOLATILITY — cadence_regularity's monetary
     sibling: squared coefficient of variation of ORDER VALUES in
     exact 10⁸ fixed point, CV² = (n·Σc² − (Σc)²) div (Σc)² over
@@ -545,6 +530,8 @@ def spend_volatility(
     Scale shape: one narrow per-customer aggregate; pure column math
     after.
     """
+    min_orders = 3
+    volatile_cv2_fp = 100000000
     per = orders.select(
         "o_custkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
@@ -570,7 +557,7 @@ def spend_volatility(
     )
 
 
-def first_value_matrix(orders: DataFrame, n_bins: int = 4) -> DataFrame:
+def first_value_matrix(orders: DataFrame) -> DataFrame:
     """Does a big FIRST order predict a big LIFETIME? The
     cohort-quality contingency every acquisition team wants: each
     customer's first-order value (earliest order, ties broken by
@@ -588,6 +575,7 @@ def first_value_matrix(orders: DataFrame, n_bins: int = 4) -> DataFrame:
     table (orders of magnitude below the fact table — the RFM
     precedent), cells are a bounded aggregate.
     """
+    n_bins = 4
     from pyspark.sql.window import Window
 
     cents = F.round(F.col("o_totalprice") * 100).cast("long")

@@ -30,8 +30,6 @@ def interval_bucket_join(
     points: DataFrame,
     intervals: DataFrame,
     value_col: str = "v",
-    lo_col: str = "lo",
-    hi_col: str = "hi",
     bucket_width: float = 32.0,
 ) -> DataFrame:
     """All (point, interval) pairs with ``lo <= v <= hi``, as the join of
@@ -44,13 +42,13 @@ def interval_bucket_join(
         "_b",
         F.explode(
             F.sequence(
-                F.floor(F.col(lo_col) / w).cast("long"),
-                F.floor(F.col(hi_col) / w).cast("long"),
+                F.floor(F.col("lo") / w).cast("long"),
+                F.floor(F.col("hi") / w).cast("long"),
             )
         ),
     )
     return (
         p.join(i, "_b")
-        .filter((F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) <= F.col(hi_col)))
+        .filter((F.col(value_col) >= F.col("lo")) & (F.col(value_col) <= F.col("hi")))
         .drop("_b")
     )

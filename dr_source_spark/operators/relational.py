@@ -13,31 +13,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def dedup_findings(findings: DataFrame, key: Sequence[str] = ("path", "line", "vuln_type", "message")) -> DataFrame:
-    """A6 — global finding dedup (reference scanner.py:158,176-180).
-    Plain dropDuplicates: Catalyst plans a hash aggregate with map-side
-    partial dedup; AQE handles post-shuffle coalescing."""
-    return findings.dropDuplicates(list(key))
-
-
-def dedup_findings_salted(
-    findings: DataFrame,
-    key: Sequence[str] = ("path", "line", "vuln_type", "message"),
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """A6 under heavy key skew (mega-repos): two-phase salted dedup — a
-    ROW-varying salt (see skew.row_salt: a key-derived salt would be
-    constant per key and spread nothing; a full-row content hash varies
-    and stays stable across stage retries), drop duplicates per salted
-    group, then a final dedup on the true key. Phase 1 spreads a hot key
-    over up to `salt_buckets` reducers."""
-    from .skew import row_salt
-
-    salted = findings.withColumn("_salt", row_salt(salt_buckets, findings.columns))
-    phase1 = salted.dropDuplicates(list(key) + ["_salt"])
-    return phase1.dropDuplicates(list(key)).drop("_salt")
-
-
 def scan_diff(curr: DataFrame, prev: DataFrame, key: Sequence[str]) -> dict:
     """A9 — new/resolved/persistent sets between two runs
     (reference db.py:191-219 set algebra → anti/semi joins)."""
@@ -71,75 +46,6 @@ def latest_per_group(df: DataFrame, group: Sequence[str], order: List) -> DataFr
     callers should project the consumed columns first (see a10_latest)."""
     w = Window.partitionBy(*group).orderBy(*order)
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-
-
-def where_used(files_df: DataFrame, class_name: str, ast_confirm: bool = False) -> DataFrame:
-    """A11 — usage query: Java files whose content references
-    ``class_name`` as a whole word, excluding the declaring file
-    (reference core/usage.py:9-70; declaration = 'class <Name>').
-
-    ast_confirm=True adds the reference's second phase: parse the (already
-    rlike-filtered, tiny) candidate set and require a structural reference —
-    a type usage, constructor call, or member receiver named ``class_name``
-    — so string/comment mentions don't count. Predicate pushdown does the
-    heavy lifting; the parser only ever sees candidates."""
-    word = rf"\b{class_name}\b"
-    decl = rf"\bclass\s+{class_name}\b"
-    candidates = (
-        files_df.filter((F.col("lang") == "java") | F.col("path").endswith(".jsp"))
-        .filter(F.col("content").rlike(word))
-        .filter(~F.col("content").rlike(decl))
-    )
-    if not ast_confirm:
-        return candidates.select("repo", "path", "commit")
-
-    from ..deploy import drop_zip_finders, ensure_shipped
-
-    ensure_shipped(files_df.sparkSession)
-
-    def confirm(batches):
-        drop_zip_finders()
-
-        import pandas as pd
-
-        from ..parsers.javaparse import parse_java
-
-        def references(node, out):
-            if not isinstance(node, dict):
-                return
-            t = node.get("t")
-            if t == "name" and node.get("id") == class_name:
-                out.append(True)
-            if t == "new":
-                ctor = node.get("ctor") or {}
-                if ctor.get("t") == "name" and ctor.get("id") == class_name:
-                    out.append(True)
-            for v in node.values():
-                if isinstance(v, dict):
-                    references(v, out)
-                elif isinstance(v, list):
-                    for x in v:
-                        references(x, out)
-
-        for pdf in batches:
-            rows = []
-            for repo, path, commit, content in zip(pdf["repo"], pdf["path"], pdf["commit"], pdf["content"]):
-                try:
-                    program = parse_java(content)
-                except Exception:
-                    continue
-                hits: list = []
-                references(program, hits)
-                if hits:
-                    rows.append({"repo": repo, "path": path, "commit": commit})
-            yield pd.DataFrame(rows, columns=["repo", "path", "commit"]) if rows else pd.DataFrame(
-                {c: pd.Series([], dtype="object") for c in ("repo", "path", "commit")}
-            )
-        drop_zip_finders()
-
-    return candidates.select("repo", "path", "commit", "content").mapInPandas(
-        confirm, "repo string, path string, commit string"
-    )
 
 
 def vuln_cooccurrence(findings: DataFrame) -> DataFrame:
@@ -285,7 +191,7 @@ def hypertable_rollup(events: DataFrame) -> DataFrame:
     return fin(hour, "hour").unionByName(fin(day, "day"))
 
 
-def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """(user_id, n_sessions, n_events, max_session_events,
     longest_session_secs): BATCH gaps-and-islands sessionization — the
     same strictly-greater 30-min gap rule as the streaming
@@ -303,6 +209,7 @@ def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     the two groupBys cluster on supersets of it, so Catalyst plans ONE
     exchange for the whole query (plan-gated) — at 100 TB the events
     table shuffles exactly once."""
+    gap_minutes = 30
     # timestampdiff(MICROSECOND, ...), not unix_timestamp: the events
     # carry sub-second parts, and a floored-seconds diff disagrees with
     # the oracle's exact interval comparison right at the gap boundary
@@ -345,9 +252,7 @@ def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-def zscore_outlier_counts(
-    events: DataFrame, k: int = 3, scale: int = 10_000
-) -> DataFrame:
+def zscore_outlier_counts(events: DataFrame) -> DataFrame:
     """(user_id, n_events, n_outliers): per-user count of events whose
     value sits more than ``k`` standard deviations from the user's own
     mean — the per-entity anomaly screen a metrics pipeline runs
@@ -369,6 +274,8 @@ def zscore_outlier_counts(
 
     Scale shape: one window over user_id for (n, s1, s2) and a final
     groupBy on the same key — the events shuffle exactly once."""
+    k = 3
+    scale = 10_000
     w = Window.partitionBy("user_id")
     # NULL values are dropped BEFORE the stats: count(*) would include a
     # NULL-v row while sum()/sum(v*v) skip it, silently biasing n against
@@ -524,9 +431,7 @@ def fingerprint_buckets(
     )
 
 
-def funnel_latency(
-    events: DataFrame, steps: Sequence[str] = ("view", "click", "purchase")
-) -> DataFrame:
+def funnel_latency(events: DataFrame) -> DataFrame:
     """Conversion-latency profile for the ordered funnel: among users
     who completed EVERY step (per funnel_progress semantics — each step
     strictly after the previous one's earliest time), the exact
@@ -541,6 +446,7 @@ def funnel_latency(
     one window rank over the per-USER latency table and a single-row
     aggregate. Output: exactly one row.
     """
+    steps = ("view", "click", "purchase")
     prog = funnel_progress(events, steps)
     first_c, last_c = f"ts_{steps[0]}", f"ts_{steps[-1]}"
     lat = (
@@ -890,9 +796,7 @@ def audience_overlap(
     )
 
 
-def markov_stationary(
-    events: DataFrame, iterations: int = 12, scale: int = 10**12
-) -> DataFrame:
+def markov_stationary(events: DataFrame, iterations: int = 12) -> DataFrame:
     """Stationary distribution of the first-order event-type chain —
     ``markov_transitions``'s fixed-point twin: where does a user stream
     spend its time in the limit? π is computed by ``iterations`` exact
@@ -916,6 +820,7 @@ def markov_stationary(
     Output: (event_type, pi_fp) with Σ pi_fp ≤ scale (truncation
     leaks ≤ 1 unit per state per round — deterministic).
     """
+    scale = 10**12
     pairs = (
         markov_transitions(events)
         .select("t_from", "t_to", "n_steps")
@@ -945,9 +850,7 @@ def markov_stationary(
     )
 
 
-def u_shape_attribution(
-    events: DataFrame, conversion_type: str = "purchase"
-) -> DataFrame:
+def u_shape_attribution(events: DataFrame) -> DataFrame:
     """Position-based (U-shaped) MULTI-TOUCH ATTRIBUTION in exact basis
     points: every conversion event distributes 10 000 bp of credit over
     the touch events in its journey — the touches after the user's
@@ -970,7 +873,7 @@ def u_shape_attribution(
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
-    conv = F.col("event_type") == conversion_type
+    conv = F.col("event_type") == "purchase"
     seq = events.select(
         "user_id",
         "event_type",
@@ -1159,12 +1062,7 @@ def cooccurrence_lift(findings: DataFrame) -> DataFrame:
     )
 
 
-def supplier_scorecard(
-    lineitem: DataFrame,
-    orders: DataFrame,
-    supplier: DataFrame,
-    late_days: int = 60,
-) -> DataFrame:
+def supplier_scorecard(lineitem: DataFrame, orders: DataFrame, supplier: DataFrame) -> DataFrame:
     """Vendor SCORECARD — the composite per-supplier operations report
     a procurement team reviews: volume, revenue (exact cents), on-time
     performance and return rate in exact basis points, and a pinned
@@ -1179,6 +1077,7 @@ def supplier_scorecard(
     over the per-SUPPLIER aggregate. Output: (s_suppkey, s_name,
     n_lines, revenue_cents, late_bp, return_bp, rev_rank).
     """
+    late_days = 60
     joined = lineitem.join(
         orders.select("o_orderkey", "o_orderdate"),
         lineitem["l_orderkey"] == F.col("o_orderkey"),
@@ -1275,9 +1174,7 @@ def dual_source_risk(
     )
 
 
-def cadence_regularity(
-    events: DataFrame, min_gaps: int = 3, bot_cv2_fp: int = 25000000
-) -> DataFrame:
+def cadence_regularity(events: DataFrame) -> DataFrame:
     """Per-user CADENCE REGULARITY — the bot-detection screen a
     curation/fraud pipeline runs on behavioral streams: squared
     coefficient of variation of inter-event gaps in exact 10⁸ fixed
@@ -1294,6 +1191,8 @@ def cadence_regularity(
     excluded (CV of two points is noise). Output: (user_id, n_gaps,
     mean_gap_us, cv2_x1e8, bot_like).
     """
+    min_gaps = 3
+    bot_cv2_fp = 25000000
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
@@ -1330,14 +1229,12 @@ def cadence_regularity(
     )
 
 
-def repo_risk_scores(
-    findings: DataFrame, weights: dict[str, int] | None = None
-) -> DataFrame:
+def repo_risk_scores(findings: DataFrame) -> DataFrame:
     """Per-repository RISK SCORECARD over the findings table — the
     triage view a security org actually ranks remediation by: finding
     count, affected-file count, and a severity-weighted risk score
-    (CRITICAL 8 / HIGH 5 / MEDIUM 2 / LOW 1 by default, unknown
-    severities floor-weighted at 1), with a pinned deterministic rank
+    (CRITICAL 8 / HIGH 5 / MEDIUM 2 / LOW 1, unknown severities
+    floor-weighted at 1), with a pinned deterministic rank
     (risk desc, repo asc). The repo-level rollup beside the A8
     severity histogram (global) and the path-hierarchy rollup
     (directory-level).
@@ -1348,7 +1245,7 @@ def repo_risk_scores(
     finding count). Output: (repo, n_findings, n_files, risk_score,
     risk_rank).
     """
-    weights = weights or {"CRITICAL": 8, "HIGH": 5, "MEDIUM": 2, "LOW": 1}
+    weights = {"CRITICAL": 8, "HIGH": 5, "MEDIUM": 2, "LOW": 1}
     w = F.coalesce(
         *[
             F.when(F.col("severity") == k, F.lit(int(v)))
@@ -1487,9 +1384,7 @@ def segment_profile(orders: DataFrame, customer: DataFrame) -> DataFrame:
     )
 
 
-def return_outlier_suppliers(
-    lineitem: DataFrame, factor: int = 2, min_lines: int = 20
-) -> DataFrame:
+def return_outlier_suppliers(lineitem: DataFrame, factor: int = 2) -> DataFrame:
     """VENDOR-QUALITY outlier screen: suppliers whose return rate runs
     more than ``factor``× the corpus-wide rate, the comparison kept
     cross-multiplied (n_returns·total_lines > factor·total_returns·
@@ -1506,6 +1401,7 @@ def return_outlier_suppliers(
     ride a 1-row aggregate broadcast onto it (the RFM bounds
     pattern).
     """
+    min_lines = 20
     per = lineitem.groupBy("l_suppkey").agg(
         F.count(F.lit(1)).cast("long").alias("n_lines"),
         F.sum((F.col("l_returnflag") == "R").cast("long"))

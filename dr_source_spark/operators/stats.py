@@ -42,13 +42,7 @@ from pyspark.sql.window import Window
 _D38 = "decimal(38,0)"
 
 
-def mad_profile(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    id_col: str,
-    k: int = 3,
-) -> DataFrame:
+def mad_profile(df: DataFrame, group_col: str, value_col: str, id_col: str) -> DataFrame:
     """Per-group robust profile: lower median, MAD, and |x−med| > k·MAD
     outlier count, all on integer values.
 
@@ -58,6 +52,7 @@ def mad_profile(
     between engines for even n). MAD repeats the same selection on the
     absolute deviations.
     """
+    k = 3
     base = df.select(
         F.col(group_col).alias("grp"),
         F.col(value_col).cast("long").alias("v"),
@@ -182,7 +177,6 @@ def ols_slope_by_group(
     group_cols: list[str],
     x_col: "F.Column",
     y_col: "F.Column",
-    scale: int = 10000,
 ) -> DataFrame:
     """Per-group exact OLS regression slope, ``scale``-scaled and
     truncated toward zero: slope = (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²)
@@ -193,6 +187,7 @@ def ols_slope_by_group(
 
     One map-side-combinable aggregate; no second pass, no window.
     """
+    scale = 10000
     g = [F.col(c) for c in group_cols]
     agg = df.groupBy(*g).agg(
         F.count(F.lit(1)).cast(_D38).alias("_n"),
@@ -255,11 +250,7 @@ def simpson_index(
     )
 
 
-def drift_chi2(
-    df: DataFrame,
-    cat_col: str,
-    ts_col: str = "ts",
-) -> DataFrame:
+def drift_chi2(df: DataFrame, cat_col: str) -> DataFrame:
     """Categorical-distribution drift between the first and second half
     of a table's time range, as the exact scaled chi-square contingency
     statistic: rows split at the epoch-microsecond midpoint
@@ -276,7 +267,7 @@ def drift_chi2(
     groupBy(cat, period) count, then arithmetic on the tiny
     category×2 table.
     """
-    ep = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    ep = F.unix_micros(F.col("ts").cast("timestamp"))
     bounds = df.agg(
         F.min(ep).alias("_lo"), F.max(ep).alias("_hi")
     )
@@ -686,13 +677,7 @@ def runs_test_by_group(
     )
 
 
-def acf_by_group(
-    df: DataFrame,
-    group_col: str,
-    ts_col: str,
-    lags: tuple[int, ...] = (1, 2, 3),
-    bucket: str = "hour",
-) -> DataFrame:
+def acf_by_group(df: DataFrame, group_col: str, ts_col: str) -> DataFrame:
     """Exact integer autocorrelation of the per-bucket event count
     series, per group — the seasonality/burstiness audit for an event
     stream (lag-1 high ⇒ bursty ingestion, lag-24 high on hourly
@@ -715,6 +700,8 @@ def acf_by_group(
     Reference: no time-series surface in the reference engine; this is
     the scan-cadence audit its findings stream would need at scale.
     """
+    lags = (1, 2, 3)
+    bucket = "hour"
     counts = (
         df.select(
             F.col(group_col).alias("grp"),
@@ -857,7 +844,6 @@ def rolling_band_outliers(
     value_cents: "F.Column",
     window: int = 24,
     k: int = 2,
-    bucket: str = "hour",
 ) -> DataFrame:
     """Trailing Bollinger-band outlier flags over the per-bucket value
     series, per group, with the square root ELIMINATED so the test is
@@ -879,7 +865,7 @@ def rolling_band_outliers(
     hourly = (
         df.select(
             F.col(group_col).alias("grp"),
-            F.date_trunc(bucket, F.col(ts_col)).alias("b"),
+            F.date_trunc("hour", F.col(ts_col)).alias("b"),
             value_cents.alias("xc"),
         )
         .groupBy("grp", "b")
@@ -986,7 +972,6 @@ def cusum_changepoint(
     group_col: str,
     ts_col: str,
     value_cents: "F.Column",
-    bucket: str = "day",
 ) -> DataFrame:
     """Exact CUSUM changepoint LOCALIZATION per group: where did the
     level of the per-bucket series shift? (drift_chi2 answers "did the
@@ -1006,7 +991,7 @@ def cusum_changepoint(
     per = (
         df.select(
             F.col(group_col).alias("grp"),
-            F.date_trunc(bucket, F.col(ts_col)).alias("b"),
+            F.date_trunc("day", F.col(ts_col)).alias("b"),
             value_cents.alias("xc"),
         )
         .groupBy("grp", "b")
@@ -1015,7 +1000,7 @@ def cusum_changepoint(
     bounds = per.groupBy("grp").agg(
         F.min("b").alias("mn"), F.max("b").alias("mx"), F.sum("x").alias("s")
     )
-    step = {"hour": "interval 1 hour", "day": "interval 1 day"}[bucket]
+    step = "interval 1 day"
     dense = (
         bounds.select(
             "grp",
@@ -1319,12 +1304,7 @@ def seasonal_residual_anomalies(
     )
 
 
-def gini_best_split(
-    df: DataFrame,
-    feature: "F.Column",
-    label: "F.Column",
-    scale: int = 1_000_000,
-) -> DataFrame:
+def gini_best_split(df: DataFrame, feature: "F.Column", label: "F.Column") -> DataFrame:
     """Exact decision-stump split search: for every candidate threshold
     t on a LOW-CARDINALITY integer feature, the weighted Gini impurity
     of the binary split (feature ≤ t vs > t) against a boolean label —
@@ -1351,6 +1331,7 @@ def gini_best_split(
     bounded SinglePartition pattern of kendall_tau_grid/equi-depth; the
     fact table shuffles once, on the grid key.
     """
+    scale = 1_000_000
     grid = (
         df.select(
             feature.cast("long").alias("v"),
@@ -2469,13 +2450,7 @@ def exact_quantiles_bisect(
         vals.unpersist()
 
 
-def life_table(
-    events: DataFrame,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    censor_days: int = 7,
-    scale: int = 10**8,
-) -> DataFrame:
+def life_table(events: DataFrame, censor_days: int = 7) -> DataFrame:
     """Kaplan-Meier LIFE TABLE with right-censoring over per-user event
     spans — the survival-analysis audit of "how long does a user stay
     active before churning", computed exactly.
@@ -2503,11 +2478,12 @@ def life_table(
     state. Output: (duration_days, n_risk, n_churn, n_censored,
     s_x1e8).
     """
-    per_user = events.groupBy(F.col(user_col).alias("u")).agg(
-        F.min(F.col(ts_col).cast("date")).alias("d0"),
-        F.max(F.col(ts_col).cast("date")).alias("d1"),
+    scale = 10**8
+    per_user = events.groupBy(F.col("user_id").alias("u")).agg(
+        F.min(F.col("ts").cast("date")).alias("d0"),
+        F.max(F.col("ts").cast("date")).alias("d1"),
     )
-    gmax = events.agg(F.max(F.col(ts_col).cast("date")).alias("dmax"))
+    gmax = events.agg(F.max(F.col("ts").cast("date")).alias("dmax"))
     obs = per_user.crossJoin(F.broadcast(gmax)).select(
         F.datediff("d1", "d0").alias("d"),
         (F.datediff("dmax", "d1") < F.lit(int(censor_days))).alias("censored"),
@@ -2842,9 +2818,7 @@ def eoq_by_key(
     )
 
 
-def pareto_cut(
-    orders: DataFrame, cover_pct_num: int = 4, cover_pct_den: int = 5
-) -> DataFrame:
+def pareto_cut(orders: DataFrame) -> DataFrame:
     """PARETO-CUT census ("is it really 80/20 here?"): the minimal
     number of customers, taken richest-first, whose order revenue
     covers ≥ cover_pct (default 4/5 = 80%) of the total — exact in
@@ -2867,6 +2841,8 @@ def pareto_cut(
     same shape as the decile-lift/quantile family — and a single-row
     final aggregate.
     """
+    cover_pct_num = 4
+    cover_pct_den = 5
     per = orders.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
         .cast("long")
@@ -3198,7 +3174,7 @@ def tax_audit(lineitem: DataFrame) -> DataFrame:
 
 def key_skew_census(events: DataFrame, k: int = 10) -> DataFrame:
     """HOT-KEY census — the skew diagnostic that feeds the salting /
-    AQE policy decisions (operators/skew.py) as a human-readable
+    AQE policy decisions (canonicalize.row_salt) as a human-readable
     report: the k heaviest user keys with exact event counts, each
     key's share of the whole stream, and the running cumulative share
     (both truncated bp). "Three users are 40 % of the stream" is the
@@ -3310,7 +3286,7 @@ def type_burstiness(events: DataFrame) -> DataFrame:
     )
 
 
-def balance_buckets(customer: DataFrame, bucket_cents: int = 50000) -> DataFrame:
+def balance_buckets(customer: DataFrame) -> DataFrame:
     """Account-balance HISTOGRAM in fixed $500 buckets, negatives
     included — the credit-exposure profile. The bucket key is the
     mathematical FLOOR of cents/bucket (so −0.01 lands in bucket −1,
@@ -3326,6 +3302,7 @@ def balance_buckets(customer: DataFrame, bucket_cents: int = 50000) -> DataFrame
     Scale shape: a 1-column derived projection + one bounded groupBy;
     shares window over the histogram only.
     """
+    bucket_cents = 50000
     b = int(bucket_cents)
     cents = F.round(F.col("c_acctbal") * 100).cast("long")
     bucket = F.expr(

@@ -14,8 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def file_uri(repo="repo", path="path", commit="commit"):
-    return F.concat_ws("", F.col(repo), F.lit(":"), F.col(path), F.lit("@"), F.col(commit))
+def file_uri():
+    return F.concat_ws("", F.col("repo"), F.lit(":"), F.col("path"), F.lit("@"), F.col("commit"))
 
 
 def findings_to_triples(findings: DataFrame, run_id: str = "run-0") -> DataFrame:

@@ -63,9 +63,7 @@ def extract(
     source_files: DataFrame,
     kb_path: Optional[str] = None,
     enable_interfile: bool = True,
-    per_file_timeout_s: float = 0.0,
     run_id: Optional[str] = None,
-    content_dedup: bool = False,
     index_python: bool = False,
 ) -> ExtractionResult:
     """enable_interfile resolves cross-file calls through the symbol index
@@ -77,12 +75,7 @@ def extract(
     index, enabling cross-file Python taint (the reference's own
     inter-file pytest expects this, but its stock scanner never wires a
     project index into the Python tier — see SURVEY.md §2B B7 — so this is
-    an opt-in EXTENSION; default off = reference parity).
-
-    content_dedup=True analyzes each distinct (ext, content) once and joins
-    findings back to every instance (operators/content_dedup.py) — the path
-    for corpora with heavy file duplication (vendored deps, forks); output
-    is finding-identical. Raises if the index falls back to join mode."""
+    an opt-in EXTENSION; default off = reference parity)."""
     run_id = run_id or f"run-{uuid.uuid4().hex[:12]}"
     # mtime-cached: repeated extractions reuse one CompiledKB object, which
     # in turn reuses one broadcast (operators/analyze.broadcast_ckb)
@@ -92,8 +85,7 @@ def extract(
     # persist only what the index/detector jobs consume: the ingest
     # invariants (content_sha256, size_bytes) are not read by the default
     # extraction path, and materializing them into the cache hashed every
-    # file for nothing (round 6; content_dedup derives its own key when
-    # the column is absent)
+    # file for nothing (round 6)
     files = files.select("repo", "path", "commit", "ext", "lang", "content")
     cached = files = files.persist()  # read once, feed both jobs
 
@@ -101,17 +93,7 @@ def extract(
     if enable_interfile:
         files, fn_index_bc, index_mode = resolve_symbol_index(spark, files, include_python=index_python)
 
-    detector_kwargs = dict(
-        fn_index_broadcast=fn_index_bc,
-        per_file_timeout_s=per_file_timeout_s,
-        emit_tier_errors=True,
-    )
-    if content_dedup:
-        from .operators.content_dedup import run_detectors_content_deduped
-
-        detected = run_detectors_content_deduped(files, ckb, **detector_kwargs)
-    else:
-        detected = run_detectors(files, ckb, **detector_kwargs)
+    detected = run_detectors(files, ckb, fn_index_broadcast=fn_index_bc, emit_tier_errors=True)
     detected = detected.persist()  # every output below reads this one cache
 
     tier_errors = (

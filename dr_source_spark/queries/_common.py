@@ -126,16 +126,13 @@ _WORDS_CTE = r"""words AS (
 )"""
 
 
-def _lsh_pairs_ctes(
-    num_hashes: int = _LSH_HASHES,
-    bands: int = _LSH_BANDS,
-    cap: int = _LSH_CAP,
-    source: str = "documents",
-    prelude: str = "",
-) -> str:
+def _lsh_pairs_ctes(source: str = "documents", prelude: str = "") -> str:
     """source/prelude let a caller run the LSH pipeline over an augmented
     corpus: prelude defines extra CTEs (e.g. planted rows unioned onto
     documents) and source names the CTE the words scan reads."""
+    num_hashes = _LSH_HASHES
+    bands = _LSH_BANDS
+    cap = _LSH_CAP
     r = num_hashes // bands
     words_cte = _WORDS_CTE.replace("FROM documents", f"FROM {source}")
     return f"""WITH {prelude}{words_cte}, {_duck_minhash_seeds(num_hashes)},
@@ -170,7 +167,8 @@ _CMS_W, _CMS_TOP = 256, 20
 # and hi folds its -1 into the sum, so the full int64 domain stays exact)
 
 
-def _duck_hdr_bucket(v: str, K: int = 16) -> str:
+def _duck_hdr_bucket(v: str) -> str:
+    K = 16
     e = f"(length(bin({v})) - 1)"
     base = f"(CAST(1 AS BIGINT) << {e})"
     return (
@@ -181,7 +179,8 @@ def _duck_hdr_bucket(v: str, K: int = 16) -> str:
     )
 
 
-def _duck_hdr_bounds(b: str = "bucket", K: int = 16) -> tuple[str, str]:
+def _duck_hdr_bounds(b: str = "bucket") -> tuple[str, str]:
+    K = 16
     e = f"CAST({b} // {K} AS INT)"
     base = f"(CAST(1 AS BIGINT) << {e})"
 
@@ -212,12 +211,13 @@ jac AS (
 ),"""
 
 
-def dedup_clusters_sql(threshold: float = 0.9, tail: str = "") -> str:
+def dedup_clusters_sql(tail: str = "") -> str:
     # recursive min-label reachability reproduces the component minimum;
     # jac is the ROUNDED verify column so the threshold classifies pairs
     # identically in both engines. ``tail`` turns the final select into a
     # `clusters` CTE and appends further SQL (used by the keep-list
     # oracle, which layers the quality verdict on top).
+    threshold = 0.9
     jac_tail = _JAC_TAIL
     final = (
         "SELECT CAST(node AS BIGINT) AS doc_id, CAST(min(lbl) AS BIGINT) AS cluster_id\n"

@@ -318,7 +318,8 @@ def dedup_contamination_dist(spark, sf_dir):
     )
 
 
-def dedup_contamination_sql(rounds: int = 4) -> str:
+def dedup_contamination_sql() -> str:
+    rounds = 4
     parts = [
         _lsh_pairs_ctes()
         + """,
@@ -393,10 +394,11 @@ def dedup_hyperball(spark, sf_dir):
     )
 
 
-def dedup_hyperball_sql(threshold: float = 0.9) -> str:
+def dedup_hyperball_sql() -> str:
     # ball_t as explicit (node, member) SETs via UNION (dedup), then the
     # register arithmetic of _TEXT_HLL_SQL at p=4 (maxrho = 29) applied to
     # the member hashes — every cell integer-exact in both engines
+    threshold = 0.9
     return (
         _lsh_pairs_ctes()
         + ","
@@ -436,9 +438,10 @@ FROM bsz b JOIN summ s ON s.node = b.node
     )
 
 
-def dedup_triangles_sql(threshold: float = 0.9) -> str:
+def dedup_triangles_sql() -> str:
     # orientation-free: canonical sorted triangles (x<y<z) over the
     # jaccard-verified pair graph, each crediting its three vertices
+    threshold = 0.9
     return (
         _lsh_pairs_ctes()
         + ","
@@ -635,7 +638,9 @@ def dedup_simhash_pairs(spark, sf_dir):
     return simhash_near_dup_pairs(_t(spark, sf_dir, "documents"))
 
 
-def simhash_pairs_sql(bands: int = 4, max_hamming: int = 3) -> str:
+def simhash_pairs_sql() -> str:
+    bands = 4
+    max_hamming = 3
     width = 16 // bands
     band_eq = " OR ".join(
         f"substr(a.simhash, {1 + i * width}, {width}) = substr(b.simhash, {1 + i * width}, {width})"

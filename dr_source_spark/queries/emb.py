@@ -35,13 +35,15 @@ def ann_lsh_topk(spark, sf_dir):
     return lsh_bucketed_topk(_t(spark, sf_dir, "embeddings"), query_ids=[0, 1, 2, 3, 4], k=3)
 
 
-def _lsh_sig_union_sql(
-    num_tables: int = 16, planes_per_table: int = 4, seed: int = 42, dim: int = 64
-) -> str:
+def _lsh_sig_union_sql() -> str:
     """The multitable sign-LSH signature stream as a SQL union over an `e`
     CTE (vec_id, v DOUBLE[]) — the identical literal planes the engine's
     multitable_signatures derives; shared by the ANN top-k oracle and the
     bucket-balance audit so the two inspect the SAME buckets."""
+    num_tables = 16
+    planes_per_table = 4
+    seed = 42
+    dim = 64
 
     tables = []
     for t in range(num_tables):
@@ -566,7 +568,9 @@ def _emb_pca_chain(iterations: int = 8, xnorm: int = 10**5) -> str:
     return "\n".join(parts).rstrip(",")
 
 
-def emb_pca_sql(iterations: int = 8, xnorm: int = 10**5) -> str:
+def emb_pca_sql() -> str:
+    iterations = 8
+    xnorm = 10**5
     body = _emb_pca_chain(iterations, xnorm)
     last = f"x{iterations}"
     return f"""{body},
@@ -579,10 +583,12 @@ FROM {last} CROSS JOIN fl
 """
 
 
-def emb_pca_explained_sql(iterations: int = 8, xnorm: int = 10**5) -> str:
+def emb_pca_explained_sql() -> str:
     # same unrolled chain, finished with the Rayleigh-quotient scalars;
     # the big receipts travel as digit strings (HUGEINT would degrade
     # to float64 through pandas)
+    iterations = 8
+    xnorm = 10**5
     body = _emb_pca_chain(iterations, xnorm)
     last = f"x{iterations}"
     return f"""{body},

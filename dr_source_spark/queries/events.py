@@ -1600,10 +1600,12 @@ def events_markov_stationary(spark, sf_dir):
     return markov_stationary(_t(spark, sf_dir, "events"), iterations=12)
 
 
-def markov_stationary_sql(iterations: int = 12, scale: int = 10**12) -> str:
+def markov_stationary_sql() -> str:
     # unrolled like _pagerank_sql_over: p0..pN CTEs, each one exact
     # integer step (pi·n) // tot per transition, zero-mass states kept
     # via the LEFT JOIN back to the state list
+    iterations = 12
+    scale = 10**12
     parts = [
         "WITH steps AS MATERIALIZED (",
         "  SELECT event_type AS t_from,",

@@ -143,7 +143,10 @@ def kg_pagerank(spark, sf_dir):
     return pagerank_fixed_point(PERSISTED.kg_extraction(spark, sf_dir).edges)
 
 
-def kg_pagerank_sql(iterations: int = 10, scale: int = 10**12, dp: int = 85) -> str:
+def kg_pagerank_sql() -> str:
+    iterations = 10
+    scale = 10**12
+    dp = 85
     return _pagerank_sql_over(kg_edges_oracle_sql(), iterations, scale, dp)
 
 
@@ -162,12 +165,15 @@ def kg_ppr_exposure(spark, sf_dir):
     return personalized_pagerank(sym, seeds, iterations=8)
 
 
-def kg_ppr_sql(iterations: int = 8, scale: int = 10**12, dp: int = 85) -> str:
+def kg_ppr_sql() -> str:
     # unrolled like _kg_pagerank_sql, with three seed-conditional terms:
     # initial mass, restart base, and dangling share all go to the seeds
     # (CWE-* nodes) only. Symmetric edge table (exposure flows both ways),
     # so dangling mass is structurally zero — the term stays for parity
     # with the operator, which keeps it for general edge tables.
+    iterations = 8
+    scale = 10**12
+    dp = 85
     parts = [
         f"WITH kg_e AS MATERIALIZED ({kg_edges_oracle_sql()}),",
         "e0 AS MATERIALIZED (SELECT DISTINCT src, dst FROM kg_e),",
@@ -347,7 +353,8 @@ def kg_label_prop(spark, sf_dir):
     return label_propagation(PERSISTED.kg_extraction(spark, sf_dir).edges, rounds=_LPA_ROUNDS)
 
 
-def kg_label_prop_sql(rounds: int = _LPA_ROUNDS) -> str:
+def kg_label_prop_sql() -> str:
+    rounds = _LPA_ROUNDS
     parts = [
         f"WITH kg_e AS MATERIALIZED ({kg_edges_oracle_sql()}),",
         "sym AS MATERIALIZED (SELECT DISTINCT src, dst FROM ("
@@ -484,7 +491,9 @@ def kg_kcore(spark, sf_dir):
     )
 
 
-def kg_kcore_sql(k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> str:
+def kg_kcore_sql() -> str:
+    k = _KCORE_K
+    rounds = _KCORE_ROUNDS
     parts = [
         f"WITH kg_e AS MATERIALIZED ({kg_edges_oracle_sql()}),",
         "e0 AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b"
@@ -549,10 +558,11 @@ def kg_reachability(spark, sf_dir):
     return bfs_distances(edges, seeds, max_hops=6)
 
 
-def kg_reachability_sql(max_hops: int = 6) -> str:
+def kg_reachability_sql() -> str:
     # UNION (not UNION ALL) recursion: (node, hop) pairs dedupe against the
     # accumulated set, so the walk is node-bounded — a path-enumerating
     # UNION ALL is exponential on this dense bipartite file<->CWE graph
+    max_hops = 6
     return f"""
 WITH RECURSIVE kg_e AS MATERIALIZED ({kg_edges_oracle_sql()}),
 e AS MATERIALIZED (SELECT DISTINCT src, dst FROM kg_e),
@@ -1322,7 +1332,8 @@ def kg_neighbor_jaccard_topk(spark, sf_dir):
     return neighbor_jaccard_topk(PERSISTED.kg_extraction(spark, sf_dir).edges, k=100)
 
 
-def kg_neighbor_jaccard_topk_sql(k: int = 100) -> str:
+def kg_neighbor_jaccard_topk_sql() -> str:
+    k = 100
     return f"""
 WITH kg_e AS MATERIALIZED ({kg_edges_oracle_sql()}),
 e AS (SELECT DISTINCT src, dst FROM kg_e),
@@ -1435,7 +1446,8 @@ def kg_rich_club(spark, sf_dir):
     return rich_club(PERSISTED.kg_extraction(spark, sf_dir).edges)
 
 
-def kg_rich_club_sql(ks: tuple = (5, 10, 20, 50)) -> str:
+def kg_rich_club_sql() -> str:
+    ks = (5, 10, 20, 50)
     vals = ", ".join(f"({k})" for k in ks)
     return f"""
 WITH kg_e AS MATERIALIZED ({kg_edges_oracle_sql()}),

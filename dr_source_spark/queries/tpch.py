@@ -3269,7 +3269,10 @@ def supplier_part_core(spark, sf_dir):
     return bipartite_core(edges, alpha=520, beta=10, rounds=3)
 
 
-def supplier_part_core_sql(alpha: int = 520, beta: int = 10, rounds: int = 3) -> str:
+def supplier_part_core_sql() -> str:
+    alpha = 520
+    beta = 10
+    rounds = 3
     sql = """WITH e0 AS MATERIALIZED (
   SELECT DISTINCT CAST(l_suppkey AS BIGINT) AS src,
                   CAST(l_partkey AS BIGINT) AS dst
@@ -3730,7 +3733,8 @@ def orders_holt_forecast(spark, sf_dir):
     return holt_linear(monthly, "idx", "y", horizon=3)
 
 
-def holt_sql(horizon: int = 3) -> str:
+def holt_sql() -> str:
+    horizon = 3
     def sdiv(a: str, d: int) -> str:
         return (
             f"(CASE WHEN ({a}) < 0 THEN -((-({a})) // {d})"

@@ -35,9 +35,10 @@ def read_source_files(
     spark: SparkSession, location: str, fmt: str = "parquet", csv_multiline: bool = False
 ) -> DataFrame:
     """Scan the corpus table. Iceberg when a catalog table name is given
-    (contains no '/'); parquet (default), ORC, JSONL, or headered CSV paths
-    otherwise — all mapped onto the SOURCE_FILES schema so every downstream
-    stage is format-agnostic. Columnar formats keep pushdown/pruning; JSONL/
+    (a dotted name with no '/' that is not an existing path); parquet
+    (default), ORC, JSONL, or headered CSV paths otherwise — all mapped
+    onto the SOURCE_FILES schema so every downstream stage is
+    format-agnostic. Columnar formats keep pushdown/pruning; JSONL/
     CSV are ingest conveniences for corpus drops.
 
     CSV is read SPLITTABLE by default (multiLine=False — records must not
@@ -45,8 +46,11 @@ def read_source_files(
     embedded newlines, at the documented cost of one task per file at scale
     (multiLine CSV is not splittable) — steer bulk source-code drops, which
     always embed newlines, to JSONL/ORC/parquet instead."""
-    if fmt == "iceberg" or ("/" not in location and "." in location):
+    if fmt == "iceberg" or ("/" not in location and "." in location and not os.path.exists(location)):
         return spark.read.format("iceberg").load(location)
+    if os.path.exists(location):
+        # relative to this process's cwd, not the JVM's
+        location = os.path.abspath(location)
     if fmt == "dir":
         # checkout-tree on-ramp: the Spark 4 Python Data Source walks the
         # tree partition-parallel (driver lists paths only; executors read
@@ -71,7 +75,6 @@ def corpus_from_dir(
     root: str,
     repo: str = "local",
     commit: str = "HEAD",
-    apply_ignore_rules: bool = True,
 ) -> DataFrame:
     """Walk a local directory into a source_files DataFrame (driver-side;
     for fixture-scale corpora only). Content is decoded utf-8 with
@@ -79,10 +82,9 @@ def corpus_from_dir(
     (core/codebase.py:22-25, plugins read with the same flags)."""
     rows = []
     for dirpath, dirnames, filenames in os.walk(root):
-        if apply_ignore_rules:
-            dirnames[:] = [d for d in dirnames if d not in IGNORED_DIRS]
+        dirnames[:] = [d for d in dirnames if d not in IGNORED_DIRS]
         for fn in sorted(filenames):
-            if apply_ignore_rules and any(fn.endswith(ext) for ext in IGNORED_EXTENSIONS):
+            if any(fn.endswith(ext) for ext in IGNORED_EXTENSIONS):
                 continue
             fp = os.path.join(dirpath, fn)
             with open(fp, "r", encoding="utf-8", errors="ignore") as f:

@@ -296,11 +296,13 @@ def _sub_sql(expr: str) -> str:
     return "replace(replace(replace(" + expr + ", '{N}', d.n), '{W}', d.w), '{M}', d.m)"
 
 
-def kg_canonicalize_oracle_sql(commit: str = "bench", line_span: int = 1) -> str:
+def kg_canonicalize_oracle_sql() -> str:
     """Oracle for canonicalize_findings over the flagship findings: each
     synthesized file's findings are template constants, one per
     (repo, path, commit, base_type, line_span) key → the canonical row is
     the finding itself with n_variants = 1."""
+    commit = "bench"
+    line_span = 1
     rows = []
     for tpl, (path_t, _) in EXPECTED_TRIPLES.items():
         for base_type, line, msg_t, var_t, sink, sev, trace_t in EXPECTED_FINDINGS[tpl]:
@@ -379,11 +381,11 @@ def kg_edges_oracle_sql(run_id: str = "driver", commit: str = "bench") -> str:
     )
 
 
-def kg_nodes_oracle_sql(run_id: str = "driver", commit: str = "bench") -> str:
+def kg_nodes_oracle_sql() -> str:
     """Nodes table oracle: distinct subj∪obj with the kind classification of
     operators/triples.py:triples_to_nodes_edges (same precedence order)."""
     return f"""
-WITH t AS ({kg_triples_oracle_sql(run_id, commit)}),
+WITH t AS ({kg_triples_oracle_sql()}),
 ids AS (SELECT subj AS node_id FROM t UNION SELECT obj FROM t)
 SELECT node_id,
        CASE WHEN regexp_matches(node_id, '#var:') THEN 'entity'
@@ -397,12 +399,14 @@ FROM ids
 """
 
 
-def synth_malformed_corpus(documents: DataFrame, broken_mod: int = 5, broken_rem: int = 3) -> DataFrame:
+def synth_malformed_corpus(documents: DataFrame) -> DataFrame:
     """documents → one Python file per doc, with docs where
     ``doc_id % broken_mod == broken_rem`` deliberately UNPARSEABLE
     (guaranteed SyntaxError). Drives the ``tier_error_rate`` driver query:
     the expected ast-tier error count is a pure SQL predicate over
     documents, so parse-loss observability itself gets a value oracle."""
+    broken_mod = 5
+    broken_rem = 3
     sid = F.col("doc_id").cast("string")
     word = F.regexp_replace(
         F.coalesce(F.element_at(F.split(F.col("text"), " "), 3), F.lit("field")),
@@ -500,7 +504,7 @@ def synth_code_corpus(
     )
 
 
-def kg_triples_diff_oracle_sql(commit: str = "bench") -> str:
+def kg_triples_diff_oracle_sql() -> str:
     """Oracle for the incremental-KG diff query: v1 = the 6-template corpus
     over all documents; v2 = v1 minus every 5th doc plus every 13th doc
     re-synthesized at doc_id + 1_000_000. Only templates < 6 (no inter-file
@@ -508,6 +512,7 @@ def kg_triples_diff_oracle_sql(commit: str = "bench") -> str:
     change = 'removed' (v1-only) / 'added' (v2-only); since an added doc's
     id (and therefore its paths/vars) is new, added and removed sets never
     overlap."""
+    commit = "bench"
     rows = []
     for tpl, (path_t, triples) in EXPECTED_TRIPLES.items():
         if tpl >= 6:

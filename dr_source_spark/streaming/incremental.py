@@ -64,23 +64,16 @@ def incremental_extract(
     return query
 
 
-def sessionize(
-    events_stream: DataFrame,
-    gap: str = "30 minutes",
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    value_col: str = "value",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def sessionize(events_stream: DataFrame) -> DataFrame:
     """Gap-based sessionization with ``session_window`` — the streaming
     operator behind per-entity activity rollups (scan bursts per repo,
     user sessions per service). Events of one key merge into a session
-    while each arrives within ``gap`` of the previous one; an event at
-    EXACTLY ``gap`` after the previous still merges (boundary-inclusive —
+    while each arrives within 30 minutes of the previous one; an event at
+    EXACTLY 30 minutes after the previous still merges (boundary-inclusive —
     pinned by tests/test_lineage_streaming.py::test_sessionize_gap_boundary).
 
-    State is per-open-session and bounded by the watermark: once the
-    watermark passes a session's close, its state is dropped. Batch
+    State is per-open-session and bounded by the 1-hour watermark on
+    ``ts``: once the watermark passes a session's close, its state is dropped. Batch
     parity: the same expression works on a static DataFrame (Catalyst
     rewrites session_window into a sort-merge within partition), which is
     what the availableNow driver query checks against a SQL islands
@@ -88,13 +81,13 @@ def sessionize(
     from pyspark.sql import functions as F
 
     return (
-        events_stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap), F.col(key_col))
+        events_stream.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window(F.col("ts"), "30 minutes"), F.col("user_id"))
         .agg(
             F.count("*").cast("long").alias("n_events"),
-            F.min(ts_col).alias("first_ts"),
-            F.max(ts_col).alias("last_ts"),
-            F.round(F.sum(value_col), 4).alias("sum_value"),
+            F.min("ts").alias("first_ts"),
+            F.max("ts").alias("last_ts"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
         )
         .drop("session_window")
     )
@@ -102,7 +95,6 @@ def sessionize(
 
 def windowed_finding_counts(
     findings_stream: DataFrame,
-    ts_col: str = "event_ts",
     window_dur: str = "10 minutes",
     watermark: str = "10 minutes",
 ) -> DataFrame:
@@ -118,8 +110,8 @@ def windowed_finding_counts(
     from pyspark.sql import functions as F
 
     return (
-        findings_stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_dur), F.col("severity"))
+        findings_stream.withWatermark("event_ts", watermark)
+        .groupBy(F.window(F.col("event_ts"), window_dur), F.col("severity"))
         .agg(F.count("*").alias("n"))
         .select(
             F.col("window.start").alias("window_start"),

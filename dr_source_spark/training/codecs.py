@@ -19,10 +19,9 @@ WAV-PCM/BMP". Two of those formats need no codec library at all:
   real variable-width LZW coder (9→12-bit growth, clear/EOI codes,
   KwKwK case, 4096-entry cap) — no library involved.
 
-JPEG and MP4/MP3 remain documented fail-fasts in
-``multimodal.decode_media``: entropy-coded DCT audio/video genuinely
-needs codec libraries this environment lacks, and faking them would be
-worse than failing.
+JPEG and MP4/MP3 are not decoded: entropy-coded DCT audio/video
+genuinely needs codec libraries this environment lacks, and faking them
+would be worse than failing.
 
 Scale shape: both decoders run inside Arrow batches via
 ``multimodal.decode_features`` — the binary payload dies in-stage and
@@ -203,12 +202,13 @@ def decode_png(payload: bytes) -> Tuple[int, int, List[bytes]]:
 _GIF_MIN_CODE = 8  # 256-entry palette → 8-bit symbols, 9-bit initial codes
 
 
-def _lzw_encode(indices: bytes, min_code: int = _GIF_MIN_CODE) -> bytes:
+def _lzw_encode(indices: bytes) -> bytes:
     """Variable-width GIF-flavor LZW: clear = 2^min, EOI = clear+1, first
     dynamic code = clear+2; width grows 9→12 when the next assignable
     code would not fit (encoder checks AFTER assigning, mirroring the
     decoder's post-read growth — the classic one-entry lag), and the
     table freezes at 4096 (deferred-clear convention, mirrored below)."""
+    min_code = _GIF_MIN_CODE
     clear = 1 << min_code
     eoi = clear + 1
     table = {bytes([i]): i for i in range(clear)}

@@ -54,11 +54,7 @@ def quality_reason_expr(text_col, min_tokens: int = 5, min_stopword_ratio: float
     )
 
 
-def curation_decisions(
-    documents: DataFrame,
-    min_tokens: int = 5,
-    min_stopword_ratio: float = 0.05,
-) -> DataFrame:
+def curation_decisions(documents: DataFrame) -> DataFrame:
     """(doc_id, reason, keep) for every input document.
 
     * ``exact_duplicate`` — not the minimum-doc_id representative of its
@@ -71,6 +67,8 @@ def curation_decisions(
       cheap Gopher-style "is this prose" screen;
     * ``kept`` — everything else.
     """
+    min_tokens = 5
+    min_stopword_ratio = 0.05
     # null-safe: a NULL text must still get a verdict (it fingerprints as
     # the empty string, groups with other empty docs, and falls out as
     # too_short) — a curation table silently missing input rows is how
@@ -89,12 +87,7 @@ def curation_decisions(
     )
 
 
-def final_keep_list(
-    documents: DataFrame,
-    jaccard_threshold: float = 0.9,
-    min_tokens: int = 5,
-    min_stopword_ratio: float = 0.05,
-) -> DataFrame:
+def final_keep_list(documents: DataFrame) -> DataFrame:
     """The end-of-pipeline verdict: ONE row per document combining
     near-duplicate clustering with the quality screen — reason precedence
     ``near_duplicate`` (not the min-doc_id canonical of its verified
@@ -109,6 +102,9 @@ def final_keep_list(
     Scale shape: the cluster labels come from the LSH→jaccard→components
     pipeline (never all-pairs, adaptive CC); the quality columns are
     JVM-only; one equi-join on doc_id stitches them."""
+    jaccard_threshold = 0.9
+    min_tokens = 5
+    min_stopword_ratio = 0.05
     from .dedup import duplicate_clusters
 
     clusters = duplicate_clusters(documents, jaccard_threshold=jaccard_threshold)
@@ -126,11 +122,7 @@ def final_keep_list(
     )
 
 
-def quality_dup_interaction(
-    documents: DataFrame,
-    min_tokens: int = 5,
-    min_stopword_ratio: float = 0.05,
-) -> DataFrame:
+def quality_dup_interaction(documents: DataFrame) -> DataFrame:
     """QUALITY × DUPLICATION interaction audit — "are the duplicates
     also the junk?": every document gets its quality verdict (the
     shared ``quality_reason_expr``, dup layer deliberately NOT
@@ -149,6 +141,8 @@ def quality_dup_interaction(
     never shuffles — only the digest), one join back, one bounded
     cell aggregate; shares window over the cells only.
     """
+    min_tokens = 5
+    min_stopword_ratio = 0.05
     txt = F.coalesce(F.col("text"), F.lit(""))
     norm = F.regexp_replace(F.lower(txt), r"\s+", " ")
     docs = documents.select(

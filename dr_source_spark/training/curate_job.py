@@ -48,10 +48,7 @@ def curate_stage1_with_lineage(
     num_splits: int = 64,
     num_batches: int = 8,
     max_batches: int | None = None,
-    num_hashes: int = 112,
-    bands: int = 14,
     min_tokens: int = 5,
-    min_stopword_ratio: float = 0.05,
 ) -> CurateRun:
     """Run (or resume) the per-document artifact stage with checkpointing.
 
@@ -60,6 +57,9 @@ def curate_stage1_with_lineage(
     Each split writes two narrow tables partitioned by (run_id,
     split_key): ``doc_stats`` (doc_id, lang, n_tokens, fp, quality_reason)
     and ``signatures`` (doc_id, band, band_sig)."""
+    num_hashes = 112
+    bands = 14
+    min_stopword_ratio = 0.05
     txt = F.coalesce(F.col("text"), F.lit(""))
     norm = F.regexp_replace(F.lower(txt), r"\s+", " ")
     toks = F.filter(F.split(F.trim(F.lower(txt)), r"\s+"), lambda w: w != "")
@@ -98,7 +98,6 @@ def curate_finalize(
     output_dir: str,
     run_id: str,
     jaccard_threshold: float = 0.9,
-    max_cluster: int = 1000,
 ) -> DataFrame:
     """Stage 2: keep-list from the checkpointed artifacts. Reads the
     NARROW signature table for pair generation (grouped banding with the
@@ -117,6 +116,7 @@ def curate_finalize(
     dropped by the inner join below and escape curation UNAUDITED — the
     exact failure the keep-list's every-doc-gets-a-verdict invariant
     exists to prevent."""
+    max_cluster = 1000
     stats = (
         spark.read.parquet(f"{output_dir}/doc_stats")
         .filter(F.col("run_id") == run_id)

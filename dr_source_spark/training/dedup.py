@@ -36,11 +36,11 @@ def exact_duplicates(documents: DataFrame) -> DataFrame:
     )
 
 
-def _words(col="text"):
-    return F.array_distinct(F.filter(F.split(F.lower(F.col(col)), r"\s+"), lambda w: w != ""))
+def _words():
+    return F.array_distinct(F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda w: w != ""))
 
 
-def _shingles(n: int, col="text"):
+def _shingles(n: int):
     """Distinct character n-grams of the lowercased text (JVM-side:
     substr over a generated positions array — no UDF). Character shingles
     catch near-duplicates that word-set Jaccard misses (reordered words,
@@ -51,7 +51,7 @@ def _shingles(n: int, col="text"):
     holds in shingle mode too. Without the guard, '' emitted the ['']
     shingle (making all empty docs certain near-dup candidates of each
     other) and NULL emitted a NULL-minhash signature row."""
-    t = F.lower(F.col(col))
+    t = F.lower(F.col("text"))
     positions = F.sequence(F.lit(1), F.greatest(F.length(t) - (n - 1), F.lit(1)))
     grams = F.array_distinct(F.transform(positions, lambda i: t.substr(i, F.lit(n))))
     return F.when(
@@ -186,8 +186,7 @@ def minhash_lsh_candidates(
     output — and the drop is NEVER silent: an in-plan ``observe`` metric
     (``lsh_cap_drops``: n_oversized_clusters / n_docs_in_oversized) rides
     every materialization of the result — visible in the Spark UI / SQL
-    listener without the caller remembering the companion
-    ``lsh_oversized_clusters`` query, which remains the detail view. Such
+    listener without the caller remembering a companion query. Such
     clusters are near-identical text and are handled by the cheaper
     exact-dedup pass. The group count uses a map-side partial aggregate
     (narrow keys), so a hot signature never pins one task before the cap,
@@ -264,24 +263,7 @@ def _pairs_from_band_sigs(band_sigs: DataFrame, max_cluster: int) -> DataFrame:
     return pairs
 
 
-def lsh_oversized_clusters(
-    documents: DataFrame,
-    num_hashes: int = 112,
-    bands: int = 14,
-    max_cluster: int = 1000,
-) -> DataFrame:
-    """The (band, band_sig, n_docs) groups that minhash_lsh_candidates drops
-    under ``max_cluster`` — materialize alongside the candidates so the drop
-    is an observable metric, never silent truncation."""
-    return (
-        _band_signatures(documents, num_hashes, bands)
-        .groupBy("band", "band_sig")
-        .agg(F.count("*").cast("long").alias("n_docs"))
-        .filter(F.col("n_docs") > max_cluster)
-    )
-
-
-def _oph_dense(documents: DataFrame, num_bins: int, shingle_n: int = 0) -> DataFrame:
+def _oph_dense(documents: DataFrame, num_bins: int) -> DataFrame:
     """(doc_id, sig: array<long> length ``num_bins``) — one-permutation
     hashing (OPH) signature with rotation densification.
 
@@ -310,7 +292,7 @@ def _oph_dense(documents: DataFrame, num_bins: int, shingle_n: int = 0) -> DataF
     the doubled array makes "nearest non-empty to the cyclic right" a
     plain slice+filter, O(num_bins²) on tiny arrays, JVM-side."""
     sc = documents.sparkSession.sparkContext
-    tokens = _shingles(shingle_n) if shingle_n else _words()
+    tokens = _words()
     bins = (
         documents.repartition(sc.defaultParallelism, "doc_id")
         .select("doc_id", F.explode(tokens).alias("word"))
@@ -345,13 +327,13 @@ def _oph_dense(documents: DataFrame, num_bins: int, shingle_n: int = 0) -> DataF
     return per_doc.select("doc_id", dense.alias("sig"))
 
 
-def oph_signatures(documents: DataFrame, num_bins: int = 112, shingle_n: int = 0) -> DataFrame:
+def oph_signatures(documents: DataFrame, num_bins: int = 112) -> DataFrame:
     """Long-format OPH signatures (doc_id, seed, minhash) — the drop-in
     fast alternative to `minhash_signatures` (same output shape, different
     hash family: seed is the OPH bin index, minhash the densified per-bin
     min of the 32-bit base hash). Token-free documents emit no rows, as in
     the classic path."""
-    return _oph_dense(documents, num_bins, shingle_n).select(
+    return _oph_dense(documents, num_bins).select(
         "doc_id", F.posexplode("sig").alias("seed", "minhash")
     )
 
@@ -387,18 +369,16 @@ def _oph_band_signatures(documents: DataFrame, num_bins: int, bands: int) -> Dat
     )
 
 
-def oph_lsh_candidates(
-    documents: DataFrame,
-    num_bins: int = 112,
-    bands: int = 14,
-    max_cluster: int = 1000,
-) -> DataFrame:
+def oph_lsh_candidates(documents: DataFrame) -> DataFrame:
     """LSH candidate pairs over OPH signatures — same banding S-curve,
     cap semantics, observe metric, and grouped pair generation as
     `minhash_lsh_candidates` (shared `_pairs_from_band_sigs`), at ~5×
     less signature CPU. Use when the corpus is tokenize-bound and the
     downstream verifier (exact Jaccard / containment) is in place; keep
     the classic family where cross-engine signature parity matters."""
+    num_bins = 112
+    bands = 14
+    max_cluster = 1000
     return _pairs_from_band_sigs(_oph_band_signatures(documents, num_bins, bands), max_cluster)
 
 
@@ -483,23 +463,9 @@ def simhash(documents: DataFrame) -> DataFrame:
     return votes.select("doc_id", F.concat(*nibbles).alias("simhash"))
 
 
-def simhash_hamming(a, b):
-    """Hamming distance between two 16-nibble hex simhash columns (JVM-side:
-    per-nibble XOR popcount via bit_count)."""
-    dist = F.lit(0)
-    for p in range(1, 17):
-        da = F.conv(F.substring(a, p, 1), 16, 10).cast("int")
-        db = F.conv(F.substring(b, p, 1), 16, 10).cast("int")
-        dist = dist + F.bit_count(da.bitwiseXOR(db))
-    return dist
-
-
 def _verified_near_dup_pairs(
     documents: DataFrame,
     jaccard_threshold: float,
-    num_hashes: int = 112,
-    bands: int = 14,
-    max_cluster: int = 1000,
     _ckpt_sink: list | None = None,
 ) -> DataFrame:
     """``ngram_jaccard(documents, minhash_lsh_candidates(documents))
@@ -530,6 +496,9 @@ def _verified_near_dup_pairs(
     count-only pre-pass (same observe metric), and the verify join's
     build side is Catalyst's choice (broadcast locally, sort-merge at
     corpus scale)."""
+    num_hashes = 112
+    bands = 14
+    max_cluster = 1000
     sc = documents.sparkSession.sparkContext
     # NOT checkpointed: the verify joins below must keep the scan-derived
     # size statistics so Catalyst can pick a broadcast build side locally
@@ -868,13 +837,7 @@ def repeated_spans(
     )
 
 
-def substring_cut_plan(
-    documents: DataFrame,
-    candidates: DataFrame,
-    n: int = 5,
-    min_span: int = 6,
-    max_gram_freq: int = 16,
-) -> DataFrame:
+def substring_cut_plan(documents: DataFrame, candidates: DataFrame, min_span: int = 6) -> DataFrame:
     """From signal to action (Lee et al. exact-substring dedup): each
     candidate pair's longest shared span (repeated_spans) of at least
     ``min_span`` tokens is CUT from the pair's LATER document (larger
@@ -885,6 +848,8 @@ def substring_cut_plan(
 
     Shape: repeated_spans' narrow output filtered and windowed per doc —
     nothing new touches the text."""
+    n = 5
+    max_gram_freq = 16
     from pyspark.sql.window import Window
 
     spans = repeated_spans(
@@ -917,8 +882,6 @@ def substring_cut_plan(
 def incremental_dedup_decisions(
     index_docs: DataFrame,
     new_docs: DataFrame,
-    num_hashes: int = 112,
-    bands: int = 14,
     threshold_pct: int = 70,
     max_cluster: int = 1000,
     broadcast_new: bool = True,
@@ -953,6 +916,8 @@ def incremental_dedup_decisions(
     ``threshold_pct``, else 'admitted'. New docs with no candidates —
     including token-free docs, which emit no signature — are admitted
     with n_candidates = 0 and NULL best columns."""
+    num_hashes = 112
+    bands = 14
     from pyspark.sql.window import Window
 
     idx = _band_signatures(index_docs, num_hashes, bands).withColumnRenamed(
@@ -1312,47 +1277,7 @@ def near_dup_split_leakage(
     )
 
 
-def exact_dup_split_leakage(documents: DataFrame) -> DataFrame:
-    """Cross-split contamination census over EXACT-duplicate groups: a
-    normalized-text fingerprint whose copies land in more than one of
-    train/val/test is evaluation leakage — the val/test copies score a
-    memorized training document. Composes the exact-dedup fingerprint
-    (training/text.py::fingerprint) with the shared hash-split rule
-    (training/text.py::hash_split_expr), so the census, the dedup
-    canonical set, and the split report all agree by construction.
-
-    Output per leaking fingerprint: (fingerprint, canonical_id, n_docs,
-    n_splits, splits) with splits the sorted comma-joined distinct split
-    names (collect_set order is engine-dependent; the sort makes the
-    column deterministic). Only groups with > 1 doc AND > 1 split
-    survive — the fix list, not an inventory.
-
-    Scale shape: identical to exact_duplicates — one narrow
-    groupBy(fingerprint) shuffle (text dropped before the shuffle); the
-    split tag is a pure per-row expression, no join.
-    """
-    from .text import fingerprint, hash_split_expr
-
-    tagged = fingerprint(documents).select(
-        "fingerprint",
-        "doc_id",
-        hash_split_expr(F.col("doc_id")).alias("split"),
-    )
-    return (
-        tagged.groupBy("fingerprint")
-        .agg(
-            F.min("doc_id").cast("long").alias("canonical_id"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.count_distinct("split").cast("long").alias("n_splits"),
-            F.array_join(F.array_sort(F.collect_set("split")), ",").alias("splits"),
-        )
-        .filter((F.col("n_docs") > 1) & (F.col("n_splits") > 1))
-    )
-
-
-def dup_rate_by_group(
-    documents: DataFrame, group_col: str = "lang"
-) -> DataFrame:
+def dup_rate_by_group(documents: DataFrame) -> DataFrame:
     """EXACT duplicate-rate dashboard per group — the per-language
     curation metric a corpus report leads with: how much of each
     slice is byte-identical repetition? n_docs, distinct md5(text)
@@ -1366,7 +1291,7 @@ def dup_rate_by_group(
     """
     h = F.md5(F.coalesce(F.col("text"), F.lit("")))
     return (
-        documents.select(F.col(group_col).alias("grp"), h.alias("h"))
+        documents.select(F.col("lang").alias("grp"), h.alias("h"))
         .groupBy("grp")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -1382,10 +1307,7 @@ def dup_rate_by_group(
     )
 
 
-def jaccard_threshold_sweep(
-    documents: DataFrame,
-    thresholds_pm: tuple[int, ...] = (500, 700, 800, 900, 950, 1000),
-) -> DataFrame:
+def jaccard_threshold_sweep(documents: DataFrame) -> DataFrame:
     """DEDUP THRESHOLD TUNING table — the report that answers "what
     does moving the near-dup cut actually cost?": over the verified
     LSH candidate pairs, the count and candidate-share (exact bp)
@@ -1400,6 +1322,7 @@ def jaccard_threshold_sweep(
     banded-LSH + verify path (never all-pairs); the sweep adds one
     map-side-combinable aggregate and a constant-width unpivot.
     """
+    thresholds_pm = (500, 700, 800, 900, 950, 1000)
     pairs = ngram_jaccard(documents, minhash_lsh_candidates(documents))
     aggs = [F.count(F.lit(1)).cast("long").alias("total")]
     for pm in thresholds_pm:

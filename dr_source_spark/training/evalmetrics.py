@@ -140,12 +140,7 @@ def _order_stat_thresholds(cum: DataFrame, n_cuts: int) -> DataFrame:
     )
 
 
-def pr_at_thresholds(
-    df: DataFrame,
-    score_col: "F.Column",
-    label_col: "F.Column",
-    n_cuts: int = 9,
-) -> DataFrame:
+def pr_at_thresholds(df: DataFrame, score_col: "F.Column", label_col: "F.Column") -> DataFrame:
     """Global precision/recall/F1 sweep at exact decile (default)
     order-statistic thresholds of the score: threshold k (k = 1..n_cuts)
     is the score of ascending row number (k·N) div (n_cuts+1), and a row
@@ -160,6 +155,7 @@ def pr_at_thresholds(
     decile boundaries (heavy ties) legitimately repeat thresholds; the
     output keys on cut index, so the sweep stays n_cuts rows.
     """
+    n_cuts = 9
     cum = _global_score_cum(df, score_col, label_col)
     th = _order_stat_thresholds(cum, n_cuts)
     # predicted positive = score >= threshold: TP/FP from the suffix sums
@@ -243,12 +239,7 @@ def cohens_kappa(
     )
 
 
-def calibration_curve(
-    df: DataFrame,
-    score_col: "F.Column",
-    label_col: "F.Column",
-    n_cuts: int = 9,
-) -> DataFrame:
+def calibration_curve(df: DataFrame, score_col: "F.Column", label_col: "F.Column") -> DataFrame:
     """Reliability diagram in exact integers: rows are bucketed by the
     same decile order-statistic thresholds pr_at_thresholds uses
     (bucket = 1 + #{thresholds strictly below the score}, so ties land
@@ -261,6 +252,7 @@ def calibration_curve(
     Same scale shape as the rest of the family: thresholds and bucket
     assignment live on the distinct-score count table; no row windows.
     """
+    n_cuts = 9
     cum = _global_score_cum(df, score_col, label_col)
     th = _order_stat_thresholds(cum, n_cuts).select("_th")
     bucketed = (

@@ -38,11 +38,10 @@ def _grams(col, q: int = 3):
     return F.transform(F.sequence(F.lit(1), n), lambda i: col.substr(i, F.lit(q)))
 
 
-def fuzzy_string_matches(
-    df: DataFrame, col: str, max_dist: int = 2, q: int = 3
-) -> DataFrame:
+def fuzzy_string_matches(df: DataFrame, col: str, max_dist: int = 2) -> DataFrame:
     """Distinct value pairs (a < b) sharing >= 1 q-gram with
     levenshtein(a, b) <= max_dist. Output: name_a, name_b, dist."""
+    q = 3
     names = df.select(F.col(col).alias("name")).filter(F.col("name").isNotNull()).distinct()
     grams = names.select(
         "name", F.explode(F.array_distinct(_grams(F.col("name"), q))).alias("g")

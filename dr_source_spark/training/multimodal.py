@@ -7,10 +7,8 @@ Python, deterministic feature extraction, partitioning discipline (binary
 payloads are dropped before any shuffle) — and FOUR real decode paths:
 16-bit PCM WAV and 24-bit BMP (struct walk, below), plus 8-bit truecolor
 PNG and GIF87a/89a (stdlib-zlib inflate / hand-rolled LZW, in
-``training/codecs.py``). What's STUBBED (this container has no
-entropy-coded-DCT codecs): JPEG/MP4/MP3 — ``decode_media`` raises
-NotImplementedError unless ``fake=True``, which produces a deterministic
-sha256-seeded surrogate so downstream stages are exercisable end-to-end.
+``training/codecs.py``). JPEG/MP4/MP3 are not decoded: this container
+has no entropy-coded-DCT codecs.
 
 Media table schema:
   media_id: long, kind: string (image|audio|video),
@@ -130,55 +128,6 @@ def extract_media_metadata(media: DataFrame) -> DataFrame:
     return media.select("media_id", "kind", "payload").mapInPandas(process, MEDIA_META_SCHEMA)
 
 
-def decode_media(media: DataFrame, fake: bool = False) -> DataFrame:
-    """Decode payloads to raw samples. STUB for entropy-coded-DCT formats
-    (JPEG/MP4/MP3 — no codec libraries exist in this environment):
-    ``fake=True`` yields a deterministic sha256-seeded surrogate (32
-    floats in [0,1)) so downstream plumbing is testable; ``fake=False``
-    raises NotImplementedError at plan time (fail fast). For formats this
-    package CAN really decode — 16-bit PCM WAV, 24-bit BMP (struct walk),
-    8-bit truecolor PNG (stdlib zlib + all five filter predictors) and
-    GIF87a/89a (hand-rolled variable-width LZW) — use ``decode_features``
-    below: a REAL, oracle-verified decode path (PNG/GIF live in
-    ``training/codecs.py``)."""
-    if not fake:
-        raise NotImplementedError(
-            "media decoding requires codec libraries (PIL/ffmpeg) not present "
-            "in this environment; pass fake=True for the deterministic surrogate"
-        )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append({"media_id": mid, "feature": None})
-                    continue
-                digest = hashlib.sha256(bytes(payload)).digest()
-                feat = [b / 255.0 for b in digest] + [b / 255.0 for b in digest[:0]]
-                rows.append({"media_id": mid, "feature": feat})
-            yield pd.DataFrame(rows, columns=["media_id", "feature"]) if rows else pd.DataFrame(
-                {"media_id": pd.Series([], dtype="object"), "feature": pd.Series([], dtype="object")}
-            )
-        drop_zip_finders()
-
-    return media.select("media_id", "payload").mapInPandas(process, FEATURES_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per sampled frame index,
-    derived from metadata only (duration unknown without codecs → frame
-    count surrogate = n_bytes/65536). Decoding each frame is the stubbed
-    step; the explode/partition shape is the real scale concern."""
-    meta = extract_media_metadata(media.filter(F.col("kind") == "video"))
-    n_frames = F.greatest((F.col("n_bytes") / 65536).cast("int"), F.lit(1))
-    return (
-        meta.withColumn("frame_idx", F.explode(F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))))
-        .select("media_id", "frame_idx", "n_bytes")
-    )
-
-
 def synth_media_corpus(documents: DataFrame) -> DataFrame:
     """Deterministic binary media derived from the documents table: REAL
     PNG/GIF/WAV headers (parseable by sniff_header) + text-derived payload
@@ -213,12 +162,13 @@ def synth_media_corpus(documents: DataFrame) -> DataFrame:
     return documents.select("doc_id", "text").mapInPandas(process, MEDIA_SCHEMA)
 
 
-def audio_chunk_plan(media: DataFrame, chunk_ms: int = 1000) -> DataFrame:
+def audio_chunk_plan(media: DataFrame) -> DataFrame:
     """Audio chunking *plan*: one row per fixed-duration chunk, derived from
     metadata only (sample count surrogate = payload bytes / 2, 16-bit mono
     assumption — decoding is the stubbed step; the explode/partition shape
-    is the real scale concern, same contract as frame_sample_plan).
+    is the real scale concern).
     Integer arithmetic throughout so any engine reproduces the plan."""
+    chunk_ms = 1000
     meta = extract_media_metadata(media.filter(F.col("kind") == "audio"))
     spc = (F.col("sample_rate") * chunk_ms / 1000).cast("long")  # samples/chunk
     n_chunks = F.greatest(
@@ -237,7 +187,7 @@ def audio_chunk_plan(media: DataFrame, chunk_ms: int = 1000) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # REAL decode path (round 4): WAV PCM and BMP are decodable with nothing but
-# struct — no codec library — so those two formats graduate from the stub.
+# struct — no codec library.
 # Every other container still fails fast (NotImplementedError) rather than
 # pretending: JPEG/PNG/MP4 genuinely need codecs this environment lacks.
 # ---------------------------------------------------------------------------
@@ -832,13 +782,11 @@ def audio_fingerprint_pairs(media: DataFrame, max_hamming: int = 3) -> DataFrame
     )
 
 
-def uniform_frame_plan(
-    documents: DataFrame, n_samples: int = 4, chars_per_frame: int = 100
-) -> DataFrame:
+def uniform_frame_plan(documents: DataFrame) -> DataFrame:
     """Uniform FRAME-SAMPLING plan for video-like assets — the
-    fixed-budget complement of ``frame_sample_plan`` above (that one
-    strides every Nth frame, cost ∝ asset length; this one spends
-    exactly ``n_samples`` per asset whatever its length) — the
+    fixed-budget plan: it spends exactly ``n_samples`` per asset
+    whatever its length (a stride of every Nth frame costs ∝ asset
+    length) — the
     Spark-side planning half of a frame-extraction pipeline: given
     per-asset frame counts (derived deterministically here as
     len(text) div chars_per_frame + 1, the testdata stand-in for real
@@ -857,6 +805,8 @@ def uniform_frame_plan(
     Scale shape: pure per-row sequence explode — no shuffle at all;
     the plan co-partitions with the asset table for the decode join.
     """
+    n_samples = 4
+    chars_per_frame = 100
     n_frames = F.expr(
         f"length(coalesce(text, '')) div {int(chars_per_frame)} + 1"
     )

@@ -61,7 +61,6 @@ def t_closeness_report(
     df: DataFrame,
     quasi_cols: list[str | Column],
     sensitive_bin: Column,
-    t_bp_limit: int = 2000,
 ) -> DataFrame:
     """t-closeness — the third screen of the privacy triad (k-anonymity:
     group size; l-diversity: value variety; t-closeness: value
@@ -82,6 +81,7 @@ def t_closeness_report(
     the densify (groups × global-bin grid), cumulative windows, and
     final aggregate all run on that tiny grid.
     """
+    t_bp_limit = 2000
     base = df.select(*quasi_cols, sensitive_bin.cast("long").alias("_bin"))
     qnames = base.columns[:-1]
     cell = base.groupBy(*qnames, "_bin").agg(

@@ -278,9 +278,7 @@ def collocations(documents: DataFrame, min_count: int = 5) -> DataFrame:
     )
 
 
-def rrf_fuse(
-    rankings: list[DataFrame], k: int = 60, top: int = 20, scale: int = 1_000_000
-) -> DataFrame:
+def rrf_fuse(rankings: list[DataFrame], k: int = 60, top: int = 20) -> DataFrame:
     """Reciprocal-rank fusion of independent (doc_id, rank) rankings:
     score = Σ_lists scale div (k + rank), missing-from-a-list simply
     contributes nothing (the standard RRF convention — no imputed
@@ -294,6 +292,7 @@ def rrf_fuse(
     groupBy(doc_id) + a global top-k (TakeOrderedAndProject — never a
     full sort of the corpus).
     """
+    scale = 1_000_000
     contribs = None
     for r in rankings:
         c = r.select(

@@ -99,12 +99,7 @@ def importance_weights(
     )
 
 
-def importance_select(
-    target_docs: DataFrame,
-    raw_docs: DataFrame,
-    buckets: int = 256,
-    threshold: int = _FP_SCALE,
-) -> DataFrame:
+def importance_select(target_docs: DataFrame, raw_docs: DataFrame) -> DataFrame:
     """(doc_id, n_grams, score, avg_weight, verdict): score every RAW
     document by the mean importance weight of its token occurrences and
     select the ones that look more target-like than raw-like.
@@ -120,6 +115,8 @@ def importance_select(
     raw gram stream (map-side join, no corpus shuffle), then ONE per-doc
     aggregate. At 100 TB the weights are built once from a small curated
     target set and every ingest batch scores against the broadcast."""
+    buckets = 256
+    threshold = _FP_SCALE
     w = importance_weights(target_docs, raw_docs, buckets).select("bucket", "weight")
     grams = _gram_stream(raw_docs).select(
         "doc_id", (_minhash_base(F.col("w")) % buckets).cast("int").alias("bucket")
@@ -146,11 +143,7 @@ def importance_select(
     )
 
 
-def mix_plan(
-    documents: DataFrame,
-    token_budget: int,
-    group_col: str = "lang",
-) -> DataFrame:
+def mix_plan(documents: DataFrame, token_budget: int) -> DataFrame:
     """(grp, n_docs, n_tokens, quota, rate_ppm, epochs): per-domain
     sampling plan for an equal-share token mixture — the DoReMi-shaped
     decision ("how much of each domain goes into the run") reduced to
@@ -167,7 +160,7 @@ def mix_plan(
     tiny. NULL-text docs count 0 tokens but still count as docs."""
     toks = F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda w: w != "")
     per_grp = (
-        documents.select(F.col(group_col).alias("grp"), F.size(toks).alias("_n"))
+        documents.select(F.col("lang").alias("grp"), F.size(toks).alias("_n"))
         .withColumn("_n", F.greatest(F.col("_n"), F.lit(0)))  # size(NULL) = -1
         .groupBy("grp")
         .agg(
@@ -205,7 +198,6 @@ def weighted_bernoulli_sample(
     documents: DataFrame,
     weight_col: str = "n_chars",
     target: int = 500,
-    salt: str = "wbs1",
 ) -> DataFrame:
     """Deterministic weight-proportional Bernoulli sample: include each
     doc with probability weight_i · target / Σweight (so the EXPECTED
@@ -229,7 +221,7 @@ def weighted_bernoulli_sample(
         F.sum(F.col(weight_col)).cast("decimal(38,0)").alias("_tot")
     )
     u = _minhash_base(
-        F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string"))
+        F.concat(F.lit("wbs1" + ":"), F.col("doc_id").cast("string"))
     )
     return (
         documents.crossJoin(F.broadcast(tot))

@@ -45,23 +45,17 @@ def cosine_col(a, b):
     return F.when(den > 0, _dot(a, b) / den)
 
 
-def brute_force_topk(
-    embeddings: DataFrame,
-    query_ids: List[int],
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(embeddings: DataFrame, query_ids: List[int], k: int = 3) -> DataFrame:
     """Exact top-k cosine neighbors for each query id. The query side is tiny
     → force a broadcast so the big side never shuffles."""
-    queries = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
+    queries = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     sc = embeddings.sparkSession.sparkContext
     # spread the big side — a single parquet split would otherwise compute
     # every dot product in one task
-    cand = embeddings.repartition(sc.defaultParallelism, id_col).select(
-        F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")
+    cand = embeddings.repartition(sc.defaultParallelism, "vec_id").select(
+        F.col("vec_id").alias("n_id"), F.col("embedding").alias("n_vec")
     )
     scored = (
         cand.join(F.broadcast(queries), F.col("n_id") != F.col("q_id"))
@@ -99,30 +93,28 @@ def hyperplane_signatures(
     num_planes: int = 8,
     seed: int = 42,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Random-hyperplane LSH signature over deterministic md5-derived ±1
     planes (portable: oracles reproduce the buckets bit-for-bit)."""
     sig = F.lit("")
     for p in rademacher_planes(num_planes, dim, seed):
         plane_col = F.array(*[F.lit(x) for x in p])
-        bit = F.when(_dot(F.col(vec_col), plane_col) >= 0, F.lit("1")).otherwise(F.lit("0"))
+        bit = F.when(_dot(F.col("embedding"), plane_col) >= 0, F.lit("1")).otherwise(F.lit("0"))
         sig = F.concat(sig, bit)
-    return embeddings.select(F.col(id_col).alias("vec_id"), sig.alias("bucket"))
+    return embeddings.select(F.col("vec_id"), sig.alias("bucket"))
 
 
 def embedding_near_duplicates(
     embeddings: DataFrame,
     threshold: float = 0.95,
     num_planes: int = 12,
-    seed: int = 42,
     dim: int = 64,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs at scale: candidates are LSH
     bucket collisions only (equi-join on the signature — never all-pairs),
     then exact cosine verification ≥ threshold. Returns (id_a, id_b, sim)
     with id_a < id_b."""
+    seed = 42
     sigs = hyperplane_signatures(embeddings, num_planes, seed, dim)
     emb = embeddings.join(sigs, "vec_id")
     left = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a"), "bucket")
@@ -144,8 +136,6 @@ def multitable_signatures(
     planes_per_table: int = 4,
     seed: int = 42,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """OR-construction LSH: L independent hash tables of b planes each →
     long-format (vec_id, tbl, bucket). A neighbor is a candidate if it
@@ -157,11 +147,11 @@ def multitable_signatures(
         sig = F.lit("")
         for p in rademacher_planes(planes_per_table, dim, seed * 10_000 + t):
             plane_col = F.array(*[F.lit(x) for x in p])
-            bit = F.when(_dot(F.col(vec_col), plane_col) >= 0, F.lit("1")).otherwise(F.lit("0"))
+            bit = F.when(_dot(F.col("embedding"), plane_col) >= 0, F.lit("1")).otherwise(F.lit("0"))
             sig = F.concat(sig, bit)
         entries.append(F.struct(F.lit(t).alias("tbl"), sig.alias("bucket")))
     return embeddings.select(
-        F.col(id_col).alias("vec_id"), F.explode(F.array(*entries)).alias("tb")
+        F.col("vec_id"), F.explode(F.array(*entries)).alias("tb")
     ).select("vec_id", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket"))
 
 
@@ -169,10 +159,7 @@ def lsh_bucketed_topk(
     embeddings: DataFrame,
     query_ids: List[int],
     k: int = 3,
-    num_tables: int = 16,
     planes_per_table: int = 4,
-    seed: int = 42,
-    dim: int = 64,
 ) -> DataFrame:
     """Approximate top-k: score only candidates colliding with the query in
     at least one of the L hash tables (equi-join on (tbl, bucket) — never
@@ -181,6 +168,9 @@ def lsh_bucketed_topk(
     scale raise planes_per_table to shrink buckets and num_tables to hold
     recall. Planes are portable md5-derived ±1 vectors, so the DuckDB
     oracle reproduces the buckets exactly."""
+    num_tables = 16
+    seed = 42
+    dim = 64
     sigs = multitable_signatures(embeddings, num_tables, planes_per_table, seed, dim)
     emb = embeddings.join(sigs, "vec_id")
     queries = emb.filter(F.col("vec_id").isin(query_ids)).select(
@@ -201,15 +191,7 @@ def lsh_bucketed_topk(
     )
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    query_ids: List[int],
-    k: int = 3,
-    n_cells: int = 8,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_topk(embeddings: DataFrame, query_ids: List[int], k: int = 3) -> DataFrame:
     """IVF (inverted-file) ANN: a coarse quantizer of ``n_cells`` centroids
     partitions the corpus into cells; each query probes only its ``nprobe``
     best cells and ranks exact cosine inside them — the per-query candidate
@@ -225,8 +207,10 @@ def ivf_topk(
     silently return zero rows (ADVICE r3). At real scale swap the centroid
     source for a trained codebook table; the plan shape (broadcast
     centroids -> argmax assign -> equi-join on cell) is unchanged."""
+    n_cells = 8
+    nprobe = 2
     e = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
+        F.col("vec_id"), F.col("embedding").alias("v")
     )
     cents = (
         e.orderBy("vec_id")
@@ -304,14 +288,12 @@ def quantize_embeddings(
     )
 
 
-def quantization_stats(
-    embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantization_stats(embeddings: DataFrame) -> DataFrame:
     """Per-vector dequantization error profile for the int8 path: max
     absolute error and MSE vs the float vector (deterministic left-to-right
     fold, oracle-reproducible). The symmetric-scale bound max_abs_err <=
     scale/2 is asserted in tests."""
-    q = quantize_embeddings(embeddings, id_col=id_col, vec_col=vec_col)
+    q = quantize_embeddings(embeddings)
     # compute errs in a separate projection: aliasing round(scale) AS scale
     # in the same select would LATERALLY shadow the input column inside the
     # zip_with lambda (Spark 3.4+ lateral column aliases) and silently
@@ -324,7 +306,7 @@ def quantization_stats(
     )
     n = F.size("_fvec")
     return q.select(
-        id_col,
+        "vec_id",
         n.cast("long").alias("n_dims"),
         F.round("scale", 9).alias("scale"),
         F.round(F.aggregate("_errs", F.lit(0.0), lambda a, x: F.greatest(a, x)), 9).alias("max_abs_err"),
@@ -337,13 +319,7 @@ def quantization_stats(
     )
 
 
-def quantized_topk(
-    embeddings: DataFrame,
-    query_ids,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantized_topk(embeddings: DataFrame, query_ids, k: int = 3) -> DataFrame:
     """Top-k neighbors ranked by INT8-QUANTIZED dot product — the
     memory-bound candidate-generation pass of a two-stage ANN (rank by
     quantized similarity, rescore survivors on floats). Integer dot
@@ -357,15 +333,15 @@ def quantized_topk(
     truth in the recall gate (tests/test_training_ops.py). Probes
     broadcast; ties break on neighbor id."""
     qv = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.round(
-            F.lit(127.0) * x.cast("double") / F.greatest(_norm(F.col(vec_col)), F.lit(1e-12))
+            F.lit(127.0) * x.cast("double") / F.greatest(_norm(F.col("embedding")), F.lit(1e-12))
         ).cast("int"),
     )
-    q = embeddings.select(F.col(id_col), qv.alias("qvec"))
-    base = q.select(F.col(id_col).alias("n_id"), F.col("qvec"))
-    probes = q.filter(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("q_id"), F.col("qvec").alias("q_qvec")
+    q = embeddings.select(F.col("vec_id"), qv.alias("qvec"))
+    base = q.select(F.col("vec_id").alias("n_id"), F.col("qvec"))
+    probes = q.filter(F.col("vec_id").isin(list(query_ids))).select(
+        F.col("vec_id").alias("q_id"), F.col("qvec").alias("q_qvec")
     )
     qdot = F.aggregate(
         F.zip_with(F.col("qvec"), F.col("q_qvec"), lambda a, b: (a * b).cast("long")),
@@ -385,14 +361,7 @@ def quantized_topk(
     )
 
 
-def kmeans_assign(
-    embeddings: DataFrame,
-    k: int = 8,
-    iterations: int = 2,
-    quant: int = 10**4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_assign(embeddings: DataFrame, k: int = 8, iterations: int = 2) -> DataFrame:
     """Lloyd k-means over the embedding table in EXACT integer arithmetic —
     the topic-clustering / IVF-coarse-quantizer step of a curation
     pipeline, made engine-reproducible: float centroid means are
@@ -416,8 +385,10 @@ def kmeans_assign(
     rows; per-pass cost is one broadcast-sized centroid join (k·dims
     rows) + a map-side-combinable groupBy — no all-pairs, no
     driver-side math beyond the loop itself."""
+    quant = 10**4
+    vec_col = "embedding"
     q = embeddings.select(
-        F.col(id_col).alias("vec_id"),
+        F.col("vec_id"),
         F.posexplode(
             F.expr(
                 f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE) * {quant}) AS BIGINT))"
@@ -425,7 +396,7 @@ def kmeans_assign(
         ).alias("dim", "qi"),
     )
     seeds = (
-        embeddings.select(F.col(id_col).alias("vec_id"))
+        embeddings.select(F.col("vec_id"))
         .distinct()
         .orderBy("vec_id")
         .limit(k)
@@ -475,9 +446,7 @@ def kmeans_assign(
     )
 
 
-def embedding_duplicate_clusters(
-    embeddings: DataFrame, threshold: float = 0.95, max_rounds: int = 50
-) -> DataFrame:
+def embedding_duplicate_clusters(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Semantic-dedup decisions: (vec_id, cluster_id) for EVERY embedding,
     cluster_id = min vec_id of its connected component in the verified
     cosine near-dup graph (singletons map to themselves) — the
@@ -485,6 +454,7 @@ def embedding_duplicate_clusters(
     (keep ``vec_id == cluster_id``, drop the rest). Pairs from
     embedding_near_duplicates (LSH buckets, never all-pairs); components
     via alternating large-star/small-star."""
+    max_rounds = 50
     from ..operators.graph import _label_components
 
     pairs = embedding_near_duplicates(embeddings, threshold=threshold)
@@ -495,9 +465,7 @@ def embedding_duplicate_clusters(
     ).select(F.col("node").alias("vec_id"), F.col("component").cast("long").alias("cluster_id"))
 
 
-def dimension_stats(
-    embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def dimension_stats(embeddings: DataFrame) -> DataFrame:
     """Per-dimension embedding-health report over the int8-quantized
     vectors: (dim, n, min_q, max_q, sum_q, sum_sq) — dead dimensions
     (all-zero), saturated dimensions (pinned at ±127) and variance
@@ -508,7 +476,7 @@ def dimension_stats(
 
     Shape: posexplode to (dim, q) — 64 narrow integer rows per vector —
     then one map-side-combinable aggregate keyed by dim (64 groups)."""
-    q = quantize_embeddings(embeddings, id_col=id_col, vec_col=vec_col)
+    q = quantize_embeddings(embeddings)
     exploded = q.select(F.posexplode("qvec").alias("dim", "qv"))
     return (
         exploded.groupBy("dim")
@@ -523,14 +491,7 @@ def dimension_stats(
     )
 
 
-def pq_assign(
-    embeddings: DataFrame,
-    n_subspaces: int = 4,
-    n_centroids: int = 4,
-    quant: int = 10**4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_assign(embeddings: DataFrame, n_subspaces: int = 4, n_centroids: int = 4) -> DataFrame:
     """Product-quantization code assignment in exact integer arithmetic —
     the vector-compression step beyond int8 scalar quantization
     (emb_quantize_stats): each embedding splits into ``n_subspaces``
@@ -552,10 +513,11 @@ def pq_assign(
     broadcast-sized codebook join (n_subspaces·n_centroids·dims/S
     rows), one groupBy argmin window. No all-pairs anywhere.
     """
+    quant = 10**4
     q = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.posexplode(vec_col).alias("dim0", "e"),
-        F.size(vec_col).alias("dlen"),
+        F.col("vec_id").alias("vid"),
+        F.posexplode("embedding").alias("dim0", "e"),
+        F.size("embedding").alias("dlen"),
     ).select(
         "vid",
         "dim0",
@@ -563,7 +525,7 @@ def pq_assign(
         F.floor(F.col("e").cast("double") * quant).cast("long").alias("qi"),
     )
     seeds = (
-        embeddings.select(F.col(id_col).alias("vid"))
+        embeddings.select(F.col("vec_id").alias("vid"))
         .orderBy("vid")
         .limit(n_centroids)
         .select(
@@ -584,7 +546,7 @@ def pq_assign(
         dist.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select(
-            F.col("vid").alias(id_col),
+            F.col("vid").alias("vec_id"),
             F.col("sub").cast("long").alias("subspace"),
             F.col("code").cast("long").alias("code"),
             F.col("d2").cast("long").alias("dist2_q"),
@@ -624,12 +586,7 @@ def _quantized_centroids(
     )
 
 
-def class_separation(
-    embeddings: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    quant: int = 10**4,
-) -> DataFrame:
+def class_separation(embeddings: DataFrame) -> DataFrame:
     """Pairwise squared distances between class centroids in exact
     quantized integer units — the cheap embedding-space diagnostic
     ("are my labels even separated?") before anyone trains a probe.
@@ -642,7 +599,8 @@ def class_separation(
     label_b. Scale shape: one explode + groupBy(label, dim) — the only
     row-table pass — then a self-join of the tiny centroid grid on dim.
     """
-    cent = _quantized_centroids(embeddings, label_col, vec_col, quant).select(
+    quant = 10**4
+    cent = _quantized_centroids(embeddings, "label", "embedding", quant).select(
         "lbl", "dim", F.col("n").alias("_n"), F.col("c").alias("_c")
     )
     a = cent.select(
@@ -668,13 +626,7 @@ def class_separation(
     )
 
 
-def silhouette_lite(
-    embeddings: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    quant: int = 10**4,
-) -> DataFrame:
+def silhouette_lite(embeddings: DataFrame) -> DataFrame:
     """Clustering-quality silhouette on SQUARED quantized distances to
     CENTROIDS (the "simplified silhouette" of the clustering
     literature — O(n·k) instead of the classic O(n²) pairwise form,
@@ -693,13 +645,14 @@ def silhouette_lite(
     independent of n; everything after is per-(vector, label) sums and
     a groupBy(label).
     """
-    cent = _quantized_centroids(embeddings, label_col, vec_col, quant).select(
+    quant = 10**4
+    cent = _quantized_centroids(embeddings, "label", "embedding", quant).select(
         F.col("lbl").alias("clbl"), "dim", F.col("c").alias("_c")
     )
     q = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(label_col).alias("own"),
-        F.posexplode(vec_col).alias("dim", "e"),
+        F.col("vec_id").alias("vid"),
+        F.col("label").alias("own"),
+        F.posexplode("embedding").alias("dim", "e"),
     ).select(
         "vid", "own", "dim",
         F.floor(F.col("e").cast("double") * quant).cast("long").alias("qi"),
@@ -740,12 +693,7 @@ def silhouette_lite(
     )
 
 
-def nn_margin_stats(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def nn_margin_stats(embeddings: DataFrame) -> DataFrame:
     """Per-anchor 1-NN margin audit — the contrastive-training batch
     builder and embedding-quality probe in one pass: for every vector,
     its most-similar SAME-label neighbor (the positive), its
@@ -778,17 +726,17 @@ def nn_margin_stats(
     #     twice. Double negation is sign-exact (-0.0 round-trips), so the
     #     recovered sim is bit-identical.
     a = embeddings.select(
-        F.col(id_col).alias("a_id"),
-        F.col(vec_col).alias("a_vec"),
-        F.col(label_col).alias("a_lbl"),
-        _norm(F.col(vec_col)).alias("a_n"),
+        F.col("vec_id").alias("a_id"),
+        F.col("embedding").alias("a_vec"),
+        F.col("label").alias("a_lbl"),
+        _norm(F.col("embedding")).alias("a_n"),
     )
     sc = embeddings.sparkSession.sparkContext
-    b = embeddings.repartition(sc.defaultParallelism, id_col).select(
-        F.col(id_col).alias("b_id"),
-        F.col(vec_col).alias("b_vec"),
-        F.col(label_col).alias("b_lbl"),
-        _norm(F.col(vec_col)).alias("b_n"),
+    b = embeddings.repartition(sc.defaultParallelism, "vec_id").select(
+        F.col("vec_id").alias("b_id"),
+        F.col("embedding").alias("b_vec"),
+        F.col("label").alias("b_lbl"),
+        _norm(F.col("embedding")).alias("b_n"),
     )
     den = F.col("a_n") * F.col("b_n")
     scored = (
@@ -813,7 +761,7 @@ def nn_margin_stats(
         F.min(F.when(~same, key)).alias("_tn"),
     )
     return (
-        embeddings.select(F.col(id_col).alias("a_id"), F.col(label_col).alias("label"))
+        embeddings.select(F.col("vec_id").alias("a_id"), F.col("label"))
         .join(best, "a_id", "left")
         # struct-field access on a NULL struct yields NULL — identical to
         # the old per-branch left-join miss
@@ -894,12 +842,7 @@ def _qrows(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def centroid_drift(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 10**6,
-) -> DataFrame:
+def centroid_drift(embeddings: DataFrame) -> DataFrame:
     """Per-dimension EMBEDDING DRIFT monitor over the quantized (index-
     space) representation: the corpus splits into two cohorts by
     ``id % 2`` (the deterministic stand-in for before/after batches —
@@ -915,8 +858,9 @@ def centroid_drift(
     aggregate — dimension-bounded output. Output: (dim, n_a, n_b,
     mean_a_fp, mean_b_fp, drift_fp).
     """
-    rows = _qrows(embeddings, id_col, vec_col).select(
-        "dim", "qv", (F.col(id_col) % 2 == 0).alias("in_a")
+    scale = 10**6
+    rows = _qrows(embeddings, "vec_id", "embedding").select(
+        "dim", "qv", (F.col("vec_id") % 2 == 0).alias("in_a")
     )
     agg = rows.groupBy("dim").agg(
         F.sum(F.col("in_a").cast("long")).cast("long").alias("n_a"),
@@ -942,13 +886,7 @@ def centroid_drift(
     )
 
 
-def pca_top_component(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iterations: int = 8,
-    xnorm: int = 10**5,
-) -> DataFrame:
+def pca_top_component(embeddings: DataFrame) -> DataFrame:
     """EXACT fixed-point POWER ITERATION for the top principal
     direction of the quantized embedding cloud — the dominant variance
     axis an embedding-health monitor tracks (a collapsing or rotating
@@ -969,8 +907,10 @@ def pca_top_component(
     driver. Output: (dim, component_fp) — the unnormalized integer
     direction after the final round.
     """
+    iterations = 8
+    xnorm = 10**5
     S, dims, x = _scatter_power_iterate(
-        embeddings, id_col, vec_col, iterations, xnorm
+        embeddings, "vec_id", "embedding", iterations, xnorm
     )
     flip = 1
     for d in dims:
@@ -1029,13 +969,7 @@ def _scatter_power_iterate(
     return S, dims, x
 
 
-def pca_explained_ratio(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iterations: int = 8,
-    xnorm: int = 10**5,
-) -> DataFrame:
+def pca_explained_ratio(embeddings: DataFrame) -> DataFrame:
     """VARIANCE-EXPLAINED share of the top principal direction, exact:
     the Rayleigh quotient of the power-iteration vector against the
     integer scatter matrix, taken as a ratio of the matrix trace —
@@ -1048,8 +982,10 @@ def pca_explained_ratio(
     this flags. Output: 1 row (n_dims, trace, rayleigh_num, xx,
     explained_bp).
     """
+    iterations = 8
+    xnorm = 10**5
     S, dims, x = _scatter_power_iterate(
-        embeddings, id_col, vec_col, iterations, xnorm
+        embeddings, "vec_id", "embedding", iterations, xnorm
     )
     trace = sum(S.get((d, d), 0) for d in dims)
     xsx = sum(v * x[i] * x[j] for (i, j), v in S.items())
@@ -1068,13 +1004,7 @@ def pca_explained_ratio(
     )
 
 
-def norm_extremes(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 50,
-    scale: int = 10**6,
-) -> DataFrame:
+def norm_extremes(embeddings: DataFrame, k: int = 50) -> DataFrame:
     """DEAD / EXPLODING embedding screen: the k smallest and k largest
     vectors by exact fixed-point squared L2 norm — normsq =
     Σ round(x·10⁶)² per vector, integer end-to-end (≈6.4·10¹³ for a
@@ -1094,15 +1024,16 @@ def norm_extremes(
     two TakeOrdered cuts (per-partition top-k, k-sized merge — no
     global sort materialized).
     """
+    scale = 10**6
     per = (
         embeddings.select(
-            F.col(id_col), F.posexplode(vec_col).alias("dim", "x")
+            F.col("vec_id"), F.posexplode("embedding").alias("dim", "x")
         )
         .select(
-            id_col,
+            "vec_id",
             F.round(F.col("x") * int(scale)).cast("long").alias("q"),
         )
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_dims"),
             # q² summed in DECIMAL(38,0): double-carried sums drift past
@@ -1113,12 +1044,12 @@ def norm_extremes(
         )
     )
     low = (
-        per.orderBy(F.asc("normsq"), F.asc(id_col))
+        per.orderBy(F.asc("normsq"), F.asc("vec_id"))
         .limit(int(k))
         .withColumn("side", F.lit("low"))
     )
     high = (
-        per.orderBy(F.desc("normsq"), F.asc(id_col))
+        per.orderBy(F.desc("normsq"), F.asc("vec_id"))
         .limit(int(k))
         .withColumn("side", F.lit("high"))
     )
@@ -1129,7 +1060,6 @@ def lsh_bucket_balance(
     embeddings: DataFrame,
     num_tables: int = 16,
     planes_per_table: int = 4,
-    seed: int = 42,
     dim: int = 64,
 ) -> DataFrame:
     """ANN LOAD-BALANCE audit over the sign-LSH index: the bucket-size
@@ -1151,6 +1081,7 @@ def lsh_bucket_balance(
     histogram aggregate; the mass denominator windows over the
     histogram only.
     """
+    seed = 42
     sigs = multitable_signatures(
         embeddings, num_tables, planes_per_table, seed, dim
     )
@@ -1170,11 +1101,7 @@ def lsh_bucket_balance(
     )
 
 
-def dim_variance_ranking(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def dim_variance_ranking(embeddings: DataFrame) -> DataFrame:
     """Per-dimension VARIANCE ranking over the quantized (int8 index-
     space) embedding stream — the diagonal of the exact integer
     scatter matrix the PCA monitors consume (var_n2 = n·Σq² − (Σq)²,
@@ -1190,8 +1117,8 @@ def dim_variance_ranking(
     cardinality bounded), the count broadcast via a 1-row aggregate,
     rank window over the ≤dim-row table.
     """
-    q = _qrows(embeddings, id_col, vec_col)
-    n = q.select(F.col(id_col)).distinct().count()
+    q = _qrows(embeddings, "vec_id", "embedding")
+    n = q.select(F.col("vec_id")).distinct().count()
     per = q.groupBy("dim").agg(
         F.sum(F.col("qv")).cast("long").alias("s"),
         F.sum(F.expr("CAST(qv AS BIGINT) * qv")).cast("long").alias("sq"),
@@ -1210,11 +1137,7 @@ def dim_variance_ranking(
     )
 
 
-def quantize_saturation(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_saturation(embeddings: DataFrame) -> DataFrame:
     """INT8 SATURATION census per dimension — which dimensions hit the
     ±127 rail: the per-vector max-abs quantization saturates exactly
     the entries carrying each vector's peak magnitude, so a dimension
@@ -1229,7 +1152,7 @@ def quantize_saturation(
     Scale shape: the shared _qrows posexplode + one per-dim bounded
     aggregate.
     """
-    q = _qrows(embeddings, id_col, vec_col)
+    q = _qrows(embeddings, "vec_id", "embedding")
     per = q.groupBy("dim").agg(
         F.count(F.lit(1)).cast("long").alias("n_values"),
         F.sum((F.abs(F.col("qv")) >= 127).cast("long"))

@@ -52,7 +52,7 @@ def _distinct_group_hashes(documents: DataFrame, group_col: str) -> DataFrame:
     )
 
 
-def kmv_distinct(documents: DataFrame, k: int = 64, group_col: str = "lang") -> DataFrame:
+def kmv_distinct(documents: DataFrame, k: int = 64) -> DataFrame:
     """(grp, k, n_kept, kth_hash, est_distinct): K-minimum-values
     distinct-token estimate per group.
 
@@ -70,7 +70,7 @@ def kmv_distinct(documents: DataFrame, k: int = 64, group_col: str = "lang") -> 
     Groups with fewer than k distinct hashes fall back to their exact
     count (n_kept < k => est = n_kept, kth_hash = largest kept), the
     standard small-set KMV convention."""
-    return kmv_estimate(kmv_sketch(documents, k, group_col), k)
+    return kmv_estimate(kmv_sketch(documents, k, "lang"), k)
 
 
 def kmv_sketch(documents: DataFrame, k: int = 64, group_col: str = "lang") -> DataFrame:
@@ -123,9 +123,7 @@ def kmv_estimate(sketch: DataFrame, k: int) -> DataFrame:
     )
 
 
-def kmv_overlap(
-    a: DataFrame, b: DataFrame, k: int = 64, group_col: str = "lang"
-) -> DataFrame:
+def kmv_overlap(a: DataFrame, b: DataFrame, k: int = 64) -> DataFrame:
     """(grp, n_a, n_b, theta, n_common, est_intersect, est_union,
     exact_common, exact_union): theta-sketch-style set-overlap estimate
     between two corpora from their KMV sketches — "how much does corpus
@@ -148,7 +146,7 @@ def kmv_overlap(
     sketch path touches ≤ 2k rows per group after the two `kmv_sketch`
     shuffles; at 100 TB the exact side is the one you stop running."""
     full = F.lit(_HASH_SPACE).cast("long")
-    sa, sb = kmv_sketch(a, k, group_col), kmv_sketch(b, k, group_col)
+    sa, sb = kmv_sketch(a, k, "lang"), kmv_sketch(b, k, "lang")
 
     def _side(sk, n_name):
         return sk.groupBy("grp").agg(
@@ -177,8 +175,8 @@ def kmv_overlap(
     est_union = kmv_estimate(kmv_merge(sa, sb, k), k).select(
         "grp", F.col("est_distinct").alias("est_union")
     )
-    ha = _distinct_group_hashes(a, group_col)
-    hb = _distinct_group_hashes(b, group_col)
+    ha = _distinct_group_hashes(a, "lang")
+    hb = _distinct_group_hashes(b, "lang")
     exact_common = (
         ha.join(hb, ["grp", "h"]).groupBy("grp")
         .agg(F.count("*").cast("long").alias("exact_common"))
@@ -207,7 +205,7 @@ def kmv_overlap(
     )
 
 
-def hll_registers(documents: DataFrame, p: int = 6, group_col: str = "lang") -> DataFrame:
+def hll_registers(documents: DataFrame, p: int = 6) -> DataFrame:
     """(grp, m, used_regs, zero_regs, sum_rho, harmonic_scaled):
     HyperLogLog register summary per group, every cell an exact integer.
 
@@ -226,7 +224,7 @@ def hll_registers(documents: DataFrame, p: int = 6, group_col: str = "lang") -> 
 
     Scale shape: distinct + two narrow groupBys with full map-side
     combine; output is m rows per group regardless of input size."""
-    return hll_summary(hll_register_table(documents, p, group_col), p)
+    return hll_summary(hll_register_table(documents, p, "lang"), p)
 
 
 def hll_register_table(
@@ -234,7 +232,7 @@ def hll_register_table(
 ) -> DataFrame:
     """(grp, bucket, r): the HLL register payload — max rho per bucket.
     This IS the mergeable state (registers combine by max): per-day /
-    per-partition tables combine via `hll_merge` without rescanning."""
+    per-partition tables combine by max without rescanning."""
     m = 1 << p
     maxrho = 32 - p + 1
     rem = F.floor(F.col("h") / (1 << p))
@@ -247,13 +245,6 @@ def hll_register_table(
         .groupBy("grp", "bucket")
         .agg(F.max("rho").alias("r"))
     )
-
-
-def hll_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Union two HLL register tables into the table of the combined
-    input: hll_merge(regs(A), regs(B)) == regs(A ∪ B) exactly — max is
-    idempotent and associative per (grp, bucket) (pytest law)."""
-    return a.unionByName(b).groupBy("grp", "bucket").agg(F.max("r").alias("r"))
 
 
 def hll_summary(regs: DataFrame, p: int) -> DataFrame:
@@ -305,23 +296,12 @@ def _cms_positions(depth: int, width: int):
 def cms_registers(documents: DataFrame, depth: int = 4, width: int = 256) -> DataFrame:
     """(row, pos, cnt): the count-min register payload — the mergeable
     state (counters combine by addition): per-day / per-partition
-    sketches combine via `cms_merge` without rescanning."""
+    sketches combine by addition without rescanning."""
     return (
         _cms_tokens(documents)
         .select(F.explode(_cms_positions(depth, width)).alias("rp"))
         .groupBy(F.col("rp.row").alias("row"), F.col("rp.pos").alias("pos"))
         .agg(F.count("*").cast("long").alias("cnt"))
-    )
-
-
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Add two CMS register tables: cms_merge(regs(A), regs(B)) ==
-    regs(A ++ B) exactly — counters are sums, sums are associative
-    (pytest law)."""
-    return (
-        a.unionByName(b)
-        .groupBy("row", "pos")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
 
 
@@ -425,7 +405,7 @@ def _hdr_bounds(bucket_col: str):
 
 def hdr_sketch(values: DataFrame) -> DataFrame:
     """(grp, bucket, cnt) from a (grp, v) table — the mergeable quantile
-    state: counts add (`hdr_merge`), so per-day / per-partition sketches
+    state: counts add, so per-day / per-partition sketches
     combine without rescanning, and a group's payload is bounded by the
     number of inhabited buckets (≤ K * 63 + 1 for int64 values) no
     matter how many rows went in. One narrow groupBy with full map-side
@@ -435,16 +415,6 @@ def hdr_sketch(values: DataFrame) -> DataFrame:
         values.select("grp", _hdr_bucket("v").alias("bucket"))
         .groupBy("grp", "bucket")
         .agg(F.count("*").cast("long").alias("cnt"))
-    )
-
-
-def hdr_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Add two HDR sketches: hdr_merge(sk(A), sk(B)) == sk(A ++ B)
-    exactly — bucket counts are sums (pytest law in tests/test_sketch.py)."""
-    return (
-        a.unionByName(b)
-        .groupBy("grp", "bucket")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
 
 
@@ -484,22 +454,23 @@ def hdr_quantile_bounds(sketch: DataFrame, qs=(50, 90, 99)) -> DataFrame:
     )
 
 
-def doc_length_values(documents: DataFrame, group_col: str = "lang") -> DataFrame:
+def doc_length_values(documents: DataFrame) -> DataFrame:
     """(grp, v): document byte lengths per group; NULL text counts as an
     empty document (v = 0) so every row is accounted for — the same
     audit invariant the curation verdicts keep."""
     return documents.select(
-        F.col(group_col).alias("grp"),
+        F.col("lang").alias("grp"),
         F.octet_length(F.coalesce(F.col("text"), F.lit(""))).cast("long").alias("v"),
     )
 
 
-def hdr_length_quantiles(documents: DataFrame, qs=(50, 90, 99)) -> DataFrame:
+def hdr_length_quantiles(documents: DataFrame) -> DataFrame:
     """(grp, q, n_docs, est_lo, est_hi, exact_len): sketched percentile
     bounds of per-language document byte lengths NEXT TO the exact
     rank-statistic (same ceil-rank convention), making the ≤ 1/K error
     bound directly visible — like cms_heavy_hitters, the exact side is
     the expensive per-group sort the sketch replaces at 100 TB."""
+    qs = (50, 90, 99)
     vals = doc_length_values(documents)
     bounds = hdr_quantile_bounds(hdr_sketch(vals), qs).withColumnRenamed(
         "n_values", "n_docs"
@@ -550,16 +521,9 @@ def bloom_bits(keys: DataFrame, k: int = _BLOOM_K, m: int = _BLOOM_M) -> DataFra
     """(pos) — the set bit positions of a Bloom filter over a column
     ``h`` of 32-bit key hashes (positions from `_bloom_positions`).
     ≤ m rows regardless of key count — always broadcastable. Mergeable
-    by union-distinct (`bloom_merge`): the OR of two filters IS the
+    by union-distinct: the OR of two filters IS the
     filter of the union."""
     return keys.select(F.explode(_bloom_positions(k, m)).alias("pos")).distinct()
-
-
-def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR two Bloom filters: bloom_merge(bits(A), bits(B)) ==
-    bits(A ∪ B) exactly (pytest law) — bit-set union is union-distinct
-    on positions."""
-    return a.unionByName(b).distinct()
 
 
 def _gram_stream(df: DataFrame, n: int) -> DataFrame:
@@ -587,13 +551,7 @@ def _gram_stream(df: DataFrame, n: int) -> DataFrame:
     )
 
 
-def bloom_decontam_stats(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 3,
-    k: int = _BLOOM_K,
-    m: int = _BLOOM_M,
-) -> DataFrame:
+def bloom_decontam_stats(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """(grp, n_grams, n_bloom_pass, n_member, n_false_pos) per corpus
     language: what a Bloom pre-filter saves the exact decontamination
     join (text.ngram_overlap). The benchmark's distinct n-grams build a
@@ -611,6 +569,9 @@ def bloom_decontam_stats(
     explode k-fold, hit the broadcast bit table, and collapse back in
     one map-side-combined groupBy; the per-language stats are 5 narrow
     integer columns."""
+    n = 3
+    k = _BLOOM_K
+    m = _BLOOM_M
     bench_keys = (
         _gram_stream(benchmark, n)
         .select("gram")

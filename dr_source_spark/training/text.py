@@ -282,9 +282,7 @@ def pii_scrub(documents: DataFrame) -> DataFrame:
     return documents.select("doc_id", *counts, scrubbed.alias("scrubbed_text"))
 
 
-def sample_stratified(
-    documents: DataFrame, rates: dict, strata_col: str = "lang", salt: str = "v1"
-) -> DataFrame:
+def sample_stratified(documents: DataFrame, rates: dict, salt: str = "v1") -> DataFrame:
     """Deterministic per-stratum sampling — the 100 TB shape: no RNG state,
     no reservoir; a doc is kept iff the first 8 hex digits of
     md5(salt:doc_id) fall under the stratum's rate threshold. Fully
@@ -304,7 +302,7 @@ def sample_stratified(
     for stratum, rate in rates.items():
         if float(rate) <= 0.0:
             continue
-        in_stratum = F.col(strata_col) == stratum
+        in_stratum = F.col("lang") == stratum
         if float(rate) >= 1.0:
             cond = in_stratum
         else:
@@ -312,7 +310,7 @@ def sample_stratified(
             cond = in_stratum & (u < threshold)
         keep = cond if keep is None else (keep | cond)
     return documents.filter(keep if keep is not None else F.lit(False)).select(
-        "doc_id", strata_col
+        "doc_id", "lang"
     )
 
 
@@ -335,12 +333,14 @@ def _word_grams(n: int) -> "F.Column":
     )
 
 
-def top_ngrams(documents: DataFrame, n: int = 3, k: int = 20) -> DataFrame:
+def top_ngrams(documents: DataFrame) -> DataFrame:
     """Corpus-wide most frequent word n-grams — the boilerplate/contamination
     radar (a header repeated across millions of pages dominates this list).
     Explode -> map-side-combinable count -> top-k; ties broken by the ngram
     string so the cut at k is deterministic. The physical top-k is a
     TakeOrderedAndProject (no global sort) — plan-asserted."""
+    n = 3
+    k = 20
     return (
         documents.withColumn("_toks", _ws_tokens())
         .select(F.explode(_word_grams(n)).alias("ngram"))
@@ -490,9 +490,7 @@ def bpe_merge_candidates(documents: DataFrame, k: int = 20) -> DataFrame:
     )
 
 
-def tfidf_top_terms(
-    documents: DataFrame, k: int = 5, idf_scale: int = 10**4
-) -> DataFrame:
+def tfidf_top_terms(documents: DataFrame) -> DataFrame:
     """Per-language characteristic terms by tf-idf — the corpus-profiling
     report a curation pipeline prints per shard. Score = tf ·
     (N·idf_scale // df) where tf = total occurrences of the term in the
@@ -503,6 +501,8 @@ def tfidf_top_terms(
     ranking whenever df separates terms). Top ``k`` per language, ties
     broken by the term string. All map-side-combinable counts over
     narrow (lang, term) keys; the text column dies at the explode."""
+    k = 5
+    idf_scale = 10**4
     from pyspark.sql.window import Window
 
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
@@ -676,9 +676,7 @@ def vocab_coverage(documents: DataFrame, vocab_size: int = 500) -> DataFrame:
     )
 
 
-def boilerplate_cut_plan(
-    documents: DataFrame, n: int = 13, min_docs: int = 3
-) -> DataFrame:
+def boilerplate_cut_plan(documents: DataFrame, min_docs: int = 3) -> DataFrame:
     """The actionable half of boilerplate removal: the KEEP ranges — per
     document, the maximal token ranges left after cutting every
     boilerplate span (complement intervals). A doc with no boilerplate
@@ -690,6 +688,7 @@ def boilerplate_cut_plan(
     over the spans, bounded per doc), the post-last-span tail (span max +
     token-count join), and full ranges for span-free docs (anti-join).
     The text column is touched once for the token count."""
+    n = 13
     from pyspark.sql.window import Window
 
     spans = boilerplate_spans(documents, n=n, min_docs=min_docs)
@@ -757,9 +756,7 @@ def bigram_diversity(documents: DataFrame) -> DataFrame:
     )
 
 
-def ngram_novelty(
-    documents: DataFrame, n: int = 3, group_col: str = "lang"
-) -> DataFrame:
+def ngram_novelty(documents: DataFrame, n: int = 3) -> DataFrame:
     """Per-group n-gram novelty profile: of each document's DISTINCT
     word n-grams, how many appear for the FIRST time in that document
     (first = smallest doc_id over the whole corpus — a deterministic
@@ -781,7 +778,7 @@ def ngram_novelty(
     """
     doc_grams = (
         documents.withColumn("_toks", _ws_tokens())
-        .select("doc_id", F.col(group_col).alias("grp"), F.explode(_word_grams(n)).alias("gram"))
+        .select("doc_id", F.col("lang").alias("grp"), F.explode(_word_grams(n)).alias("gram"))
         .dropDuplicates(["doc_id", "gram"])
     )
     first = doc_grams.groupBy("gram").agg(F.min("doc_id").alias("_first_doc"))
@@ -860,9 +857,7 @@ def heaps_law_curve(
     )
 
 
-def readability_profile(
-    documents: DataFrame, group_col: str = "lang"
-) -> DataFrame:
+def readability_profile(documents: DataFrame) -> DataFrame:
     """Flesch-Kincaid-style readability per group, exact-integer: the
     curation signal next to quality_score — a corpus whose grade level
     collapses (listicles, boilerplate) or explodes (OCR noise, code in
@@ -884,7 +879,7 @@ def readability_profile(
     s = F.greatest(F.regexp_count(t, F.lit(r"[.!?]+")).cast("long"), F.lit(1))
     y = F.regexp_count(F.lower(t), F.lit("[aeiouy]+")).cast("long")
     per_doc = (
-        documents.select(F.col(group_col).alias("grp"), w.alias("_w"), s.alias("_s"), y.alias("_y"))
+        documents.select(F.col("lang").alias("grp"), w.alias("_w"), s.alias("_s"), y.alias("_y"))
         .filter(F.col("_w") > 0)
         .select(
             "grp",
@@ -965,7 +960,7 @@ def burstiness(documents: DataFrame, min_total: int = 30, k: int = 50) -> DataFr
     )
 
 
-def simpson_diversity(documents: DataFrame, group_col: str = "lang") -> DataFrame:
+def simpson_diversity(documents: DataFrame) -> DataFrame:
     """Simpson repeat-rate / Gini-Simpson diversity of the unigram
     distribution per group, in exact basis points:
     simpson_bp = 10000 * sum(n_i * (n_i - 1)) div (N * (N - 1)) — the
@@ -985,7 +980,7 @@ def simpson_diversity(documents: DataFrame, group_col: str = "lang") -> DataFram
         lambda w: w != "",
     )
     per_word = (
-        documents.select(F.col(group_col).alias("grp"), F.explode(toks).alias("word"))
+        documents.select(F.col("lang").alias("grp"), F.explode(toks).alias("word"))
         .groupBy("grp", "word")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1171,12 +1166,12 @@ LICENSE_MARKERS: list[tuple[str, str]] = [
 ]
 
 
-def license_expr(text_col=None):
-    """The first-match-wins license classification as a Column over
-    ``text_col`` (default: the ``text`` column) — THE definition both
-    the batch census and the streaming screen consume, so the two
-    paths cannot drift (the quality_reason_expr convention)."""
-    txt = F.lower(F.coalesce(text_col if text_col is not None else F.col("text"), F.lit("")))
+def license_expr():
+    """The first-match-wins license classification as a Column over the
+    ``text`` column — THE definition both the batch census and the
+    streaming screen consume, so the two paths cannot drift (the
+    quality_reason_expr convention)."""
+    txt = F.lower(F.coalesce(F.col("text"), F.lit("")))
     lic = F.lit("none")
     for name, phrase in reversed(LICENSE_MARKERS):
         lic = F.when(txt.contains(phrase), F.lit(name)).otherwise(lic)
@@ -1213,7 +1208,7 @@ def license_screen(documents: DataFrame) -> DataFrame:
     )
 
 
-def prefix_families(documents: DataFrame, prefix_chars: int = 32) -> DataFrame:
+def prefix_families(documents: DataFrame) -> DataFrame:
     """TEMPLATED-DOCUMENT screen by shared PREFIX — the cheap
     boilerplate signal beside the 13-gram span detector: documents
     whose first ``prefix_chars`` characters (whitespace-normalized,
@@ -1232,6 +1227,7 @@ def prefix_families(documents: DataFrame, prefix_chars: int = 32) -> DataFrame:
     shuffles), one digest groupBy + one bounded histogram; shares
     window over the histogram only.
     """
+    prefix_chars = 32
     norm = F.regexp_replace(
         F.lower(F.coalesce(F.col("text"), F.lit(""))), r"\s+", " "
     )
@@ -1255,7 +1251,7 @@ def prefix_families(documents: DataFrame, prefix_chars: int = 32) -> DataFrame:
     )
 
 
-def token_length_histogram(documents: DataFrame, max_len: int = 30) -> DataFrame:
+def token_length_histogram(documents: DataFrame) -> DataFrame:
     """TOKEN-LENGTH histogram — the lexical shape profile a tokenizer
     owner reads before choosing vocab/merge budgets: all whitespace
     tokens across the corpus bucketed by character length (lengths
@@ -1268,6 +1264,7 @@ def token_length_histogram(documents: DataFrame, max_len: int = 30) -> DataFrame
     Scale shape: one explode + one bounded (≤ max_len+1) groupBy with
     map-side combine; text reduces to integer lengths in-stage.
     """
+    max_len = 30
     toks = F.filter(
         F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))), r"\s+"),
         lambda w: w != "",
@@ -1288,9 +1285,7 @@ def token_length_histogram(documents: DataFrame, max_len: int = 30) -> DataFrame
     )
 
 
-def digit_heavy_screen(
-    documents: DataFrame, max_digit_bp: int = 3000
-) -> DataFrame:
+def digit_heavy_screen(documents: DataFrame) -> DataFrame:
     """DIGIT-HEAVY document screen — the "is this prose or a dump"
     curation signal the stopword ratio misses (log lines, CSV blobs,
     serialized tables are digit-dense but can carry stopwords): per
@@ -1305,6 +1300,7 @@ def digit_heavy_screen(
     Scale shape: a pure map (two regexp_counts) + one per-lang
     aggregate with map-side combine.
     """
+    max_digit_bp = 3000
     txt = F.coalesce(F.col("text"), F.lit(""))
     digits = F.regexp_count(txt, F.lit(r"[0-9]")).cast("long")
     chars = F.regexp_count(txt, F.lit(r"\S")).cast("long")
@@ -1328,7 +1324,7 @@ def digit_heavy_screen(
     )
 
 
-def shout_screen(documents: DataFrame, max_upper_bp: int = 3000) -> DataFrame:
+def shout_screen(documents: DataFrame) -> DataFrame:
     """UPPERCASE-SHOUTING screen — digit_heavy_screen's letter-case
     sibling: per language, documents whose uppercase share of LETTERS
     exceeds ``max_upper_bp`` (cross-multiplied, letters-only
@@ -1340,6 +1336,7 @@ def shout_screen(documents: DataFrame, max_upper_bp: int = 3000) -> DataFrame:
     Scale shape: two JVM regexp_counts per row + one per-lang
     aggregate with map-side combine.
     """
+    max_upper_bp = 3000
     txt = F.coalesce(F.col("text"), F.lit(""))
     upper = F.regexp_count(txt, F.lit("[A-Z]")).cast("long")
     letters = F.regexp_count(txt, F.lit("[A-Za-z]")).cast("long")

@@ -1,5 +1,5 @@
 """Planted-truth tests for the batch-32 operators: split-leakage census
-(near-dup and exact variants) and the KB rule-coverage report.
+(near-dup) and the KB rule-coverage report.
 
 Split facts used below (pure function of the id through the portable
 md5 hash family): ids 0-5 -> train, 16/21 -> val, 19/26 -> test.
@@ -45,33 +45,6 @@ class TestNearDupSplitLeakage:
         loose = near_dup_split_leakage(df, threshold=0.5)
         assert strict.count() == 0
         assert loose.count() == 1
-
-
-class TestExactDupSplitLeakage:
-    def test_group_spanning_splits(self, spark):
-        from dr_source_spark.training.dedup import exact_dup_split_leakage
-
-        # ids 1 (train), 16 (val), 19 (test) share normalized text (case
-        # and whitespace differences collapse); ids 2,3 duplicate WITHIN
-        # train (excluded); id 21 is a singleton (excluded)
-        df = _docs(
-            spark,
-            [
-                (1, "Hello  World"),
-                (16, "hello world"),
-                (19, "HELLO   WORLD"),
-                (2, LONG_B),
-                (3, LONG_B),
-                (21, "alone"),
-            ],
-        )
-        out = exact_dup_split_leakage(df).collect()
-        assert len(out) == 1
-        r = out[0]
-        assert r["canonical_id"] == 1
-        assert r["n_docs"] == 3
-        assert r["n_splits"] == 3
-        assert r["splits"] == "test,train,val"  # sorted, engine-stable
 
 
 class TestRuleCoverage:

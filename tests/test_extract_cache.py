@@ -5,7 +5,6 @@ ExtractionResult.cleanup() releases it."""
 import os
 import time
 
-import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
@@ -32,12 +31,11 @@ def _files_analyzed(spark, consume) -> int:
     return int(rows)
 
 
-@pytest.mark.parametrize("content_dedup", [False, True])
-def test_one_detector_pass_per_extract(spark, realcode_corpus, tmp_path, content_dedup):
+def test_one_detector_pass_per_extract(spark, realcode_corpus, tmp_path):
     from dr_source_spark.pipeline import extract
     from dr_source_spark.sources.corpus import ingest_source_files
 
-    res = extract(spark, realcode_corpus, run_id="once", content_dedup=content_dedup)
+    res = extract(spark, realcode_corpus, run_id="once")
 
     def consume():
         for name in ("triples", "nodes", "edges"):
@@ -50,8 +48,7 @@ def test_one_detector_pass_per_extract(spark, realcode_corpus, tmp_path, content
     finally:
         res.cleanup()
     files = ingest_source_files(realcode_corpus)
-    want = files.select("ext", "content").distinct().count() if content_dedup else files.count()
-    assert analyzed == want > 0
+    assert analyzed == files.count() > 0
 
 
 def _rows(df):

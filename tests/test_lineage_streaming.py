@@ -61,24 +61,6 @@ def test_lineage_counts_match_findings(spark, ckb, corpus, tmp_path_factory):
     assert lin.agg(F.sum("findings")).first()[0] == read_findings(spark, out, "runD").count()
 
 
-def test_run_history_and_compare(spark, ckb, corpus, tmp_path_factory):
-    from dr_source_spark.operators.lineage import compare_runs, run_history
-
-    out = str(tmp_path_factory.mktemp("history"))
-    extract_with_lineage(spark, corpus, ckb, out, "run1", num_splits=4, num_batches=1)
-    extract_with_lineage(spark, corpus.filter(F.col("path").endswith(".py")), ckb, out, "run2", num_splits=4, num_batches=1)
-
-    hist = {r.run_id: r for r in run_history(spark, out).collect()}
-    assert hist["run1"].num_files_analyzed == corpus.count()
-    assert hist["run2"].num_files_analyzed < hist["run1"].num_files_analyzed
-    assert hist["run1"].splits_done == 4
-
-    diff = compare_runs(spark, out, "run1", "run2")
-    assert diff["new"].count() == 0  # run2 is a subset corpus
-    assert diff["resolved"].count() > 0
-    assert diff["persistent"].count() == read_findings(spark, out, "run2").count()
-
-
 def test_streaming_incremental_picks_up_new_files(spark, ckb, tmp_path_factory):
     from dr_source_spark.streaming.incremental import incremental_extract
 

@@ -1,12 +1,8 @@
-"""Gates for CDC MERGE classification/application (operators/merge.py):
-action semantics (including delete-over-update precedence and NULL-safe
-change detection), the convergence law (applying a batch then
-re-classifying the same batch yields no further changes), and the
-single-join plan shape."""
+"""Gates for CDC MERGE classification (operators/merge.py): action
+semantics (including delete-over-update precedence and NULL-safe change
+detection) and the single-join plan shape."""
 
-from pyspark.sql import functions as F
-
-from dr_source_spark.operators.merge import apply_merge, classify_merge
+from dr_source_spark.operators.merge import classify_merge
 
 
 def _tables(spark):
@@ -38,23 +34,6 @@ def test_classify_actions(spark):
     }
     # key 1 is untouched (absent from the batch): no census row
     assert 1 not in got
-
-
-def test_apply_snapshot(spark):
-    existing, batch = _tables(spark)
-    got = {r.k: r.v for r in apply_merge(existing, batch, "k", ["v"], "is_delete").collect()}
-    assert got == {1: 100, 2: 250, 3: 300, 4: None, 9: 900}  # 5 deleted
-
-
-def test_apply_then_reclassify_converges(spark):
-    """Idempotence law: after applying the batch, re-classifying the
-    same batch (minus its deletes, which no longer exist to delete)
-    must yield only noop/delete rows — nothing left to change."""
-    existing, batch = _tables(spark)
-    applied = apply_merge(existing, batch, "k", ["v"], "is_delete")
-    again = classify_merge(applied, batch, "k", ["v"], "is_delete")
-    actions = {r.k: r.action for r in again.collect()}
-    assert all(a in ("noop", "delete") for a in actions.values()), actions
 
 
 def test_classify_single_join_no_nested_loop(spark, tmp_path):

@@ -1,15 +1,12 @@
-"""Multimodal binary-column plumbing: real header parsing, stubbed decode."""
+"""Multimodal binary-column plumbing: header parsing and the real decoders."""
 
-import hashlib
 import struct
 
 import pytest
 from pyspark.sql import functions as F
 
 from dr_source_spark.training.multimodal import (
-    decode_media,
     extract_media_metadata,
-    frame_sample_plan,
     sniff_header,
     synth_media_corpus,
 )
@@ -46,30 +43,6 @@ def test_metadata_extraction_roundtrip(spark, media):
         else:
             assert r.format == "wav" and r.sample_rate == 8000 + (mid % 5) * 4000
         assert r.n_bytes > 0 and len(r.payload_sha256) == 64
-
-
-def test_decode_stub_raises_without_fake(media):
-    with pytest.raises(NotImplementedError):
-        decode_media(media)
-
-
-def test_decode_fake_is_deterministic(spark, media):
-    a = {r.media_id: tuple(r.feature) for r in decode_media(media.limit(20), fake=True).collect()}
-    b = {r.media_id: tuple(r.feature) for r in decode_media(media.limit(20), fake=True).collect()}
-    assert a == b
-    assert all(len(v) == 32 and all(0 <= x <= 1 for x in v) for v in a.values())
-    # surrogate matches sha256 of payload
-    row = media.limit(1).collect()[0]
-    digest = hashlib.sha256(bytes(row.payload)).digest()
-    assert a[row.media_id][0] == pytest.approx(digest[0] / 255.0)
-
-
-def test_frame_sample_plan_shape(spark, media):
-    video = media.withColumn("kind", F.lit("video"))
-    plan = frame_sample_plan(video, every_n=1)
-    rows = plan.collect()
-    assert rows and all(r.frame_idx >= 0 for r in rows)
-    assert plan.columns == ["media_id", "frame_idx", "n_bytes"]
 
 
 def test_audio_chunk_plan_integer_chunking(spark):

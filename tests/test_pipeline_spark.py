@@ -77,14 +77,6 @@ def test_nodes_edges(result):
     assert result.nodes.select("node_id").distinct().count() == len(nodes)
 
 
-def test_dedup_salted_matches_plain(spark, realcode_findings):
-    from dr_source_spark.operators.relational import dedup_findings, dedup_findings_salted
-
-    plain = dedup_findings(realcode_findings).count()
-    salted = dedup_findings_salted(realcode_findings).count()
-    assert plain == salted
-
-
 def test_scan_diff_sets(spark, realcode_findings):
     from dr_source_spark.operators.relational import scan_diff
 
@@ -95,38 +87,6 @@ def test_scan_diff_sets(spark, realcode_findings):
     assert d["resolved"].count() == 0
     assert d["persistent"].count() == prev.select(key).distinct().count()
     assert d["new"].count() == curr.select(key).distinct().count() - prev.select(key).distinct().count()
-
-
-def test_where_used(spark, fixture_corpus):
-    from dr_source_spark.operators.relational import where_used
-    from dr_source_spark.sources.corpus import ingest_source_files
-
-    files = ingest_source_files(fixture_corpus)
-    used = {r.path for r in where_used(files, "DatabaseHelper").collect()}
-    assert "inter_file/java/Controller.java" in used
-    assert "inter_file/java/DatabaseHelper.java" not in used
-
-
-def test_where_used_ast_confirmation(spark):
-    from dr_source_spark.operators.relational import where_used
-    from dr_source_spark.sources.corpus import ingest_source_files
-
-    df = spark.createDataFrame(
-        [
-            ("r", "Uses.java", "c", None,
-             "public class Uses { DatabaseHelper h = new DatabaseHelper(); }"),
-            ("r", "OnlyComment.java", "c", None,
-             "public class OnlyComment { String s = \"x\"; } // DatabaseHelper mentioned in comment only"),
-            ("r", "StringOnly.java", "c", None,
-             'public class StringOnly { String s = "DatabaseHelper"; }'),
-        ],
-        "repo string, path string, commit string, lang string, content string",
-    )
-    files = ingest_source_files(df)
-    loose = {r.path for r in where_used(files, "DatabaseHelper").collect()}
-    assert loose == {"Uses.java", "OnlyComment.java", "StringOnly.java"}
-    confirmed = {r.path for r in where_used(files, "DatabaseHelper", ast_confirm=True).collect()}
-    assert confirmed == {"Uses.java"}
 
 
 def test_source_format_round_trips(spark, tmp_path):
@@ -189,6 +149,35 @@ def test_csv_default_read_is_splittable(spark, tmp_path):
         assert df.filter(df.content == "password = 'secret7'").count() == 1
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_relative_dotted_path_is_a_path_not_a_table(spark, tmp_path, monkeypatch):
+    """A relative location with a dot and no '/' that exists on disk
+    ("corpus.parquet") is read as that path, not as an Iceberg table."""
+    from dr_source_spark.sources.corpus import read_source_files
+
+    schema = "repo string, path string, commit string, lang string, content string"
+    spark.createDataFrame([("r", "a.py", "c", None, "x = 1\n")], schema).write.parquet(
+        str(tmp_path / "corpus.parquet")
+    )
+    monkeypatch.chdir(tmp_path)
+    assert [r.path for r in read_source_files(spark, "corpus.parquet").collect()] == ["a.py"]
+
+
+def test_null_key_column_is_rejected_by_name(spark):
+    """A NULL repo/path/commit fails the detector job with an error naming
+    the column and the file, instead of a JVM NullPointerException from the
+    not-null findings schema; no row is dropped silently."""
+    from dr_source_spark.kb import compile_kb, load_kb
+    from dr_source_spark.operators.analyze import run_detectors
+    from dr_source_spark.sources.corpus import ingest_source_files
+
+    content = "import os\npassword = 'supersecretvalue'\nos.system(input())\n"
+    schema = "repo string, path string, commit string, lang string, content string"
+    files = ingest_source_files(spark.createDataFrame([("r", "a.py", None, "python", content)], schema))
+    ckb = compile_kb(load_kb(project_dir="/nonexistent"))
+    with pytest.raises(Exception, match=r"repo='r' path='a.py': commit is NULL"):
+        run_detectors(files, ckb).collect()
 
 
 def test_python_inter_file_opt_in_through_pipeline(spark, reference_corpus):

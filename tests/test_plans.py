@@ -143,20 +143,20 @@ def test_detector_parallelism_widens_but_never_narrows(spark):
 
 
 def test_parallelism_decision_runs_no_upstream_shuffle(spark):
-    """Sizing an input whose plan holds a shuffle (content_dedup's
-    representatives, join mode's called_defs) submits no Spark job:
+    """Sizing an input whose plan holds a shuffle (a repartition, join
+    mode's called_defs) submits no Spark job:
     adaptive execution would run the shuffle to count its output
     partitions, and the real query would run it again."""
     from dr_source_spark.operators.analyze import ensure_min_parallelism
 
     sc = spark.sparkContext
     rows = [("r", f"p{i}.py", "c", ".py", f"x = {i % 50}") for i in range(200)]
-    deduped = spark.createDataFrame(
+    shuffled = spark.createDataFrame(
         rows, "repo string, path string, commit string, ext string, content string"
-    ).dropDuplicates(["content"])
+    ).repartition(1, "content")
     sc.setJobGroup("width-decision", "ensure_min_parallelism")
     try:
-        widened = ensure_min_parallelism(deduped)
+        widened = ensure_min_parallelism(shuffled)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()

@@ -12,6 +12,7 @@ text_hll_registers, text_cms_heavy_hitters)."""
 import hashlib
 
 import pytest
+from pyspark.sql import functions as F
 
 from dr_source_spark.training.sketch import cms_heavy_hitters, hll_registers, kmv_distinct
 
@@ -177,18 +178,17 @@ def test_kmv_merge_law(spark):
 
 
 def test_hll_merge_law(spark):
-    """hll_merge(regs(A), regs(B)) == regs(A ∪ B) — registers combine by
-    max — and the summaries agree."""
-    from dr_source_spark.training.sketch import (
-        hll_merge,
-        hll_register_table,
-        hll_summary,
-    )
+    """The register table is the mergeable state: the per-(grp, bucket) max
+    of regs(A) and regs(B) == regs(A ∪ B), and the summaries agree."""
+    from dr_source_spark.training.sketch import hll_register_table, hll_summary
 
     a = _docs(spark, _rows("a", 8))
     b = _docs(spark, _rows("b", 8, start=100))
     both = a.unionByName(b)
-    merged = hll_merge(hll_register_table(a, p=5), hll_register_table(b, p=5))
+    merged = (
+        hll_register_table(a, p=5).unionByName(hll_register_table(b, p=5))
+        .groupBy("grp", "bucket").agg(F.max("r").alias("r"))
+    )
     direct = hll_register_table(both, p=5)
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, direct.collect()))
     assert (sorted(map(tuple, hll_summary(merged, 5).collect()))
@@ -196,15 +196,19 @@ def test_hll_merge_law(spark):
 
 
 def test_cms_merge_law(spark):
-    """cms_merge(regs(A), regs(B)) == regs(A ++ B) — counters add, and
-    multiplicity across the halves is preserved (the shared tokens appear
-    in both halves and must count twice)."""
-    from dr_source_spark.training.sketch import cms_merge, cms_registers
+    """The register table is the mergeable state: the per-(row, pos) sum
+    of regs(A) and regs(B) == regs(A ++ B), and multiplicity across the
+    halves is preserved (the shared tokens appear in both halves and must
+    count twice)."""
+    from dr_source_spark.training.sketch import cms_registers
 
     a = _docs(spark, _rows("a", 6))
     b = _docs(spark, _rows("b", 6, start=100))
     both = a.unionByName(b)
-    merged = cms_merge(cms_registers(a, 4, 64), cms_registers(b, 4, 64))
+    merged = (
+        cms_registers(a, 4, 64).unionByName(cms_registers(b, 4, 64))
+        .groupBy("row", "pos").agg(F.sum("cnt").cast("long").alias("cnt"))
+    )
     direct = cms_registers(both, 4, 64)
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, direct.collect()))
 
@@ -365,14 +369,11 @@ def test_hdr_quantile_bounds_contain_exact_rank_statistic(spark):
 
 
 def test_hdr_merge_law(spark):
-    """hdr_merge(sk(A), sk(B)) == sk(A ++ B) cell-for-cell — counts add,
-    multiplicity across halves preserved — and quantile bounds off the
-    merged sketch equal those off the direct sketch."""
-    from dr_source_spark.training.sketch import (
-        hdr_merge,
-        hdr_quantile_bounds,
-        hdr_sketch,
-    )
+    """The sketch is the mergeable state: the per-(grp, bucket) sum of
+    sk(A) and sk(B) == sk(A ++ B) cell-for-cell — multiplicity across
+    halves preserved — and quantile bounds off the merged sketch equal
+    those off the direct sketch."""
+    from dr_source_spark.training.sketch import hdr_quantile_bounds, hdr_sketch
 
     a = spark.createDataFrame(
         [("g", (i * 37) % 1000) for i in range(200)], "grp string, v long"
@@ -381,7 +382,10 @@ def test_hdr_merge_law(spark):
         [("g", (i * 41) % 5000) for i in range(150)], "grp string, v long"
     )
     both = a.unionByName(b)
-    merged = hdr_merge(hdr_sketch(a), hdr_sketch(b))
+    merged = (
+        hdr_sketch(a).unionByName(hdr_sketch(b))
+        .groupBy("grp", "bucket").agg(F.sum("cnt").cast("long").alias("cnt"))
+    )
     direct = hdr_sketch(both)
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, direct.collect()))
     assert (sorted(map(tuple, hdr_quantile_bounds(merged).collect()))
@@ -428,11 +432,9 @@ def test_bloom_no_false_negatives_and_stats(spark):
 
 
 def test_bloom_merge_law(spark):
-    """bloom_merge(bits(A), bits(B)) == bits(A ∪ B) exactly — bit-set
-    union is union-distinct on positions."""
-    from pyspark.sql import functions as F
-
-    from dr_source_spark.training.sketch import _minhash_base, bloom_bits, bloom_merge
+    """The bit set is the mergeable state: union-distinct of bits(A) and
+    bits(B) == bits(A ∪ B) exactly (the OR of two filters)."""
+    from dr_source_spark.training.sketch import _minhash_base, bloom_bits
 
     def keys(prefix, n):
         df = spark.createDataFrame([(f"{prefix}{i}",) for i in range(n)], "gram string")
@@ -440,7 +442,7 @@ def test_bloom_merge_law(spark):
 
     a, b = keys("a", 300), keys("b", 300)
     both = a.unionByName(b)
-    merged = bloom_merge(bloom_bits(a), bloom_bits(b))
+    merged = bloom_bits(a).unionByName(bloom_bits(b)).distinct()
     direct = bloom_bits(both)
     assert sorted(r.pos for r in merged.collect()) == sorted(
         r.pos for r in direct.collect()

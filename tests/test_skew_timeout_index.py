@@ -1,38 +1,8 @@
-"""Skew-bucket repartitioning (R9), per-file timeout (A5/R5), symbol-index
+"""Row salting (R9), per-file timeout (A5/R5), symbol-index
 last-wins (A4), python inter-file extension (B7)."""
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def test_repo_size_buckets_and_spread(spark):
-    from dr_source_spark.operators.skew import repartition_by_size_buckets, repo_size_buckets
-    from dr_source_spark.sources.synth import synth_code_corpus
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    files = synth_code_corpus(docs)  # heavy-tailed: repo k owns ~2k+1 files
-    buckets = {r.repo: r.bucket for r in repo_size_buckets(files, medium=30, large=40).collect()}
-    assert "small" in buckets.values() and "large" in buckets.values()
-
-    out = repartition_by_size_buckets(files, 16, medium=30, large=40)
-    assert out.count() == files.count()
-    # the largest repo spans multiple partitions
-    big_repo = max(buckets, key=lambda r: 1 if buckets[r] == "large" else 0)
-    parts = (
-        out.withColumn("pid", F.spark_partition_id())
-        .filter(F.col("repo") == big_repo)
-        .select("pid").distinct().count()
-    )
-    assert parts > 1, "large repo should be spread over multiple partitions"
-
-
-def test_salted_group_count_matches_plain(spark):
-    from dr_source_spark.operators.skew import salted_group_count
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    plain = {(r.event_type): r.n for r in ev.groupBy("event_type").agg(F.count("*").cast("long").alias("n")).collect()}
-    salted = {(r.event_type): r.n for r in salted_group_count(ev, ["event_type"]).collect()}
-    assert plain == salted
 
 
 def test_per_file_timeout_drops_findings(spark, fixture_corpus):
@@ -112,7 +82,7 @@ def test_salted_helpers_actually_spread_hot_keys(spark):
     constant per key and spreads nothing) AND be a pure function of row
     content, so a recomputed task under partial stage retry reproduces the
     same salt assignment (monotonically_increasing_id would not)."""
-    from dr_source_spark.operators.skew import row_salt
+    from dr_source_spark.operators.canonicalize import row_salt
 
     hot = spark.range(0, 1000).select(F.lit("hot_key").alias("k"), F.col("id"))
     n_salts = hot.select(row_salt(16, hot.columns).alias("s")).distinct().count()

@@ -4,9 +4,9 @@ on every task, and no import result changes.
 The unit test runs in-process on a temporary zip. The worker test runs a
 small `local[1]` session in a subprocess from outside the repository, so the
 package arrives on the worker as the shipped zip, the way spark-submit
-ships it. It probes the worker after a `mapInPandas` site (`where_used`'s
-AST confirm, run first in the fresh worker) and after the detector's
-`mapInArrow`."""
+ships it. It probes the worker after a `mapInPandas` site (the multimodal
+decoder over driver-built media, run first in the fresh worker) and after
+the detector's `mapInArrow`."""
 
 import importlib
 import json
@@ -72,9 +72,9 @@ WORKER_SCRIPT = textwrap.dedent(
     import pyarrow as pa
     from dr_source_spark.kb.compile import compiled_kb_cached
     from dr_source_spark.operators.analyze import run_detectors
-    from dr_source_spark.operators.relational import where_used
     from dr_source_spark.session import get_spark
     from dr_source_spark.sources.corpus import corpus_from_dir, ingest_source_files
+    from dr_source_spark.training.multimodal import bmp_bytes, decode_features, wav_pcm_bytes
 
     spark = get_spark(master="local[1]")
     files = ingest_source_files(corpus_from_dir(spark, sys.argv[2], repo="realcode", commit="pin"))
@@ -83,7 +83,7 @@ WORKER_SCRIPT = textwrap.dedent(
         # first thing in the UDF: what the task's setup left in the cache
         archives = sorted({os.path.basename(f.archive) for f in sys.path_importer_cache.values()
                            if isinstance(f, zipimport.zipimporter)})
-        warm = {m: m in sys.modules for m in ("dr_source_spark.parsers.javaparse",
+        warm = {m: m in sys.modules for m in ("dr_source_spark.training.codecs",
                                                 "dr_source_spark.operators.analyze")}
         for _ in batches:
             pass
@@ -93,8 +93,10 @@ WORKER_SCRIPT = textwrap.dedent(
         row = spark.range(1).coalesce(1).mapInArrow(probe, "archives string, warm string").collect()[0]
         return {"archives": json.loads(row.archives), "warm": json.loads(row.warm)}
 
-    # a mapInPandas site first, in the fresh worker: where_used's AST confirm
-    used = where_used(files, "SparkSession", ast_confirm=True).count()
+    # a mapInPandas site first, in the fresh worker: the media decoder
+    media = spark.createDataFrame([(i, (bmp_bytes if i % 2 else wav_pcm_bytes)(i)) for i in range(6)],
+                                  "media_id long, payload binary")
+    used = decode_features(media).count()
     after_pandas = probed()
     ckb = compiled_kb_cached()
     runs = [sorted(map(tuple, run_detectors(files, ckb).select("path", "vuln_type", "line").collect()))
@@ -117,8 +119,8 @@ def test_warm_worker_holds_no_spark_archive_finders(tmp_path):
     )
     assert p.returncode == 0, p.stderr[-3000:]
     res = json.loads([ln for ln in p.stdout.splitlines() if ln.startswith("RESULT ")][-1][len("RESULT "):])
-    assert res["same"] and res["findings"] > 0 and res["used"] > 0
-    for site, module in (("after_pandas", "dr_source_spark.parsers.javaparse"),
+    assert res["same"] and res["findings"] > 0 and res["used"] == 6
+    for site, module in (("after_pandas", "dr_source_spark.training.codecs"),
                          ("after_detector", "dr_source_spark.operators.analyze")):
         probe = res[site]
         # the probe ran in the worker that ran the site
