@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..pipeline import ExtractionResult, extract
 from ..sources.synth import synth_code_corpus
-from ..training.dedup import minhash_family
+from ..training.dedup import LSH_BANDS, LSH_CAP, LSH_HASHES, minhash_family
 from ..training.text import LICENSE_MARKERS
 
 
@@ -114,11 +114,6 @@ def _duck_minhash_seeds(num_hashes: int) -> str:
 _MINHASH_P = 4294967311  # keep in sync with training/dedup.py:_MINHASH_P
 
 
-# scale-safe LSH banding (training/dedup.py defaults): r=8 puts the S-curve
-# threshold near Jaccard 0.7; max_cluster caps viral duplicate groups.
-_LSH_HASHES, _LSH_BANDS, _LSH_CAP = 112, 14, 1000
-
-
 _WORDS_CTE = r"""words AS (
   SELECT DISTINCT doc_id, w FROM (
     SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS w FROM documents
@@ -130,9 +125,7 @@ def _lsh_pairs_ctes(source: str = "documents", prelude: str = "") -> str:
     """source/prelude let a caller run the LSH pipeline over an augmented
     corpus: prelude defines extra CTEs (e.g. planted rows unioned onto
     documents) and source names the CTE the words scan reads."""
-    num_hashes = _LSH_HASHES
-    bands = _LSH_BANDS
-    cap = _LSH_CAP
+    num_hashes, bands, cap = LSH_HASHES, LSH_BANDS, LSH_CAP
     r = num_hashes // bands
     words_cte = _WORDS_CTE.replace("FROM documents", f"FROM {source}")
     return f"""WITH {prelude}{words_cte}, {_duck_minhash_seeds(num_hashes)},

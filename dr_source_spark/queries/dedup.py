@@ -6,6 +6,9 @@ from pyspark.sql import functions as F
 
 from ..operators.graph import hyperball_neighborhoods, triangle_counts, weighted_sssp
 from ..training.dedup import (
+    LSH_BANDS,
+    LSH_CAP,
+    LSH_HASHES,
     candidate_agreement,
     cdc_chunk_census,
     duplicate_clusters,
@@ -29,9 +32,6 @@ from ..training.dedup import (
 )
 from ._common import (
     _JAC_TAIL,
-    _LSH_BANDS,
-    _LSH_CAP,
-    _LSH_HASHES,
     _MINHASH_P,
     _WORDS_CTE,
     _duck_minhash_base,
@@ -130,20 +130,20 @@ DEDUP_LSH_OPH_SQL = rf"""
 WITH {_WORDS_CTE},
 base AS (SELECT doc_id, {_duck_minhash_base('w')} AS h FROM words),
 bins AS (
-  SELECT doc_id, CAST(h % {_LSH_HASHES} AS INT) AS bin, min(h) AS mh
+  SELECT doc_id, CAST(h % {LSH_HASHES} AS INT) AS bin, min(h) AS mh
   FROM base GROUP BY doc_id, bin
 ),
 raw AS (
   SELECT d.doc_id, t.i AS seed, b.mh
   FROM (SELECT DISTINCT doc_id FROM bins) d
-  CROSS JOIN generate_series(0, {_LSH_HASHES - 1}) t(i)
+  CROSS JOIN generate_series(0, {LSH_HASHES - 1}) t(i)
   LEFT JOIN bins b ON b.doc_id = d.doc_id AND b.bin = t.i
 ),
 sigs AS (
   -- STRIDED banding (band = seed % bands): rotation densification fills
   -- empty bins in consecutive runs, so consecutive-bin bands would match
   -- on a single shared token; striding spreads each run across bands.
-  SELECT doc_id, seed, CAST(seed % {_LSH_BANDS} AS INT) AS band,
+  SELECT doc_id, seed, CAST(seed % {LSH_BANDS} AS INT) AS band,
     coalesce(
       mh,
       first_value(mh IGNORE NULLS) OVER (PARTITION BY doc_id ORDER BY seed
@@ -159,7 +159,7 @@ band_sigs AS (
   FROM sigs GROUP BY doc_id, band
 ),
 kept AS (
-  SELECT band, band_sig FROM band_sigs GROUP BY band, band_sig HAVING count(*) <= {_LSH_CAP}
+  SELECT band, band_sig FROM band_sigs GROUP BY band, band_sig HAVING count(*) <= {LSH_CAP}
 )
 SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
 FROM band_sigs l
@@ -182,10 +182,10 @@ def dedup_incremental(spark, sf_dir):
 
 
 DEDUP_INCR_SQL = rf"""
-WITH {_WORDS_CTE}, {_duck_minhash_seeds(_LSH_HASHES)},
+WITH {_WORDS_CTE}, {_duck_minhash_seeds(LSH_HASHES)},
 base AS (SELECT doc_id, {_duck_minhash_base('w')} AS h FROM words),
 sigs AS (
-  SELECT doc_id, seed, CAST(seed // {_LSH_HASHES // _LSH_BANDS} AS INT) AS band,
+  SELECT doc_id, seed, CAST(seed // {LSH_HASHES // LSH_BANDS} AS INT) AS band,
          min((a * h + b) % {_MINHASH_P}) AS minhash
   FROM base CROSS JOIN seeds GROUP BY doc_id, seed
 ),
@@ -197,7 +197,7 @@ band_sigs AS (
 idx AS (SELECT * FROM band_sigs WHERE doc_id % 3 <> 0),
 newb AS (SELECT * FROM band_sigs WHERE doc_id % 3 = 0),
 kept AS (
-  SELECT band, band_sig FROM idx GROUP BY band, band_sig HAVING count(*) <= {_LSH_CAP}
+  SELECT band, band_sig FROM idx GROUP BY band, band_sig HAVING count(*) <= {LSH_CAP}
 ),
 cands AS (
   SELECT DISTINCT n.doc_id, i.doc_id AS idx_id

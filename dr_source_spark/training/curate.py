@@ -23,8 +23,13 @@ REASON_TOO_SHORT = "too_short"
 REASON_LOW_STOPWORD = "low_stopword_ratio"
 REASON_KEPT = "kept"
 
+# the quality floors every verdict surface applies: the one-shot and the
+# staged curation paths must agree on them for their keep lists to match
+MIN_TOKENS = 5
+MIN_STOPWORD_RATIO = 0.05
 
-def quality_reason_expr(text_col, min_tokens: int = 5, min_stopword_ratio: float = 0.05):
+
+def quality_reason_expr(text_col, min_tokens: int = MIN_TOKENS):
     """The per-document quality when-chain (too_short > low_stopword_ratio >
     kept) as a Column expression over ``text_col``.
 
@@ -49,7 +54,7 @@ def quality_reason_expr(text_col, min_tokens: int = 5, min_stopword_ratio: float
     )
     return (
         F.when(n_toks < min_tokens, F.lit(REASON_TOO_SHORT))
-        .when(stop_ratio < min_stopword_ratio, F.lit(REASON_LOW_STOPWORD))
+        .when(stop_ratio < MIN_STOPWORD_RATIO, F.lit(REASON_LOW_STOPWORD))
         .otherwise(F.lit(REASON_KEPT))
     )
 
@@ -61,14 +66,12 @@ def curation_decisions(documents: DataFrame) -> DataFrame:
       whitespace-normalized lowercase sha256 fingerprint group (identical
       normalization to training/dedup.exact_duplicates, so the kept set
       equals that operator's canonical set);
-    * ``too_short`` — fewer than ``min_tokens`` whitespace tokens;
+    * ``too_short`` — fewer than ``MIN_TOKENS`` whitespace tokens;
     * ``low_stopword_ratio`` — stopword ratio (rounded to 4 decimals,
       identical expression to text.quality_score) below the floor — the
       cheap Gopher-style "is this prose" screen;
     * ``kept`` — everything else.
     """
-    min_tokens = 5
-    min_stopword_ratio = 0.05
     # null-safe: a NULL text must still get a verdict (it fingerprints as
     # the empty string, groups with other empty docs, and falls out as
     # too_short) — a curation table silently missing input rows is how
@@ -79,7 +82,7 @@ def curation_decisions(documents: DataFrame) -> DataFrame:
     canon = docs.groupBy("_fp").agg(F.min("doc_id").alias("_canon"))
     reason = F.when(
         F.col("doc_id") != F.col("_canon"), F.lit(REASON_DUPLICATE)
-    ).otherwise(quality_reason_expr(F.col("text"), min_tokens, min_stopword_ratio))
+    ).otherwise(quality_reason_expr(F.col("text")))
     return (
         docs.join(canon, "_fp")
         .select("doc_id", reason.alias("reason"))
@@ -103,14 +106,12 @@ def final_keep_list(documents: DataFrame) -> DataFrame:
     pipeline (never all-pairs, adaptive CC); the quality columns are
     JVM-only; one equi-join on doc_id stitches them."""
     jaccard_threshold = 0.9
-    min_tokens = 5
-    min_stopword_ratio = 0.05
     from .dedup import duplicate_clusters
 
     clusters = duplicate_clusters(documents, jaccard_threshold=jaccard_threshold)
     reason = F.when(
         F.col("cluster_id") != F.col("doc_id"), F.lit("near_duplicate")
-    ).otherwise(quality_reason_expr(F.col("text"), min_tokens, min_stopword_ratio))
+    ).otherwise(quality_reason_expr(F.col("text")))
     return (
         documents.select("doc_id", "text")
         .join(clusters, "doc_id")
@@ -141,8 +142,6 @@ def quality_dup_interaction(documents: DataFrame) -> DataFrame:
     never shuffles — only the digest), one join back, one bounded
     cell aggregate; shares window over the cells only.
     """
-    min_tokens = 5
-    min_stopword_ratio = 0.05
     txt = F.coalesce(F.col("text"), F.lit(""))
     norm = F.regexp_replace(F.lower(txt), r"\s+", " ")
     docs = documents.select(
@@ -152,9 +151,7 @@ def quality_dup_interaction(documents: DataFrame) -> DataFrame:
     cells = (
         docs.join(fam, "_fp")
         .select(
-            quality_reason_expr(
-                F.col("text"), min_tokens, min_stopword_ratio
-            ).alias("quality_reason"),
+            quality_reason_expr(F.col("text")).alias("quality_reason"),
             (F.col("_n") >= 2).alias("is_dup"),
         )
         .groupBy("quality_reason", "is_dup")

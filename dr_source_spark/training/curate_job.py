@@ -25,8 +25,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.lineage import completed_splits, run_splits
-from .curate import REASON_KEPT, quality_reason_expr
-from .dedup import _band_signatures, _pairs_from_band_sigs, duplicate_clusters, ngram_jaccard
+from .curate import MIN_TOKENS, REASON_KEPT, quality_reason_expr
+from .dedup import (
+    LSH_BANDS,
+    LSH_CAP,
+    LSH_HASHES,
+    _band_signatures,
+    _pairs_from_band_sigs,
+    duplicate_clusters,
+    ngram_jaccard,
+)
 
 
 @dataclass
@@ -48,7 +56,7 @@ def curate_stage1_with_lineage(
     num_splits: int = 64,
     num_batches: int = 8,
     max_batches: int | None = None,
-    min_tokens: int = 5,
+    min_tokens: int = MIN_TOKENS,
 ) -> CurateRun:
     """Run (or resume) the per-document artifact stage with checkpointing.
 
@@ -57,9 +65,6 @@ def curate_stage1_with_lineage(
     Each split writes two narrow tables partitioned by (run_id,
     split_key): ``doc_stats`` (doc_id, lang, n_tokens, fp, quality_reason)
     and ``signatures`` (doc_id, band, band_sig)."""
-    num_hashes = 112
-    bands = 14
-    min_stopword_ratio = 0.05
     txt = F.coalesce(F.col("text"), F.lit(""))
     norm = F.regexp_replace(F.lower(txt), r"\s+", " ")
     toks = F.filter(F.split(F.trim(F.lower(txt)), r"\s+"), lambda w: w != "")
@@ -70,12 +75,12 @@ def curate_stage1_with_lineage(
             "lang",
             F.size(toks).cast("long").alias("n_tokens"),
             F.sha2(norm, 256).alias("fp"),
-            quality_reason_expr(F.col("text"), min_tokens, min_stopword_ratio).alias(
+            quality_reason_expr(F.col("text"), min_tokens).alias(
                 "quality_reason"
             ),
         )
         write(stats, "doc_stats")
-        write(_band_signatures(batch, num_hashes, bands), "signatures")
+        write(_band_signatures(batch, LSH_HASHES, LSH_BANDS), "signatures")
         return {"docs": batch}
 
     batches_run, splits_done, totals = run_splits(
@@ -116,7 +121,6 @@ def curate_finalize(
     dropped by the inner join below and escape curation UNAUDITED — the
     exact failure the keep-list's every-doc-gets-a-verdict invariant
     exists to prevent."""
-    max_cluster = 1000
     stats = (
         spark.read.parquet(f"{output_dir}/doc_stats")
         .filter(F.col("run_id") == run_id)
@@ -136,7 +140,7 @@ def curate_finalize(
         .filter(F.col("run_id") == run_id)
         .select("doc_id", "band", "band_sig")
     )
-    cands = _pairs_from_band_sigs(sigs, max_cluster)
+    cands = _pairs_from_band_sigs(sigs, LSH_CAP)
     verified = ngram_jaccard(documents, cands).filter(
         F.col("jaccard") >= jaccard_threshold
     )

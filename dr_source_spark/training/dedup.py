@@ -23,6 +23,13 @@ from .text import fingerprint
 
 _LSH_OBS_SEQ = itertools.count()
 
+# scale-safe LSH banding: 112 hashes in 14 bands (r=8) put the S-curve
+# threshold near Jaccard 0.7; a band signature shared by more than
+# LSH_CAP docs (a viral duplicate cluster) is dropped from pair generation.
+# The one-shot dedup, the staged curation job and the query oracles all
+# read these, so their keep lists agree.
+LSH_HASHES, LSH_BANDS, LSH_CAP = 112, 14, 1000
+
 
 def exact_duplicates(documents: DataFrame) -> DataFrame:
     """Groups of byte-identical (normalized) texts: canonical id = min doc_id."""
@@ -164,9 +171,9 @@ def _band_signatures(documents: DataFrame, num_hashes: int, bands: int) -> DataF
 
 def minhash_lsh_candidates(
     documents: DataFrame,
-    num_hashes: int = 112,
-    bands: int = 14,
-    max_cluster: int = 1000,
+    num_hashes: int = LSH_HASHES,
+    bands: int = LSH_BANDS,
+    max_cluster: int = LSH_CAP,
 ) -> DataFrame:
     """LSH banding: docs sharing any band signature become candidate pairs.
     Returns (doc_a, doc_b) with doc_a < doc_b. Join is equi on (band,
@@ -327,7 +334,7 @@ def _oph_dense(documents: DataFrame, num_bins: int) -> DataFrame:
     return per_doc.select("doc_id", dense.alias("sig"))
 
 
-def oph_signatures(documents: DataFrame, num_bins: int = 112) -> DataFrame:
+def oph_signatures(documents: DataFrame, num_bins: int = LSH_HASHES) -> DataFrame:
     """Long-format OPH signatures (doc_id, seed, minhash) — the drop-in
     fast alternative to `minhash_signatures` (same output shape, different
     hash family: seed is the OPH bin index, minhash the densified per-bin
@@ -376,10 +383,7 @@ def oph_lsh_candidates(documents: DataFrame) -> DataFrame:
     less signature CPU. Use when the corpus is tokenize-bound and the
     downstream verifier (exact Jaccard / containment) is in place; keep
     the classic family where cross-engine signature parity matters."""
-    num_bins = 112
-    bands = 14
-    max_cluster = 1000
-    return _pairs_from_band_sigs(_oph_band_signatures(documents, num_bins, bands), max_cluster)
+    return _pairs_from_band_sigs(_oph_band_signatures(documents, LSH_HASHES, LSH_BANDS), LSH_CAP)
 
 
 def ngram_jaccard(documents: DataFrame, candidates: DataFrame) -> DataFrame:
@@ -496,9 +500,7 @@ def _verified_near_dup_pairs(
     count-only pre-pass (same observe metric), and the verify join's
     build side is Catalyst's choice (broadcast locally, sort-merge at
     corpus scale)."""
-    num_hashes = 112
-    bands = 14
-    max_cluster = 1000
+    num_hashes, bands, max_cluster = LSH_HASHES, LSH_BANDS, LSH_CAP
     sc = documents.sparkSession.sparkContext
     # NOT checkpointed: the verify joins below must keep the scan-derived
     # size statistics so Catalyst can pick a broadcast build side locally
@@ -883,7 +885,7 @@ def incremental_dedup_decisions(
     index_docs: DataFrame,
     new_docs: DataFrame,
     threshold_pct: int = 70,
-    max_cluster: int = 1000,
+    max_cluster: int = LSH_CAP,
     broadcast_new: bool = True,
 ) -> DataFrame:
     """(doc_id, n_candidates, best_match_id, best_jaccard_pct, verdict) —
@@ -916,11 +918,9 @@ def incremental_dedup_decisions(
     ``threshold_pct``, else 'admitted'. New docs with no candidates —
     including token-free docs, which emit no signature — are admitted
     with n_candidates = 0 and NULL best columns."""
-    num_hashes = 112
-    bands = 14
     from pyspark.sql.window import Window
 
-    idx = _band_signatures(index_docs, num_hashes, bands).withColumnRenamed(
+    idx = _band_signatures(index_docs, LSH_HASHES, LSH_BANDS).withColumnRenamed(
         "doc_id", "idx_id"
     )
     if max_cluster:
@@ -934,7 +934,7 @@ def incremental_dedup_decisions(
         idx = idx.join(
             counts.filter(~hot).select("band", "band_sig"), ["band", "band_sig"]
         )
-    new_sigs = _band_signatures(new_docs, num_hashes, bands)
+    new_sigs = _band_signatures(new_docs, LSH_HASHES, LSH_BANDS)
     if broadcast_new:
         new_sigs = F.broadcast(new_sigs)
     cands = (

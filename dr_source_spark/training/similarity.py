@@ -250,9 +250,7 @@ def ivf_topk(embeddings: DataFrame, query_ids: List[int], k: int = 3) -> DataFra
     )
 
 
-def quantize_embeddings(
-    embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization: scale = max(|v|)/127, q_i =
     round(v_i / scale) ∈ [-127, 127]. 4× memory/shuffle reduction for ANN
     candidate generation at 100 TB — rank by quantized similarity, rescore
@@ -267,10 +265,10 @@ def quantize_embeddings(
     from ..operators.analyze import ensure_min_parallelism
 
     embeddings = ensure_min_parallelism(
-        embeddings.select(id_col, vec_col), key_cols=(id_col,)
+        embeddings.select("vec_id", "embedding"), key_cols=("vec_id",)
     )
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    df = embeddings.select(F.col(id_col), v.alias("_v"))
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    df = embeddings.select(F.col("vec_id"), v.alias("_v"))
     absmax = F.aggregate(F.col("_v"), F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x)))
     scale = F.when(absmax == 0.0, F.lit(1.0)).otherwise(absmax / F.lit(127.0))
     # evaluate the per-row scale ONCE via array_repeat and divide with
@@ -281,7 +279,7 @@ def quantize_embeddings(
     # values bit-for-bit: one fold, one division per element.
     scale_arr = F.array_repeat(scale, F.size(F.col("_v")))
     return df.select(
-        id_col,
+        "vec_id",
         scale.alias("scale"),
         F.zip_with(F.col("_v"), scale_arr, lambda x, s: F.round(x / s).cast("int")).alias("qvec"),
         F.col("_v").alias("_fvec"),
@@ -386,12 +384,11 @@ def kmeans_assign(embeddings: DataFrame, k: int = 8, iterations: int = 2) -> Dat
     rows) + a map-side-combinable groupBy — no all-pairs, no
     driver-side math beyond the loop itself."""
     quant = 10**4
-    vec_col = "embedding"
     q = embeddings.select(
         F.col("vec_id"),
         F.posexplode(
             F.expr(
-                f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE) * {quant}) AS BIGINT))"
+                f"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {quant}) AS BIGINT))"
             )
         ).alias("dim", "qi"),
     )
@@ -554,9 +551,7 @@ def pq_assign(embeddings: DataFrame, n_subspaces: int = 4, n_centroids: int = 4)
     )
 
 
-def _quantized_centroids(
-    embeddings: DataFrame, label_col: str, vec_col: str, quant: int
-) -> DataFrame:
+def _quantized_centroids(embeddings: DataFrame, quant: int) -> DataFrame:
     """(lbl, dim, n, c): per-label per-dimension truncated-mean centroid
     in floor-quantized integer units — c = Σ floor(e·quant) div n with
     the sign factored out of the truncating division. The ONE centroid
@@ -565,8 +560,8 @@ def _quantized_centroids(
     while both still pass their separate oracles)."""
     return (
         embeddings.select(
-            F.col(label_col).alias("lbl"),
-            F.posexplode(vec_col).alias("dim", "e"),
+            F.col("label").alias("lbl"),
+            F.posexplode("embedding").alias("dim", "e"),
         )
         .groupBy("lbl", "dim")
         .agg(
@@ -600,7 +595,7 @@ def class_separation(embeddings: DataFrame) -> DataFrame:
     row-table pass — then a self-join of the tiny centroid grid on dim.
     """
     quant = 10**4
-    cent = _quantized_centroids(embeddings, "label", "embedding", quant).select(
+    cent = _quantized_centroids(embeddings, quant).select(
         "lbl", "dim", F.col("n").alias("_n"), F.col("c").alias("_c")
     )
     a = cent.select(
@@ -646,7 +641,7 @@ def silhouette_lite(embeddings: DataFrame) -> DataFrame:
     a groupBy(label).
     """
     quant = 10**4
-    cent = _quantized_centroids(embeddings, "label", "embedding", quant).select(
+    cent = _quantized_centroids(embeddings, quant).select(
         F.col("lbl").alias("clbl"), "dim", F.col("c").alias("_c")
     )
     q = embeddings.select(
@@ -833,12 +828,12 @@ def recall_audit(candidates: DataFrame, truth: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _qrows(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _qrows(embeddings: DataFrame) -> DataFrame:
     """(vec_id, dim, qv) — the posexploded int8 quantization stream the
     dim-stats / drift / PCA monitors share."""
-    q = quantize_embeddings(embeddings, id_col, vec_col)
+    q = quantize_embeddings(embeddings)
     return q.select(
-        F.col(id_col), F.posexplode("qvec").alias("dim", "qv")
+        F.col("vec_id"), F.posexplode("qvec").alias("dim", "qv")
     )
 
 
@@ -859,7 +854,7 @@ def centroid_drift(embeddings: DataFrame) -> DataFrame:
     mean_a_fp, mean_b_fp, drift_fp).
     """
     scale = 10**6
-    rows = _qrows(embeddings, "vec_id", "embedding").select(
+    rows = _qrows(embeddings).select(
         "dim", "qv", (F.col("vec_id") % 2 == 0).alias("in_a")
     )
     agg = rows.groupBy("dim").agg(
@@ -909,9 +904,7 @@ def pca_top_component(embeddings: DataFrame) -> DataFrame:
     """
     iterations = 8
     xnorm = 10**5
-    S, dims, x = _scatter_power_iterate(
-        embeddings, "vec_id", "embedding", iterations, xnorm
-    )
+    S, dims, x = _scatter_power_iterate(embeddings, iterations, xnorm)
     flip = 1
     for d in dims:
         if x[d] != 0:
@@ -929,21 +922,15 @@ def _tdiv(a: int, b: int) -> int:
     return -((-a) // b) if a < 0 else a // b
 
 
-def _scatter_power_iterate(
-    embeddings: DataFrame,
-    id_col: str,
-    vec_col: str,
-    iterations: int,
-    xnorm: int,
-):
+def _scatter_power_iterate(embeddings: DataFrame, iterations: int, xnorm: int):
     """(S, dims, x): the exact integer scatter matrix, the dim list,
     and the power-iteration vector after ``iterations`` rounds —
     shared by pca_top_component and pca_explained_ratio."""
-    rows = _qrows(embeddings, id_col, vec_col)
-    n = rows.select(F.col(id_col)).distinct().count()
+    rows = _qrows(embeddings)
+    n = rows.select(F.col("vec_id")).distinct().count()
     pairs = (
         rows.alias("a")
-        .join(rows.alias("b"), F.col(f"a.{id_col}") == F.col(f"b.{id_col}"))
+        .join(rows.alias("b"), F.col("a.vec_id") == F.col("b.vec_id"))
         .groupBy(
             F.col("a.dim").alias("i"), F.col("b.dim").alias("j")
         )
@@ -984,9 +971,7 @@ def pca_explained_ratio(embeddings: DataFrame) -> DataFrame:
     """
     iterations = 8
     xnorm = 10**5
-    S, dims, x = _scatter_power_iterate(
-        embeddings, "vec_id", "embedding", iterations, xnorm
-    )
+    S, dims, x = _scatter_power_iterate(embeddings, iterations, xnorm)
     trace = sum(S.get((d, d), 0) for d in dims)
     xsx = sum(v * x[i] * x[j] for (i, j), v in S.items())
     xx = sum(v * v for v in x.values())
@@ -1117,7 +1102,7 @@ def dim_variance_ranking(embeddings: DataFrame) -> DataFrame:
     cardinality bounded), the count broadcast via a 1-row aggregate,
     rank window over the ≤dim-row table.
     """
-    q = _qrows(embeddings, "vec_id", "embedding")
+    q = _qrows(embeddings)
     n = q.select(F.col("vec_id")).distinct().count()
     per = q.groupBy("dim").agg(
         F.sum(F.col("qv")).cast("long").alias("s"),
@@ -1152,7 +1137,7 @@ def quantize_saturation(embeddings: DataFrame) -> DataFrame:
     Scale shape: the shared _qrows posexplode + one per-dim bounded
     aggregate.
     """
-    q = _qrows(embeddings, "vec_id", "embedding")
+    q = _qrows(embeddings)
     per = q.groupBy("dim").agg(
         F.count(F.lit(1)).cast("long").alias("n_values"),
         F.sum((F.abs(F.col("qv")) >= 127).cast("long"))

@@ -205,7 +205,7 @@ def test_hdr_sketch_accumulates_across_microbatches(spark, tmp_path_factory):
     result must equal the batch sketch of all rows — bucket counts
     accumulate across batches rather than reflecting only the last one
     (the mergeability property, exercised by the engine's own streaming
-    runtime instead of hdr_merge)."""
+    runtime)."""
     from dr_source_spark.training.sketch import hdr_quantile_bounds, hdr_sketch
 
     src = str(tmp_path_factory.mktemp("hdr_src"))
@@ -249,7 +249,7 @@ def test_cms_registers_accumulate_across_microbatches(spark, tmp_path_factory):
     separate micro-batches (maxFilesPerTrigger=1); the complete-mode
     register table must equal the batch sketch of the concatenated
     corpus — counter ADDITION is the state update, so this exercises the
-    CMS merge law through Spark's own state store instead of cms_merge."""
+    CMS merge law through Spark's own state store."""
     from dr_source_spark.training.sketch import cms_registers
 
     src = str(tmp_path_factory.mktemp("cms_src"))

@@ -95,7 +95,7 @@ print(json.dumps({{"files": len(files), "findings": found, "sec": round(dt, 2),
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-def run_ours(corpus_dir: str, cores: int, tiers: str) -> dict:
+def run_ours(corpus_dir: str, cores: int) -> dict:
     code = f"""
 import sys, time, json
 sys.path.insert(0, {REPO!r})
@@ -107,9 +107,9 @@ spark = get_spark(master="local[{cores}]", shuffle_partitions={cores})
 files = ingest_source_files(corpus_from_dir(spark, {corpus_dir!r})).persist()
 n = files.count()
 ckb = compile_kb(load_kb(project_dir="/nonexistent"))
-run_detectors(files.limit(32), ckb, tiers={tiers}).count()  # warm
+run_detectors(files.limit(32), ckb).count()  # warm
 t0 = time.monotonic()
-found = run_detectors(files, ckb, tiers={tiers}).count()
+found = run_detectors(files, ckb).count()
 dt = time.monotonic() - t0
 print(json.dumps({{"files": n, "findings": found, "sec": round(dt, 2),
                    "files_per_sec": round(n / dt, 1)}}))
@@ -131,8 +131,8 @@ def main() -> None:
     ensure_stubs()
     corpus = materialize_corpus(args.sf, args.copies)
     ref = run_reference(corpus)
-    ours1 = run_ours(corpus, 1, '("regex", "ast", "pattern")')
-    ours32 = run_ours(corpus, 32, '("regex", "ast", "pattern")')
+    ours1 = run_ours(corpus, 1)
+    ours32 = run_ours(corpus, 32)
 
     table = f"""
 ## Single-node anchor vs reference (same computation: regex + Python AST)
